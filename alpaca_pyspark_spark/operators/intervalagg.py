@@ -51,6 +51,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from .dispatch import split_by_keys
+
 HOUR = 3600
 MINUTE = 60
 
@@ -317,11 +319,11 @@ def _pair_hot_keys(
     ~uniform inside a key's active span, so each anchor's window sees
     ~events_k·window/span_k rows.  Three bounded probes (per-key
     counts on each side + per-key span), all partial-aggregated —
-    |keys| exchange rows, like sessionize.hot_keys.  The estimate only
+    |keys| exchange rows, like dispatch.hot_keys.  The estimate only
     steers a choice between two bit-identical plans, so a miss costs
     wall time, never correctness.  The result list is bounded: a key
-    needs > √PAIR_FLOOR ≈ 1M events (or anchors) to qualify, so at
-    most total/1M keys can appear.
+    needs > √PAIR_FLOOR ≈ 4.5k events (or anchors) to qualify, so at
+    most total/4.5k keys can appear.
 
     Short-circuit: even if EVERY row sat on one key, pairs cannot
     exceed |anchors| x |events| - when that product is under the
@@ -400,8 +402,6 @@ def trailing_interval_agg_adaptive(
     runs hot.  q03 satisfies the contract via unique signup event_ids;
     tests/test_intervalagg.py pins the divergence so the contract
     stays documented-and-true rather than silent."""
-    from .sessionize import _split_by_keys
-
     kw = dict(
         key=key,
         anchor_ts=anchor_ts,
@@ -433,8 +433,8 @@ def trailing_interval_agg_adaptive(
     )
     if not hk:
         return naive_interval_agg(anchors, events, **kw)
-    hot_a, cold_a = _split_by_keys(anchors, key, hk)
-    hot_e, cold_e = _split_by_keys(events, key, hk)
+    hot_a, cold_a = split_by_keys(anchors, key, hk)
+    hot_e, cold_e = split_by_keys(events, key, hk)
     return naive_interval_agg(cold_a, cold_e, **kw).unionByName(
         trailing_interval_agg(hot_a, hot_e, **kw)
     )

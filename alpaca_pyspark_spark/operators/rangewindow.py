@@ -40,6 +40,8 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql.window import WindowSpec
 
+from .dispatch import hot_keys, per_key, split_by_keys
+
 #: dispatch floor for RANGE-frame windows — measured ~21 µs/row of
 #: single-task frame evaluation (65 s for a 3M-row key, 8.7 s for
 #: 300k), ~10x the per-row cost of the cheap windows sessionize's
@@ -90,38 +92,6 @@ def trailing_range_window_skew_safe(
         *[F.col(c) for c in df.columns], "__own", *agg_builder(w)
     )
     return out.filter(F.col("__own")).drop("__own")
-
-
-def trailing_range_window_adaptive(
-    df: DataFrame,
-    *,
-    key: str,
-    order_us: str,
-    window_us: int,
-    agg_builder: Callable[[WindowSpec], list[Column]],
-) -> DataFrame:
-    """PER-KEY adaptive dispatch, same probe as sessionize: keys whose
-    row count would straggle the single-task sort run the bucket-
-    doubled pre-split; everything else (plus all NULL-ordered rows and
-    NULL keys) keeps the plain per-key window.  Branches are disjoint
-    by (key, order-NULLness) and bit-identical per row, so the
-    dispatch is invisible to correctness — oracle SQL unchanged."""
-    from .sessionize import _split_by_keys, hot_keys
-
-    kw = dict(
-        key=key, order_us=order_us, window_us=window_us, agg_builder=agg_builder
-    )
-    hk = hot_keys(df, key, min_rows=RANGE_HOT_MIN_ROWS)
-    if not hk:
-        return _plain(df, **kw)
-    hot, cold = _split_by_keys(df, key, hk)
-    hot_null = hot.filter(F.col(order_us).isNull())
-    hot = hot.filter(F.col(order_us).isNotNull())
-    return (
-        _plain(cold, **kw)
-        .unionByName(_plain(hot_null, **kw))
-        .unionByName(trailing_range_window_skew_safe(hot, **kw))
-    )
 
 
 # ---------------------------------------------------------------------
@@ -241,7 +211,7 @@ def locf_first_adaptive(
     the bucket-carry pre-split, everything else keeps the plain
     two-window form (one exchange, strictly cheaper when no key can
     straggle).  Output-identical per key; oracle SQL unchanged."""
-    from .sessionize import _split_by_keys, hot_keys
+    from .sessionize import HOT_MIN_ROWS
 
     kw = dict(
         key=key, ts=ts, tiebreak=tiebreak, val=val, bucket_us=bucket_us,
@@ -267,14 +237,14 @@ def locf_first_adaptive(
             F.first(val, ignorenulls=True).over(full).alias(first_alias),
         )
 
-    hk = hot_keys(df, key)
-    if not hk:
-        return plain(df)
-    hot, cold = _split_by_keys(df, key, hk)
-    return plain(cold).unionByName(
-        locf_first_skew_safe(hot, **kw).select(
+    return per_key(
+        df,
+        key,
+        plain,
+        lambda d: locf_first_skew_safe(d, **kw).select(
             *[F.col(c) for c in df.columns], last_alias, first_alias
-        )
+        ),
+        HOT_MIN_ROWS,
     )
 
 
@@ -580,36 +550,6 @@ def _cs_agg_builder(count_alias: str, sums: dict[str, Column]):
     return build
 
 
-def _hot_key_stats(
-    df: DataFrame, key: str, order_us: str, min_rows: int
-) -> list[tuple]:
-    """(key, rows, span_us) for every non-NULL key past the straggler
-    floor — the same pigeonhole-bounded single probe as
-    ``sessionize.hot_keys`` with per-key order bounds added, so the
-    dispatcher can estimate the bucket-doubling tier's parallelism
-    (span/W) without a second pass.  Span is over NON-NULL positions
-    (min/max skip NULLs), which is the right quantity: NULL-ordered
-    rows are routed to the plain tier before bucketing."""
-    from ..session import scoped_persist
-    from .sessionize import HOT_TASK_FACTOR, _shuffle_partitions
-
-    n = _shuffle_partitions(df.sparkSession)
-    stats = scoped_persist(
-        df.groupBy(key).agg(
-            F.count(F.lit(1)).alias("__n"),
-            F.min(order_us).alias("__lo"),
-            F.max(order_us).alias("__hi"),
-        )
-    )
-    total = stats.agg(F.sum("__n")).first()[0] or 0
-    floor = max(min_rows, HOT_TASK_FACTOR * total / n)
-    return [
-        (r[key], r["__n"], (r["__hi"] - r["__lo"]) if r["__hi"] is not None else 0)
-        for r in stats.filter(F.col("__n") > floor).collect()
-        if r[key] is not None
-    ]
-
-
 def trailing_count_sums_adaptive(
     df: DataFrame,
     *,
@@ -641,13 +581,11 @@ def trailing_count_sums_adaptive(
     oracle SQL is unchanged.  ``row_id`` must be unique non-NULL (the
     ingestion contract for event ids) — it carries the prefix tier's
     head/tail join-back."""
-    from .sessionize import _split_by_keys
-
     builder = _cs_agg_builder(count_alias, sums)
     kw_w = dict(
         key=key, order_us=order_us, window_us=window_us, agg_builder=builder
     )
-    stats = _hot_key_stats(df, key, order_us, min_rows=RANGE_HOT_MIN_ROWS)
+    stats = hot_keys(df, key, RANGE_HOT_MIN_ROWS, order_us=order_us)
     if not stats:
         return _plain(df, **kw_w)
     widths: dict = {}
@@ -665,14 +603,14 @@ def trailing_count_sums_adaptive(
     out = None
     rest = df
     if moderate:
-        hot, rest = _split_by_keys(rest, key, moderate)
+        hot, rest = split_by_keys(rest, key, moderate)
         hot_null = hot.filter(F.col(order_us).isNull())
         hot = hot.filter(F.col(order_us).isNotNull())
         out = _plain(hot_null, **kw_w).unionByName(
             trailing_range_window_skew_safe(hot, **kw_w)
         )
     if widths:
-        ext, rest = _split_by_keys(rest, key, list(widths))
+        ext, rest = split_by_keys(rest, key, list(widths))
         ext_null = ext.filter(F.col(order_us).isNull())
         ext = ext.filter(F.col(order_us).isNotNull())
         pb = _plain(ext_null, **kw_w).unionByName(

@@ -18,6 +18,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from .dispatch import per_key
+
 
 def sessionize(
     events: DataFrame,
@@ -308,15 +310,15 @@ def session_summary_skew_safe(
     ).select(key, "session_id", "session_start", "session_end", "n_events")
 
 
-#: Hot-key dispatch thresholds: a key whose event count exceeds
-#: ``max(HOT_MIN_ROWS, HOT_TASK_FACTOR · total/shuffle_partitions)``
+#: Absolute hot-key floor of the sessionize windows (the probe's
+#: relative term is ``dispatch.HOT_TASK_FACTOR``): a key past it
 #: serializes one task's sort/window in the single-pass plan (the
 #: measured 2.75-3.82x sf10 straggler); below it the single-pass plan
 #: is strictly cheaper than the pre-split's island bookkeeping
 #: (measured ~4x on sparse-uniform sf10, where islands ≈ events).
 #:
-#: The ABSOLUTE floor is the break-even between the straggler's extra
-#: wall (≈ per-row window cost × hot rows, ~1-2 µs/row) and the
+#: The floor is the break-even between the straggler's extra wall
+#: (≈ per-row window cost × hot rows, ~1-2 µs/row) and the
 #: pre-split's overhead (probe + second scan + island bookkeeping,
 #: ~1-1.5 s fixed at these scales).  Measured both sides (VERDICT r10
 #: item 3, skew1 vs skew10 replicas): a 300k-row hot key is CHEAPER
@@ -324,69 +326,8 @@ def session_summary_skew_safe(
 #: vs 1.09x — the old 250k floor mis-dispatched it), while the 3M-row
 #: hot key is where the pre-split wins (3.82x single-pass vs 1.34x).
 #: Linear interpolation of those measurements puts the crossover near
-#: 1M rows.  At cluster scale the RELATIVE term takes over anyway:
-#: with 50M-row average tasks the floor is 2x that, and a key only
-#: 2x the average task barely straggles.
+#: 1M rows.
 HOT_MIN_ROWS = 1_000_000
-HOT_TASK_FACTOR = 2.0
-
-
-def _shuffle_partitions(spark) -> int:
-    """``spark.sql.shuffle.partitions`` as an int — on platforms where
-    the conf reads back as the literal ``'auto'`` (managed AQE
-    variants; ADVICE r10) fall back to the cluster's default
-    parallelism, which is the same quantity the dispatch floor is
-    modeling."""
-    try:
-        return int(spark.conf.get("spark.sql.shuffle.partitions", "32"))
-    except (TypeError, ValueError):
-        return spark.sparkContext.defaultParallelism or 32
-
-
-def hot_keys(events: DataFrame, key: str, min_rows: int | None = None) -> list:
-    """One cheap partial-aggregated probe (|keys| exchange rows) that
-    names the keys whose single-task sort would straggle — the same
-    runtime-statistics-over-static-plans trade AQE makes.  The result
-    is BOUNDED by pigeonhole: at most ``shuffle_partitions /
-    HOT_TASK_FACTOR`` keys can each hold more than ``HOT_TASK_FACTOR ·
-    total/shuffle_partitions`` rows, so the driver-side list stays a
-    broadcastable literal at any data scale.  At 100 TB the probe is
-    a fraction of either sessionization plan's first pass."""
-    from ..session import scoped_persist
-
-    n = _shuffle_partitions(events.sparkSession)
-    # persist the |keys|-sized count table so the two probe reads (the
-    # total, then the over-floor keys) scan the raw events only once
-    counts = scoped_persist(events.groupBy(key).count())
-    total = counts.agg(F.sum("count")).first()[0] or 0
-    # min_rows overrides the absolute floor for operators whose
-    # per-row single-task cost differs from the sessionize windows the
-    # default was calibrated on (e.g. RANGE frames, ~10x costlier per
-    # row — operators/rangewindow.py passes its own break-even)
-    floor = max(
-        HOT_MIN_ROWS if min_rows is None else min_rows,
-        HOT_TASK_FACTOR * total / n,
-    )
-    # a NULL key cannot be routed through the isin() split (SQL NULL
-    # never equals anything), so it stays on the single-pass side even
-    # if hot — its rows form one window partition there, same as
-    # before the dispatch existed; real schemas make the session key
-    # non-null, so this is a documented degradation, not a wrong answer
-    return [
-        r[key]
-        for r in counts.filter(F.col("count") > floor).collect()
-        if r[key] is not None
-    ]
-
-
-def _split_by_keys(events: DataFrame, key: str, keys: list):
-    """(hot, cold) partition of the input by key membership.  NULL
-    keys go to the cold side (``isin`` yields NULL for them, and the
-    single-pass window handles the NULL-key partition the same way
-    the pre-split's NULL bucket does)."""
-    hot = events.filter(F.col(key).isin(keys))
-    cold = events.filter(~F.coalesce(F.col(key).isin(keys), F.lit(False)))
-    return hot, cold
 
 
 def session_summary_adaptive(
@@ -407,12 +348,14 @@ def session_summary_adaptive(
     the pre-split's island bookkeeping for its millions of COLD keys
     — the measured difference between a 2.0x and ~1.2x hot/uniform
     wall ratio at sf10."""
-    hk = hot_keys(events, key)
-    if not hk:
-        return session_summary(events, key=key, ts=ts, gap=gap)
-    hot, cold = _split_by_keys(events, key, hk)
-    return session_summary(cold, key=key, ts=ts, gap=gap).unionByName(
-        session_summary_skew_safe(hot, key=key, ts=ts, gap=gap, bucket=bucket)
+    return per_key(
+        events,
+        key,
+        lambda d: session_summary(d, key=key, ts=ts, gap=gap),
+        lambda d: session_summary_skew_safe(
+            d, key=key, ts=ts, gap=gap, bucket=bucket
+        ),
+        HOT_MIN_ROWS,
     )
 
 
@@ -474,12 +417,12 @@ def session_openings_adaptive(
         head_cols=head_cols,
         head_k=head_k,
     )
-    hk = hot_keys(events, key)
-    if not hk:
-        return _openings_single_pass(events, **kw)
-    hot, cold = _split_by_keys(events, key, hk)
-    return _openings_single_pass(cold, **kw).unionByName(
-        session_openings_skew_safe(hot, bucket=bucket, **kw)
+    return per_key(
+        events,
+        key,
+        lambda d: _openings_single_pass(d, **kw),
+        lambda d: session_openings_skew_safe(d, bucket=bucket, **kw),
+        HOT_MIN_ROWS,
     )
 
 

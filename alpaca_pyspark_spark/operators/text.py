@@ -110,23 +110,10 @@ def with_fingerprint(df: DataFrame, text_col: str = "text") -> DataFrame:
 
 #: Dispatch floor for the span-overlap hot-hash prefilter (q186/q114):
 #: documents-table rows at or above which the one-pass string-keyed
-#: exchange gives way to the prefiltered tier.  Calibrated round 13 by
-#: a measured crossover sweep on synthetic span-shaped corpora
-#: (tools/ab_r13_spanfloor.py -> AB_r13_spanfloor.json; bench.py's
-#: noop-sink forcing, arms alternated in one JVM per size, tier
-#: outputs equality-checked at every size).  The row count is footer
-#: metadata, memoized (tables.table_rows) — no probe job.
+#: exchange gives way to the prefiltered tier (read from the footer by
+#: ``dispatch.table_at_least`` — no probe job).  Placeholder, sweep
+#: pending (``tools/floor_sweep.py span``).
 SPAN_PREFILTER_MIN_DOC_ROWS = 10_000_000
-
-
-def span_prefilter_dispatch(sf_dir: str) -> bool:
-    """True when the documents table is past the prefilter floor."""
-    from ..tables import table_rows
-
-    try:
-        return table_rows(sf_dir, "documents") >= SPAN_PREFILTER_MIN_DOC_ROWS
-    except Exception:  # metadata unavailable — take the always-cheap tier
-        return False
 
 
 def hot_hash_candidates(
@@ -139,9 +126,12 @@ def hot_hash_candidates(
 
     Shape: one map-side-combined count pass over ``xxhash64(col)``
     (the exchange carries 8-byte keys + partial counts, never the
-    strings), the surviving hash set attaches back as a broadcast,
-    and the join is 1:1 (the hot set is grouped by hash, and a row's
-    hash equals exactly one key), so no row is ever duplicated.
+    strings), the surviving hash set joins back — broadcast by AQE
+    only when its runtime size allows, since the hot set grows with
+    the corpus's repeated content — and the join is 1:1 (the hot set
+    is grouped by hash, and a row's hash equals exactly one key), so
+    no row is ever duplicated.  The input side is aliased, so a
+    caller's own ``__h`` column passes through untouched.
 
     Bloom-filter semantics, deliberately: a hash COLLISION can only
     ADD candidate rows (two distinct strings sharing a hash both pass
@@ -157,16 +147,19 @@ def hot_hash_candidates(
     occurrence's string payload and shuffling 8-byte hashes plus the
     (small, repeated-content-bounded) candidate fraction's strings;
     at fixture scale the extra pass costs more than it saves, which is
-    why callers dispatch on a measured size floor."""
-    h = F.xxhash64(F.col(col))
+    why callers dispatch on a size floor."""
     hot = (
-        df.select(h.alias("__h"))
+        df.select(F.xxhash64(F.col(col)).alias("__h"))
         .groupBy("__h")
         .agg(F.count(F.lit(1)).alias("__c"))
         .filter(F.col("__c") >= min_count)
         .select("__h")
+        .alias("__hot")
     )
-    return df.join(F.broadcast(hot), h == F.col("__h"), "inner").drop("__h")
+    src = df.alias("__src")
+    return src.join(
+        hot, F.xxhash64(F.col(f"__src.{col}")) == F.col("__hot.__h"), "inner"
+    ).select("__src.*")
 
 
 #: BPE-ish pre-tokenization pattern (GPT-2 style, minus the trailing

@@ -31,6 +31,7 @@ from ..operators.dedup import (
     portable_hash60,
     simhash_near_duplicates,
 )
+from ..operators.dispatch import table_at_least
 from ..operators.ids import assign_stable_ids
 from ..operators.multimodal import audio_energy_windows, decode_media, synthesize_media
 from ..operators.similarity import brute_force_topk_arrow, lsh_topk
@@ -4759,26 +4760,15 @@ FROM per
 
 # ---------------------------------------------------------------- q187
 #: Dispatch floor for persisting the DSIR pair table (documents-table
-#: rows, footer metadata via tables.table_rows — no probe job).  The
-#: r12 A/B fixed the choice at "recompute" because persist LOST at
-#: sf0.1 (4.04s vs 3.40s, tools/ab_r12_dsir.py) — but the crossover is
-#: size-dependent exactly like the quantile floor (VERDICT r12): the
-#: recompute arm pays a second full aggregation pass over the
-#: corpus-sized transition table, the persist arm a one-time
-#: materialization of the vocab-bounded pair table, so past some
-#: corpus size persist must win.  Calibrated round 13 by a measured
-#: crossover on synthetic fixture-shaped corpora
-#: (tools/ab_r13_dsirfloor.py -> AB_r13_dsirfloor.json).
+#: rows, read from the footer by ``dispatch.table_at_least`` — no probe
+#: job).  The r12 A/B fixed the choice at "recompute" because persist
+#: LOST at sf0.1 (4.04s vs 3.40s, tools/ab_r12_dsir.py) — but the
+#: crossover is size-dependent like the quantile floor: the recompute
+#: arm pays a second full aggregation pass over the corpus-sized
+#: transition table, the persist arm a one-time materialization of the
+#: vocab-bounded pair table, so past some corpus size persist must
+#: win.  Placeholder, sweep pending (``tools/floor_sweep.py dsir``).
 DSIR_PERSIST_MIN_DOC_ROWS = 10_000_000
-
-
-def _dsir_persist_dispatch(sf_dir: str) -> bool:
-    from ..tables import table_rows
-
-    try:
-        return table_rows(sf_dir, "documents") >= DSIR_PERSIST_MIN_DOC_ROWS
-    except Exception:  # metadata unavailable — keep the measured-at-
-        return False  # fixture-scale recompute arm
 
 
 def _dsir_raw_lm(trans: DataFrame, *, persist_pairs: bool = False) -> DataFrame:
@@ -4840,7 +4830,8 @@ def _q187_scored(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("doc_id", "lang", F.col("bg.w1").alias("w1"), F.col("bg.w2").alias("w2"))
         .transform(scoped_persist)
     )
-    raw_lm = _dsir_raw_lm(trans, persist_pairs=_dsir_persist_dispatch(sf_dir))
+    persist = table_at_least(sf_dir, "documents", DSIR_PERSIST_MIN_DOC_ROWS)
+    raw_lm = _dsir_raw_lm(trans, persist_pairs=persist)
     tgt_lm = (
         trans.filter(F.col("lang") == "en")
         .groupBy("w1", "w2")
@@ -5557,7 +5548,8 @@ def _q189_pipeline(spark: SparkSession, sf_dir: str):
     )
     # r12 OPT: no single-partition window; r13: persist-vs-recompute
     # of the scalar's pair agg is size-dispatched (floor above)
-    raw_lm = _dsir_raw_lm(trans, persist_pairs=_dsir_persist_dispatch(sf_dir))
+    persist = table_at_least(sf_dir, "documents", DSIR_PERSIST_MIN_DOC_ROWS)
+    raw_lm = _dsir_raw_lm(trans, persist_pairs=persist)
     tgt_lm = (
         trans.filter(F.col("lang") == "en")
         .groupBy("w1", "w2")
@@ -5919,7 +5911,7 @@ def q186_span_dedup_rewrite(spark: SparkSession, sf_dir: str) -> DataFrame:
     the drop set exists).
 
     Scale shape (round 13): TWO size-dispatched tiers.  Below the
-    measured floor (``operators.text.SPAN_PREFILTER_MIN_DOC_ROWS``)
+    placeholder floor (``operators.text.SPAN_PREFILTER_MIN_DOC_ROWS``)
     the one-pass form runs — one exchange keyed by span for the global
     first-occurrence window, then only the DUPLICATE occurrences
     explode ×8 into token indices; at fixture scale shingle GENERATION
@@ -5934,11 +5926,11 @@ def q186_span_dedup_rewrite(spark: SparkSession, sf_dir: str) -> DataFrame:
     true string, so the tiers are result-identical
     (tests/test_spanhot.py pins parity; q210 forces this tier under
     the DuckDB oracle).  Every other stage is keyed by doc_id."""
-    from ..operators.text import span_prefilter_dispatch
+    from ..operators.text import SPAN_PREFILTER_MIN_DOC_ROWS
 
     tune(spark)
     docs = load(spark, sf_dir, "documents")
-    if span_prefilter_dispatch(sf_dir):
+    if table_at_least(sf_dir, "documents", SPAN_PREFILTER_MIN_DOC_ROWS):
         return _q186_prefiltered(docs)
     return _q186_onepass(docs)
 

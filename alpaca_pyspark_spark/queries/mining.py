@@ -20,6 +20,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from ..operators.dispatch import table_at_least
 from ..session import tune
 from ..tables import load
 
@@ -422,10 +423,11 @@ ORDER BY revenue DESC, partkey
 # --------------------------------------------------------------- q102
 #: Dispatch floor for the grouped-quantile decomposition (q102/q106),
 #: crossover-interpolated from a measured W/D curve on synthetic
-#: lineitem-shaped data (tools/ab_r12_qfloor.py → AB_r12_qfloor.json,
-#: noop-sink forced, arms alternated in one JVM, tier outputs
-#: equality-checked at every size): the window tier wins 7x at sf0.1's
-#: 600k rows (AB_r12_quantiles.json) and 0.70x at 2M, ties at ~2.8M
+#: lineitem-shaped data (AB_r12_qfloor.json; noop-sink forced, arms
+#: alternated in one JVM, tier outputs equality-checked at every size;
+#: re-run with ``tools/floor_sweep.py quantile``): the window tier
+#: wins 7x at sf0.1's 600k rows (AB_r12_quantiles.json) and 0.70x at
+#: 2M, ties at ~2.8M
 #: (log-linear), and LOSES 2.4x at 6M, 4.9x at 20M, 7.1x at 60M for
 #: q102 (q106 crosses below 2M) — percentile/running-sum windows
 #: buffer the whole group in ONE task per return flag (join-only AQE
@@ -434,18 +436,9 @@ ORDER BY revenue DESC, partkey
 #: bit-identical (tests/test_quantiles.py; parity re-checked at
 #: 2M/6M/20M/60M in the A/B), so a mis-sided floor near the tie point
 #: costs seconds, never correctness.  The row count is footer
-#: metadata, memoized (tables.table_rows) — no per-query probe job,
+#: metadata (dispatch.table_at_least) — no per-query probe job,
 #: and the same number a catalog/metastore serves for free at scale.
 QUANTILE_DECOMPOSE_MIN_TABLE_ROWS = 3_000_000
-
-
-def _decompose_quantiles(sf_dir: str) -> bool:
-    from ..tables import table_rows
-
-    try:
-        return table_rows(sf_dir, "lineitem") >= QUANTILE_DECOMPOSE_MIN_TABLE_ROWS
-    except Exception:  # metadata unavailable — take the always-correct tier
-        return False
 
 
 def q102_mad_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -481,7 +474,7 @@ def q102_mad_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
     trade every other skew dispatch in the engine makes."""
     tune(spark)
     li = load(spark, sf_dir, "lineitem")
-    if _decompose_quantiles(sf_dir):
+    if table_at_least(sf_dir, "lineitem", QUANTILE_DECOMPOSE_MIN_TABLE_ROWS):
         return _q102_decomposed(li)
     return _q102_window(li)
 
@@ -720,7 +713,7 @@ def q106_weighted_median(spark: SparkSession, sf_dir: str) -> DataFrame:
     li = load(spark, sf_dir, "lineitem").filter(
         F.col("l_extendedprice").isNotNull() & F.col("l_quantity").isNotNull()
     )
-    if _decompose_quantiles(sf_dir):
+    if table_at_least(sf_dir, "lineitem", QUANTILE_DECOMPOSE_MIN_TABLE_ROWS):
         return _q106_decomposed(li)
     return _q106_window(li)
 

@@ -668,7 +668,7 @@ def q114_repeated_passages(spark: SparkSession, sf_dir: str) -> DataFrame:
     similarity threshold can still share one verbatim paragraph).
 
     Scale shape (round 13): size-dispatched like q186.  Below the
-    measured floor (``operators.text.SPAN_PREFILTER_MIN_DOC_ROWS``)
+    placeholder floor (``operators.text.SPAN_PREFILTER_MIN_DOC_ROWS``)
     the per-doc-distinct shingles feed ONE partial-aggregated exchange
     keyed by the passage string; past it, a map-side-combined count
     over ``xxhash64(passage)`` broadcasts the >= 3 hot hashes back as
@@ -681,11 +681,12 @@ def q114_repeated_passages(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     ``doc_ids`` is a comma-joined STRING (not ArrayType) so the
     output is hashable by pandas-based result canonicalizers."""
-    from ..operators.text import span_prefilter_dispatch
+    from ..operators.dispatch import table_at_least
+    from ..operators.text import SPAN_PREFILTER_MIN_DOC_ROWS
 
     tune(spark)
     docs = load(spark, sf_dir, "documents").select("doc_id", "text")
-    if span_prefilter_dispatch(sf_dir):
+    if table_at_least(sf_dir, "documents", SPAN_PREFILTER_MIN_DOC_ROWS):
         return _q114_aggregate(_q114_prefiltered_shingles(docs))
     return _q114_aggregate(_q114_shingles(docs))
 

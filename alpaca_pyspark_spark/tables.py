@@ -51,35 +51,6 @@ def _parquet(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return spark.read.schema(sch).parquet(path)
 
 
-#: (sf_dir, table) -> footer-exact row count.  METADATA only, like the
-#: schema memo above: parquet footers carry the exact row count, so a
-#: size-adaptive dispatch (q102/q106's quantile decomposition floor)
-#: can read it without running a probe job — the same number a
-#: catalog/metastore serves as table statistics at scale.
-_ROWS_CACHE: dict[tuple[str, str], int] = {}
-
-
-def table_rows(sf_dir: str, name: str) -> int:
-    key = (sf_dir, name)
-    n = _ROWS_CACHE.get(key)
-    if n is None:
-        import os
-
-        import pyarrow.parquet as pq
-
-        path = f"{sf_dir}/{name}.parquet"
-        files = [path]
-        if os.path.isdir(path):
-            files = [
-                os.path.join(path, f)
-                for f in os.listdir(path)
-                if f.endswith(".parquet")
-            ]
-        n = sum(pq.ParquetFile(f).metadata.num_rows for f in files)
-        _ROWS_CACHE[key] = n
-    return n
-
-
 def load(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     if name not in TABLE_NAMES:
         raise KeyError(f"unknown table {name!r}; expected one of {TABLE_NAMES}")

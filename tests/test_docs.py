@@ -95,3 +95,15 @@ def test_rotation_ledger_consistency():
     assert not set(r10) & set(r11)
     unknown = (set(r10) | set(r11)) - set(QUERIES)
     assert not unknown, sorted(unknown)
+
+
+def test_cited_artifacts_exist():
+    """Every A/B artifact (``AB_*.json``) or tool (``tools/*.py``) the
+    engine's comments cite as evidence must be committed."""
+    cited = {
+        (path.relative_to(REPO), m)
+        for path in (REPO / "alpaca_pyspark_spark").rglob("*.py")
+        for m in re.findall(r"\b(AB_\w+\.json|tools/\w+\.py)", path.read_text())
+    }
+    missing = sorted((str(p), m) for p, m in cited if not (REPO / m).exists())
+    assert not missing, missing

@@ -196,22 +196,22 @@ def test_weighted_median_zero_weights_and_degenerates(spark):
 def test_quantile_dispatch_floor():
     # gate/bench fixtures sit below the floor -> window tier; a table
     # whose footer count reaches the floor -> decomposed tier
-    from alpaca_pyspark_spark import tables
+    from alpaca_pyspark_spark.operators import dispatch
+    from alpaca_pyspark_spark.operators.dispatch import table_at_least
     from alpaca_pyspark_spark.queries.mining import (
-        QUANTILE_DECOMPOSE_MIN_TABLE_ROWS,
-        _decompose_quantiles,
+        QUANTILE_DECOMPOSE_MIN_TABLE_ROWS as FLOOR,
     )
 
-    assert not _decompose_quantiles("/root/testdata/sf0.001")
-    tables._ROWS_CACHE[("/fake/sf", "lineitem")] = (
-        QUANTILE_DECOMPOSE_MIN_TABLE_ROWS
-    )
+    from .conftest import SF_DIR
+
+    assert not table_at_least(SF_DIR, "lineitem", FLOOR)
+    dispatch._ROWS_CACHE[("/fake/sf", "lineitem")] = FLOOR
     try:
-        assert _decompose_quantiles("/fake/sf")
+        assert table_at_least("/fake/sf", "lineitem", FLOOR)
     finally:
-        del tables._ROWS_CACHE[("/fake/sf", "lineitem")]
+        del dispatch._ROWS_CACHE[("/fake/sf", "lineitem")]
     # unknown path: metadata unavailable -> the always-correct tier
-    assert not _decompose_quantiles("/no/such/dir")
+    assert not table_at_least("/no/such/dir", "lineitem", FLOOR)
 
 
 def test_q209_forced_tier_equals_q106(spark):

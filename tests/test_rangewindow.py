@@ -9,6 +9,7 @@ from datetime import datetime, timedelta
 
 from pyspark.sql import functions as F
 
+from alpaca_pyspark_spark.operators import dispatch
 from alpaca_pyspark_spark.operators import rangewindow as rw
 from alpaca_pyspark_spark.operators import sessionize as sz
 
@@ -86,20 +87,6 @@ def test_skew_safe_equals_plain(spark):
     assert _rows(safe) == _rows(plain)
 
 
-def test_adaptive_dispatch_equals_plain_with_nulls(spark, monkeypatch):
-    df = _mk(spark, _data(include_nulls=True)).select(
-        "user_id", "event_id", "us", "v"
-    )
-    kw = dict(key="user_id", order_us="us", window_us=DAY_US, agg_builder=_agg)
-    want = _rows(rw._plain(df, **kw))
-    # real thresholds: nothing hot -> pure plain path
-    assert _rows(rw.trailing_range_window_adaptive(df, **kw)) == want
-    # forced-hot key 1 (which also owns the NULL-us rows)
-    monkeypatch.setattr(sz, "HOT_MIN_ROWS", 50)
-    assert sz.hot_keys(df, "user_id") == [1]
-    assert _rows(rw.trailing_range_window_adaptive(df, **kw)) == want
-
-
 def _locf_rows(df):
     rows = [
         (r["user_id"], r["event_id"], r["__lpv"], r["__fpv"])
@@ -155,5 +142,5 @@ def test_locf_skew_safe_equals_plain(spark, monkeypatch):
     safe = rw.locf_first_skew_safe(df, **kw)
     assert _locf_rows(safe) == want
     monkeypatch.setattr(sz, "HOT_MIN_ROWS", 50)
-    assert sz.hot_keys(df, "user_id") == [1]
+    assert dispatch.hot_keys(df, "user_id", sz.HOT_MIN_ROWS) == [1]
     assert _locf_rows(rw.locf_first_adaptive(df, **kw)) == want

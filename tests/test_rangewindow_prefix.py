@@ -13,6 +13,7 @@ import pytest
 from pyspark.sql import functions as F
 
 import alpaca_pyspark_spark.operators.rangewindow as rw
+from alpaca_pyspark_spark.operators import dispatch
 
 W = 1_000_000  # 1 s frame, in µs
 
@@ -181,6 +182,9 @@ def test_adaptive_three_tiers_engage_and_agree(spark, monkeypatch):
     hot key (enough span/W buckets), an extreme key (dense ties, one
     W-bucket) — plus NULL keys and NULL-ordered rows, and pin parity
     with the plain window over the whole input."""
+    # pin the probe's relative floor (2·total/partitions) so key 2's
+    # 200 rows stay hot on any core count
+    monkeypatch.setattr(dispatch, "_shuffle_partitions", lambda spark: 32)
     monkeypatch.setattr(rw, "RANGE_HOT_MIN_ROWS", 50)
     monkeypatch.setattr(rw, "PREFIX_MIN_BUCKET_ROWS", 60)
     monkeypatch.setattr(rw, "PREFIX_MIN_BUCKETS", 4)
@@ -223,5 +227,8 @@ def test_adaptive_three_tiers_engage_and_agree(spark, monkeypatch):
     assert _rows(got) == _rows(_plain_ref(df))
     # the dispatch actually split: stats must flag keys 1 and 2, and
     # only key 1 extreme (key 2's span spreads it under the floor)
-    stats = {k: (n, s) for k, n, s in rw._hot_key_stats(df, "user_id", "us", 50)}
+    stats = {
+        k: (n, s)
+        for k, n, s in dispatch.hot_keys(df, "user_id", 50, order_us="us")
+    }
     assert set(stats) == {1, 2}

@@ -13,6 +13,7 @@ from datetime import datetime, timedelta
 import pytest
 from pyspark.sql import functions as F
 
+from alpaca_pyspark_spark.operators import dispatch
 from alpaca_pyspark_spark.operators import sessionize as sz
 
 GAP = "30 minutes"
@@ -147,9 +148,10 @@ def test_hot_key_dispatch(spark, monkeypatch):
     rows = [(1, T0 + timedelta(seconds=i)) for i in range(400)]
     rows += [(k, T0 + timedelta(seconds=k)) for k in range(2, 30)]
     df = _mk(spark, rows).select("user_id", "ts")
-    assert sz.hot_keys(df, "user_id") == []  # real thresholds: nothing hot
+    # real thresholds: nothing hot
+    assert dispatch.hot_keys(df, "user_id", sz.HOT_MIN_ROWS) == []
     monkeypatch.setattr(sz, "HOT_MIN_ROWS", 100)
-    assert sz.hot_keys(df, "user_id") == [1]
+    assert dispatch.hot_keys(df, "user_id", sz.HOT_MIN_ROWS) == [1]
     got = sz.session_summary_adaptive(df, key="user_id", ts="ts", gap=GAP)
     want = sz.session_summary(df, key="user_id", ts="ts", gap=GAP)
     assert _summary_rows(got) == _summary_rows(want)
@@ -170,10 +172,10 @@ def test_shuffle_partitions_tolerates_auto(spark):
         conf = _AutoConf()
         sparkContext = spark.sparkContext
 
-    assert sz._shuffle_partitions(_Stub()) == (
+    assert dispatch._shuffle_partitions(_Stub()) == (
         spark.sparkContext.defaultParallelism or 32
     )
-    assert sz._shuffle_partitions(spark) == int(
+    assert dispatch._shuffle_partitions(spark) == int(
         spark.conf.get("spark.sql.shuffle.partitions")
     )
 

@@ -1,7 +1,9 @@
 """Hot-hash prefilter tier for the span-overlap family (round 13):
 the prefiltered forms of q186/q114 must be result-identical to their
 one-pass forms on tie-heavy, NULL-bearing, and boundary data, and the
-size dispatch must route gate fixtures to the one-pass tier."""
+size dispatch must route gate fixtures to the one-pass tier.  The
+DSIR pair-table persist arm, the other documents-floor tier, is
+pinned here too."""
 
 from __future__ import annotations
 
@@ -117,24 +119,63 @@ def test_hot_hash_candidates_keeps_every_hot_row(spark):
     assert out.count() == len(got)
 
 
-def test_span_prefilter_dispatch_floor():
-    from alpaca_pyspark_spark import tables
-    from alpaca_pyspark_spark.operators.text import (
-        SPAN_PREFILTER_MIN_DOC_ROWS,
-        span_prefilter_dispatch,
+def test_hot_hash_candidates_passes_caller_h_column(spark):
+    # an input that already carries an __h column: it must pass
+    # through untouched, and the kept rows must equal the one-pass
+    # exact count filter on the true string
+    from pyspark.sql import Window
+
+    rng = random.Random(5)
+    rows = [(i, f"s{rng.randrange(0, 100)}", -i) for i in range(150)]
+    df = spark.createDataFrame(rows, "rid long, s string, __h long")
+    got = hot_hash_candidates(df, "s", 2)
+    assert got.columns == df.columns
+    one_pass = (
+        df.withColumn("__n", F.count(F.lit(1)).over(Window.partitionBy("s")))
+        .filter(F.col("__n") >= 2)
+        .drop("__n")
+    )
+    assert 0 < one_pass.count() < len(rows)
+    _cmp(one_pass, got)
+
+
+def test_dsir_persist_arm_equals_recompute(spark, assert_no_cache_residue):
+    # the persist arm only runs past DSIR_PERSIST_MIN_DOC_ROWS, which no
+    # fixture reaches; pin it row-identical to the recompute arm
+    from alpaca_pyspark_spark.queries.llm import _dsir_raw_lm
+
+    rng = random.Random(11)
+    vocab = [f"w{i}" for i in range(15)]
+    rows = [
+        (d, rng.choice(vocab), rng.choice(vocab))
+        for d in range(60)
+        for _ in range(10)
+    ]
+    trans = spark.createDataFrame(rows, "doc_id long, w1 string, w2 string")
+    _cmp(
+        _dsir_raw_lm(trans, persist_pairs=False),
+        _dsir_raw_lm(trans, persist_pairs=True),
     )
 
-    # gate/bench fixtures sit below the floor -> one-pass tier
-    assert not span_prefilter_dispatch("/root/testdata/sf0.001")
-    tables._ROWS_CACHE[("/fake/sf", "documents")] = (
-        SPAN_PREFILTER_MIN_DOC_ROWS
+
+def test_span_prefilter_dispatch_floor():
+    from alpaca_pyspark_spark.operators import dispatch
+    from alpaca_pyspark_spark.operators.dispatch import table_at_least
+    from alpaca_pyspark_spark.operators.text import (
+        SPAN_PREFILTER_MIN_DOC_ROWS as FLOOR,
     )
+
+    from .conftest import SF_DIR
+
+    # gate/bench fixtures sit below the floor -> one-pass tier
+    assert not table_at_least(SF_DIR, "documents", FLOOR)
+    dispatch._ROWS_CACHE[("/fake/sf", "documents")] = FLOOR
     try:
-        assert span_prefilter_dispatch("/fake/sf")
+        assert table_at_least("/fake/sf", "documents", FLOOR)
     finally:
-        del tables._ROWS_CACHE[("/fake/sf", "documents")]
+        del dispatch._ROWS_CACHE[("/fake/sf", "documents")]
     # unknown path: metadata unavailable -> the always-cheap tier
-    assert not span_prefilter_dispatch("/no/such/dir")
+    assert not table_at_least("/no/such/dir", "documents", FLOOR)
 
 
 def test_q210_forced_tier_equals_q186_half_corpus(spark):

@@ -8,7 +8,7 @@ candidate-pair stage?
     query is the 20% arm).  Work-∝-delta predicts time ≈ fixed
     corpus-side cost (signatures + band buckets, identical across
     arms) + a term tracking delta share.
-(b) Hot-cluster ratio on synthetic corpora (spanfloor generator shape,
+(b) Hot-cluster ratio on synthetic corpora (floor_sweep span generator shape,
     12k docs): uniform vs the same volume with 900 verbatim copies of
     one document (just under the 1000 bucket guard, the worst
     admissible bucket) and with 3000 copies (OVER the guard — the
@@ -44,7 +44,7 @@ from alpaca_pyspark_spark.plans import force_evaluate  # noqa: E402
 from alpaca_pyspark_spark.session import get_spark  # noqa: E402
 from alpaca_pyspark_spark.session import release_scoped_caches  # noqa: E402
 from alpaca_pyspark_spark.tables import load  # noqa: E402
-from tools.ab_r13_spanfloor import write_synth  # noqa: E402
+from tools.floor_sweep import _write_span_corpus as write_synth  # noqa: E402
 
 REPS = 3
 

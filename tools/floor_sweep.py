@@ -1,0 +1,314 @@
+"""Crossover sweep for one size-dispatch floor: time the two arms of a
+dispatched operator on synthetic data at several sizes, and check that
+they return the same rows.
+
+    python tools/floor_sweep.py quantile 2 6 20   # MILLIONS of lineitem rows
+    python tools/floor_sweep.py range 30 100 300  # THOUSANDS of rows, one key
+    python tools/floor_sweep.py span 20 60 200    # THOUSANDS of documents
+    python tools/floor_sweep.py dsir 20 60 200    # THOUSANDS of documents
+
+Tiers and the floors they set:
+
+* ``quantile`` — q102/q106 window vs sqrt-range decomposition,
+  ``queries.mining.QUANTILE_DECOMPOSE_MIN_TABLE_ROWS``;
+* ``range`` — q41's count+cents window on one key over a 30-day span
+  with a 24h frame: plain vs bucket-doubled (``hot``,
+  ``operators.rangewindow.RANGE_HOT_MIN_ROWS``) and bucket-doubled vs
+  prefix-bucket (``prefix``, ``PREFIX_MIN_BUCKET_ROWS`` at size/30 rows
+  per frame-width bucket);
+* ``span`` — q186/q114 one-pass vs hot-hash prefiltered,
+  ``operators.text.SPAN_PREFILTER_MIN_DOC_ROWS``;
+* ``dsir`` — the DSIR pair table recomputed vs persisted,
+  ``queries.llm.DSIR_PERSIST_MIN_DOC_ROWS``.
+
+Protocol, the same for every tier: the synthetic data is deterministic
+(xxhash64, no rand()) and written to parquet once per size, so both
+arms re-scan files like the real query; each arm runs once untimed,
+then the arms alternate for REPS timed runs each, forced through
+``plans.force_evaluate`` with scoped caches released between runs;
+medians are reported; both arms' full outputs are compared at every
+size.  Writes ``AB_floor_<tier>.json`` in the current directory and
+exits non-zero if any size lost parity.
+"""
+
+from __future__ import annotations
+
+import gc
+import json
+import shutil
+import statistics
+import sys
+import tempfile
+import time
+from pathlib import Path
+
+sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
+
+from pyspark.sql import functions as F  # noqa: E402
+
+from alpaca_pyspark_spark.plans import force_evaluate  # noqa: E402
+from alpaca_pyspark_spark.session import (  # noqa: E402
+    get_spark,
+    release_scoped_caches,
+    scoped_persist,
+)
+
+REPS = 3
+DAY_US = 24 * 3600 * 1_000_000
+SPAN_US = 30 * DAY_US
+
+
+# ------------------------------------------------------------ quantile
+def _write_lineitem(spark, n: int, path: str) -> None:
+    """lineitem-shaped rows: l_returnflag skewed ~50/25/25 (N, N, A, R)
+    like the real column, near-unique prices over the ~10.4M-cent
+    domain, integer quantities 1..50, unique (orderkey, linenumber)."""
+    spark.range(n).select(
+        F.element_at(
+            F.array(F.lit("N"), F.lit("N"), F.lit("A"), F.lit("R")),
+            (F.pmod(F.col("id"), F.lit(4)) + 1).cast("int"),
+        ).alias("l_returnflag"),
+        ((F.pmod(F.xxhash64("id"), F.lit(10_400_000)) + 90_000) / 100.0).alias(
+            "l_extendedprice"
+        ),
+        (F.pmod(F.xxhash64("id", F.lit(7)), F.lit(50)) + 1)
+        .cast("double")
+        .alias("l_quantity"),
+        (F.col("id") / 4 + 1).cast("bigint").alias("l_orderkey"),
+        (F.pmod(F.col("id"), F.lit(4)) + 1).cast("int").alias("l_linenumber"),
+    ).write.mode("overwrite").parquet(path)
+
+
+def _quantile_cases(n: int) -> dict:
+    from alpaca_pyspark_spark.queries import mining as m
+
+    return {
+        "q102": {"window": m._q102_window, "decomposed": m._q102_decomposed},
+        "q106": {"window": m._q106_window, "decomposed": m._q106_decomposed},
+    }
+
+
+# --------------------------------------------------------------- range
+def _write_one_key(spark, n: int, path: str) -> None:
+    """One hot key, pseudo-uniform timestamps over q41's 30-day span,
+    integer cents, unique row ids."""
+    spark.range(n).select(
+        F.col("id").alias("event_id"),
+        F.lit("HOT").alias("user_id"),
+        F.pmod(F.xxhash64("id"), F.lit(SPAN_US)).alias("us"),
+        F.pmod(F.xxhash64("id", F.lit(3)), F.lit(100_000)).alias("cents"),
+    ).write.mode("overwrite").parquet(path)
+
+
+def _range_cases(n: int) -> dict:
+    from alpaca_pyspark_spark.operators import rangewindow as rw
+
+    sums = {"cents_24h": F.col("cents")}
+    kw = dict(key="user_id", order_us="us", window_us=DAY_US)
+    build = rw._cs_agg_builder("n_24h", sums)
+    # the dispatcher's own bucket-width choice for an n-row key
+    buckets = min(
+        rw.PREFIX_MAX_BUCKETS,
+        max(rw.PREFIX_MIN_BUCKETS, n // rw.PREFIX_TARGET_BUCKET_ROWS),
+    )
+
+    def plain(df):
+        return rw._plain(df, agg_builder=build, **kw)
+
+    def wbucket(df):
+        return rw.trailing_range_window_skew_safe(df, agg_builder=build, **kw)
+
+    def prefix(df):
+        return rw.trailing_count_sums_prefix_bucket(
+            df,
+            row_id="event_id",
+            sums=sums,
+            count_alias="n_24h",
+            bucket_widths=max(1, SPAN_US // buckets),
+            **kw,
+        ).select(*df.columns, "n_24h", "cents_24h")
+
+    return {
+        "hot": {"plain": plain, "wbucket": wbucket},
+        "prefix": {"wbucket": wbucket, "prefix": prefix},
+    }
+
+
+# ---------------------------------------------------------------- span
+BLOCKS, BLOCK_LEN, POOL = 10, 47, 1000
+
+
+def _write_span_corpus(spark, n: int, path: str) -> None:
+    """BLOCKS blocks of BLOCK_LEN tokens per doc; block j of doc d is
+    shared boilerplate block pmod(xxhash64(d, j, 1), POOL) with
+    probability 1/10, else tokens unique to (d, i) — a hot-occurrence
+    fraction near sf0.1's measured 9%."""
+
+    def tok(i):
+        j = F.floor(i / BLOCK_LEN)
+        boiler = F.pmod(F.xxhash64(F.col("doc_id"), j), F.lit(10)) == 0
+        bid = F.pmod(F.xxhash64(F.col("doc_id"), j, F.lit(1)), F.lit(POOL))
+        return F.when(
+            boiler,
+            F.concat(
+                F.lit("b"),
+                bid.cast("string"),
+                F.lit("p"),
+                F.pmod(i, F.lit(BLOCK_LEN)).cast("string"),
+            ),
+        ).otherwise(F.concat(F.lit("u"), F.hex(F.xxhash64(F.col("doc_id"), i))))
+
+    spark.range(n).select(F.col("id").alias("doc_id")).select(
+        "doc_id",
+        F.array_join(
+            F.transform(F.sequence(F.lit(0), F.lit(BLOCKS * BLOCK_LEN - 1)), tok),
+            " ",
+        ).alias("text"),
+    ).write.mode("overwrite").parquet(path)
+
+
+def _span_cases(n: int) -> dict:
+    from alpaca_pyspark_spark.queries import llm, search
+
+    return {
+        "q186": {"onepass": llm._q186_onepass, "prefiltered": llm._q186_prefiltered},
+        "q114": {
+            "onepass": lambda d: search._q114_aggregate(search._q114_shingles(d)),
+            "prefiltered": lambda d: search._q114_aggregate(
+                search._q114_prefiltered_shingles(d)
+            ),
+        },
+    }
+
+
+# ---------------------------------------------------------------- dsir
+VOCAB, TOKS_PER_DOC = 1000, 470
+
+
+def _write_closed_vocab_corpus(spark, n: int, path: str) -> None:
+    """TOKS_PER_DOC tokens per doc drawn from a closed VOCAB-word
+    vocabulary, so bigram types saturate (~VOCAB²) while transitions
+    grow with the corpus — the regime the persist floor targets."""
+    spark.range(n).select(
+        F.col("id").alias("doc_id"),
+        F.array_join(
+            F.transform(
+                F.sequence(F.lit(0), F.lit(TOKS_PER_DOC - 1)),
+                lambda i: F.concat(
+                    F.lit("w"),
+                    F.pmod(F.xxhash64(F.col("id"), i), F.lit(VOCAB)).cast("string"),
+                ),
+            ),
+            " ",
+        ).alias("text"),
+    ).write.mode("overwrite").parquet(path)
+
+
+def _dsir_cases(n: int) -> dict:
+    from alpaca_pyspark_spark.functions import tokens
+    from alpaca_pyspark_spark.queries.llm import _dsir_raw_lm
+
+    def raw_lm(persist: bool):
+        def arm(docs):
+            t = tokens(F.col("text"))
+            k = F.size(t)
+            bg = F.explode(
+                F.arrays_zip(
+                    F.slice(t, 1, k - 1).alias("w1"), F.slice(t, 2, k - 1).alias("w2")
+                )
+            ).alias("bg")
+            trans = scoped_persist(
+                docs.filter(k >= 2)
+                .select("doc_id", bg)
+                .select("doc_id", "bg.w1", "bg.w2")
+            )
+            return _dsir_raw_lm(trans, persist_pairs=persist)
+
+        return arm
+
+    return {"q187": {"recompute": raw_lm(False), "persist": raw_lm(True)}}
+
+
+#: tier -> (size unit in rows, parquet writer, per-size case arms)
+TIERS = {
+    "quantile": (1_000_000, _write_lineitem, _quantile_cases),
+    "range": (1_000, _write_one_key, _range_cases),
+    "span": (1_000, _write_span_corpus, _span_cases),
+    "dsir": (1_000, _write_closed_vocab_corpus, _dsir_cases),
+}
+
+
+def _timed(arm, df) -> float:
+    spark = df.sparkSession
+    spark.catalog.clearCache()
+    gc.collect()
+    t0 = time.perf_counter()
+    force_evaluate(arm(df))
+    dt = time.perf_counter() - t0
+    release_scoped_caches()
+    spark.catalog.clearCache()
+    return round(dt, 2)
+
+
+def _rows(arm, df) -> list:
+    out = sorted((tuple(r) for r in arm(df).collect()), key=repr)
+    release_scoped_caches()
+    df.sparkSession.catalog.clearCache()
+    return out
+
+
+def main() -> None:
+    if len(sys.argv) < 3 or sys.argv[1] not in TIERS:
+        raise SystemExit(f"usage: floor_sweep.py {{{'|'.join(TIERS)}}} SIZES...")
+    tier, sizes = sys.argv[1], [int(a) for a in sys.argv[2:]]
+    unit, write, cases_for = TIERS[tier]
+    spark = get_spark(f"floor-sweep-{tier}")
+    spark.sparkContext.setLogLevel("ERROR")
+    root = tempfile.mkdtemp(prefix=f"floor_{tier}_")
+    out = {
+        "tier": tier,
+        "unit_rows": unit,
+        "protocol": "parquet-staged deterministic synthetic data; warm run "
+        f"per arm, then arms alternated for {REPS} noop-sink-forced runs "
+        "each in one JVM; medians; full outputs compared per size",
+        "sizes": {},
+    }
+    try:
+        for size in sizes:
+            n = size * unit
+            path = f"{root}/{size}"
+            write(spark, n, path)
+            df = spark.read.parquet(path)
+            res = {}
+            for case, arms in cases_for(n).items():
+                for arm in arms.values():
+                    _timed(arm, df)
+                t = {name: [] for name in arms}
+                for _ in range(REPS):
+                    for name, arm in arms.items():
+                        t[name].append(_timed(arm, df))
+                ref, *rest = [_rows(arm, df) for arm in arms.values()]
+                parity = all(r == ref for r in rest)
+                res[case] = {"parity": parity} | {
+                    name: {"s": s, "median": statistics.median(s)}
+                    for name, s in t.items()
+                }
+                medians = " ".join(
+                    f"{name}={res[case][name]['median']}s" for name in arms
+                )
+                print(
+                    f"# {tier} {size} {case}: {medians} parity={parity}",
+                    file=sys.stderr,
+                    flush=True,
+                )
+            out["sizes"][str(size)] = res
+    finally:
+        shutil.rmtree(root, ignore_errors=True)
+    Path(f"AB_floor_{tier}.json").write_text(json.dumps(out, indent=1) + "\n")
+    print(json.dumps(out, indent=1))
+    if not all(c["parity"] for s in out["sizes"].values() for c in s.values()):
+        raise SystemExit("parity FAILED")
+
+
+if __name__ == "__main__":
+    main()
