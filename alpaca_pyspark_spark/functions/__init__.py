@@ -12,6 +12,15 @@ from pyspark.sql import Column
 from pyspark.sql import functions as F
 
 
+def cents(col: Column) -> Column:
+    """Exact integer cents of a money column: ``round(col * 100)`` as
+    BIGINT.  Money queries sum these integers and divide ONCE at the
+    end, so Spark and the DuckDB oracle produce bit-identical doubles
+    (``round()`` on engine-divergent doubles does not: Spark rounds the
+    shortest decimal repr HALF_UP, DuckDB the exact binary value)."""
+    return F.round(col * 100).cast("bigint")
+
+
 def cosine_similarity(a: Column, b: Column) -> Column:
     """Cosine similarity of two ``array<double>`` columns.
 

@@ -75,7 +75,7 @@ def _try_real_decoder():
         import PIL.Image  # noqa: F401
 
         return True
-    except Exception:
+    except ImportError:
         return False
 
 

@@ -12,7 +12,7 @@ from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 
-from ..session import release_scoped_caches
+from ..session import release_scoped_caches, tune
 from . import advanced, analytics, core, extended, llm, mining, scale, search, tpch, warehouse
 
 QueryFn = Callable[[SparkSession, str], DataFrame]
@@ -22,19 +22,28 @@ ORACLE: dict[str, str] = {}
 
 
 def _boundary(fn: QueryFn) -> QueryFn:
-    """Query-boundary cache discipline: entering a registered query
-    releases every ``scoped_persist`` the PREVIOUS query took (its
-    consuming action — the driver's / bench's collect — has completed
-    by then), so a long-lived session never holds more than one
-    query's worth of operator caches.  Harnesses that want zero
-    residue between actions (tests, bench) additionally call
-    ``release_scoped_caches()`` right after consuming.  The bare
-    release respects an active ``scoped_caches()`` floor, so calling
-    a registered query inside a user's scoped block never unpersists
-    the enclosing scope's still-live persists."""
+    """The query boundary: the one place per-query session rules run.
+
+    Cache discipline: entering a registered query releases every
+    ``scoped_persist`` the PREVIOUS query took (its consuming action —
+    the driver's / bench's collect — has completed by then), so a
+    long-lived session never holds more than one query's worth of
+    operator caches.  Harnesses that want zero residue between actions
+    (tests, bench) additionally call ``release_scoped_caches()`` right
+    after consuming.  The bare release respects an active
+    ``scoped_caches()`` floor, so calling a registered query inside a
+    user's scoped block never unpersists the enclosing scope's
+    still-live persists.
+
+    Session confs: it then applies the engine's confs with
+    ``session.tune`` before the query builds its plan.  This runs at
+    every boundary, not once per session, because callers (the
+    streaming gate, tests) change confs between queries and each query
+    must start from the engine's confs."""
 
     def wrapped(spark: SparkSession, sf_dir: str) -> DataFrame:
         release_scoped_caches()
+        tune(spark)
         return fn(spark, sf_dir)
 
     wrapped.__name__ = fn.__name__

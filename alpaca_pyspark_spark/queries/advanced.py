@@ -21,7 +21,6 @@ from ..operators.timeseries import (
     rolling_moments,
     time_weighted_average,
 )
-from ..session import tune
 from ..tables import load
 
 
@@ -30,7 +29,6 @@ def q48_locf_gapfill(spark: SparkSession, sf_dir: str) -> DataFrame:
     """LOCF gap-fill (TimescaleDB ``locf(time_bucket_gapfill(...))``
     analog): each user's daily last purchase value, carried forward
     over days with no purchases, on a per-user generated day spine."""
-    tune(spark)
     # LOCF carries the last OBSERVATION forward — a NULL value is not
     # an observation (and arg_max/max_by disagree on NULL-valued rows),
     # so observations are valued purchases on BOTH sides
@@ -66,7 +64,6 @@ def q49_listagg(spark: SparkSession, sf_dir: str) -> DataFrame:
     Spark has no ordered string_agg aggregate; the scalable rewrite is
     collect_list of (order-key, payload) structs → sort_array →
     transform → array_join — one shuffle, deterministic order."""
-    tune(spark)
     li = load(spark, sf_dir, "lineitem")
     # (l_linenumber, l_returnflag) is NOT unique per order — the struct
     # sort is total over BOTH fields, and the oracle's ORDER BY carries
@@ -104,7 +101,6 @@ def q50_rolling_volatility(spark: SparkSession, sf_dir: str) -> DataFrame:
     algebraic (n, Σx, Σx²) daily decomposition — the RANGE window
     re-sums three integers per day instead of rescanning rows, and the
     stddev is a fixed float-op tail over exact integer sums."""
-    tune(spark)
     e = load(spark, sf_dir, "events").filter(F.col("event_type") == "purchase")
     return rolling_moments(
         e, keys=["user_id"], ts="ts", value_col="value", trailing_days=6
@@ -144,7 +140,6 @@ def q51_drawdown(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Running peak and drawdown of each user's purchase series —
     the canonical risk metric over the bar/tick data model (running
     max picks exact inputs; one subtraction + one division)."""
-    tune(spark)
     e = load(spark, sf_dir, "events").filter(
         F.col("event_type") == "purchase"
     ).select("user_id", "ts", "value")
@@ -167,7 +162,6 @@ def q52_twap(spark: SparkSession, sf_dir: str) -> DataFrame:
     q02's VWAP bars): each observation weighted by the integer µs it
     stays current within its day.  BIGINT weighted sums, two final
     divisions — engine-exact."""
-    tune(spark)
     e = load(spark, sf_dir, "events")
     return time_weighted_average(
         e, keys=["user_id"], ts="ts", value_col="value"
@@ -196,7 +190,6 @@ FROM x GROUP BY 1, 2
 def q53_document_chunking(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Overlapping token-window chunking (50-token windows, stride 40)
     — the context-window shaping step between curation and packing."""
-    tune(spark)
     docs = load(spark, sf_dir, "documents")
     return chunk_documents(
         docs, id_col="doc_id", text_col="text", chunk_tokens=50, stride=40
@@ -231,7 +224,6 @@ def q54_pii_scrub(spark: SparkSession, sf_dir: str) -> DataFrame:
     numbers are injected per doc_id, then redacted and counted — the
     pre-training privacy pass, all in codegen regex ops that Java and
     RE2 interpret identically."""
-    tune(spark)
     docs = load(spark, sf_dir, "documents").select(
         "doc_id",
         F.concat(
@@ -281,7 +273,6 @@ def q55_bloom_join_prune(spark: SparkSession, sf_dir: str) -> DataFrame:
     join's (which is the oracle)."""
     from ..operators.bloomjoin import bloom_prune, build_bloom
 
-    tune(spark)
     li = load(spark, sf_dir, "lineitem")
     o = load(spark, sf_dir, "orders").filter(
         F.col("o_orderpriority").isin("1-URGENT", "2-HIGH")
@@ -317,7 +308,6 @@ def q56_token_vocab(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Corpus vocabulary via lateral explode (the UDTF-shaped op):
     explode every document's tokens, count, keep the top 20 under a
     total (count DESC, token ASC) order."""
-    tune(spark)
     docs = load(spark, sf_dir, "documents")
     from ..functions import tokens
 
@@ -351,7 +341,6 @@ def q57_stratified_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     the corpus-mixing primitive when each domain needs a fixed budget,
     not a fixed rate (q37 is the rate-based sibling).  One shuffle on
     the strata, rank window, no RNG state."""
-    tune(spark)
     docs = load(spark, sf_dir, "documents")
     from pyspark.sql import Window
 
@@ -386,7 +375,6 @@ def q58_window_rank_suite(spark: SparkSession, sf_dir: str) -> DataFrame:
     dense_rank over one per-flag price order — these four are the
     remaining ranking functions the engine had not yet declared
     (rank/row_number/lag/lead live in q20)."""
-    tune(spark)
     li = load(spark, sf_dir, "lineitem")
     from pyspark.sql import Window
 
@@ -428,7 +416,6 @@ def q59_conditional_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Conditional aggregation (the SQL FILTER clause family):
     count_if / sum-where / any / every per user over events — the
     single-pass multi-metric shape that replaces N filtered scans."""
-    tune(spark)
     e = load(spark, sf_dir, "events")
     cents = F.round(F.col("value") * 100).cast("bigint")
     return e.groupBy("user_id").agg(
@@ -463,7 +450,6 @@ def q60_scd2_history(spark: SparkSession, sf_dir: str) -> DataFrame:
     [effective_from, effective_to) validity and a current flag —
     lead() closes each version, the final version stays open (NULL).
     One shuffle, one window pass; the standard CDC-to-warehouse shape."""
-    tune(spark)
     e = load(spark, sf_dir, "events").filter(F.col("event_type") == "signup")
     from pyspark.sql import Window
 
@@ -503,7 +489,6 @@ def q61_contamination_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
     integer counts, one division, engine-exact."""
     from ..functions import tokens, word_shingles
 
-    tune(spark)
     docs = load(spark, sf_dir, "documents")
     grams = F.array_distinct(word_shingles(tokens(F.col("text")), 5))
     # The generator rides ALONE in its projection: a sibling column
@@ -567,7 +552,6 @@ def q62_repetition_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     dominance per document — exact integer counts, two divisions."""
     from ..functions import tokens, word_shingles
 
-    tune(spark)
     docs = load(spark, sf_dir, "documents")
     toks = tokens(F.col("text"))
     grams = word_shingles(toks, 3)
@@ -634,7 +618,6 @@ def q63_corpus_mixture(spark: SparkSession, sf_dir: str) -> DataFrame:
     division by the (windowed) grand total."""
     from ..functions import tokens
 
-    tune(spark)
     docs = load(spark, sf_dir, "documents")
     from pyspark.sql import Window
 
@@ -678,7 +661,6 @@ def q64_shipping_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
     for the first join.  Revenue in exact cents: price·(1−disc)
     re-expressed as integer cents·(100−disc_pct) summed in BIGINT,
     ONE final division by 10000."""
-    tune(spark)
     c = load(spark, sf_dir, "customer").filter(F.col("c_mktsegment") == "BUILDING")
     o = load(spark, sf_dir, "orders").filter(
         F.col("o_orderdate") < "1995-03-15 00:00:00"
@@ -728,7 +710,6 @@ def q65_exists_subquery(spark: SparkSession, sf_dir: str) -> DataFrame:
     quantity > 45, minus any that also shipped late-return lines —
     Catalyst decorrelates both into semi/anti joins (no per-row
     subquery execution)."""
-    tune(spark)
     for t in ("part", "supplier", "lineitem"):
         load(spark, sf_dir, t).createOrReplaceTempView(f"__q65_{t}")
     return spark.sql(

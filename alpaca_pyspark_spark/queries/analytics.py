@@ -21,7 +21,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from ..session import scoped_persist, tune
+from ..functions import cents
+from ..session import scoped_persist
 from ..tables import load
 
 
@@ -34,7 +35,6 @@ def q66_order_count_distribution(spark: SparkSession, sf_dir: str) -> DataFrame:
     partitioning (one shuffle each side, no re-exchange between join
     and count); the second aggregate's input is ≤ |distinct counts|
     rows, so its shuffle is negligible at any scale."""
-    tune(spark)
     c = load(spark, sf_dir, "customer")
     o = load(spark, sf_dir, "orders").filter(
         F.col("o_orderpriority") != "1-URGENT"
@@ -77,7 +77,6 @@ def q67_interval_coalesce(spark: SparkSession, sf_dir: str) -> DataFrame:
     throughout; explicit ROWS frames (DuckDB's ORDER BY default is
     RANGE, which merges ties differently).  One shuffle on user_id
     shared by both windows and the final aggregate."""
-    tune(spark)
     e = load(spark, sf_dir, "events")
     from ..operators.timeseries import _micros
 
@@ -155,7 +154,6 @@ def q68_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
     nothing buffers a whole key anywhere.  Output identical: stage
     counts count users whose stage-N min exists, and a user without
     stage N-1 cannot have stage N in either formulation."""
-    tune(spark)
     e = load(spark, sf_dir, "events")
     ts, et = F.col("ts"), F.col("event_type")
     t1 = (
@@ -218,7 +216,6 @@ def q69_snapshot_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
     mod-filters; snapshot B bumps every 7th key's price).  Both sides
     hash-partition on the join key; the classify+aggregate is one
     more small shuffle."""
-    tune(spark)
     o = load(spark, sf_dir, "orders")
     cents = F.round(F.col("o_totalprice") * 100).cast("bigint")
     a = o.filter(F.col("o_orderkey") % 3 != 0).select(
@@ -285,7 +282,6 @@ def q70_small_quantity_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     lineitem scan never shuffles.  The avg comparison is done in
     integers (qty·5·cnt < Σqty — quantities are integer-valued), so
     no float compare; ONE final division by 7."""
-    tune(spark)
     p = load(spark, sf_dir, "part").filter(F.col("p_brand") == "Brand#23")
     li = load(spark, sf_dir, "lineitem")
     qty = F.col("l_quantity").cast("bigint")
@@ -337,7 +333,6 @@ def q71_argmax_event(spark: SparkSession, sf_dir: str) -> DataFrame:
     struct, but plain ``max`` of a struct orders lexicographically on
     both engines.  Single partial-aggregatable shuffle (max combines
     map-side)."""
-    tune(spark)
     # argmax NULL contract: a NULL value cannot be a "highest-value
     # event" and struct-max NULL-field ordering is engine-specific —
     # valued events only on BOTH sides (n_events counts them)
@@ -381,7 +376,6 @@ def q72_value_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
     are exact; the share is one windowed grand total and one
     division.  Bin + aggregate is one shuffle; the share window runs
     on |bins| rows."""
-    tune(spark)
     e = load(spark, sf_dir, "events")
     cents = F.round(F.col("value") * 100).cast("bigint")
     binned = e.select(
@@ -430,7 +424,6 @@ def q73_weighted_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     filter that Catalyst keeps in whole-stage codegen."""
     from ..operators.sampling import weighted_sample
 
-    tune(spark)
     docs = load(spark, sf_dir, "documents")
     w = F.least(F.col("n_chars"), F.lit(500))
     return weighted_sample(docs, id_col="doc_id", weight_promille=w).select(
@@ -459,7 +452,6 @@ def q74_cohort_retention(spark: SparkSession, sf_dir: str) -> DataFrame:
     to its ≤|days| distinct rows before anything per-user happens;
     the cohort min and the join-back then work on the tiny per-user-
     day table.  Same output set, oracle unchanged."""
-    tune(spark)
     e = load(spark, sf_dir, "events")
     day = F.date_trunc("DAY", F.col("ts")).cast("date")
     days = e.select("user_id", day.alias("__day")).distinct()
@@ -502,7 +494,6 @@ def q75_hopping_window(spark: SparkSession, sf_dir: str) -> DataFrame:
     the oracle reproduces Spark's slide-grid assignment with a 2-row
     unnest.  Exact integer cents; the window fan-out is an Expand
     (map-side), so the only shuffle is the aggregate itself."""
-    tune(spark)
     e = load(spark, sf_dir, "events")
     cents = F.round(F.col("value") * 100).cast("bigint")
     win = F.window("ts", "2 hours", "1 hour")
@@ -549,7 +540,6 @@ def q76_ewma(spark: SparkSession, sf_dir: str) -> DataFrame:
     folds the identical order, so the doubles match bit-for-bit.
     One shuffle (the per-user collect); series length is bounded by
     per-key activity, not corpus size."""
-    tune(spark)
     e = load(spark, sf_dir, "events").filter(F.col("event_type") == "purchase")
     ordered = (
         e.groupBy("user_id")
@@ -604,7 +594,6 @@ def q105_lambda_serving(spark: SparkSession, sf_dir: str) -> DataFrame:
     merges), so serving from partials is bit-identical to rescanning
     raw history.  The rollup branch re-aggregating its partials is
     the same merge the q30/q46/q77 cascades pin down."""
-    tune(spark)
     cutoff = F.lit("2024-01-28").cast("timestamp")
     e = load(spark, sf_dir, "events")
     cents = F.round(F.col("value") * 100).cast("bigint")
@@ -666,7 +655,6 @@ def q107_session_paths(spark: SparkSession, sf_dir: str) -> DataFrame:
     |distinct paths| rows and top-20 is TakeOrdered."""
     from ..operators.sessionize import session_openings_adaptive
 
-    tune(spark)
     e = load(spark, sf_dir, "events").select("user_id", "ts", "event_id", "event_type")
     sessions = session_openings_adaptive(
         e,
@@ -733,7 +721,6 @@ def q109_trailing_active_users(spark: SparkSession, sf_dir: str) -> DataFrame:
     distinct runs on that.  Report days are clipped to the observed
     range so edge windows are partial by construction, same on both
     engines."""
-    tune(spark)
     e = load(spark, sf_dir, "events")
     ud = e.select(
         "user_id", F.date_trunc("DAY", F.col("ts")).alias("d")
@@ -803,7 +790,6 @@ def q108_schema_evolution_union(spark: SparkSession, sf_dir: str) -> DataFrame:
     NULL generation as its own bucket, proving no rows are lost or
     misattributed across the seam (oracle: explicit UNION ALL with a
     NULL literal)."""
-    tune(spark)
     o = load(spark, sf_dir, "orders")
     cutoff = F.lit("2000-01-01").cast("timestamp")
     v1 = o.filter(F.col("o_orderdate") < cutoff).select(
@@ -868,11 +854,10 @@ def q115_ignore_nulls_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
     buckets.  Bit-identical per row; oracle unchanged."""
     from ..operators.rangewindow import locf_first_adaptive
 
-    tune(spark)
     e = load(spark, sf_dir, "events")
     pv = F.when(
         F.col("event_type") == "purchase",
-        F.round(F.col("value") * 100).cast("bigint"),
+        cents(F.col("value")),
     )
     out = locf_first_adaptive(
         e.select("user_id", "event_id", "ts", "event_type", "value"),
@@ -926,7 +911,6 @@ def q116_incremental_view_update(spark: SparkSession, sf_dir: str) -> DataFrame:
     At 100 TB the state table is |types x buckets| rows regardless of
     history length; each nightly update touches one day of raw data
     plus that state."""
-    tune(spark)
     cutoff = F.lit("2024-01-30").cast("timestamp")
     e = load(spark, sf_dir, "events")
     cents = F.round(F.col("value") * 100).cast("bigint")
@@ -989,7 +973,6 @@ def q117_sequence_gaps(spark: SparkSession, sf_dir: str) -> DataFrame:
     [prev+1, id-1] range — no generate/explode of the full id domain,
     so the cost tracks |events|, not |id-space| (the naive
     sequence-table anti-join would materialize the domain)."""
-    tune(spark)
     e = load(spark, sf_dir, "events")
     w = Window.partitionBy("user_id").orderBy("event_id")
     prev = F.lag("event_id").over(w)
@@ -1035,7 +1018,6 @@ def q118_chi_square_independence(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale: the contingency table is |types x cohorts| rows no matter
     the fact size; the only wide exchange is the cell count."""
-    tune(spark)
     e = load(spark, sf_dir, "events")
     cells = e.groupBy(
         "event_type", (F.col("user_id") % 5).alias("cohort")
@@ -1097,7 +1079,6 @@ def q119_grouped_mode(spark: SparkSession, sf_dir: str) -> DataFrame:
     use the explicit form: count per (group, value) — ONE partial-
     aggregated fact exchange — then a rank window over the tiny
     aggregate with a total order.  Oracle states the same order."""
-    tune(spark)
     e = load(spark, sf_dir, "events")
     counts = e.groupBy("user_id", "event_type").agg(F.count(F.lit(1)).alias("n"))
     w = Window.partitionBy("user_id").orderBy(F.col("n").desc(), "event_type")
@@ -1142,7 +1123,6 @@ def q129_cuped_experiment_readout(spark: SparkSession, sf_dir: str) -> DataFrame
     table (conditional partial aggs); the moment row is a second
     single-row aggregate broadcast back over the 2-row variant
     aggregate."""
-    tune(spark)
     e = load(spark, sf_dir, "events")
     cutoff = F.lit("2024-01-16 00:00:00").cast("timestamp_ntz")
     v_centi = F.round(F.col("value") * 100).cast("bigint")
@@ -1258,7 +1238,6 @@ def q138_pareto_frontier(spark: SparkSession, sf_dir: str) -> DataFrame:
     and a sorted scan, regardless of how many parts a brand has.
     Prices compare as exact integer cents (repo-wide convention:
     float money never enters an ordering)."""
-    tune(spark)
     p = load(spark, sf_dir, "part").select(
         "p_partkey",
         "p_brand",
@@ -1304,7 +1283,6 @@ def q142_last_touch_attribution(spark: SparkSession, sf_dir: str) -> DataFrame:
     no per-row subquery."""
     from ..operators.asof import asof_join
 
-    tune(spark)
     ev = load(spark, sf_dir, "events")
     purchases = ev.filter(F.col("event_type") == "purchase").select(
         "event_id", "user_id", "ts", "value"
@@ -1351,7 +1329,6 @@ def q139_exact_group_quantiles(spark: SparkSession, sf_dir: str) -> DataFrame:
     no interpolation, so ties and floats cannot diverge between
     engines.  One exchange on the group key; the sort is linear per
     group and never global."""
-    tune(spark)
     # quantiles ignore NULL measures (aggregate NULL contract; NULL
     # sort position is engine-specific — oracle carries the same WHERE)
     ev = (
@@ -1359,7 +1336,7 @@ def q139_exact_group_quantiles(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("value").isNotNull())
         .select(
             "event_type",
-            F.round(F.col("value") * 100).cast("bigint").alias("__c"),
+            cents(F.col("value")).alias("__c"),
         )
     )
     w = Window.partitionBy("event_type").orderBy("__c")
@@ -1415,13 +1392,12 @@ def q143_seasonal_naive_error(spark: SparkSession, sf_dir: str) -> DataFrame:
     a row-offset lag), co-partitioned with the hourly aggregate on
     the same (type, hour) key.  Error sums accumulate as exact
     integer cents; the two means are final one-shot divisions."""
-    tune(spark)
     ev = load(spark, sf_dir, "events")
     hourly = (
         ev.select(
             "event_type",
             F.date_trunc("hour", F.col("ts")).alias("h"),
-            F.round(F.col("value") * 100).cast("bigint").alias("__c"),
+            cents(F.col("value")).alias("__c"),
         )
         .groupBy("event_type", "h")
         .agg(F.sum("__c").alias("tot"))
@@ -1472,7 +1448,6 @@ def q151_rfm_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
     aggregate — dimension-sized, not fact-sized — which is why the
     global sort is acceptable here and would not be on the raw event
     stream.  Lower quintile = better (recent/frequent/big-spending)."""
-    tune(spark)
     e = load(spark, sf_dir, "events")
     anchor = e.agg(F.max(F.to_date("ts")).alias("__anchor"))
     per_user = (
@@ -1481,7 +1456,7 @@ def q151_rfm_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(
             F.max(F.to_date("ts")).alias("__last"),
             F.count(F.lit(1)).alias("frequency"),
-            F.sum(F.round(F.col("value") * 100).cast("bigint")).alias("__cents"),
+            F.sum(cents(F.col("value"))).alias("__cents"),
         )
         .crossJoin(F.broadcast(anchor))
         .select(
@@ -1552,7 +1527,6 @@ def q152_conversion_delay(spark: SparkSession, sf_dir: str) -> DataFrame:
     division per output row."""
     from ..operators.asof import asof_join
 
-    tune(spark)
     ev = load(spark, sf_dir, "events")
     purchases = ev.filter(F.col("event_type") == "purchase").select(
         "event_id", "user_id", "ts"

@@ -27,7 +27,6 @@ from ..operators.adjustment import (
 from ..operators.asof import asof_join
 from ..operators.sessionize import session_summary
 from ..operators.topk import top_k_per_group
-from ..session import tune
 from ..tables import load
 
 
@@ -37,7 +36,6 @@ def q01_scan_filter_project(spark: SparkSession, sf_dir: str) -> DataFrame:
     symbol IN-list + time-range params, common.py:393-395).  The filter
     and the 5-column projection reach the parquet scan via Catalyst
     (PushedFilters in the plan — see tests/test_plans.py)."""
-    tune(spark)
     e = load(spark, sf_dir, "events")
     return e.filter(
         F.col("event_type").isin("click", "purchase")
@@ -59,7 +57,6 @@ def q02_bars_tumbling(spark: SparkSession, sf_dir: str) -> DataFrame:
     schema bars.py:115-127).  events: user_id↔symbol, ts↔time,
     value↔price; each tick has implicit size 1 so volume==trade_count
     and vwap is the mean price."""
-    tune(spark)
     e = load(spark, sf_dir, "events")
     # vwap is computed over exact integer cents (`value` is
     # cent-quantized): the BIGINT sum is order-independent, so the one
@@ -120,7 +117,6 @@ def q03_interval_join_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     per key, so the oracle SQL is UNCHANGED."""
     from ..operators.intervalagg import trailing_interval_agg_adaptive
 
-    tune(spark)
     e = load(spark, sf_dir, "events")
     s = e.filter(F.col("event_type") == "signup").select(
         F.col("user_id"), F.col("event_id").alias("signup_id"), F.col("ts").alias("s_ts")
@@ -197,7 +193,6 @@ def q205_interval_agg_decomposed(spark: SparkSession, sf_dir: str) -> DataFrame:
     pair join and the oracle is UNCHANGED (q03's SQL verbatim)."""
     from ..operators.intervalagg import trailing_interval_agg
 
-    tune(spark)
     e = load(spark, sf_dir, "events")
     s = e.filter(F.col("event_type") == "signup").select(
         "user_id",
@@ -235,7 +230,6 @@ def q205_interval_agg_decomposed(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q04_sort_limit_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Sort/limit pushdown analog (reference D3/D4) as distributed
     per-group top-k: 5 priciest lineitems per returnflag."""
-    tune(spark)
     li = load(spark, sf_dir, "lineitem")
     return top_k_per_group(
         li.select("l_returnflag", "l_orderkey", "l_linenumber", "l_extendedprice"),
@@ -268,7 +262,6 @@ def q05_groupby_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Hierarchical aggregation over region→nation→customer with
     ROLLUP subtotals; dimension joins are broadcast (region/nation are
     fixed-cardinality — never shuffle the fact side for them)."""
-    tune(spark)
     c = load(spark, sf_dir, "customer")
     n = load(spark, sf_dir, "nation")
     r = load(spark, sf_dir, "region")
@@ -303,7 +296,6 @@ HAVING count(*) > 0
 def q06_asof_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Point-in-time join (reference D9 ``asof`` option): for each
     click, the user's latest purchase value at-or-before the click."""
-    tune(spark)
     e = load(spark, sf_dir, "events")
     clicks = e.filter(F.col("event_type") == "click").select(
         "user_id", F.col("event_id").alias("click_id"), "ts"
@@ -336,7 +328,6 @@ def q07_adjustment(spark: SparkSession, sf_dir: str) -> DataFrame:
     purchases are 'prices', errors play a dividend feed; each price is
     reduced by the sum of strictly-later dividend amounts.  Linear
     window implementation (no self-join), exact in integer cents."""
-    tune(spark)
     e = load(spark, sf_dir, "events")
     prices = e.filter(F.col("event_type") == "purchase").select(
         "user_id", F.col("event_id").alias("purchase_id"), "ts", "value"
@@ -383,7 +374,6 @@ def q07_adjustment_split(spark: SparkSession, sf_dir: str) -> DataFrame:
     broadcasts — the price stream is never shuffled, and the sequential
     ``aggregate`` product is bit-exact against DuckDB's ``list_reduce``
     over the same sorted list (no exp/log, no rounding)."""
-    tune(spark)
     e = load(spark, sf_dir, "events")
     prices = e.filter(F.col("event_type") == "purchase").select(
         "user_id", F.col("event_id").alias("purchase_id"), "ts", "value"
@@ -410,7 +400,6 @@ def q07_adjustment_all(spark: SparkSession, sf_dir: str) -> DataFrame:
     in exact integer cents, then the ordered-fold split product applied
     — exact end-to-end (one window pass for dividends + one broadcast
     map stage for splits)."""
-    tune(spark)
     e = load(spark, sf_dir, "events")
     prices = e.filter(F.col("event_type") == "purchase").select(
         "user_id", F.col("event_id").alias("purchase_id"), "ts", "value"
@@ -506,7 +495,6 @@ def q08_setops_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Idempotent re-ingest analog (reference C5 skip semantics):
     union of two overlapping loads → exact dedup → EXCEPT ALL of an
     exclusion set."""
-    tune(spark)
     # Three independent scans: sharing one DataFrame's lineage across
     # union + exceptAll trips Spark 4.1's attribute dedup
     # (INTERNAL_ERROR_ATTRIBUTE_NOT_FOUND); separate reads also mirror
@@ -536,7 +524,6 @@ def q09_scalar_funcs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The parse/cast layer as scalar expressions (reference C1-C4):
     date_trunc, concat_ws (C3 array→string), coalesce defaults (C4),
     JSON extraction, string/math functions."""
-    tune(spark)
     e = load(spark, sf_dir, "events")
     return e.select(
         "event_id",
@@ -570,7 +557,6 @@ def q10_semi_anti(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Key-existence checks (reference symbols validation,
     common.py:252-267): customers with / without orders via
     left_semi / left_anti joins."""
-    tune(spark)
     c = load(spark, sf_dir, "customer")
     o = load(spark, sf_dir, "orders").select("o_custkey")
     cond = c.c_custkey == o.o_custkey
@@ -596,7 +582,6 @@ WHERE NOT EXISTS (SELECT 1 FROM orders o WHERE o.o_custkey = c.c_custkey)
 def q11_exact_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact distinct-cardinality aggregation (oracle-checkable twin
     of the approx query below)."""
-    tune(spark)
     li = load(spark, sf_dir, "lineitem")
     return li.agg(
         F.count_distinct("l_partkey").alias("n_parts"),
@@ -619,7 +604,6 @@ def q11_approx_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
     engine-specific; the driver records a rows-only check.  At 100 TB
     this is THE way to count distincts: fixed-size sketch, single pass,
     mergeable across partitions."""
-    tune(spark)
     li = load(spark, sf_dir, "lineitem")
     return li.agg(
         F.approx_count_distinct("l_partkey", rsd=0.02).alias("n_parts_approx"),
@@ -644,7 +628,6 @@ def q14_stream_session(spark: SparkSession, sf_dir: str) -> DataFrame:
     single pass is flat."""
     from ..operators.sessionize import session_summary_adaptive
 
-    tune(spark)
     e = load(spark, sf_dir, "events")
     return session_summary_adaptive(
         e.select("user_id", "ts"), key="user_id", ts="ts", gap="30 minutes"
@@ -668,7 +651,6 @@ def q130_streaming_sessions_executed(spark: SparkSession, sf_dir: str) -> DataFr
     from ..streaming.gate import run_streaming_gate
     from ..streaming.sessions import streaming_session_summary
 
-    tune(spark)
     e = load(spark, sf_dir, "events").select("user_id", "ts")
     sunk = run_streaming_gate(
         spark,
@@ -704,7 +686,6 @@ def q131_streaming_dedup_executed(spark: SparkSession, sf_dir: str) -> DataFrame
     from ..streaming.dedup import dedup_stream
     from ..streaming.gate import run_streaming_gate
 
-    tune(spark)
     e = load(spark, sf_dir, "events").select(
         "event_id", "ts", "user_id", "event_type", "value"
     )
@@ -748,7 +729,6 @@ def q145_streaming_outer_join_executed(spark: SparkSession, sf_dir: str) -> Data
     from ..streaming.gate import run_streaming_gate, sentinel_row
     from ..streaming.joins import interval_join_stream
 
-    tune(spark)
     e = load(spark, sf_dir, "events").select("event_id", "ts", "user_id", "event_type")
     sentinel = sentinel_row(
         spark, sf_dir, lambda ts: (-1, ts, -1),
@@ -811,7 +791,6 @@ def q146_streaming_hourly_windows_executed(spark: SparkSession, sf_dir: str) -> 
     never emits and the post-sink filter is belt-and-suspenders."""
     from ..streaming.gate import run_streaming_gate, sentinel_row
 
-    tune(spark)
     e = load(spark, sf_dir, "events").select("ts", "event_type")
     sentinel = sentinel_row(
         spark, sf_dir, lambda ts: (ts, "__sentinel"),
@@ -866,7 +845,6 @@ def q181_streaming_bars_executed(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..streaming.bars import streaming_bars
     from ..streaming.gate import run_streaming_gate, sentinel_row
 
-    tune(spark)
     e = load(spark, sf_dir, "events").select("user_id", "ts", "value")
     sentinel = sentinel_row(
         spark, sf_dir, lambda ts: (-1, ts, 0.0),
@@ -930,7 +908,6 @@ def q153_stateful_sessions_executed(spark: SparkSession, sf_dir: str) -> DataFra
     from ..streaming.gate import run_streaming_gate, sentinel_row
     from ..streaming.stateful import event_terminated_sessions
 
-    tune(spark)
     e = load(spark, sf_dir, "events").select("user_id", "ts", "event_type")
     sentinel = sentinel_row(
         spark, sf_dir, lambda ts: (-1, ts, "view"),
@@ -997,7 +974,6 @@ def q149_stream_static_enrich_executed(spark: SparkSession, sf_dir: str) -> Data
     from ..streaming.enrich import enrich_stream
     from ..streaming.gate import run_streaming_gate
 
-    tune(spark)
     e = load(spark, sf_dir, "events")
     profile = (
         e.filter(F.col("event_type") == "purchase")
@@ -1102,7 +1078,6 @@ def q103_asof_tolerance(spark: SparkSession, sf_dir: str) -> DataFrame:
     one extra column."""
     from ..operators.asof import asof_join
 
-    tune(spark)
     e = load(spark, sf_dir, "events")
     clicks = e.filter(F.col("event_type") == "click").select(
         "user_id", F.col("event_id").alias("click_id"), "ts"
@@ -1161,7 +1136,6 @@ def q203_connector_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..sources.replay import CaptureSink, ReplayTradesServer
     from ..streaming.source import StockTradesStreamDataSource
 
-    tune(spark)
     register_all(spark)
     spark.dataSource.register(StockTradesStreamDataSource)
     ev = (

@@ -14,12 +14,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from ..session import tune
+from ..functions import cents
 from ..tables import load
-
-
-def _cents(col) -> F.Column:
-    return F.round(col * 100).cast("bigint")
 
 
 # ---------------------------------------------------------------- q20
@@ -27,7 +23,6 @@ def q20_window_funcs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """lag/lead/row_number/running-sum over per-order line sequences
     (the window-function surface the reference's bar semantics imply,
     SURVEY.md §2F)."""
-    tune(spark)
     li = load(spark, sf_dir, "lineitem")
     # (l_orderkey, l_linenumber) is NOT unique in the synthetic data;
     # the order-by must be a total order for deterministic lag/lead —
@@ -44,7 +39,7 @@ def q20_window_funcs(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.lag("l_quantity").over(w).alias("prev_qty"),
         F.lead("l_quantity").over(w).alias("next_qty"),
         F.row_number().over(w).cast("bigint").alias("line_seq"),
-        (F.sum(_cents(F.col("l_extendedprice"))).over(run) / 100.0).alias("running_price"),
+        (F.sum(cents(F.col("l_extendedprice"))).over(run) / 100.0).alias("running_price"),
     )
 
 
@@ -66,7 +61,6 @@ WINDOW w AS (PARTITION BY l_orderkey
 def q21_grouping_sets(spark: SparkSession, sf_dir: str) -> DataFrame:
     """GROUPING SETS aggregation (flag×status, flag, total) — via the
     SQL surface, which is first-class in this engine."""
-    tune(spark)
     load(spark, sf_dir, "lineitem").createOrReplaceTempView("lineitem_gs")
     return spark.sql(
         """
@@ -96,10 +90,9 @@ HAVING count(*) > 0
 def q22_cube(spark: SparkSession, sf_dir: str) -> DataFrame:
     """CUBE over (returnflag, linestatus): all 4 grouping combinations
     in one pass (Catalyst expands + single shuffle)."""
-    tune(spark)
     li = load(spark, sf_dir, "lineitem")
     return li.cube("l_returnflag", "l_linestatus").agg(
-        (F.sum(_cents(F.col("l_quantity"))) / 100.0).alias("sum_qty"),
+        (F.sum(cents(F.col("l_quantity"))) / 100.0).alias("sum_qty"),
         F.count(F.lit(1)).alias("n_rows"),
     )
 
@@ -123,12 +116,11 @@ def q23_star_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     shuffles for the joins (the shape that survives 100 TB: filters
     reach the dim scans, fact side streams through codegen'd hash
     probes, only the final agg shuffles)."""
-    tune(spark)
     li = load(spark, sf_dir, "lineitem")
     part = load(spark, sf_dir, "part").filter(F.col("p_size") < 15)
     supp = load(spark, sf_dir, "supplier").filter(F.col("s_acctbal") > 0)
     orders = load(spark, sf_dir, "orders").filter(F.col("o_orderstatus") != "F")
-    revenue_cents = _cents(F.col("l_extendedprice") * (1 - F.col("l_discount")))
+    revenue_cents = cents(F.col("l_extendedprice") * (1 - F.col("l_discount")))
     return (
         li.join(F.broadcast(part), li.l_partkey == part.p_partkey)
         .join(F.broadcast(supp), li.l_suppkey == supp.s_suppkey)
@@ -175,7 +167,6 @@ def q24_percentiles(spark: SparkSession, sf_dir: str) -> DataFrame:
     class).  Plan: row_number + count over one group partitioning —
     a single exchange, like q102; the 100 TB swap is the same
     (approx_percentile partials, q46 pattern)."""
-    tune(spark)
     li = load(spark, sf_dir, "lineitem").filter(
         F.col("l_extendedprice").isNotNull()
     )
@@ -261,7 +252,6 @@ def q24_percentiles_approx(spark: SparkSession, sf_dir: str) -> DataFrame:
     """KLL-style sketched percentiles (``percentile_approx``) — the
     single-pass bounded-memory path you run at 100 TB; rows-only
     check (sketch results are engine-specific)."""
-    tune(spark)
     li = load(spark, sf_dir, "lineitem")
     return li.groupBy("l_returnflag").agg(
         F.percentile_approx("l_extendedprice", F.lit(0.5), F.lit(10000)).alias("p50_approx"),
@@ -274,7 +264,6 @@ def q25_session_window(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Native session_window in batch mode (the streaming operator's
     batch twin; oracle reproduces its end = last_event + gap
     definition via gaps-and-islands)."""
-    tune(spark)
     e = load(spark, sf_dir, "events").select(
         "user_id", F.col("ts").cast("timestamp").alias("ts")
     )
@@ -322,7 +311,6 @@ def q26_sql_interval_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     USAGE.md:259-277) run literally through ``spark.sql``: daily bars
     joined to the tick stream by key equality + time containment, with
     COUNT/AVG — the canonical delegated query, via the SQL surface."""
-    tune(spark)
     load(spark, sf_dir, "events").createOrReplaceTempView("events_sql")
     return spark.sql(
         """
@@ -375,7 +363,6 @@ def q27_pandas_udf_trend(spark: SparkSession, sf_dir: str) -> DataFrame:
     verbatim by the DuckDB twin over HUGEINT sums."""
     from ..functions.pandas_ext import per_key_ols_exact
 
-    tune(spark)
     # regression ignores unpriced events (NULL y cannot be regressed;
     # the oracle carries the same WHERE — null-stress gate)
     e = load(spark, sf_dir, "events").filter(
@@ -434,7 +421,6 @@ def q30_bar_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     associative, and vwap stays exact through the integer cents_sum."""
     from ..operators.bars import finalize_bars, rollup_bars, tumbling_bars_cents
 
-    tune(spark)
     e = load(spark, sf_dir, "events")
     hourly = tumbling_bars_cents(e, key="user_id", ts="ts", price="value", interval="1 hour")
     daily = rollup_bars(hourly, key="user_id", interval="1 day")
@@ -464,7 +450,6 @@ def q31_token_count(spark: SparkSession, sf_dir: str) -> DataFrame:
     (regexp_extract_all in codegen, no Python)."""
     from ..operators.text import with_token_counts
 
-    tune(spark)
     docs = load(spark, sf_dir, "documents")
     return with_token_counts(docs).select("doc_id", "n_ws_tokens", "n_bpe_tokens")
 
@@ -484,7 +469,6 @@ def q28_setops_intersect(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The remaining set operators: INTERSECT (distinct) of two
     overlapping projections + EXCEPT distinct (complements q08's
     UNION/EXCEPT ALL coverage)."""
-    tune(spark)
     a = load(spark, sf_dir, "events").filter(F.col("value") > 50).select("user_id", "event_type")
     b = load(spark, sf_dir, "events").filter(F.col("value") <= 150).select("user_id", "event_type")
     return a.intersect(b)
@@ -502,7 +486,6 @@ def q29_json_map(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Semi-structured props: from_json into MapType + explode — the
     MapType/ArrayType surface (the reference has no nested types,
     SURVEY.md §1.2; the driver's events.props provides them)."""
-    tune(spark)
     e = load(spark, sf_dir, "events")
     parsed = e.select(
         "event_id", F.explode(F.from_json("props", "map<string,bigint>")).alias("key", "val")
@@ -544,7 +527,6 @@ def q41_trailing_range_window(spark: SparkSession, sf_dir: str) -> DataFrame:
     the integer window sums, exactly like the oracle."""
     from ..operators.rangewindow import trailing_count_sums_adaptive
 
-    tune(spark)
     e = load(spark, sf_dir, "events").withColumn(
         "us", F.unix_micros(F.col("ts").cast("timestamp"))
     )
@@ -555,7 +537,7 @@ def q41_trailing_range_window(spark: SparkSession, sf_dir: str) -> DataFrame:
         order_us="us",
         window_us=day_us,
         row_id="event_id",
-        sums={"__cents_24h": _cents(F.col("value"))},
+        sums={"__cents_24h": cents(F.col("value"))},
         count_alias="n_24h",
     )
     return out.select(
@@ -607,7 +589,6 @@ def q208_trailing_window_prefix_decomposed(
     list x <=PREFIX_MAX_BUCKETS."""
     from ..operators.rangewindow import trailing_count_sums_prefix_bucket
 
-    tune(spark)
     e = load(spark, sf_dir, "events").withColumn(
         "us", F.unix_micros(F.col("ts").cast("timestamp"))
     )
@@ -620,7 +601,7 @@ def q208_trailing_window_prefix_decomposed(
         order_us="us",
         window_us=day_us,
         row_id="event_id",
-        sums={"cents_24h": _cents(F.col("value"))},
+        sums={"cents_24h": cents(F.col("value"))},
         count_alias="n_24h",
         bucket_widths=five_h_us,
     )
@@ -648,7 +629,6 @@ def q44_recursive_calendar_gapfill(spark: SparkSession, sf_dir: str) -> DataFram
     needs before window math.  The recursion carries the upper bound
     as a column, so neither engine needs a correlated subquery in the
     recursive leg."""
-    tune(spark)
     load(spark, sf_dir, "events").createOrReplaceTempView("events_cal")
     return spark.sql(
         """
@@ -701,7 +681,6 @@ def q45_variant_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
     MapType cast (at 100 TB, variant keeps one parsed binary column
     instead of re-parsing JSON text per access).  Oracle extracts the
     same path with DuckDB's JSON operators."""
-    tune(spark)
     e = load(spark, sf_dir, "events")
     v = e.select(
         "event_type", F.parse_json("props").alias("v")
@@ -740,7 +719,6 @@ def q46_sketch_union_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     count(DISTINCT) over raw history is a full rescan but a sketch
     union is bytes per day.  Rows-only (sketch estimates are
     engine-specific); the union==direct property is unit-tested."""
-    tune(spark)
     e = load(spark, sf_dir, "events")
     daily = e.groupBy(
         F.date_trunc("DAY", "ts").alias("day")
@@ -759,7 +737,6 @@ def q47_correlated_subquery(spark: SparkSession, sf_dir: str) -> DataFrame:
     — the rewrite that makes correlated predicates viable at scale);
     ``max`` keeps the comparison exact across engines where ``avg``'s
     accumulation order would not be."""
-    tune(spark)
     load(spark, sf_dir, "orders").createOrReplaceTempView("orders_cs")
     return spark.sql(
         """
@@ -795,7 +772,6 @@ def q156_null_safe_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     route the NULL cohort to it rather than dropping ~1/7 of the
     table.  Still hash-joinable (null-safe equality remains an
     equi-join key for Spark — no nested-loop fallback)."""
-    tune(spark)
     e = load(spark, sf_dir, "events")
     ev = e.select(
         "event_id", F.nullif(F.col("user_id") % 7, F.lit(3)).alias("cohort")

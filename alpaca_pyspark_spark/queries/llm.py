@@ -43,7 +43,7 @@ from ..functions import (
     tokens,
     word_shingles,
 )
-from ..session import scoped_persist, tune
+from ..session import scoped_persist
 from ..tables import load, load_texts, load_vectors
 
 
@@ -52,7 +52,6 @@ def q12_text_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """MinHash+LSH near-duplicate pairs over documents (rows-only:
     xxhash64 signatures have no DuckDB twin; recall/precision are
     unit-tested against brute-force Jaccard)."""
-    tune(spark)
     docs = load(spark, sf_dir, "documents")
     return minhash_near_duplicates(
         docs, id_col="doc_id", text_col="text", shingle_k=3, threshold=0.2
@@ -62,7 +61,6 @@ def q12_text_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q12_simhash_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """SimHash near-duplicate pairs (Hamming ≤ 3) over documents
     (rows-only)."""
-    tune(spark)
     docs = load(spark, sf_dir, "documents")
     return simhash_near_duplicates(docs, id_col="doc_id", text_col="text", max_hamming=3)
 
@@ -76,7 +74,6 @@ def q12_text_dedup_portable(spark: SparkSession, sf_dir: str) -> DataFrame:
     approximate pipeline, not just row counts.  (The xxhash64 variant
     stays registered as the throughput path — same plan shape, ~3×
     cheaper hashing.)"""
-    tune(spark)
     docs = load(spark, sf_dir, "documents")
     return minhash_near_duplicates(
         docs, id_col="doc_id", text_col="text", shingle_k=3, threshold=0.2, portable=True
@@ -157,7 +154,6 @@ def q12_simhash_dedup_portable(spark: SparkSession, sf_dir: str) -> DataFrame:
     md5-derived signature — fully oracle-paired: DuckDB recomputes
     the per-bit votes, the signature, the 4×15-bit pigeonhole
     buckets, and the bit_count verification."""
-    tune(spark)
     docs = load(spark, sf_dir, "documents")
     out = simhash_near_duplicates(
         docs, id_col="doc_id", text_col="text", max_hamming=3, portable=True
@@ -213,7 +209,6 @@ _Q12_SIMHASH_PORTABLE_SQL = _simhash_portable_sql()
 def q12_exact_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact-duplicate groups by normalized md5 fingerprint — the
     oracle-checkable member of the dedup family."""
-    tune(spark)
     docs = load(spark, sf_dir, "documents")
     return exact_duplicate_groups(docs, id_col="doc_id", text_col="text")
 
@@ -236,7 +231,6 @@ def q12_embedding_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     ``q12_embedding_dedup_lsh``.  Threshold 0.35 ≈ the top 0.1% of
     pairs on this uniform synthetic corpus (real dedup runs at ~0.95
     on near-identical embeddings)."""
-    tune(spark)
     emb = load_vectors(spark, sf_dir)
     return embedding_near_duplicates(
         emb, id_col="vec_id", vec_col="embedding", threshold=0.35, num_planes=None
@@ -289,7 +283,6 @@ def q12_embedding_dedup_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     then exact-cosine verified.  FULLY oracle-paired: the hyperplanes
     are deterministic compile-time constants, so the DuckDB oracle
     replicates the exact bucketing and finds the identical pair set."""
-    tune(spark)
     emb = load_vectors(spark, sf_dir)
     return embedding_near_duplicates(
         emb, id_col="vec_id", vec_col="embedding", threshold=0.35, num_planes=8, dim=64
@@ -318,7 +311,6 @@ def q33_near_dup_components(spark: SparkSession, sf_dir: str) -> DataFrame:
     DuckDB recursive-CTE transitive closure."""
     from ..operators.components import connected_components
 
-    tune(spark)
     emb = load_vectors(spark, sf_dir)
     pairs = embedding_near_duplicates(
         emb, id_col="vec_id", vec_col="embedding", threshold=0.5, num_planes=None
@@ -362,7 +354,6 @@ def q33_near_dup_components_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     the identically-bucketed pair set."""
     from ..operators.components import connected_components
 
-    tune(spark)
     emb = load_vectors(spark, sf_dir)
     pairs = embedding_near_duplicates(
         emb, id_col="vec_id", vec_col="embedding", threshold=0.5, num_planes=8, dim=64
@@ -406,7 +397,6 @@ def q13_embedding_sim(spark: SparkSession, sf_dir: str) -> DataFrame:
     in the Arrow UDF closure; the corpus never leaves the executors
     (scored partition-locally by ``brute_force_topk_arrow``, then one
     per-query top-k window over |corpus|×8 scalar rows)."""
-    tune(spark)
     emb = load_vectors(spark, sf_dir)
     queries = emb.filter(F.col("vec_id") < 8).select(
         F.col("vec_id").alias("query_id"), "embedding"
@@ -447,7 +437,6 @@ def q13_embedding_sim_ann(spark: SparkSession, sf_dir: str) -> DataFrame:
     cosine re-rank — the approximation itself is verified, not just
     row counts.  The scale path: bucket pruning replaces the full
     corpus scan."""
-    tune(spark)
     emb = load_vectors(spark, sf_dir)
     queries = emb.filter(F.col("vec_id") < 8).select(
         F.col("vec_id").alias("query_id"), "embedding"
@@ -497,7 +486,6 @@ def q13_embedding_sim_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     queries probe their 4 nearest of 16 cells."""
     from ..operators.similarity import ivf_topk
 
-    tune(spark)
     emb = load_vectors(spark, sf_dir)
     queries = emb.filter(F.col("vec_id") < 8).select(
         F.col("vec_id").alias("query_id"), "embedding"
@@ -518,7 +506,6 @@ def q13_embedding_sim_ivf_det(spark: SparkSession, sf_dir: str) -> DataFrame:
     recall unit tests) — same plan shape, same scale story."""
     from ..operators.similarity import ivf_topk_det
 
-    tune(spark)
     emb = load_vectors(spark, sf_dir)
     queries = emb.filter(F.col("vec_id") < 8).select(
         F.col("vec_id").alias("query_id"), "embedding"
@@ -587,7 +574,6 @@ def q176_knn_graph_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     the ANN variants (q13 LSH / IVF) are the sub-quadratic trade."""
     from ..operators.similarity import knn_graph_exact
 
-    tune(spark)
     emb = load_vectors(spark, sf_dir)
     return knn_graph_exact(emb, id_col="vec_id", vec_col="embedding", k=5)
 
@@ -627,7 +613,6 @@ def q177_semdedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     (production runs at ~0.95+ on real embedding spaces)."""
     from ..operators.similarity import semdedup
 
-    tune(spark)
     emb = load_vectors(spark, sf_dir)
     return semdedup(
         emb, id_col="vec_id", vec_col="embedding", threshold=0.25, num_cells=16
@@ -668,7 +653,6 @@ FROM A a LEFT JOIN D d ON a.vec_id = d.vec_id
 # ---------------------------------------------------------------- q15
 def q15_text_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Token counting + quality scoring over documents."""
-    tune(spark)
     docs = load(spark, sf_dir, "documents")
     return with_text_stats(docs.select("doc_id", "text"), "text").drop("text")
 
@@ -715,7 +699,6 @@ def q32_corpus_curation(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.dedup import drop_exact_duplicates
     from ..operators.text import with_token_counts
 
-    tune(spark)
     docs = load(spark, sf_dir, "documents").select("doc_id", "text")
     scored = with_text_stats(docs, "text")
     kept = scored.filter(F.col("quality_score") >= 0.5)
@@ -769,7 +752,6 @@ JOIN R r ON k.doc_id = r.keep_id
 # ---------------------------------------------------------------- q16
 def q16_lang_id(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Stopword-overlap language identification."""
-    tune(spark)
     docs = load_texts(spark, sf_dir)
     return with_lang_id(docs.select("doc_id", "text"), "text").drop("text")
 
@@ -804,7 +786,6 @@ FROM S
 def q17_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-document canonical fingerprint (doc_id → md5 of normalized
     text) — the join key for cross-corpus dedup."""
-    tune(spark)
     docs = load(spark, sf_dir, "documents")
     return with_fingerprint(docs.select("doc_id", "text"), "text").drop("text")
 
@@ -822,7 +803,6 @@ def q18_multimodal_meta(spark: SparkSession, sf_dir: str) -> DataFrame:
     Arrow-batched mapInPandas 'decode' (stubbed codec, real batch
     contract).  Oracle recomputes the deterministic fake decode in
     SQL."""
-    tune(spark)
     docs = load_texts(spark, sf_dir)
     media = synthesize_media(docs)
     return decode_media(media).select(
@@ -863,7 +843,6 @@ def q122_audio_energy(spark: SparkSession, sf_dir: str) -> DataFrame:
     fixture, so byte k == ``ord(char k)``), which lets the oracle
     replicate the featurizer in SQL bit-for-bit — the honest-stub
     pattern of q18."""
-    tune(spark)
     docs = load_texts(spark, sf_dir)
     return audio_energy_windows(synthesize_media(docs), window_bytes=32)
 
@@ -907,7 +886,6 @@ def q180_media_resize(spark: SparkSession, sf_dir: str) -> DataFrame:
     on the ASCII fixture (q18/q122 honest-stub pattern)."""
     from ..operators.multimodal import resize_media
 
-    tune(spark)
     docs = load(spark, sf_dir, "documents")
     return resize_media(synthesize_media(docs), target_len=16)
 
@@ -933,7 +911,6 @@ FROM img
 def q19_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact char-3-gram Jaccard over consecutive doc-id pairs — the
     standalone verification metric of the dedup family."""
-    tune(spark)
     docs = load_texts(spark, sf_dir)
     pairs = docs.select(
         F.col("doc_id").alias("id_a"), (F.col("doc_id") + 1).alias("id_b")
@@ -979,7 +956,6 @@ def q37_deterministic_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     IS the tested property)."""
     from ..operators.sampling import deterministic_sample
 
-    tune(spark)
     docs = load(spark, sf_dir, "documents")
     return deterministic_sample(docs, id_col="doc_id", rate=0.3).select(
         "doc_id", "source", "lang"
@@ -1004,7 +980,6 @@ def q38_sequence_packing(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.sampling import pack_sequences
     from ..operators.text import with_token_counts
 
-    tune(spark)
     docs = with_token_counts(load(spark, sf_dir, "documents")).select(
         "doc_id", "lang", F.pmod("doc_id", F.lit(8)).alias("shard"), "n_bpe_tokens"
     )
@@ -1053,7 +1028,6 @@ def q39_decontaminate(spark: SparkSession, sf_dir: str) -> DataFrame:
     corpus never shuffles."""
     from ..operators.text import with_token_counts
 
-    tune(spark)
     docs = with_token_counts(with_fingerprint(load_texts(spark, sf_dir)))
     eval_fps = (
         docs.filter(F.pmod("doc_id", F.lit(97)) == 0).select("fingerprint").distinct()
@@ -1104,7 +1078,6 @@ def q42_embedding_ops(spark: SparkSession, sf_dir: str) -> DataFrame:
     doubles is engine-divergent — the exploded scalar form keeps the
     values bit-exact AND hashable.  (The array-shaped variant is a
     trivial re-``collect_list`` over this.)"""
-    tune(spark)
     emb = load_vectors(spark, sf_dir)
     v = F.col("embedding").cast("array<double>")
     norm = F.sqrt(
@@ -1165,7 +1138,6 @@ def q133_token_rarity_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale shape: ONE corpus exchange builds the vocab counts; the
     vocab broadcasts back onto the exploded token stream; the per-doc
     aggregate is the only other exchange."""
-    tune(spark)
     docs = load(spark, sf_dir, "documents").select("doc_id", "text")
     tok = docs.select(
         "doc_id", F.posexplode(tokens(F.lower(F.col("text")))).alias("pos", "token")
@@ -1232,7 +1204,6 @@ def q134_hard_negative_mining(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from ..functions import cosine_similarity
 
-    tune(spark)
     emb = load_vectors(spark, sf_dir)
     v = F.col("embedding").cast("array<double>")
     q = emb.filter(F.col("vec_id") < 8).select(
@@ -1326,7 +1297,6 @@ def q124_random_projection(spark: SparkSession, sf_dir: str) -> DataFrame:
     double array — see q42's docstring — and NOT exploded rows, which
     would 16× the output for no reason): the projection stays
     map-only, one row per vector, every cell pandas-hashable."""
-    tune(spark)
     emb = load_vectors(spark, sf_dir)
     comps = [
         " + ".join(
@@ -1369,7 +1339,6 @@ def q43_data_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     difference between an audit and a week)."""
     from ..operators.profile import profile_table
 
-    tune(spark)
     docs = load(spark, sf_dir, "documents")
     return profile_table(
         docs, numeric_cols=["n_chars"], distinct_cols=["lang", "source"]
@@ -1403,7 +1372,6 @@ def q135_embedding_quantization(spark: SparkSession, sf_dir: str) -> DataFrame:
     independent, so the whole audit is engine-exact with no float-sum
     caveats.  Map-only: zero shuffles, pure codegen over the array
     column."""
-    tune(spark)
     emb = load_vectors(spark, sf_dir).select(
         "vec_id", F.col("embedding").cast("array<double>").alias("__v")
     )
@@ -1474,7 +1442,6 @@ def q136_split_leakage_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     per-doc aggregate.  No all-pairs anything."""
     from ..operators.dedup import portable_hash60
 
-    tune(spark)
     docs = load_texts(spark, sf_dir)
     split = docs.withColumn(
         "__is_val", portable_hash60(F.col("doc_id").cast("string")) % 10 >= 8
@@ -1554,7 +1521,6 @@ def q140_knn_label_vote(spark: SparkSession, sf_dir: str) -> DataFrame:
     brute-force top-k (corpus never shuffles, queries ride the Arrow
     closure); the vote argmax is a deterministic (votes ↓, label ↑)
     window pick, and the label dimension attaches by broadcast."""
-    tune(spark)
     emb = load_vectors(spark, sf_dir)
     corpus = emb.filter(F.col("vec_id") >= 20)
     queries = emb.filter(F.col("vec_id") < 20).select(
@@ -1630,7 +1596,6 @@ def q144_stratified_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     the stratum; rank and stratum size share the partition."""
     from ..operators.dedup import portable_hash60
 
-    tune(spark)
     docs = load(spark, sf_dir, "documents")
     h = portable_hash60(F.col("doc_id").cast("string"))
     w = Window.partitionBy("source").orderBy(h, F.col("doc_id"))
@@ -1672,7 +1637,6 @@ def q162_cross_validation_folds(spark: SparkSession, sf_dir: str) -> DataFrame:
     assignment; one partial-agg exchange for the audit."""
     from ..operators.dedup import portable_hash60
 
-    tune(spark)
     docs = load(spark, sf_dir, "documents")
     fold = (portable_hash60(F.col("doc_id").cast("string")) % 5).alias("fold")
     assigned = docs.select(fold, "source", "n_chars")
@@ -1701,7 +1665,6 @@ def q158_source_language_gini(spark: SparkSession, sf_dir: str) -> DataFrame:
     rational (n² − Σcᵢ²)/n²: integer numerator and denominator, ONE
     division.  Two partial-aggregated exchanges: (source, lang)
     counts, then the per-source fold."""
-    tune(spark)
     docs = load(spark, sf_dir, "documents")
     by_lang = docs.groupBy("source", "lang").agg(F.count(F.lit(1)).alias("c"))
     per_source = by_lang.groupBy("source").agg(
@@ -1755,7 +1718,6 @@ def q148_frame_sampling(spark: SparkSession, sf_dir: str) -> DataFrame:
     the gate still hash-verifies every payload byte."""
     from ..operators.multimodal import frame_sample
 
-    tune(spark)
     docs = load_texts(spark, sf_dir)
     media = synthesize_media(docs)
     fs = frame_sample(media, every_n_bytes=64)
@@ -1797,7 +1759,6 @@ def q141_cross_source_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
     the in-array combination expansion: ≤ C(#sources,2) rows per gram,
     never a corpus-sized self-join (a two-branch join would scan,
     tokenize, and explode the corpus twice)."""
-    tune(spark)
     docs = load(spark, sf_dir, "documents")
     grams = F.array_distinct(word_shingles(tokens(F.col("text")), 5))
     gs = docs.select("source", F.explode(grams).alias("g")).distinct()
@@ -1853,7 +1814,6 @@ def q173_dataset_card(spark: SparkSession, sf_dir: str) -> DataFrame:
     |distinct lengths| rows, never the corpus, so there is no global
     row sort anywhere.  Every output is an integer or one division
     over identical integers."""
-    tune(spark)
     from ..operators.text import normalized_fingerprint
 
     docs = load(spark, sf_dir, "documents")
@@ -1953,7 +1913,6 @@ def q175_lang_label_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     aggregation on (declared, predicted); the per-label total attaches
     by a window over the |labels|² matrix, not the corpus.  Rates are
     one division over identical integers."""
-    tune(spark)
     docs = load_texts(spark, sf_dir)
     pred = with_lang_id(docs.select("lang", "text")).select(
         F.coalesce("lang", F.lit("")).alias("declared"), "lang_pred"
@@ -2023,7 +1982,6 @@ def q174_template_prefixes(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale shape: ONE hash aggregation keyed by the 8-token prefix
     (map-side partial; the exchange carries |templates| rows).  Share
     is one division over identical integers."""
-    tune(spark)
     docs = load(spark, sf_dir, "documents")
     t = tokens(F.lower(F.col("text")))
     base = docs.select(
@@ -2084,7 +2042,6 @@ def q171_matryoshka_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     DOUBLE (bit-identical to DuckDB's ``list_inner_product`` loop, the
     q13-verified pairing); sqrt and one division are IEEE-identical on
     identical operands."""
-    tune(spark)
     emb = load_vectors(spark, sf_dir)
     v = F.transform("embedding", lambda x: x.cast("double"))
 
@@ -2131,7 +2088,6 @@ def q172_kwic_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     slicing, identical on both engines."""
     from .search import BM25_TERMS
 
-    tune(spark)
     docs = load(spark, sf_dir, "documents")
     t = tokens(F.lower(F.col("text")))
     pos = (
@@ -2171,7 +2127,6 @@ def q169_incremental_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     bucketed table).  Portable md5 hash family → the oracle replays
     the whole pipeline (signatures, band buckets, both-side bucket
     guard, cross pairs, exact-Jaccard verify) bit-exactly."""
-    tune(spark)
     docs = load(spark, sf_dir, "documents")
     from ..operators.dedup import incremental_minhash_dedup
 
@@ -2481,7 +2436,6 @@ def q193_streaming_ingest_neardup(spark: SparkSession, sf_dir: str) -> DataFrame
     from ..session import release_scoped_caches
     from ..streaming.gate import run_streaming_gate
 
-    tune(spark)
     docs = load(spark, sf_dir, "documents").select("doc_id", "text")
     index, docinfo = _q193_artifacts(spark, sf_dir)
     # release the build-time persist (sig_o) before the stream starts:
@@ -2604,7 +2558,6 @@ def q194_token_budget_selection(spark: SparkSession, sf_dir: str) -> DataFrame:
     single-partition exchange anywhere.  The budget scalar falls out
     of the same driver aggregation (``weight_total_col``) — the
     corpus is scanned exactly once."""
-    tune(spark)
     docs = load_texts(spark, sf_dir).select("doc_id", "text")
     t = tokens(F.col("text"))
     scored = docs.select(
@@ -2658,7 +2611,6 @@ def q195_coverage_quota_selection(spark: SparkSession, sf_dir: str) -> DataFrame
     over non-floor docs rides the distributed range-partition rank
     (``assign_stable_ids``); the two scalars (corpus size, floor
     count) are one aggregated row broadcast back over the corpus."""
-    tune(spark)
     docs = load_texts(spark, sf_dir).select("doc_id", "source", "text")
     t = tokens(F.col("text"))
     scored = docs.select(
@@ -2820,7 +2772,6 @@ def q199_streaming_budget_admission(
     from ..streaming.gate import run_streaming_gate
     from ..streaming.stateful import budgeted_admission
 
-    tune(spark)
     # a NULL text counts 0 tokens on BOTH engines.  Guard the NULL
     # explicitly rather than coalescing size(tokens(NULL)): under
     # legacy sizeOfNull, size(NULL) = -1 is non-NULL and would pass a
@@ -3031,7 +2982,6 @@ def q196_streaming_vector_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..session import release_scoped_caches
     from ..streaming.gate import run_streaming_gate
 
-    tune(spark)
     emb = load_vectors(spark, sf_dir)
     centroids, cells = _q196_artifacts(spark, sf_dir)
     release_scoped_caches()
@@ -3245,7 +3195,6 @@ def q198_pq_adc_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     driver collect, and the corpus-side payload the scan reads is the
     4-byte codes, not the vectors.  The exact top-k twin is q13; the
     recall/compression trade is the point."""
-    tune(spark)
     emb = load_vectors(spark, sf_dir).select(
         "vec_id", _int_grid(F.col("embedding")).alias("q")
     )
@@ -3430,7 +3379,6 @@ def q200_ivf_index_maintenance(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators import spread
     from ..operators.similarity import _det_cell_assigner, _det_seed_centroids
 
-    tune(spark)
     emb = load_vectors(spark, sf_dir)
     corpus = emb.filter(F.col("vec_id") % 25 != 0)
     delta = emb.filter(F.col("vec_id") % 25 == 0)
@@ -3611,7 +3559,6 @@ def q201_ivfpq_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators import spread
     from ..operators.similarity import _det_cell_assigner, _det_seed_centroids
 
-    tune(spark)
     emb = load_vectors(spark, sf_dir)
     centroids = _det_seed_centroids(emb, "vec_id", "embedding", _Q200_CELLS)
     centq = _grid_centroids(emb, _Q200_CELLS)
@@ -3928,7 +3875,6 @@ def q202_streaming_pq_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..session import release_scoped_caches
     from ..streaming.gate import run_streaming_gate
 
-    tune(spark)
     emb = load_vectors(spark, sf_dir)
     centroids, centq, cellpay, cb_py = _q202_artifacts(spark, sf_dir)
     release_scoped_caches()
@@ -4066,7 +4012,6 @@ def q202_dialed_pq_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..session import release_scoped_caches
     from ..streaming.gate import run_streaming_gate
 
-    tune(spark)
     emb = load_vectors(spark, sf_dir)
     cells = _ivf_dial(emb.filter(F.col("vec_id") % 25 != 0).count())
     centroids, centq, cellpay, cb_py = _q202_artifacts(spark, sf_dir, cells=cells)
@@ -4117,7 +4062,6 @@ def q166_ngram_novelty(spark: SparkSession, sf_dir: str) -> DataFrame:
     corpus-scale shuffle this shape never pays.)  All aggs are
     map-side combinable; novelty is one division over identical
     integers."""
-    tune(spark)
     docs = load(spark, sf_dir, "documents")
     from ..operators.dedup import shingle_sets
 
@@ -4180,7 +4124,6 @@ def q168_privacy_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale shape: one hash aggregation with partial map-side combine;
     the distinct count is exact via a two-level agg (QI+value, then
     QI), still shuffle-bounded by |distinct pairs|, not the corpus."""
-    tune(spark)
     docs = load(spark, sf_dir, "documents")
     qi = docs.select(
         F.coalesce("lang", F.lit("")).alias("lang"),
@@ -4238,7 +4181,6 @@ def q163_setsim_prefix_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     bit-for-bit, which verifies the prefix-filter lemma end-to-end
     (candidate generation dropped nothing).  Threshold is the exact
     rational 1/2 so the survive predicate is integer on both engines."""
-    tune(spark)
     docs = load(spark, sf_dir, "documents")
     from ..operators.dedup import setsim_prefix_join
 
@@ -4285,7 +4227,6 @@ def q164_containment_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     blocking generates candidates losslessly (space-padded containment
     aligns on token boundaries, so A's rarest token must be a token of
     B); oracle is the naive all-pairs ``position()`` scan."""
-    tune(spark)
     docs = load(spark, sf_dir, "documents")
     from ..operators.dedup import containment_pairs
 
@@ -4321,7 +4262,6 @@ def q165_bigram_lm(spark: SparkSession, sf_dir: str) -> DataFrame:
     aggregation map-side), then the continuation total as a window
     over the *bigram-type* table (vocabulary-sized, not corpus-sized)
     partitioned by w1 — never a second corpus scan."""
-    tune(spark)
     docs = load(spark, sf_dir, "documents")
     t = tokens(F.col("text"))
     n = F.size(t)
@@ -4401,7 +4341,6 @@ def q182_perplexity_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     band-count-sized.  No corpus-scale shuffle beyond the explode+agg
     pair; self-trained LM means every transition is in-vocabulary (no
     smoothing term needed for exactness)."""
-    tune(spark)
     docs = load(spark, sf_dir, "documents")
     t = tokens(F.col("text"))
     n = F.size(t)
@@ -4512,7 +4451,6 @@ def q183_repetition_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     pass and joined three doc-sized tables back on doc_id — 8
     Exchange nodes; A/B at sf0.1 the isolated top2 stage alone fell
     2.59s → 1.06s row-local.)"""
-    tune(spark)
     docs = load_texts(spark, sf_dir)
     t = tokens(F.col("text"))
     stats = docs.select(
@@ -4627,7 +4565,6 @@ def q184_stopword_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     the exploded corpus (whose join keys are by construction the
     corpus's HOTTEST tokens), its per-doc re-aggregation, and the
     final doc_id join are all gone: one corpus pass + one projection."""
-    tune(spark)
     docs = load(spark, sf_dir, "documents")
     t = tokens(F.col("text"))
     stop = (
@@ -4727,7 +4664,6 @@ def q185_temperature_mixture(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale shape: one explode+agg for domain token mass (map-side
     partials), then all arithmetic happens on the domain-count-sized
     table with the max attached by a scalar window."""
-    tune(spark)
     docs = load(spark, sf_dir, "documents")
     per = docs.groupBy("lang", "source").agg(
         F.sum(F.size(tokens(F.col("text"))).cast("bigint")).alias("n_tokens")
@@ -4812,7 +4748,6 @@ def _q187_scored(spark: SparkSession, sf_dir: str) -> DataFrame:
     broadcast-LM shape on the stage itself: the distributed rank that
     follows starts with a ``localCheckpoint``, which truncates the
     visible plan of the full query."""
-    tune(spark)
     docs = load(spark, sf_dir, "documents")
     t = tokens(F.col("text"))
     n = F.size(t)
@@ -4966,7 +4901,6 @@ FROM scored
 def _q188_scored(spark: SparkSession, sf_dir: str) -> DataFrame:
     """q188's SCORING stage (per-vec integer dot products, ~1 row/vec)
     — exposed for plan tests, same reason as :func:`_q187_scored`."""
-    tune(spark)
     emb = load_vectors(spark, sf_dir)
     comp = (
         emb.select(
@@ -5114,7 +5048,6 @@ def q190_streaming_quality_filter(spark: SparkSession, sf_dir: str) -> DataFrame
     append mode), so the gate runs with ``sentinel=None``."""
     from ..streaming.gate import run_streaming_gate
 
-    tune(spark)
     docs = load_texts(spark, sf_dir).select("doc_id", "text")
 
     def score(stream: DataFrame) -> DataFrame:
@@ -5256,7 +5189,6 @@ def q191_streaming_curation(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..session import release_scoped_caches
     from ..streaming.gate import run_streaming_gate
 
-    tune(spark)
     docs = load_texts(spark, sf_dir).select("doc_id", "lang", "text")
     stops, canon_fp, lm_payload, cutoff = _q191_artifacts(spark, sf_dir)
     # artifacts are materialized (collected / checkpointed): drop the
@@ -5452,7 +5384,6 @@ def _q189_pipeline(spark: SparkSession, sf_dir: str):
     execution modes cannot drift."""
     from types import SimpleNamespace
 
-    tune(spark)
     docs = load_texts(spark, sf_dir)
     t = tokens(F.col("text"))
     base = docs.select(
@@ -5928,7 +5859,6 @@ def q186_span_dedup_rewrite(spark: SparkSession, sf_dir: str) -> DataFrame:
     the DuckDB oracle).  Every other stage is keyed by doc_id."""
     from ..operators.text import SPAN_PREFILTER_MIN_DOC_ROWS
 
-    tune(spark)
     docs = load(spark, sf_dir, "documents")
     if table_at_least(sf_dir, "documents", SPAN_PREFILTER_MIN_DOC_ROWS):
         return _q186_prefiltered(docs)
@@ -5946,7 +5876,6 @@ def q210_span_dedup_prefiltered(spark: SparkSession, sf_dir: str) -> DataFrame:
     run.  The oracle is q186's SQL verbatim over the same half-corpus
     (one source of truth: the CTE prefix swaps the document
     population, nothing else)."""
-    tune(spark)
     docs = load(spark, sf_dir, "documents").filter(F.col("doc_id") % 2 == 0)
     return _q186_prefiltered(docs)
 
@@ -6035,7 +5964,6 @@ def q204_cosine_parity_canary(spark: SparkSession, sf_dir: str) -> DataFrame:
         cosine_block_scores,
     )
 
-    tune(spark)
     emb = load_vectors(spark, sf_dir)
     cos_all = cosine_block_scores(
         _det_seed_centroids(emb, "vec_id", "embedding", _Q204_CELLS)

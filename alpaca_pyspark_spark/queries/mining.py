@@ -21,7 +21,6 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..operators.dispatch import table_at_least
-from ..session import tune
 from ..tables import load
 
 
@@ -36,7 +35,6 @@ def q77_bitmap_distinct_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     group's bitmap is bounded at 4 KB regardless of the id range —
     the continuous-aggregate pattern for exact COUNT(DISTINCT) at
     100 TB.  Oracle: plain exact COUNT(DISTINCT) per week."""
-    tune(spark)
     e = load(spark, sf_dir, "events")
     daily = (
         e.select(
@@ -82,7 +80,6 @@ def q78_fuzzy_name_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     O(n²) — then exact Levenshtein (identical DP integers on both
     engines) on the survivors only.  The name-dimension self-join is
     broadcast (distinct names ≪ facts)."""
-    tune(spark)
     names = (
         load(spark, sf_dir, "part")
         .select(F.col("p_name").alias("name"))
@@ -131,7 +128,6 @@ def q79_transition_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
     and the |types|² normalization window run on vanishingly small
     data.  The probability is one BIGINT/BIGINT double division —
     exact parity."""
-    tune(spark)
     e = load(spark, sf_dir, "events")
     w = Window.partitionBy("user_id").orderBy("ts", "event_id")
     pairs = (
@@ -182,7 +178,6 @@ def q80_brand_skyline(spark: SparkSession, sf_dir: str) -> DataFrame:
     frame is explicit) and the best price within the same size.
     Partitioned by brand, the sort is distributed; prices compare as
     integer cents."""
-    tune(spark)
     p = load(spark, sf_dir, "part")
     cents = F.round(F.col("p_retailprice") * 100).cast("bigint")
     w_smaller = (
@@ -236,7 +231,6 @@ def q81_grouped_regression(spark: SparkSession, sf_dir: str) -> DataFrame:
     slope/intercept are a fixed 4-float-op tail.  Single map-side-
     combinable aggregate (q27 is the pandas-UDF sibling; this one
     never leaves whole-stage codegen)."""
-    tune(spark)
     e = load(spark, sf_dir, "events")
     x = F.datediff(F.col("ts").cast("date"), F.lit("2024-01-01").cast("date"))
     y = F.round(F.col("value") * 100).cast("bigint")
@@ -315,7 +309,6 @@ def q82_sole_late_shipper(spark: SparkSession, sf_dir: str) -> DataFrame:
     correlated re-evaluation (a join-back formulation would plan the
     pairs subtree twice: DataFrame plans are trees, not DAGs).
     Top-10 by count with the unique name as tiebreak."""
-    tune(spark)
     li = load(spark, sf_dir, "lineitem")
     o = load(spark, sf_dir, "orders")
     s = load(spark, sf_dir, "supplier")
@@ -381,7 +374,6 @@ def q83_revenue_share_threshold(spark: SparkSession, sf_dir: str) -> DataFrame:
     single-partition window), and the threshold compare is
     all-integer (``rev · n_parts > total``) — no division until the
     displayed revenue.  Revenue in exact cents·(100−disc_pct)."""
-    tune(spark)
     li = load(spark, sf_dir, "lineitem")
     cents = F.round(F.col("l_extendedprice") * 100).cast("bigint")
     disc_pct = F.round(F.col("l_discount") * 100).cast("bigint")
@@ -472,7 +464,6 @@ def q102_mad_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
     at bench scale the decomposition's ~15 extra sequential stages
     cost 7x more than they save (AB_r12_quantiles.json), the same
     trade every other skew dispatch in the engine makes."""
-    tune(spark)
     li = load(spark, sf_dir, "lineitem")
     if table_at_least(sf_dir, "lineitem", QUANTILE_DECOMPOSE_MIN_TABLE_ROWS):
         return _q102_decomposed(li)
@@ -610,7 +601,6 @@ def q104_merkle_block_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
     exchange carries one row per block.  The synthetic replica drifts
     deterministically: every line of orders ending in 7 mod 1000 has
     its price bumped one cent."""
-    tune(spark)
     M = 1 << 40
     li = load(spark, sf_dir, "lineitem")
 
@@ -709,7 +699,6 @@ def q106_weighted_median(spark: SparkSession, sf_dir: str) -> DataFrame:
     by the column's physical meaning (round(l_quantity)); monotone
     running totals are what make the crossing unique.  Below the
     floor the window tier runs (stage-count trade, see q102)."""
-    tune(spark)
     li = load(spark, sf_dir, "lineitem").filter(
         F.col("l_extendedprice").isNotNull() & F.col("l_quantity").isNotNull()
     )
@@ -790,7 +779,6 @@ def q209_weighted_median_decomposed(
     degenerate path.  (q102's decomposed tier reuses exactly this
     machinery via grouped_median_cont; its interpolation and
     2*dev-integer arithmetic are pinned by tests/test_quantiles.py.)"""
-    tune(spark)
     li = load(spark, sf_dir, "lineitem").filter(
         F.col("l_extendedprice").isNotNull() & F.col("l_quantity").isNotNull()
     )
@@ -841,7 +829,6 @@ def q125_triangle_count(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     All counts are integers; output is one row (n_edges, n_wedges,
     n_triangles)."""
-    tune(spark)
     li = load(spark, sf_dir, "lineitem")
     lp = li.select("l_orderkey", "l_partkey").distinct()
     a, b = lp.alias("a"), lp.alias("b")
@@ -913,7 +900,6 @@ def q121_cusum_changepoint(spark: SparkSession, sf_dir: str) -> DataFrame:
     (cumsum, argmax rank) and the grouped totals share that single
     partitioning, so Spark plans exactly one shuffle and two sorts —
     no self-join, no second scan of events."""
-    tune(spark)
     e = load(spark, sf_dir, "events").select(
         "event_id",
         "ts",
@@ -987,7 +973,6 @@ def q147_clustering_coefficient(spark: SparkSession, sf_dir: str) -> DataFrame:
     for the per-node tally; degree streams both endpoints of the
     once-stored edge list.  Integer counts, one final division; the
     support-2 edge floor is the same scale guard as q125."""
-    tune(spark)
     li = load(spark, sf_dir, "lineitem")
     lp = li.select("l_orderkey", "l_partkey").distinct()
     a, b = lp.alias("a"), lp.alias("b")

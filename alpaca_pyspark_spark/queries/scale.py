@@ -12,13 +12,9 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..functions import cents
 from ..operators.salted import salted_aggregate
-from ..session import tune
 from ..tables import load
-
-
-def _cents(col) -> F.Column:
-    return F.round(col * 100).cast("bigint")
 
 
 # ---------------------------------------------------------------- q34
@@ -30,15 +26,14 @@ def q34_salted_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
     over 32 reducers, then re-aggregates 96 partial rows.  Results are
     bit-identical to the naive plan (integer-cents partials are
     order-insensitive)."""
-    tune(spark)
     li = load(spark, sf_dir, "lineitem")
-    revenue_cents = _cents(F.col("l_extendedprice") * (1 - F.col("l_discount")))
+    revenue_cents = cents(F.col("l_extendedprice") * (1 - F.col("l_discount")))
     return salted_aggregate(
         li,
         keys=["l_returnflag"],
         salt_on=["l_orderkey", "l_linenumber"],
         partial_aggs={
-            "qty_c": F.sum(_cents(F.col("l_quantity"))),
+            "qty_c": F.sum(cents(F.col("l_quantity"))),
             "rev_c": F.sum(revenue_cents),
             "cnt": F.count(F.lit(1)),
         },
@@ -80,7 +75,6 @@ def q155_salted_skew_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     Result == the plain join by construction."""
     from ..operators.salted import salted_join
 
-    tune(spark)
     li = load(spark, sf_dir, "lineitem")
     dim = (
         li.select("l_returnflag")
@@ -94,7 +88,7 @@ def q155_salted_skew_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         salt_on=["l_orderkey"],
         salt_parts=8,
     )
-    rev = _cents(F.col("l_extendedprice") * (1 - F.col("l_discount")))
+    rev = cents(F.col("l_extendedprice") * (1 - F.col("l_discount")))
     return joined.groupBy("flag_label").agg(
         F.count(F.lit(1)).alias("n_lines"),
         (F.sum(rev) / 100.0).alias("revenue"),
@@ -117,12 +111,11 @@ def q35_pivot(spark: SparkSession, sf_dir: str) -> DataFrame:
     the return flag.  Explicit pivot values keep it one pass / one
     shuffle (without them Spark runs an extra distinct job to discover
     the columns — an avoidable full scan at 100 TB)."""
-    tune(spark)
     li = load(spark, sf_dir, "lineitem")
     wide = (
         li.groupBy(F.year("l_shipdate").cast("bigint").alias("ship_year"))
         .pivot("l_returnflag", ["A", "N", "R"])
-        .agg(F.sum(_cents(F.col("l_quantity"))))
+        .agg(F.sum(cents(F.col("l_quantity"))))
     )
     return wide.select(
         "ship_year",
@@ -154,16 +147,15 @@ def q36_unpivot(spark: SparkSession, sf_dir: str) -> DataFrame:
     measures as (measure, value) rows, aggregated per return flag.
     One projection + one shuffle; the melt itself is a zero-shuffle
     codegen expand."""
-    tune(spark)
     li = load(spark, sf_dir, "lineitem")
-    cents = li.select(
+    wide = li.select(
         "l_returnflag",
-        _cents(F.col("l_quantity")).alias("quantity"),
-        _cents(F.col("l_extendedprice")).alias("extendedprice"),
-        _cents(F.col("l_discount")).alias("discount"),
-        _cents(F.col("l_tax")).alias("tax"),
+        cents(F.col("l_quantity")).alias("quantity"),
+        cents(F.col("l_extendedprice")).alias("extendedprice"),
+        cents(F.col("l_discount")).alias("discount"),
+        cents(F.col("l_tax")).alias("tax"),
     )
-    long = cents.unpivot(
+    long = wide.unpivot(
         ["l_returnflag"],
         ["quantity", "extendedprice", "discount", "tax"],
         "measure",
@@ -207,7 +199,6 @@ def q40_range_join_no_key(spark: SparkSession, sf_dir: str) -> DataFrame:
     asserted nested-loop-free)."""
     from ..operators.rangejoin import bucketed_range_join
 
-    tune(spark)
     e = load(spark, sf_dir, "events")
     windows = e.filter(
         (F.col("event_type") == "error") & (F.col("value") > 190)
@@ -250,7 +241,6 @@ def q128_stable_row_ids(spark: SparkSession, sf_dir: str) -> DataFrame:
     |partitions|-row driver exchange, and produces the bit-identical
     numbering (the oracle IS the single-partition window, which DuckDB
     can afford at test scale)."""
-    tune(spark)
     from ..operators.ids import assign_stable_ids
 
     docs = load(spark, sf_dir, "documents").select("doc_id", "n_chars")
@@ -278,7 +268,6 @@ def q132_sink_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     aggregate."""
     import tempfile
 
-    tune(spark)
     o = load(spark, sf_dir, "orders")
     dest = tempfile.mkdtemp(prefix="q132_sink_")
     o.write.mode("overwrite").partitionBy("o_orderpriority").parquet(dest)

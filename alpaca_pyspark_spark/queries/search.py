@@ -22,7 +22,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..functions import tokens, word_shingles
-from ..session import scoped_persist, tune
+from ..session import scoped_persist
 from ..tables import load, load_vectors
 
 #: Fixed retrieval query for q90 (terms chosen to exist in the corpus).
@@ -47,7 +47,6 @@ def q89_inverted_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     ArrayType) so the result is hashable by any pandas-based result
     canonicalizer; the array form stays available internally via
     ``split(postings, ',')``."""
-    tune(spark)
     docs = load(spark, sf_dir, "documents").select("doc_id", "text")
     tok_doc = docs.select(
         "doc_id",
@@ -108,7 +107,6 @@ def q90_bm25_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     ONE aggregated row broadcast back over it, scoring is a map-side
     expression, and top-20 is TakeOrderedAndProject — the whole query
     is one aggregation exchange over |docs| compact rows."""
-    tune(spark)
     docs = load(spark, sf_dir, "documents").select("doc_id", "text")
     toks = tokens(F.lower(F.col("text")))
 
@@ -196,7 +194,6 @@ def q91_pagerank_suppliers(spark: SparkSession, sf_dir: str) -> DataFrame:
     the edge table never re-shuffles; on a real cluster the iteration
     loop is the place to ``localCheckpoint`` every few rounds to
     truncate lineage."""
-    tune(spark)
     li = load(spark, sf_dir, "lineitem")
     pairs = (
         li.select(
@@ -284,7 +281,6 @@ def q92_cluster_representatives(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.components import connected_components
     from ..operators.dedup import embedding_near_duplicates
 
-    tune(spark)
     emb = load_vectors(spark, sf_dir)
     docs = load(spark, sf_dir, "documents").select("doc_id", "n_chars")
     pairs = embedding_near_duplicates(
@@ -370,7 +366,6 @@ def q92_cluster_reps_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.components import connected_components
     from ..operators.dedup import embedding_near_duplicates
 
-    tune(spark)
     emb = load_vectors(spark, sf_dir)
     docs = load(spark, sf_dir, "documents").select("doc_id", "n_chars")
     pairs = embedding_near_duplicates(
@@ -469,7 +464,6 @@ def q206_cluster_reps_lsh_dialed(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.dedup import embedding_near_duplicates
     from ..operators.similarity import lsh_planes_dial
 
-    tune(spark)
     emb = load_vectors(spark, sf_dir)
     docs = load(spark, sf_dir, "documents").select("doc_id", "n_chars")
     planes = lsh_planes_dial(emb.count())
@@ -569,7 +563,6 @@ def q207_plane_sign_parity_canary(spark: SparkSession, sf_dir: str) -> DataFrame
     rows — a canary you run on a sample at 100 TB, not a search."""
     from ..operators.similarity import _dot_literal, _hyperplane
 
-    tune(spark)
     emb = load_vectors(spark, sf_dir)
     v = F.col("embedding").cast("array<double>")
     bits = F.array(
@@ -627,7 +620,6 @@ def q93_bpe_merge_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     is TakeOrdered."""
     from ..functions import char_ngrams
 
-    tune(spark)
     docs = load(spark, sf_dir, "documents").select("text")
     words = (
         docs.select(F.explode(tokens(F.lower(F.col("text")))).alias("w"))
@@ -684,7 +676,6 @@ def q114_repeated_passages(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.dispatch import table_at_least
     from ..operators.text import SPAN_PREFILTER_MIN_DOC_ROWS
 
-    tune(spark)
     docs = load(spark, sf_dir, "documents").select("doc_id", "text")
     if table_at_least(sf_dir, "documents", SPAN_PREFILTER_MIN_DOC_ROWS):
         return _q114_aggregate(_q114_prefiltered_shingles(docs))
@@ -844,7 +835,6 @@ def q123_bpe_train(spark: SparkSession, sf_dir: str) -> DataFrame:
     stage has a 1:1 SQL twin, so the generated chained-CTE oracle
     matches bit-for-bit.  Returns (iteration, merge_left, merge_right,
     pair_freq) — the learned merge table."""
-    tune(spark)
     docs = load(spark, sf_dir, "documents")
     return bpe_train(docs, text_col="text", rounds=_BPE_ROUNDS)
 
@@ -970,7 +960,6 @@ def q170_bpe_encode(spark: SparkSession, sf_dir: str) -> DataFrame:
     corpus text never passes through the iterative stages.  Oracle:
     the same generated chained-CTE program as q123, selecting the
     final vocab state instead of the merge list."""
-    tune(spark)
     docs = load(spark, sf_dir, "documents")
     vocab, _ = _bpe_run(docs, text_col="text", rounds=_BPE_ROUNDS)
     return vocab.select(
@@ -1011,7 +1000,6 @@ def q178_corpus_tokenize(spark: SparkSession, sf_dir: str) -> DataFrame:
     iterative merge machinery never touches corpus-scale data — at
     100 TB the vocab join is the textbook broadcast/bucketed dimension
     join and this query is two exchanges total."""
-    tune(spark)
     docs = load(spark, sf_dir, "documents")
     vocab, _ = _bpe_run(docs, text_col="text", rounds=_BPE_ROUNDS)
     enc = vocab.select(
@@ -1059,7 +1047,6 @@ def q179_tokenizer_fertility(spark: SparkSession, sf_dir: str) -> DataFrame:
     outlier fertility is being over-fragmented, inflating its
     effective cost in the token budget).  Same lossless vocab join as
     q178, aggregated by the declared ``lang`` column."""
-    tune(spark)
     docs = load(spark, sf_dir, "documents")
     vocab, _ = _bpe_run(docs, text_col="text", rounds=_BPE_ROUNDS)
     enc = vocab.select(
@@ -1132,7 +1119,6 @@ def q120_domain_distinctive_tokens(spark: SparkSession, sf_dir: str) -> DataFram
     — re-aggregates the already-compact vocab×domain table, and the
     totals attach back by broadcast, so the corpus is scanned and
     shuffled exactly once."""
-    tune(spark)
     docs = load(spark, sf_dir, "documents").select("source", "text")
     tok = docs.select(
         "source", F.explode(tokens(F.lower(F.col("text")))).alias("token")
@@ -1217,7 +1203,6 @@ def q137_collocation_lift(spark: SparkSession, sf_dir: str) -> DataFrame:
     top-N-by-rarity cap first), the ≥5 support filter runs inside the
     pair aggregate, and the doc-frequency dimension broadcasts back
     onto the surviving pairs."""
-    tune(spark)
     docs = load(spark, sf_dir, "documents")
     tok = docs.select(
         "doc_id",
@@ -1288,7 +1273,6 @@ def q157_frequent_tokens_sketch(spark: SparkSession, sf_dir: str) -> DataFrame:
     estimates never exceeding truth — is pinned by unit tests."""
     from ..operators.sketches import frequent_items
 
-    tune(spark)
     docs = load(spark, sf_dir, "documents")
     tok = docs.select(F.explode(tokens(F.lower(F.col("text")))).alias("token"))
     return frequent_items(
@@ -1335,7 +1319,6 @@ def q192_hybrid_retrieval(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from ..operators.similarity import brute_force_topk_arrow
 
-    tune(spark)
     docs = load(spark, sf_dir, "documents").select("doc_id", "text")
     tk = docs.select(
         "doc_id",

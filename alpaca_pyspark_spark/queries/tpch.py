@@ -22,17 +22,13 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from ..session import tune
+from ..functions import cents
 from ..tables import load
 
 
-def _cents(col: str) -> F.Column:
-    return F.round(F.col(col) * 100).cast("bigint")
-
-
 def _disc_e4() -> F.Column:
-    return _cents("l_extendedprice") * (
-        F.lit(100) - F.round(F.col("l_discount") * 100).cast("bigint")
+    return cents(F.col("l_extendedprice")) * (
+        F.lit(100) - cents(F.col("l_discount"))
     )
 
 
@@ -44,7 +40,6 @@ def q94_returned_revenue_customers(spark: SparkSession, sf_dir: str) -> DataFram
     broadcast after the fact side has aggregated down to custkeys.
     The join order Catalyst picks (fact filtered → orders → customer
     → nation) never shuffles a dimension."""
-    tune(spark)
     li = load(spark, sf_dir, "lineitem").filter(F.col("l_returnflag") == "R")
     o = load(spark, sf_dir, "orders").filter(
         (F.col("o_orderdate") >= F.lit("1997-01-01").cast("timestamp"))
@@ -99,7 +94,6 @@ def q95_late_shipment_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
     conditional aggregation by order priority: high/low line counts
     via count_if — partial-aggregated, one exchange of |priorities|
     rows."""
-    tune(spark)
     li = load(spark, sf_dir, "lineitem")
     o = load(spark, sf_dir, "orders")
     late = F.col("l_shipdate") > F.col("o_orderdate") + F.expr("INTERVAL 90 DAYS")
@@ -139,7 +133,6 @@ def q96_promo_revenue_share(spark: SparkSession, sf_dir: str) -> DataFrame:
     table is scanned and joined once.  The share multiplies the
     conditional sum by 100 IN INTEGERS before the single division —
     no >2^53 double products."""
-    tune(spark)
     li = load(spark, sf_dir, "lineitem").filter(
         (F.col("l_shipdate") >= F.lit("1997-09-01").cast("timestamp"))
         & (F.col("l_shipdate") < F.lit("1997-10-01").cast("timestamp"))
@@ -189,7 +182,6 @@ def q97_top_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
     |suppliers| rows — at real scale swap for a broadcast scalar
     join, shape pinned in q83's test).  Integer e4 compare means ties
     are exact, as Q15's view-based original requires."""
-    tune(spark)
     li = load(spark, sf_dir, "lineitem").filter(
         (F.col("l_shipdate") >= F.lit("1997-01-01").cast("timestamp"))
         & (F.col("l_shipdate") < F.lit("1997-04-01").cast("timestamp"))
@@ -231,7 +223,6 @@ def q98_nation_pair_flows(spark: SparkSession, sf_dir: str) -> DataFrame:
     via orders, supplier-nation direct) are resolved by broadcast
     joins; the nation-pair filter lands before the aggregate, so the
     exchange carries (nation, nation, year) groups only."""
-    tune(spark)
     li = load(spark, sf_dir, "lineitem")
     o = load(spark, sf_dir, "orders")
     c = load(spark, sf_dir, "customer")
@@ -289,13 +280,12 @@ def q99_profit_by_nation(spark: SparkSession, sf_dir: str) -> DataFrame:
     price).  Profit = disc revenue minus cost, both in e4 units,
     aggregated by supplier nation x ship year.  part and nation
     broadcast; ONE fact exchange carrying (nation, year) partials."""
-    tune(spark)
     li = load(spark, sf_dir, "lineitem")
     p = load(spark, sf_dir, "part")
     s = load(spark, sf_dir, "supplier")
     n = load(spark, sf_dir, "nation")
     qty = F.round(F.col("l_quantity")).cast("bigint")
-    cost_e4 = qty * _cents("p_retailprice") * 100
+    cost_e4 = qty * cents(F.col("p_retailprice")) * 100
     return (
         li.join(F.broadcast(p), li.l_partkey == p.p_partkey)
         .join(s, li.l_suppkey == s.s_suppkey)
@@ -331,7 +321,6 @@ def q100_market_share(spark: SparkSession, sf_dir: str) -> DataFrame:
     customers, by order year.  Share = conditional-sum / total-sum of
     the same aggregation — one fact pass; the x100 scaling happens in
     integers before the single division."""
-    tune(spark)
     li = load(spark, sf_dir, "lineitem")
     o = load(spark, sf_dir, "orders")
     c = load(spark, sf_dir, "customer")
@@ -402,7 +391,6 @@ def q101_local_supplier_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     in the same ASIA nation, by nation.  The same-nation predicate is
     a post-join equality on two broadcast-resolved dimension keys;
     region prunes nation before anything touches the fact table."""
-    tune(spark)
     li = load(spark, sf_dir, "lineitem")
     o = load(spark, sf_dir, "orders")
     c = load(spark, sf_dir, "customer")
@@ -460,19 +448,18 @@ def q110_cheapest_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
     field position, and the aggregate stays partial-aggregatable (no
     correlated-subquery re-scan, which is how Q2 is written in the
     spec); dimensions broadcast."""
-    tune(spark)
     li = load(spark, sf_dir, "lineitem")
     p = load(spark, sf_dir, "part").filter(F.col("p_type") == "LARGE")
     s = load(spark, sf_dir, "supplier")
     n = load(spark, sf_dir, "nation")
-    cents = _cents("l_extendedprice")
+    price_cents = cents(F.col("l_extendedprice"))
     # offers come from PRICED lines only: an all-NULL (part, supp)
     # group would put a NULL field into the argmin struct, whose
     # ordering is engine-specific (oracle carries the same WHERE)
     offers = (
         li.filter(F.col("l_extendedprice").isNotNull())
         .groupBy("l_partkey", "l_suppkey")
-        .agg(F.min(cents).alias("offer_cents"))
+        .agg(F.min(price_cents).alias("offer_cents"))
     )
     best = (
         offers.groupBy("l_partkey")
@@ -527,7 +514,6 @@ def q111_priority_late_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     broadcast LEFT SEMI probe of the late-line order keys — the
     orders side never rescans lineitem per row, and the semi build is
     pre-aggregated to distinct keys map-side."""
-    tune(spark)
     li = load(spark, sf_dir, "lineitem")
     o = load(spark, sf_dir, "orders").filter(
         (F.col("o_orderdate") >= F.lit("1997-01-01").cast("timestamp"))
@@ -571,7 +557,6 @@ def q112_discount_band_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     (all three reach PushedFilters) and a single global sum of
     cents x pct integers: the minimal full-scan aggregate, the
     I/O-bound lower bound every other fact query sits above."""
-    tune(spark)
     li = load(spark, sf_dir, "lineitem")
     dpct = F.round(F.col("l_discount") * 100).cast("bigint")
     qty = F.round(F.col("l_quantity")).cast("bigint")
@@ -582,7 +567,7 @@ def q112_discount_band_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .filter(dpct.between(5, 7) & (qty < 24))
         .agg(
-            (F.sum(_cents("l_extendedprice") * dpct) / 10000.0).alias("revenue"),
+            (F.sum(cents(F.col("l_extendedprice")) * dpct) / 10000.0).alias("revenue"),
             F.count(F.lit(1)).alias("n_lines"),
         )
     )
@@ -611,7 +596,6 @@ def q113_supplier_diversity(spark: SparkSession, sf_dir: str) -> DataFrame:
     The exclusion list is a broadcast ANTI join probing distinct
     (partkey, suppkey) pairs — one fact exchange, already distinct,
     then the count-distinct re-aggregates by (brand, size)."""
-    tune(spark)
     li = load(spark, sf_dir, "lineitem")
     p = load(spark, sf_dir, "part").filter(F.col("p_type") != "PROMO")
     bad = load(spark, sf_dir, "supplier").filter(F.col("s_acctbal") < 0).select(

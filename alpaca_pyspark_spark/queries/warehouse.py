@@ -20,16 +20,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..session import tune
+from ..functions import cents
 from ..tables import load
-
-
-def _cents(col: str) -> F.Column:
-    return F.round(F.col(col) * 100).cast("bigint")
-
-
-def _pct(col: str) -> F.Column:
-    return F.round(F.col(col) * 100).cast("bigint")
 
 
 # ---------------------------------------------------------------- q84
@@ -46,25 +38,24 @@ def q84_pricing_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
     accumulator to DECIMAL(38,0) (same plan shape, Spark's decimal
     sum is still partial-aggregated); at bench scale int64 is exact
     and faster."""
-    tune(spark)
     li = load(spark, sf_dir, "lineitem").filter(
         F.col("l_shipdate") <= F.lit("2000-12-01").cast("timestamp")
     )
     qty = F.round(F.col("l_quantity")).cast("bigint")
-    cents = _cents("l_extendedprice")
-    dpct = _pct("l_discount")
-    tpct = _pct("l_tax")
-    disc_e4 = cents * (F.lit(100) - dpct)
+    price_cents = cents(F.col("l_extendedprice"))
+    dpct = cents(F.col("l_discount"))
+    tpct = cents(F.col("l_tax"))
+    disc_e4 = price_cents * (F.lit(100) - dpct)
     charge_e6 = disc_e4 * (F.lit(100) + tpct)
     return (
         li.groupBy("l_returnflag", "l_linestatus")
         .agg(
             F.sum(qty).alias("sum_qty"),
-            (F.sum(cents) / 100.0).alias("sum_base_price"),
+            (F.sum(price_cents) / 100.0).alias("sum_base_price"),
             (F.sum(disc_e4) / 10000.0).alias("sum_disc_price"),
             (F.sum(charge_e6) / 1000000.0).alias("sum_charge"),
             (F.sum(qty) / F.count(F.lit(1)).cast("double")).alias("avg_qty"),
-            (F.sum(cents) / (100.0 * F.count(F.lit(1)))).alias("avg_price"),
+            (F.sum(price_cents) / (100.0 * F.count(F.lit(1)))).alias("avg_price"),
             (F.sum(dpct) / (100.0 * F.count(F.lit(1)))).alias("avg_disc"),
             F.count(F.lit(1)).alias("count_order"),
         )
@@ -107,7 +98,6 @@ def q85_large_volume_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     orders/customer joins, so the big side is filtered before any
     join shuffle.  AQE turns both joins into broadcasts at this
     survivor cardinality."""
-    tune(spark)
     li = load(spark, sf_dir, "lineitem")
     o = load(spark, sf_dir, "orders")
     c = load(spark, sf_dir, "customer")
@@ -158,7 +148,6 @@ def q86_disjunctive_predicate_join(spark: SparkSession, sf_dir: str) -> DataFram
     pushes the disjunction's per-side implications (size range, qty
     range) into the scans; part is broadcast.  The OR never forces a
     nested loop — check tests/test_plans.py."""
-    tune(spark)
     li = load(spark, sf_dir, "lineitem")
     p = load(spark, sf_dir, "part")
     qty = F.round(F.col("l_quantity")).cast("bigint")
@@ -168,7 +157,7 @@ def q86_disjunctive_predicate_join(spark: SparkSession, sf_dir: str) -> DataFram
         | ((F.col("p_brand") == "Brand#22") & (F.col("p_size").between(10, 30)) & (qty >= 10) & (qty <= 30))
         | ((F.col("p_brand") == "Brand#33") & (F.col("p_size").between(20, 50)) & (qty >= 20) & (qty <= 40))
     )
-    disc_e4 = _cents("l_extendedprice") * (F.lit(100) - _pct("l_discount"))
+    disc_e4 = cents(F.col("l_extendedprice")) * (F.lit(100) - cents(F.col("l_discount")))
     return joined.filter(clause).agg(
         (F.sum(disc_e4) / 10000.0).alias("revenue"),
         F.count(F.lit(1)).alias("n_items"),
@@ -200,7 +189,6 @@ def q87_dominant_supplier_parts(spark: SparkSession, sf_dir: str) -> DataFrame:
     |part x supplier| compact rows, never raw lineitem, and there is
     no self-join.  The supplier attach is a broadcast semi-probe at
     dimension size."""
-    tune(spark)
     li = load(spark, sf_dir, "lineitem")
     s = load(spark, sf_dir, "supplier")
     qty = F.round(F.col("l_quantity")).cast("bigint")
@@ -247,13 +235,12 @@ def q88_idle_rich_customers(spark: SparkSession, sf_dir: str) -> DataFrame:
     compare happens against avg = sum_cents/(100*cnt) — both engines
     divide the same integers, so the double threshold is
     bit-identical."""
-    tune(spark)
     c = load(spark, sf_dir, "customer")
     o = load(spark, sf_dir, "orders")
-    cents = _cents("c_acctbal")
+    bal_cents = cents(F.col("c_acctbal"))
     avg_row = (
         c.filter(F.col("c_acctbal") > 0.0)
-        .agg((F.sum(cents) / (100.0 * F.count(F.lit(1)))).alias("__avg"))
+        .agg((F.sum(bal_cents) / (100.0 * F.count(F.lit(1)))).alias("__avg"))
     )
     recent = o.filter(
         F.col("o_orderdate") >= F.lit("2000-01-01").cast("timestamp")
@@ -267,7 +254,7 @@ def q88_idle_rich_customers(spark: SparkSession, sf_dir: str) -> DataFrame:
         rich.groupBy("c_mktsegment")
         .agg(
             F.count(F.lit(1)).alias("n_cust"),
-            (F.sum(cents) / 100.0).alias("total_acctbal"),
+            (F.sum(bal_cents) / 100.0).alias("total_acctbal"),
         )
         .orderBy("c_mktsegment")
     )
@@ -304,7 +291,6 @@ def q127_referential_integrity(spark: SparkSession, sf_dir: str) -> DataFrame:
     those compact sets — the audit never joins fact-sized data.  At
     100 TB this is the difference between a constraint check and a
     second copy of the warehouse."""
-    tune(spark)
 
     def keyset(table: str, col: str):
         # each keyset feeds BOTH the orphan and the childless side —
@@ -390,7 +376,6 @@ def q150_partitioned_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     accumulates as integer cents."""
     import tempfile
 
-    tune(spark)
     e = load(spark, sf_dir, "events")
     out = tempfile.mkdtemp(prefix="q150_store_")
     e.write.mode("overwrite").partitionBy("event_type").parquet(out)
@@ -431,7 +416,6 @@ def q154_backfill_overwrite(spark: SparkSession, sf_dir: str) -> DataFrame:
     corrected table."""
     import tempfile
 
-    tune(spark)
     e = load(spark, sf_dir, "events").withColumn("day", F.to_date("ts"))
     out = tempfile.mkdtemp(prefix="q154_store_")
     e.write.mode("overwrite").partitionBy("day").parquet(out)
@@ -476,7 +460,6 @@ def q161_cdc_merge_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
     never a per-change row lookup, which is the difference between a
     merge that scales and row-at-a-time CDC.  Tombstoned users vanish
     even if they exist only in the changelog."""
-    tune(spark)
     e = load(spark, sf_dir, "events")
     cut = F.lit("2024-01-21 00:00:00").cast("timestamp_ntz")
     cents = F.round(F.col("value") * 100).cast("bigint")
@@ -545,7 +528,6 @@ def q159_csv_ingest_quarantine(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..sources.files import read_csv, split_corrupt
     from pyspark.sql.types import LongType, StringType, StructField, StructType
 
-    tune(spark)
     docs = load(spark, sf_dir, "documents")
     # NULL fields serialize as EMPTY CSV fields (read back as NULL).
     # concat_ws would SKIP a NULL instead — silently shifting every
@@ -601,7 +583,6 @@ def q160_compaction_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from ..sources.files import compact_to_target_files
 
-    tune(spark)
     e = load(spark, sf_dir, "events")
     shards = tempfile.mkdtemp(prefix="q160_shards_")
     e.repartition(64).write.mode("overwrite").parquet(shards)
@@ -641,7 +622,6 @@ def q167_rendezvous_rebalance(spark: SparkSession, sf_dir: str) -> DataFrame:
     (identical on both engines); argmax via ``array_max`` over
     ``struct(weight, shard)`` — a pure map-side expression.  One
     shuffle total (the migration-matrix aggregation)."""
-    tune(spark)
     docs = load(spark, sf_dir, "documents")
 
     def weight(s: int) -> F.Column:

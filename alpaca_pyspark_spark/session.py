@@ -2,8 +2,11 @@
 
 Two situations:
 1. Our own tests / bench build the session via :func:`get_spark`.
-2. The driver hands us an existing session (``__spark_entry__``): we
-   only apply the *runtime-settable* confs via :func:`tune`.
+2. The driver hands us an existing session (``__spark_entry__``): the
+   registry's query boundary (``queries._boundary``) applies the
+   *runtime-settable* confs via :func:`tune` on entry to every
+   registered query, so each query runs under the engine's confs even
+   if something changed them since the last one.
 
 Scale stance (100 TB / 1000 executors): everything here is either a
 cluster-size-independent correctness conf (timezone, Arrow) or an
@@ -15,9 +18,13 @@ local[32] and on a real cluster).
 from __future__ import annotations
 
 import contextlib
+import logging
 import os
 
+from pyspark.errors import PySparkException
 from pyspark.sql import DataFrame, SparkSession
+
+logger = logging.getLogger(__name__)
 
 #: Confs that can be set on a live session (no restart needed).
 RUNTIME_CONFS: dict[str, str] = {
@@ -59,18 +66,19 @@ def default_shuffle_partitions() -> int:
 
 
 def tune(spark: SparkSession) -> SparkSession:
-    """Apply runtime-settable confs to an existing session (idempotent)."""
-    for k, v in RUNTIME_CONFS.items():
+    """Apply runtime-settable confs to an existing session (idempotent).
+
+    Called by :func:`get_spark` and at every registered query's entry
+    (``queries._boundary``); query code never calls it."""
+    confs = {
+        **RUNTIME_CONFS,
+        "spark.sql.shuffle.partitions": str(default_shuffle_partitions()),
+    }
+    for k, v in confs.items():
         try:
             spark.conf.set(k, v)
-        except Exception:  # conf not settable on this build — non-fatal
-            pass
-    try:
-        spark.conf.set(
-            "spark.sql.shuffle.partitions", str(default_shuffle_partitions())
-        )
-    except Exception:
-        pass
+        except PySparkException as e:  # not settable on this build — non-fatal
+            logger.warning("tune: cannot set %s=%s (%s)", k, v, e)
     return spark
 
 
@@ -146,8 +154,9 @@ def release_scoped_caches(mark: int | None = None) -> int:
         try:
             df.unpersist(blocking=False)
             n += 1
-        except Exception:  # session may be stopped — entry still leaves
-            pass  # the ledger, but is not counted as released
+        except Exception as e:  # session may be stopped — entry still
+            # leaves the ledger, but is not counted as released
+            logger.warning("release_scoped_caches: unpersist failed (%s)", e)
 
 
 @contextlib.contextmanager
@@ -174,11 +183,8 @@ def get_spark(app_name: str = "alpaca_pyspark_spark") -> SparkSession:
     builder = (
         SparkSession.builder.appName(app_name)
         .master(f"local[{cpus}]")
-        .config("spark.sql.shuffle.partitions", cpus)
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "8g"))
         .config("spark.ui.enabled", "false")
         .config("spark.sql.execution.pyspark.udf.faulthandler.enabled", "true")
     )
-    for k, v in RUNTIME_CONFS.items():
-        builder = builder.config(k, v)
     return tune(builder.getOrCreate())

@@ -236,7 +236,7 @@ class PaginatedRestReader(DataSourceReader):
             if isinstance(v, str):
                 try:
                     return parse_iso_datetime(v, "filter")
-                except Exception:
+                except ValueError:  # not a datetime literal: not pushed
                     return None
             return None
 

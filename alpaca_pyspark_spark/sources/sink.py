@@ -21,6 +21,7 @@ partial output can be garbage-collected.
 from __future__ import annotations
 
 import json
+import logging
 from dataclasses import dataclass
 from datetime import date, datetime
 from typing import Any, Iterator
@@ -36,6 +37,8 @@ from pyspark.sql.types import StructType
 from .http import REQUEST_TIMEOUT, build_url, make_session
 from .spec import EndpointConfig, KEY_ID_OPTION, SECRET_OPTION
 
+logger = logging.getLogger(__name__)
+
 DEFAULT_BATCH_SIZE = 1000
 
 
@@ -49,6 +52,18 @@ def _json_default(v: Any) -> Any:
     if isinstance(v, (datetime, date)):
         return v.isoformat()
     raise TypeError(f"not JSON-serializable: {type(v)!r}")
+
+
+def _manifest(messages: list[_PartitionResult], **extra: Any) -> dict[str, Any]:
+    """The commit manifest: ``status``, then ``extra`` (the stream's
+    ``batch_id``), then the partition/row/page totals."""
+    return {
+        "status": "committed",
+        **extra,
+        "partitions": len(messages),
+        "rows": sum(m.rows for m in messages),
+        "pages": sum(m.pages for m in messages),
+    }
 
 
 class RestBatchWriter(DataSourceWriter):
@@ -104,23 +119,15 @@ class RestBatchWriter(DataSourceWriter):
 
     # driver side, after all tasks succeeded / any failed terminally
     def commit(self, messages: list[_PartitionResult]) -> None:
-        self._post(
-            self._commit_path,
-            {
-                "status": "committed",
-                "partitions": len(messages),
-                "rows": sum(m.rows for m in messages),
-                "pages": sum(m.pages for m in messages),
-            },
-        )
+        self._post(self._commit_path, _manifest(messages))
 
-    def abort(self, messages: list[_PartitionResult]) -> None:
+    def abort(self, messages: list[_PartitionResult], **extra: Any) -> None:
         # best-effort tombstone: a failed abort POST must not mask the
         # original job failure with a secondary network error
         try:
-            self._post(self._commit_path, {"status": "aborted"})
-        except Exception:
-            pass
+            self._post(self._commit_path, {"status": "aborted", **extra})
+        except OSError as e:  # requests.RequestException and _post's IOError
+            logger.warning("sink abort tombstone POST failed: %s", e)
 
 
 class RestStreamWriter(DataSourceStreamWriter):
@@ -138,24 +145,10 @@ class RestStreamWriter(DataSourceStreamWriter):
         return self._inner.write(iterator)
 
     def commit(self, messages: list[_PartitionResult], batchId: int) -> None:
-        self._inner._post(
-            self._inner._commit_path,
-            {
-                "status": "committed",
-                "batch_id": batchId,
-                "partitions": len(messages),
-                "rows": sum(m.rows for m in messages),
-                "pages": sum(m.pages for m in messages),
-            },
-        )
+        self._inner._post(self._inner._commit_path, _manifest(messages, batch_id=batchId))
 
     def abort(self, messages: list[_PartitionResult], batchId: int) -> None:
-        try:
-            self._inner._post(
-                self._inner._commit_path, {"status": "aborted", "batch_id": batchId}
-            )
-        except Exception:
-            pass
+        self._inner.abort(messages, batch_id=batchId)
 
 
 class RestBatchSink(DataSource):
@@ -195,11 +188,7 @@ class RestBatchSink(DataSource):
     def name(cls) -> str:
         return "Rest_Batch_Sink"
 
-    def writer(self, schema: StructType, overwrite: bool) -> DataSourceWriter:
-        if overwrite:
-            raise ValueError(
-                "Rest_Batch_Sink is append-only; use mode('append')"
-            )
+    def _writer(self, schema: StructType) -> RestBatchWriter:
         return RestBatchWriter(
             self._config,
             self._path,
@@ -208,13 +197,12 @@ class RestBatchSink(DataSource):
             [f.name for f in schema.fields],
         )
 
-    def streamWriter(self, schema: StructType, overwrite: bool) -> DataSourceStreamWriter:
-        return RestStreamWriter(
-            RestBatchWriter(
-                self._config,
-                self._path,
-                self._commit_path,
-                self._batch_size,
-                [f.name for f in schema.fields],
+    def writer(self, schema: StructType, overwrite: bool) -> DataSourceWriter:
+        if overwrite:
+            raise ValueError(
+                "Rest_Batch_Sink is append-only; use mode('append')"
             )
-        )
+        return self._writer(schema)
+
+    def streamWriter(self, schema: StructType, overwrite: bool) -> DataSourceStreamWriter:
+        return RestStreamWriter(self._writer(schema))

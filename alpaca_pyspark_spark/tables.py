@@ -23,12 +23,6 @@ TABLE_NAMES = (
     "embeddings",
 )
 
-#: Dimension tables small enough to broadcast at any realistic scale
-#: (region/nation are fixed-cardinality; part/supplier/customer grow
-#: with SF but remain << fact tables — AQE decides for those).
-ALWAYS_BROADCAST = {"region", "nation"}
-
-
 #: (sf_dir, table) -> footer-inferred StructType.  SCHEMA memo only —
 #: never data, never results: every action still scans the parquet
 #: files.  Rationale (r12 OPT, guide §1.2 per-task work): plain
@@ -83,10 +77,6 @@ def _load_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     return df.withColumn("ts", ts).select(
         "event_id", "ts", "user_id", "event_type", "value", "props"
     )
-
-
-def load_all(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
-    return {name: load(spark, sf_dir, name) for name in TABLE_NAMES}
 
 
 def load_texts(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -181,3 +181,31 @@ def test_streaming_gate_sentinel_shift(spark):
     row = _shift_ts_100d(df).collect()[0]
     assert row["ts"] == base + datetime.timedelta(days=100)
     assert row["user_id"] == -1 and row["value"] == 0.0
+
+
+def test_query_boundary_applies_engine_confs(spark):
+    """Entering a registered query re-applies the engine's confs, even
+    after a caller changed them mid-session — the boundary is the one
+    place confs are set, so no query module calls ``tune`` itself."""
+    from pathlib import Path
+
+    import alpaca_pyspark_spark.queries as queries
+    from alpaca_pyspark_spark.session import RUNTIME_CONFS, default_shuffle_partitions
+
+    keys = [*RUNTIME_CONFS, "spark.sql.shuffle.partitions"]
+    saved = {k: spark.conf.get(k) for k in keys}
+    try:
+        spark.conf.set("spark.sql.session.timeZone", "America/New_York")
+        spark.conf.set("spark.sql.shuffle.partitions", "3")
+        queries.QUERIES["q31_token_count"](spark, SF_DIR)  # build only, no action
+        for k, v in RUNTIME_CONFS.items():
+            assert spark.conf.get(k) == v, k
+        assert spark.conf.get("spark.sql.shuffle.partitions") == str(
+            default_shuffle_partitions()
+        )
+    finally:
+        for k, v in saved.items():
+            spark.conf.set(k, v)
+    for path in Path(queries.__file__).parent.glob("*.py"):
+        if path.name != "__init__.py":
+            assert "tune(" not in path.read_text(), path.name

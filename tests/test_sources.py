@@ -541,7 +541,7 @@ def test_push_filters_never_widens():
 
 
 def test_push_filters_unsupported_shapes_ignored():
-    from pyspark.sql.datasource import EqualTo, IsNotNull
+    from pyspark.sql.datasource import EqualTo, GreaterThanOrEqual, IsNotNull
 
     r = _bars_reader()
     before = dict(r.params)
@@ -550,6 +550,7 @@ def test_push_filters_unsupported_shapes_ignored():
             IsNotNull(("close",)),          # non-pushable column
             EqualTo(("symbol", "x"), "A"),  # nested path — not ours
             EqualTo(("time",), 123),        # non-datetime value
+            GreaterThanOrEqual(("time",), "not-a-date"),  # unparseable string
         ]
     )
     assert r.params == before

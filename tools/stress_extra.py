@@ -9,7 +9,7 @@ def _q163_setsim_bounded(spark, sf_dir):
     """setsim_partner_profile at q163's exact parameters (3-word
     shingles, J >= 1/2) — the density-bounded PPJoin profile."""
     from alpaca_pyspark_spark.operators.dedup import setsim_partner_profile
-    from alpaca_pyspark_spark.queries.llm import tune
+    from alpaca_pyspark_spark.session import tune
     from alpaca_pyspark_spark.tables import load
 
     tune(spark)
