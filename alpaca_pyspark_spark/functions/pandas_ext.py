@@ -18,16 +18,6 @@ import pandas as pd
 
 
 @F.pandas_udf(DoubleType())
-def zscore_in_batch(v: pd.Series) -> pd.Series:
-    """Vectorized z-score *within each Arrow batch* — demonstrates the
-    scalar pandas-UDF shape (stateless, batch-local)."""
-    std = v.std(ddof=0)
-    if std == 0 or pd.isna(std):
-        return v * 0.0
-    return (v - v.mean()) / std
-
-
-@F.pandas_udf(DoubleType())
 def log_return(price: pd.Series) -> pd.Series:
     """Element-wise log transform via numpy (the 'custom numerics'
     case; equivalent to F.log — asserted in tests)."""

@@ -20,6 +20,8 @@ from collections.abc import Sequence
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..functions import cents
+
 _SIDE = "__adj_side"
 _VAL = "__adj_val"
 _ROW = "__adj_row"
@@ -153,48 +155,6 @@ def adjust_backward_split_ordered(
     return joined.withColumn(out_col, adj).drop("__splits")
 
 
-def adjust_backward_all(
-    prices: DataFrame,
-    splits: DataFrame,
-    dividends: DataFrame,
-    *,
-    on: Sequence[str],
-    price_ts: str,
-    action_ts: str,
-    price_col: str,
-    ratio_col: str,
-    amount_col: str,
-    out_col: str = "adj_value",
-    scale: int | None = 4,
-) -> DataFrame:
-    """``adjustment=all``: subtract strictly-later dividends, then
-    scale by the product of strictly-later split ratios (composition of
-    the two single-action operators — two window passes sharing the
-    same key partitioning)."""
-    div_adj = adjust_backward_dividend(
-        prices,
-        dividends,
-        on=on,
-        price_ts=price_ts,
-        div_ts=action_ts,
-        price_col=price_col,
-        amount_col=amount_col,
-        out_col="__div_adj",
-    )
-    out = adjust_backward_split(
-        div_adj,
-        splits,
-        on=on,
-        price_ts=price_ts,
-        split_ts=action_ts,
-        price_col="__div_adj",
-        ratio_col=ratio_col,
-        out_col=out_col,
-        scale=scale,
-    )
-    return out.drop("__div_adj")
-
-
 def adjust_backward_all_ordered(
     prices: DataFrame,
     splits: DataFrame,
@@ -251,16 +211,16 @@ def adjust_backward_dividend(
     strictly-later dividends (``adjustment=dividend``).  Computed in
     exact integer cents (inputs are cent-quantized), so the result is
     bit-identical to any engine that does the same — no rounding."""
-    cents = F.round(F.col(amount_col) * 100).cast("bigint")
+    amount_cents = cents(F.col(amount_col))
     out = _future_action_aggregate(
         prices,
         dividends,
         on=on,
         price_ts=price_ts,
         action_ts=div_ts,
-        action_expr=cents,
+        action_expr=amount_cents,
         agg_alias="__divcents",
     )
-    price_cents = F.round(F.col(price_col) * 100).cast("bigint")
+    price_cents = cents(F.col(price_col))
     adj = (price_cents - F.coalesce(F.col("__divcents"), F.lit(0))) / F.lit(100.0)
     return out.withColumn(out_col, adj).drop("__divcents")

@@ -24,6 +24,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from ..functions import cents
+
 
 def tumbling_bars(
     ticks: DataFrame,
@@ -94,7 +96,7 @@ def tumbling_bars_cents(
     than the tick stream.
     """
     p = F.col(price)
-    cents = F.round(p * 100).cast("bigint")
+    p_cents = cents(p)
     # A tick without a price is not a valid trade: drop it before the
     # aggregation.  This is also where Spark and SQL engines diverge —
     # min_by returns the NULL-valued row, arg_min skips it — so the
@@ -114,7 +116,7 @@ def tumbling_bars_cents(
             F.min(p).alias("low"),
             F.max_by(p, F.col(ts)).alias("close"),
             F.count(F.lit(1)).alias("volume"),
-            F.sum(cents).alias("cents_sum"),
+            F.sum(p_cents).alias("cents_sum"),
         )
         .select(
             key,

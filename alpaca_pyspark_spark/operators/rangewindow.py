@@ -1,4 +1,4 @@
-"""Skew-safe trailing RANGE windows: the bucket-doubling pre-split.
+"""Skew-safe per-key windows: trailing count/sum RANGE windows and LOCF.
 
 A per-row trailing time-window aggregate (``RANGE BETWEEN -(W-1)
 AND CURRENT ROW`` over an epoch column) partitions by key alone, so a
@@ -6,47 +6,33 @@ hot key's entire history sorts and evaluates in ONE task — measured
 35.3x hot-over-uniform at skew10 for q41 (SKEW_STRESS.json, round 11,
 honest forcing; the largest skew ratio this engine has recorded).
 
-The fix exploits that the FRAME LENGTH EQUALS THE BUCKET WIDTH: bucket
-time into windows of exactly W, and a row's trailing frame can only
-reach rows in its own bucket B and the previous bucket B-1 (lower
-bound t-W+1 > start(B) - W >= start(B-1)).  So:
+:func:`trailing_count_sums_adaptive` dispatches per key between two
+bit-identical tiers: the plain per-key window, and for keys past
+``RANGE_HOT_MIN_ROWS`` the prefix-bucket decomposition
+(:func:`trailing_count_sums_prefix_bucket`), which spreads a key over
+buckets sized from its row count instead of one task.
 
-  1. every row is emitted twice — tagged OWN into its bucket B, and
-     tagged SPILL into bucket B+1;
-  2. the SAME range window runs per (key, bucket) partition — each
-     partition holds B's own rows plus B-1's spill rows, every
-     physical row at most once, so the frame contents for an own row
-     are IDENTICAL to the single-pass window's;
-  3. only own-tagged output rows are kept.
-
-Cost: 2x row duplication through one exchange, full parallelism over
-(key x buckets) — the hot key's sort spreads over |buckets| tasks.
-Output is bit-identical (tests/test_rangewindow.py pins equality on
-random data, exact bucket-boundary rows, NULL keys).
-
-NULL order values are routed to the single-pass branch by the
-adaptive dispatcher: Spark gives a NULL-ordered row a frame of the
-key's other NULL rows only, and duplicating NULLs (floor(NULL)+1 is
-still NULL) would double that frame — the split keeps them in a plain
-per-key window whose partition holds exactly the key's NULL rows,
-preserving the frame group.
+NULL order values stay on the plain window: Spark gives a NULL-ordered
+row a frame of the key's other NULL rows only, and the decomposition
+cannot bucket them (floor(NULL) is still NULL) — the split keeps them
+in a plain per-key window whose partition holds exactly the key's NULL
+rows, preserving the frame group.
 """
 
 from __future__ import annotations
 
-from collections.abc import Callable
-
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
-from pyspark.sql.window import WindowSpec
 
 from .dispatch import hot_keys, per_key, split_by_keys
 
-#: dispatch floor for RANGE-frame windows — measured ~21 µs/row of
-#: single-task frame evaluation (65 s for a 3M-row key, 8.7 s for
-#: 300k), ~10x the per-row cost of the cheap windows sessionize's
-#: 1M-row default floor was calibrated on; the pre-split's fixed
-#: overhead (~1-2 s probe + duplication) breaks even near 100k rows
+#: dispatch floor for RANGE-frame windows, from AB_floor_range.json
+#: (plain vs prefix-bucket on one key, 30-day span, 24h frame, medians
+#: of 3 on a 4-core host): plain wins at 10k rows (0.42 s vs 1.45 s)
+#: and 30k (1.27 s vs 1.46 s); prefix wins from 100k (8.49 s vs
+#: 2.58 s) and at 300k (86.6 s vs 3.25 s) — the single-task frame
+#: grows superlinearly.  The floor sits at the first swept size where
+#: prefix wins every rep.
 RANGE_HOT_MIN_ROWS = 100_000
 
 
@@ -56,50 +42,32 @@ def _plain(
     key: str,
     order_us: str,
     window_us: int,
-    agg_builder: Callable[[WindowSpec], list[Column]],
+    sums: dict[str, Column],
+    count_alias: str,
 ) -> DataFrame:
+    """The plain per-key window: frame row count and one sum per
+    ``sums`` alias, each cast to long like the prefix tier's columns."""
     w = (
         Window.partitionBy(key)
         .orderBy(order_us)
         .rangeBetween(-(window_us - 1), Window.currentRow)
     )
-    return df.select(*[F.col(c) for c in df.columns], *agg_builder(w))
-
-
-def trailing_range_window_skew_safe(
-    df: DataFrame,
-    *,
-    key: str,
-    order_us: str,
-    window_us: int,
-    agg_builder: Callable[[WindowSpec], list[Column]],
-) -> DataFrame:
-    """Bucket-doubled trailing range window (see module docstring).
-    ``df`` must have non-NULL ``order_us`` (the adaptive dispatcher
-    guarantees it); ``agg_builder`` maps a WindowSpec to the aggregate
-    columns, so callers express exactly the expressions they would
-    put over the plain window."""
-    b = F.floor(F.col(order_us) / F.lit(window_us))
-    own = df.withColumn("__b", b).withColumn("__own", F.lit(True))
-    spill = df.withColumn("__b", b + 1).withColumn("__own", F.lit(False))
-    both = own.unionByName(spill)
-    w = (
-        Window.partitionBy(key, "__b")
-        .orderBy(order_us)
-        .rangeBetween(-(window_us - 1), Window.currentRow)
+    return df.select(
+        *[F.col(c) for c in df.columns],
+        F.count(F.lit(1)).over(w).cast("long").alias(count_alias),
+        *[
+            F.sum(expr).over(w).cast("long").alias(alias)
+            for alias, expr in sums.items()
+        ],
     )
-    out = both.select(
-        *[F.col(c) for c in df.columns], "__own", *agg_builder(w)
-    )
-    return out.filter(F.col("__own")).drop("__own")
 
 
 # ---------------------------------------------------------------------
 # Skew-safe LOCF (last non-null IGNORE NULLS over an unbounded-
 # preceding frame) + first-non-null per-key scalar — q115's shape.
-# An unbounded frame cannot bucket-double (it is not length-bounded);
-# instead the carry is EXPLICIT: local LOCF per (key, time-bucket),
-# then one "last non-null value" row per (key, bucket) chains through
+# An unbounded frame has no length to bucket by, so the carry is
+# EXPLICIT: local LOCF per (key, time-bucket), then one "last
+# non-null value" row per (key, bucket) chains through
 # a tiny per-key window (|buckets| rows), and rows coalesce their
 # local LOCF with the previous bucket's carry.  NULL timestamps all
 # fall into the NULL bucket, which the carry chain orders FIRST —
@@ -249,19 +217,14 @@ def locf_first_adaptive(
 
 
 # ---------------------------------------------------------------------
-# PREFIX-BUCKET decomposition — the EXTREME tier for COMBINABLE
+# PREFIX-BUCKET decomposition — the hot-key tier for COMBINABLE
 # trailing range windows (count + exact-integer sums), q41's shape.
 #
-# The bucket-doubling pre-split caps a hot key's parallelism at
-# span/W buckets: with the fixture's fixed 30-day span and a 24h
-# frame that is 30 tasks forever, so per-task rows grow linearly with
-# volume and the skew ratio RISES across a fixed-span decade
-# (sf1 2.55x -> sf10 4.32x, SKEW_STRESS round 11 — the round-11
-# verdict's one `weak` row).  For combinable aggregates the frame
-# does not need to be materialized inside one partition at all; this
-# is the bucketed sliding-window aggregation idea from the stream-
-# processing literature (pane/bucket decompositions a la Li et al.
-# "No pane, no gain", SIGMOD Record 2005), done here set-wise:
+# For combinable aggregates the frame does not need to be
+# materialized inside one partition at all; this is the bucketed
+# sliding-window aggregation idea from the stream-processing
+# literature (pane/bucket decompositions a la Li et al. "No pane, no
+# gain", SIGMOD Record 2005), done here set-wise:
 #
 #   pick ANY bucket width G (no divisibility constraint) and let
 #   g = floor(t/G), gq = floor((t-W)/G), P(x) = per-key prefix sum of
@@ -283,22 +246,13 @@ def locf_first_adaptive(
 # and two BROADCAST joins against the (tiny, persisted) per-key dense
 # bucket-prefix table supply the P terms.  Parallelism is key x
 # span/G with G CHOSEN per key from the probe (target rows/bucket),
-# so it scales with the key's row count instead of being pinned by
-# the frame length — the property the bucket-doubling tier lacks.
+# so it scales with the key's row count instead of being pinned to
+# one task.
 #
 # Exactness: every stratum sums exact integers, so any execution
 # order gives the bit-identical answer; NULL-iff-empty sum semantics
 # are reproduced by decomposing a non-null-count alongside each sum.
 # ---------------------------------------------------------------------
-
-#: extreme-tier dispatch: estimated rows per FRAME-WIDTH bucket above
-#: which the bucket-doubling's span/W parallelism cap would straggle.
-#: Calibrated round 12 by paired A/B on the skew fixtures (q41 shape,
-#: 30-day span, 24h frame): at ~10k rows/W-bucket (skew1 hot key) the
-#: tiers are a wash (3.4-4.5s vs 3.7-4.6s); at ~100k (skew10) the
-#: prefix tier wins ~2-3.5x (9.4/8.5/9.8s vs 31.6/18.2/34.5s paired).
-#: 40k sits past the wash with the win still decisive above it.
-PREFIX_MIN_BUCKET_ROWS = 40_000
 
 #: per-(key, bucket) row target when choosing the prefix tier's bucket
 #: width G — small enough that one bucket's sort is trivially cheap,
@@ -306,11 +260,22 @@ PREFIX_MIN_BUCKET_ROWS = 40_000
 PREFIX_TARGET_BUCKET_ROWS = 25_000
 
 #: bounds on buckets-per-key: the floor keeps at least one wave of
-#: parallelism even for barely-extreme keys; the cap bounds the dense
+#: parallelism even for barely-hot keys; the cap bounds the dense
 #: spine (and thus the broadcast prefix table) at any row count —
 #: past it, rows/bucket grow again but with 100k-way parallelism
 PREFIX_MIN_BUCKETS = 32
 PREFIX_MAX_BUCKETS = 100_000
+
+
+def prefix_bucket_width(rows: int, span_us: int) -> int:
+    """The prefix tier's bucket width G for a key of ``rows`` rows
+    spanning ``span_us``: about ``PREFIX_TARGET_BUCKET_ROWS`` rows per
+    bucket, within the buckets-per-key bounds."""
+    buckets = min(
+        PREFIX_MAX_BUCKETS,
+        max(PREFIX_MIN_BUCKETS, rows // PREFIX_TARGET_BUCKET_ROWS),
+    )
+    return max(1, int(span_us // buckets))
 
 _INT_TYPES = ("tinyint", "smallint", "int", "bigint", "long", "integer", "short", "byte")
 
@@ -361,7 +326,7 @@ def trailing_count_sums_prefix_bucket(
                 f"bit-identical decomposition; {alias!r} is {dt} — "
                 "aggregate cents/counts and divide once at the end"
             )
-    # per-key bucket width as a literal map (the extreme-key list is
+    # per-key bucket width as a literal map (the hot-key list is
     # pigeonhole-bounded, so the plan-side literal stays small), or
     # one global literal when a single int is given
     if isinstance(bucket_widths, int):
@@ -374,7 +339,7 @@ def trailing_count_sums_prefix_bucket(
     # floor(long/long) via double division is exact here: order_us is
     # epoch µs < 2^53 (exactly representable), and the quotient's ULP
     # (~0.38/G) is strictly below the 1/G step a 1 µs move causes, so
-    # no boundary can misround — same argument the W-bucket tier uses
+    # no boundary can misround
     base = scoped_persist(
         base.withColumn("__g", F.floor(F.col(order_us) / gw))
         .withColumn("__gq", F.floor((F.col(order_us) - F.lit(window_us)) / gw))
@@ -536,20 +501,6 @@ def trailing_count_sums_prefix_bucket(
     return joined.select(*out_cols)
 
 
-def _cs_agg_builder(count_alias: str, sums: dict[str, Column]):
-    """The count+sums shape as an ``agg_builder`` so the plain and
-    bucket-doubled tiers emit EXACTLY the columns the prefix tier
-    does (count long, one long sum per alias)."""
-
-    def build(w: WindowSpec) -> list[Column]:
-        cols = [F.count(F.lit(1)).over(w).cast("long").alias(count_alias)]
-        for alias, expr in sums.items():
-            cols.append(F.sum(expr).over(w).cast("long").alias(alias))
-        return cols
-
-    return build
-
-
 def trailing_count_sums_adaptive(
     df: DataFrame,
     *,
@@ -560,71 +511,37 @@ def trailing_count_sums_adaptive(
     sums: dict[str, Column],
     count_alias: str,
 ) -> DataFrame:
-    """THREE-tier per-key dispatch for combinable (count + exact-
-    integer-sum) trailing range windows:
+    """TWO-tier per-key dispatch for combinable (count + exact-integer-
+    sum) trailing range windows:
 
-    * cold keys (and all NULL keys / NULL-ordered rows): the plain
-      per-key window — one exchange, cheapest when nothing straggles;
-    * hot keys whose span/W bucket grid still offers enough
-      parallelism: the bucket-doubling pre-split (2x duplication, no
-      join-back);
-    * EXTREME keys — estimated rows per frame-width bucket past
-      ``PREFIX_MIN_BUCKET_ROWS``, where the W-grid itself is the
-      straggler: the prefix-bucket decomposition, whose parallelism
-      follows the key's row count (span/G with G chosen from the
-      probe) instead of the frame length.
+    * keys past ``RANGE_HOT_MIN_ROWS`` (probed by ``dispatch.hot_keys``,
+      which also bounds them to ``partitions / HOT_TASK_FACTOR``): the
+      prefix-bucket decomposition, its bucket width chosen per key from
+      the probed rows and span, at most ``PREFIX_MAX_BUCKETS`` buckets
+      each — so the broadcast prefix spine stays bounded;
+    * every other key, NULL keys, and the NULL-ordered rows of hot keys
+      (see the module docstring): the plain per-key window — one
+      exchange, cheapest when nothing straggles.
 
-    All three tiers are bit-identical per row (exact integer sums;
-    tests/test_rangewindow_prefix.py pins three-way parity on random,
-    tie-heavy, NULL-bearing and bucket-edge data), keys are disjoint
-    across tiers, so the dispatch is invisible to correctness and the
-    oracle SQL is unchanged.  ``row_id`` must be unique non-NULL (the
-    ingestion contract for event ids) — it carries the prefix tier's
-    head/tail join-back."""
-    builder = _cs_agg_builder(count_alias, sums)
-    kw_w = dict(
-        key=key, order_us=order_us, window_us=window_us, agg_builder=builder
+    Both tiers are bit-identical per row (exact integer sums;
+    tests/test_rangewindow_prefix.py pins parity on random, tie-heavy,
+    NULL-bearing and bucket-edge data), and each key's ordered rows
+    meet in one tier, so the dispatch is invisible to correctness and
+    the oracle SQL is unchanged.  ``row_id`` must be unique non-NULL
+    (the ingestion contract for event ids) — it carries the prefix
+    tier's head/tail join-back."""
+    kw = dict(
+        key=key, order_us=order_us, window_us=window_us, sums=sums,
+        count_alias=count_alias,
     )
     stats = hot_keys(df, key, RANGE_HOT_MIN_ROWS, order_us=order_us)
     if not stats:
-        return _plain(df, **kw_w)
-    widths: dict = {}
-    moderate = []
-    for k, rows, span in stats:
-        w_buckets = int(span // window_us) + 1
-        if rows / w_buckets > PREFIX_MIN_BUCKET_ROWS:
-            buckets = min(
-                PREFIX_MAX_BUCKETS,
-                max(PREFIX_MIN_BUCKETS, rows // PREFIX_TARGET_BUCKET_ROWS),
-            )
-            widths[k] = max(1, int(span // buckets))
-        else:
-            moderate.append(k)
-    out = None
-    rest = df
-    if moderate:
-        hot, rest = split_by_keys(rest, key, moderate)
-        hot_null = hot.filter(F.col(order_us).isNull())
-        hot = hot.filter(F.col(order_us).isNotNull())
-        out = _plain(hot_null, **kw_w).unionByName(
-            trailing_range_window_skew_safe(hot, **kw_w)
+        return _plain(df, **kw)
+    widths = {k: prefix_bucket_width(rows, span) for k, rows, span in stats}
+    hot, cold = split_by_keys(df, key, list(widths))
+    ordered = F.col(order_us).isNotNull()
+    return _plain(cold.unionByName(hot.filter(~ordered)), **kw).unionByName(
+        trailing_count_sums_prefix_bucket(
+            hot.filter(ordered), row_id=row_id, bucket_widths=widths, **kw
         )
-    if widths:
-        ext, rest = split_by_keys(rest, key, list(widths))
-        ext_null = ext.filter(F.col(order_us).isNull())
-        ext = ext.filter(F.col(order_us).isNotNull())
-        pb = _plain(ext_null, **kw_w).unionByName(
-            trailing_count_sums_prefix_bucket(
-                ext,
-                key=key,
-                order_us=order_us,
-                window_us=window_us,
-                row_id=row_id,
-                sums=sums,
-                count_alias=count_alias,
-                bucket_widths=widths,
-            )
-        )
-        out = pb if out is None else out.unionByName(pb)
-    cold = _plain(rest, **kw_w)
-    return cold if out is None else cold.unionByName(out)
+    )

@@ -25,6 +25,8 @@ from collections.abc import Sequence
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..functions import cents
+
 
 def _micros(ts: Column) -> Column:
     """Exact integer event-time in µs (TIMESTAMP_NTZ under the UTC
@@ -107,12 +109,12 @@ def time_weighted_average(
     nxt = F.lead(F.col(ts)).over(Window.partitionBy(*keys).orderBy(ts))
     bucket_end = F.date_trunc("DAY", F.col(ts)) + F.expr("INTERVAL 1 DAY")
     hold_until = F.least(F.coalesce(nxt, bucket_end), bucket_end)
-    cents = F.round(F.col(value_col) * 100).cast("bigint")
+    value_cents = cents(F.col(value_col))
     dt = _micros(hold_until) - _micros(F.col(ts))
     weighted = df.select(
         *keys,
         bucket.alias("bucket"),
-        (cents * dt).alias("__cd"),
+        (value_cents * dt).alias("__cd"),
         dt.alias("__dt"),
     )
     return weighted.groupBy(*keys, "bucket").agg(
@@ -173,13 +175,13 @@ def rolling_moments(
     the 2⁵³ double-exact range at any daily volume).
     """
     keys = list(keys)
-    cents = F.round(F.col(value_col) * 100).cast("bigint")
+    value_cents = cents(F.col(value_col))
     daily = (
         df.groupBy(*keys, F.date_trunc("DAY", F.col(ts)).alias("day"))
         .agg(
             F.count(F.lit(1)).alias("__n"),
-            F.sum(cents).alias("__sx"),
-            F.sum(cents * cents).alias("__sxx"),
+            F.sum(value_cents).alias("__sx"),
+            F.sum(value_cents * value_cents).alias("__sxx"),
         )
     )
     day_num = F.unix_date(F.col("day").cast("date"))

@@ -14,6 +14,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..functions import cents
 from ..operators.text import chunk_documents, scrub_pii
 from ..operators.timeseries import (
     drawdown,
@@ -279,14 +280,14 @@ def q55_bloom_join_prune(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     bloom = build_bloom(o.select("o_orderkey"), "o_orderkey")
     pruned = bloom_prune(li, bloom, "l_orderkey")
-    cents = F.round(F.col("l_extendedprice") * 100).cast("bigint")
+    price_cents = cents(F.col("l_extendedprice"))
     return (
         pruned.join(o.select("o_orderkey", "o_orderpriority"),
                     pruned.l_orderkey == F.col("o_orderkey"))
         .groupBy("o_orderpriority")
         .agg(
             F.count(F.lit(1)).alias("n_lineitems"),
-            (F.sum(cents) / 100.0).alias("revenue"),
+            (F.sum(price_cents) / 100.0).alias("revenue"),
         )
     )
 
@@ -417,12 +418,12 @@ def q59_conditional_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     count_if / sum-where / any / every per user over events — the
     single-pass multi-metric shape that replaces N filtered scans."""
     e = load(spark, sf_dir, "events")
-    cents = F.round(F.col("value") * 100).cast("bigint")
+    value_cents = cents(F.col("value"))
     return e.groupBy("user_id").agg(
         F.count(F.lit(1)).alias("n_events"),
         F.count_if(F.col("event_type") == "purchase").alias("n_purchases"),
         (
-            F.sum(F.when(F.col("event_type") == "purchase", cents).otherwise(0))
+            F.sum(F.when(F.col("event_type") == "purchase", value_cents).otherwise(0))
             / 100.0
         ).alias("purchase_total"),
         F.max(F.col("event_type") == "error").alias("any_error"),
@@ -668,8 +669,8 @@ def q64_shipping_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
     li = load(spark, sf_dir, "lineitem").filter(
         F.col("l_shipdate") > "1995-03-15 00:00:00"
     )
-    cents = F.round(F.col("l_extendedprice") * 100).cast("bigint")
-    disc_pct = F.round(F.col("l_discount") * 100).cast("bigint")
+    price_cents = cents(F.col("l_extendedprice"))
+    disc_pct = cents(F.col("l_discount"))
     joined = (
         li.join(o, li.l_orderkey == o.o_orderkey)
         .join(F.broadcast(c), o.o_custkey == c.c_custkey)
@@ -677,7 +678,7 @@ def q64_shipping_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
     return (
         joined.groupBy("l_orderkey", "o_orderdate", "o_orderpriority")
         .agg(
-            (F.sum(cents * (F.lit(100) - disc_pct)) / 10000.0).alias("revenue"),
+            (F.sum(price_cents * (F.lit(100) - disc_pct)) / 10000.0).alias("revenue"),
             F.count(F.lit(1)).alias("n_lines"),
         )
         .orderBy(F.col("revenue").desc(), F.col("l_orderkey").asc())

@@ -217,14 +217,14 @@ def q69_snapshot_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
     hash-partition on the join key; the classify+aggregate is one
     more small shuffle."""
     o = load(spark, sf_dir, "orders")
-    cents = F.round(F.col("o_totalprice") * 100).cast("bigint")
+    total_cents = cents(F.col("o_totalprice"))
     a = o.filter(F.col("o_orderkey") % 3 != 0).select(
-        "o_orderkey", cents.alias("cents_a")
+        "o_orderkey", total_cents.alias("cents_a")
     )
     b = o.filter(F.col("o_orderkey") % 5 != 0).select(
         "o_orderkey",
         (
-            cents
+            total_cents
             + F.when(F.col("o_orderkey") % 7 == 0, F.lit(100)).otherwise(F.lit(0))
         ).alias("cents_b"),
     )
@@ -285,11 +285,11 @@ def q70_small_quantity_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     p = load(spark, sf_dir, "part").filter(F.col("p_brand") == "Brand#23")
     li = load(spark, sf_dir, "lineitem")
     qty = F.col("l_quantity").cast("bigint")
-    cents = F.round(F.col("l_extendedprice") * 100).cast("bigint")
+    price_cents = cents(F.col("l_extendedprice"))
     lip = li.join(
         F.broadcast(p.select("p_partkey")),
         li.l_partkey == F.col("p_partkey"),
-    ).select("l_partkey", qty.alias("__q"), cents.alias("__c"))
+    ).select("l_partkey", qty.alias("__q"), price_cents.alias("__c"))
     stats = lip.groupBy("l_partkey").agg(
         F.sum("__q").alias("__sq"), F.count(F.lit(1)).alias("__n")
     )
@@ -337,11 +337,13 @@ def q71_argmax_event(spark: SparkSession, sf_dir: str) -> DataFrame:
     # event" and struct-max NULL-field ordering is engine-specific —
     # valued events only on BOTH sides (n_events counts them)
     e = load(spark, sf_dir, "events").filter(F.col("value").isNotNull())
-    cents = F.round(F.col("value") * 100).cast("bigint")
+    value_cents = cents(F.col("value"))
     return (
         e.select(
             "user_id",
-            F.struct(cents.alias("c"), F.col("event_id").alias("id")).alias("__s"),
+            F.struct(
+                value_cents.alias("c"), F.col("event_id").alias("id")
+            ).alias("__s"),
         )
         .groupBy("user_id")
         .agg(F.max("__s").alias("__m"), F.count(F.lit(1)).alias("n_events"))
@@ -377,10 +379,10 @@ def q72_value_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
     division.  Bin + aggregate is one shuffle; the share window runs
     on |bins| rows."""
     e = load(spark, sf_dir, "events")
-    cents = F.round(F.col("value") * 100).cast("bigint")
+    value_cents = cents(F.col("value"))
     binned = e.select(
-        (cents / F.lit(2500)).cast("bigint").alias("bin"),
-        cents.alias("__c"),
+        (value_cents / F.lit(2500)).cast("bigint").alias("bin"),
+        value_cents.alias("__c"),
         F.col("value"),
     )
     per_bin = binned.groupBy("bin").agg(
@@ -495,10 +497,10 @@ def q75_hopping_window(spark: SparkSession, sf_dir: str) -> DataFrame:
     unnest.  Exact integer cents; the window fan-out is an Expand
     (map-side), so the only shuffle is the aggregate itself."""
     e = load(spark, sf_dir, "events")
-    cents = F.round(F.col("value") * 100).cast("bigint")
+    value_cents = cents(F.col("value"))
     win = F.window("ts", "2 hours", "1 hour")
     return (
-        e.select(win.alias("__w"), F.col("event_type"), cents.alias("__c"))
+        e.select(win.alias("__w"), F.col("event_type"), value_cents.alias("__c"))
         .groupBy(
             F.col("__w.start").alias("win_start"),
             F.col("__w.end").alias("win_end"),
@@ -596,21 +598,21 @@ def q105_lambda_serving(spark: SparkSession, sf_dir: str) -> DataFrame:
     the same merge the q30/q46/q77 cascades pin down."""
     cutoff = F.lit("2024-01-28").cast("timestamp")
     e = load(spark, sf_dir, "events")
-    cents = F.round(F.col("value") * 100).cast("bigint")
+    value_cents = cents(F.col("value"))
     day = F.date_trunc("DAY", F.col("ts"))
     # batch layer: the pre-aggregated daily rollup (materialized
     # upstream in a real deployment; built inline here so the query is
     # self-contained)
     rollup = (
         e.groupBy(day.alias("day"), "event_type")
-        .agg(F.count(F.lit(1)).alias("n"), F.sum(cents).alias("sum_cents"))
+        .agg(F.count(F.lit(1)).alias("n"), F.sum(value_cents).alias("sum_cents"))
         .filter(F.col("day") < cutoff)
     )
     # speed layer: raw tail
     tail = (
         e.filter(F.col("ts") >= cutoff)
         .groupBy(day.alias("day"), "event_type")
-        .agg(F.count(F.lit(1)).alias("n"), F.sum(cents).alias("sum_cents"))
+        .agg(F.count(F.lit(1)).alias("n"), F.sum(value_cents).alias("sum_cents"))
     )
     return (
         rollup.unionByName(tail)
@@ -798,7 +800,7 @@ def q108_schema_evolution_union(spark: SparkSession, sf_dir: str) -> DataFrame:
     v2 = o.filter(F.col("o_orderdate") >= cutoff).select(
         "o_orderkey", "o_orderdate", "o_totalprice", "o_orderpriority"
     )
-    cents = F.round(F.col("o_totalprice") * 100).cast("bigint")
+    total_cents = cents(F.col("o_totalprice"))
     return (
         v1.unionByName(v2, allowMissingColumns=True)
         .groupBy(
@@ -809,7 +811,7 @@ def q108_schema_evolution_union(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .agg(
             F.count(F.lit(1)).alias("n_orders"),
-            (F.sum(cents) / 100.0).alias("total_value"),
+            (F.sum(total_cents) / 100.0).alias("total_value"),
         )
         .orderBy("o_year", "priority")
     )
@@ -913,13 +915,13 @@ def q116_incremental_view_update(spark: SparkSession, sf_dir: str) -> DataFrame:
     plus that state."""
     cutoff = F.lit("2024-01-30").cast("timestamp")
     e = load(spark, sf_dir, "events")
-    cents = F.round(F.col("value") * 100).cast("bigint")
+    value_cents = cents(F.col("value"))
 
     def summarize(df):
         return (
             df.select(
                 "event_type",
-                cents.alias("__c"),
+                value_cents.alias("__c"),
                 F.bitmap_bucket_number(F.col("user_id")).alias("__bkt"),
                 F.bitmap_bit_position(F.col("user_id")).alias("__pos"),
             )
@@ -1125,7 +1127,7 @@ def q129_cuped_experiment_readout(spark: SparkSession, sf_dir: str) -> DataFrame
     aggregate."""
     e = load(spark, sf_dir, "events")
     cutoff = F.lit("2024-01-16 00:00:00").cast("timestamp_ntz")
-    v_centi = F.round(F.col("value") * 100).cast("bigint")
+    v_centi = cents(F.col("value"))
     per_user = (
         e.groupBy("user_id")
         .agg(
@@ -1241,7 +1243,7 @@ def q138_pareto_frontier(spark: SparkSession, sf_dir: str) -> DataFrame:
     p = load(spark, sf_dir, "part").select(
         "p_partkey",
         "p_brand",
-        F.round(F.col("p_retailprice") * 100).cast("bigint").alias("__cents"),
+        cents(F.col("p_retailprice")).alias("__cents"),
         "p_size",
     )
     return pareto_min_min(p, group="p_brand", x="__cents", y="p_size").select(

@@ -19,6 +19,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..functions import cents
 from ..operators.adjustment import (
     adjust_backward_all_ordered,
     adjust_backward_dividend,
@@ -64,7 +65,7 @@ def q02_bars_tumbling(spark: SparkSession, sf_dir: str) -> DataFrame:
     # float-accumulation drift.  Everything else picks exact input
     # values (min/max/arg extremes), so no rounding is needed there.
     p = F.col("value")
-    cents = F.round(p * 100).cast("bigint")
+    p_cents = cents(p)
     # unpriced ticks don't form bars (engine-portable NULL contract —
     # Spark min_by keeps NULL-valued rows, SQL arg_min skips them;
     # the oracle carries the same WHERE)
@@ -78,7 +79,7 @@ def q02_bars_tumbling(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.max_by(p, F.col("ts")).alias("close"),
             F.count(F.lit(1)).alias("volume"),
             F.count(F.lit(1)).alias("trade_count"),
-            (F.sum(cents) / (F.lit(100.0) * F.count(F.lit(1)))).alias("vwap"),
+            (F.sum(p_cents) / (F.lit(100.0) * F.count(F.lit(1)))).alias("vwap"),
         )
     )
 
@@ -124,7 +125,7 @@ def q03_interval_join_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     f = e.select(
         "user_id",
         F.col("ts").alias("f_ts"),
-        F.round(F.col("value") * 100).cast("bigint").alias("__cents"),
+        cents(F.col("value")).alias("__cents"),
     )
     agg = trailing_interval_agg_adaptive(
         s,
@@ -202,7 +203,7 @@ def q205_interval_agg_decomposed(spark: SparkSession, sf_dir: str) -> DataFrame:
     f = e.select(
         "user_id",
         F.col("ts").alias("f_ts"),
-        F.round(F.col("value") * 100).cast("bigint").alias("__cents"),
+        cents(F.col("value")).alias("__cents"),
     )
     dec = trailing_interval_agg(
         s,
@@ -270,9 +271,9 @@ def q05_groupby_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     # exact-cents sum (see q02): BIGINT accumulation is
     # order-independent; one final division matches the oracle exactly
-    cents = F.round(F.col("c_acctbal") * 100).cast("bigint")
+    bal_cents = cents(F.col("c_acctbal"))
     return joined.rollup("r_name", "n_name").agg(
-        (F.sum(cents) / 100.0).alias("sum_acctbal"),
+        (F.sum(bal_cents) / 100.0).alias("sum_acctbal"),
         F.count(F.lit(1)).alias("n_customers"),
     )
 
@@ -980,7 +981,7 @@ def q149_stream_static_enrich_executed(spark: SparkSession, sf_dir: str) -> Data
         .groupBy("user_id")
         .agg(
             F.count(F.lit(1)).alias("n_purchases"),
-            F.sum(F.round(F.col("value") * 100).cast("bigint")).alias("__cents"),
+            F.sum(cents(F.col("value"))).alias("__cents"),
         )
     )
     clicks = e.filter(F.col("event_type") == "click").select(
@@ -1237,7 +1238,7 @@ def _q203_landed_bars(spark, landed_pdf, *, manifest_rows: int) -> DataFrame:
         F.col("time").cast("timestamp").cast("timestamp_ntz").alias("ts"),
         F.col("price").alias("p"),
     )
-    cents = F.round(F.col("p") * 100).cast("bigint")
+    p_cents = cents(F.col("p"))
     return (
         t.groupBy("symbol", F.window("ts", "1 day").start.alias("bar_start"))
         .agg(
@@ -1247,7 +1248,7 @@ def _q203_landed_bars(spark, landed_pdf, *, manifest_rows: int) -> DataFrame:
             F.max_by("p", F.col("ts")).alias("close"),
             F.count(F.lit(1)).alias("volume"),
             F.count(F.lit(1)).alias("trade_count"),
-            (F.sum(cents) / (F.lit(100.0) * F.count(F.lit(1)))).alias("vwap"),
+            (F.sum(p_cents) / (F.lit(100.0) * F.count(F.lit(1)))).alias("vwap"),
         )
         .withColumn("manifest_rows", F.lit(int(manifest_rows)).cast("bigint"))
     )

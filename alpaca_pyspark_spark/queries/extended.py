@@ -170,11 +170,11 @@ def q24_percentiles(spark: SparkSession, sf_dir: str) -> DataFrame:
     li = load(spark, sf_dir, "lineitem").filter(
         F.col("l_extendedprice").isNotNull()
     )
-    cents = F.round(F.col("l_extendedprice") * 100).cast("bigint")
+    price_cents = cents(F.col("l_extendedprice"))
     w = Window.partitionBy("l_returnflag").orderBy("__c")
     wg = Window.partitionBy("l_returnflag")
     d = (
-        li.select("l_returnflag", cents.alias("__c"))
+        li.select("l_returnflag", price_cents.alias("__c"))
         .withColumn("__i", F.row_number().over(w) - 1)
         .withColumn("__n", F.count(F.lit(1)).over(wg))
     )
@@ -372,7 +372,7 @@ def q27_pandas_udf_trend(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.floor(F.col("ts").cast("timestamp").cast("double"))
         .cast("bigint")
         .alias("t"),
-        F.round(F.col("value") * 100).cast("bigint").alias("cents"),
+        cents(F.col("value")).alias("cents"),
     )
     return per_key_ols_exact(e, key="user_id", x="t", y="cents")
 
@@ -508,23 +508,11 @@ def q41_trailing_range_window(spark: SparkSession, sf_dir: str) -> DataFrame:
     a time span regardless of row density.  Ordered by epoch
     microseconds so the frame bound is exact and engine-identical.
 
-    Round-11 skew fix: the PER-KEY adaptive bucket-doubling pre-split
-    (``operators/rangewindow.py``) — the plain per-key window buffered
-    a 30%-hot key's 3M rows in one task (measured 35.3x hot-over-
-    uniform at sf10, the engine's worst-ever skew row); with the frame
-    length equal to the bucket width, the hot key's sort spreads over
-    |buckets| tasks at a 2x row-duplication cost.
-
-    Round-12: upgraded to the THREE-tier ``trailing_count_sums_adaptive``
-    — the W-bucket grid caps a hot key's parallelism at span/W tasks
-    (30 forever under the fixture's 30-day span), so its skew ratio
-    ROSE across the fixed-span decade (2.55x sf1 -> 4.32x sf10, the
-    round-11 verdict's one `weak` row).  q41's aggregates are
-    combinable (count + exact integer cents), so EXTREME keys now
-    route into the prefix-bucket decomposition whose parallelism
-    follows the key's row count instead of the frame length.  All
-    tiers bit-identical; the single end division by 100 happens after
-    the integer window sums, exactly like the oracle."""
+    Runs on ``trailing_count_sums_adaptive``: keys past the range-window
+    hot floor take the prefix-bucket decomposition, every other key the
+    plain per-key window; both tiers are bit-identical, and the single
+    end division by 100 happens after the integer window sums, exactly
+    like the oracle."""
     from ..operators.rangewindow import trailing_count_sums_adaptive
 
     e = load(spark, sf_dir, "events").withColumn(
@@ -564,7 +552,7 @@ def q208_trailing_window_prefix_decomposed(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
     """The prefix-bucket trailing-window decomposition FORCED on every
-    key (q205's pattern applied to the round-12 range-window tier):
+    key (q205's pattern applied to q41's hot-key tier):
     the gate fixtures are uniform, so q41's adaptive dispatch never
     routes a gate row into ``trailing_count_sums_prefix_bucket`` —
     this twin runs the decomposition on ALL keys with a global 5h
@@ -576,7 +564,7 @@ def q208_trailing_window_prefix_decomposed(
     sides (the adaptive dispatch routes those to the plain tier;
     forcing the decomposition makes the contract explicit instead).
 
-    Scale shape: per-stage identical to the extreme tier's production
+    Scale shape: per-stage identical to the hot-key tier's production
     path — 2x row emission through one per-(key, bucket) running
     window, a slim row-id sort-merge join-back, and two broadcast
     P-joins against the dense per-key bucket-prefix spine.  One
@@ -584,9 +572,9 @@ def q208_trailing_window_prefix_decomposed(
     |all keys| x span/G rows — fine at gate scale (~216k rows at
     sf0.1), corpus-cardinality-bounded in general, so this exact
     shape is the VERIFICATION twin, not the deployment plan.  In
-    production the adaptive dispatch routes only extreme keys here,
-    and the spine is bounded by the pigeonhole-bounded extreme-key
-    list x <=PREFIX_MAX_BUCKETS."""
+    production the adaptive dispatch routes only hot keys here, and
+    the spine is bounded by the pigeonhole-bounded hot-key list x
+    <=PREFIX_MAX_BUCKETS."""
     from ..operators.rangewindow import trailing_count_sums_prefix_bucket
 
     e = load(spark, sf_dir, "events").withColumn(

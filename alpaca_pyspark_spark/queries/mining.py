@@ -20,6 +20,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from ..functions import cents
 from ..operators.dispatch import table_at_least
 from ..tables import load
 
@@ -179,7 +180,7 @@ def q80_brand_skyline(spark: SparkSession, sf_dir: str) -> DataFrame:
     Partitioned by brand, the sort is distributed; prices compare as
     integer cents."""
     p = load(spark, sf_dir, "part")
-    cents = F.round(F.col("p_retailprice") * 100).cast("bigint")
+    retail_cents = cents(F.col("p_retailprice"))
     w_smaller = (
         Window.partitionBy("p_brand")
         .orderBy("p_size")
@@ -191,7 +192,7 @@ def q80_brand_skyline(spark: SparkSession, sf_dir: str) -> DataFrame:
         "p_partkey",
         "p_size",
         "p_retailprice",
-        cents.alias("__c"),
+        retail_cents.alias("__c"),
     ).select(
         "*",
         F.max("__c").over(w_smaller).alias("__best_smaller"),
@@ -233,7 +234,7 @@ def q81_grouped_regression(spark: SparkSession, sf_dir: str) -> DataFrame:
     never leaves whole-stage codegen)."""
     e = load(spark, sf_dir, "events")
     x = F.datediff(F.col("ts").cast("date"), F.lit("2024-01-01").cast("date"))
-    y = F.round(F.col("value") * 100).cast("bigint")
+    y = cents(F.col("value"))
     dec = "decimal(38,0)"
     stats = (
         e.select("event_type", x.alias("__x"), y.alias("__y"))
@@ -375,9 +376,9 @@ def q83_revenue_share_threshold(spark: SparkSession, sf_dir: str) -> DataFrame:
     all-integer (``rev · n_parts > total``) — no division until the
     displayed revenue.  Revenue in exact cents·(100−disc_pct)."""
     li = load(spark, sf_dir, "lineitem")
-    cents = F.round(F.col("l_extendedprice") * 100).cast("bigint")
-    disc_pct = F.round(F.col("l_discount") * 100).cast("bigint")
-    rev = (cents * (F.lit(100) - disc_pct)).alias("__r")
+    price_cents = cents(F.col("l_extendedprice"))
+    disc_pct = cents(F.col("l_discount"))
+    rev = (price_cents * (F.lit(100) - disc_pct)).alias("__r")
     per_part = (
         li.select(F.col("l_partkey").alias("partkey"), rev)
         .groupBy("partkey")
@@ -471,10 +472,10 @@ def q102_mad_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _q102_window(li: DataFrame) -> DataFrame:
-    cents = F.round(F.col("l_extendedprice") * 100).cast("bigint")
+    price_cents = cents(F.col("l_extendedprice"))
     w = Window.partitionBy("l_returnflag")
     d = (
-        li.select("l_returnflag", cents.alias("__c"))
+        li.select("l_returnflag", price_cents.alias("__c"))
         .withColumn("__med", F.percentile("__c", F.lit(0.5)).over(w))
         .withColumn("__dev", F.abs(F.col("__c") - F.col("__med")))
         .withColumn("__mad", F.percentile("__dev", F.lit(0.5)).over(w))
@@ -497,10 +498,10 @@ def _q102_decomposed(li: DataFrame) -> DataFrame:
     from ..operators.quantiles import grouped_median_cont
     from ..session import scoped_persist
 
-    cents = F.round(F.col("l_extendedprice") * 100).cast("bigint")
+    price_cents = cents(F.col("l_extendedprice"))
     flag = F.col("l_returnflag")
     counts = scoped_persist(
-        li.select("l_returnflag", cents.alias("__c"))
+        li.select("l_returnflag", price_cents.alias("__c"))
         .groupBy("l_returnflag", "__c")
         .agg(F.count(F.lit(1)).alias("__cnt"))
     )
@@ -605,11 +606,11 @@ def q104_merkle_block_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
     li = load(spark, sf_dir, "lineitem")
 
     def fingerprint(df, bump):
-        cents = F.round(F.col("l_extendedprice") * 100).cast("bigint") + bump
+        price_cents = cents(F.col("l_extendedprice")) + bump
         fp = (
             (F.col("l_orderkey") % M) * 1000003
             + F.col("l_linenumber").cast("bigint") * 97
-            + cents
+            + price_cents
         ) % M
         return (
             df.select(
@@ -712,11 +713,11 @@ def _q106_window(li: DataFrame) -> DataFrame:
     # (aggregate NULL contract; the running sum and the sort are
     # engine-portable only over non-NULL integers — oracle same WHERE;
     # the filter is applied by the caller)
-    cents = F.round(F.col("l_extendedprice") * 100).cast("bigint")
+    price_cents = cents(F.col("l_extendedprice"))
     wgt = F.round(F.col("l_quantity")).cast("bigint")
     base = li.select(
         "l_returnflag",
-        cents.alias("__c"),
+        price_cents.alias("__c"),
         wgt.alias("__w"),
         "l_orderkey",
         "l_linenumber",
@@ -746,10 +747,10 @@ def _q106_decomposed(li: DataFrame) -> DataFrame:
     from ..operators.quantiles import grouped_weighted_median
     from ..session import scoped_persist
 
-    cents = F.round(F.col("l_extendedprice") * 100).cast("bigint")
+    price_cents = cents(F.col("l_extendedprice"))
     wgt = F.round(F.col("l_quantity")).cast("bigint")
     counts = scoped_persist(
-        li.select("l_returnflag", cents.alias("__c"), wgt.alias("__w"))
+        li.select("l_returnflag", price_cents.alias("__c"), wgt.alias("__w"))
         .groupBy("l_returnflag", "__c")
         .agg(F.sum("__w").alias("__wm"))
     )
@@ -904,7 +905,7 @@ def q121_cusum_changepoint(spark: SparkSession, sf_dir: str) -> DataFrame:
         "event_id",
         "ts",
         "event_type",
-        F.round(F.col("value") * 100).cast("bigint").alias("v_centi"),
+        cents(F.col("value")).alias("v_centi"),
     )
     per_type = Window.partitionBy("event_type")
     ordered = per_type.orderBy("ts", "event_id")

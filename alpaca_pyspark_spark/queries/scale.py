@@ -276,10 +276,10 @@ def q132_sink_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     # is EMPTY (no part files to infer from — routine for a backfill
     # of an empty partition)
     back = spark.read.schema(o.schema).parquet(dest)
-    cents = F.round(F.col("o_totalprice") * 100).cast("bigint")
+    total_cents = cents(F.col("o_totalprice"))
     return back.groupBy("o_orderpriority").agg(
         F.count(F.lit(1)).alias("n_orders"),
-        (F.sum(cents) / 100.0).alias("total_price"),
+        (F.sum(total_cents) / 100.0).alias("total_price"),
         F.min("o_orderkey").alias("min_orderkey"),
         F.max("o_orderkey").alias("max_orderkey"),
     )

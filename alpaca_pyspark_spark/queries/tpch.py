@@ -558,7 +558,7 @@ def q112_discount_band_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     cents x pct integers: the minimal full-scan aggregate, the
     I/O-bound lower bound every other fact query sits above."""
     li = load(spark, sf_dir, "lineitem")
-    dpct = F.round(F.col("l_discount") * 100).cast("bigint")
+    dpct = cents(F.col("l_discount"))
     qty = F.round(F.col("l_quantity")).cast("bigint")
     return (
         li.filter(

@@ -115,7 +115,7 @@ def q85_large_volume_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
             "c_custkey",
             "o_orderkey",
             "o_orderdate",
-            (F.round(F.col("o_totalprice") * 100).cast("bigint") / 100.0).alias(
+            (cents(F.col("o_totalprice")) / 100.0).alias(
                 "o_total"
             ),
             "total_qty",
@@ -388,7 +388,7 @@ def q150_partitioned_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     return back.groupBy(F.to_date(F.col("ts")).alias("day")).agg(
         F.count(F.lit(1)).alias("n"),
         (
-            F.sum(F.round(F.col("value") * 100).cast("bigint")) / 100.0
+            F.sum(cents(F.col("value"))) / 100.0
         ).alias("revenue"),
     )
 
@@ -462,17 +462,19 @@ def q161_cdc_merge_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
     even if they exist only in the changelog."""
     e = load(spark, sf_dir, "events")
     cut = F.lit("2024-01-21 00:00:00").cast("timestamp_ntz")
-    cents = F.round(F.col("value") * 100).cast("bigint")
+    value_cents = cents(F.col("value"))
     base = (
         e.filter((F.col("ts") < cut) & (F.col("event_type") == "purchase"))
         .groupBy("user_id")
-        .agg(F.sum(cents).alias("__base_c"))
+        .agg(F.sum(value_cents).alias("__base_c"))
     )
     tail = e.filter(F.col("ts") >= cut)
     changes = tail.filter(F.col("event_type").isin("purchase", "error")).groupBy(
         "user_id"
     ).agg(
-        F.sum(F.when(F.col("event_type") == "purchase", cents)).alias("__delta_c"),
+        F.sum(F.when(F.col("event_type") == "purchase", value_cents)).alias(
+            "__delta_c"
+        ),
         # tombstone iff the LATEST change op for the key is an error
         F.max_by(F.col("event_type") == "error", F.col("ts")).alias("__dead"),
     )
@@ -594,7 +596,7 @@ def q160_compaction_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     return back.groupBy("event_type").agg(
         F.count(F.lit(1)).alias("n"),
         F.count_distinct("user_id").cast("bigint").alias("n_users"),
-        (F.sum(F.round(F.col("value") * 100).cast("bigint")) / 100.0).alias("total"),
+        (F.sum(cents(F.col("value"))) / 100.0).alias("total"),
     )
 
 

@@ -1,6 +1,8 @@
-"""Bucket-doubling trailing range window (operators/rangewindow.py) —
-must be OUTPUT-IDENTICAL to the plain per-key window, including rows
-exactly on bucket boundaries, NULL order values, and NULL keys."""
+"""Skew-safe LOCF/first pair (operators/rangewindow.py) — must be
+OUTPUT-IDENTICAL to the plain IGNORE-NULLS window pair, including rows
+exactly on bucket boundaries, NULL timestamps, and a key with no
+non-null value.  The trailing count/sum tiers are pinned in
+tests/test_rangewindow_prefix.py."""
 
 from __future__ import annotations
 
@@ -15,76 +17,6 @@ from alpaca_pyspark_spark.operators import sessionize as sz
 
 T0 = datetime(2024, 1, 1, 0, 0, 0)
 DAY_US = 24 * 3600 * 1_000_000
-
-
-def _mk(spark, rows):
-    df = spark.createDataFrame(
-        rows, "user_id long, event_id long, ts timestamp_ntz, v long"
-    )
-    return df.withColumn(
-        "us", F.unix_micros(F.col("ts").cast("timestamp"))
-    )
-
-
-def _agg(w):
-    return [
-        F.count(F.lit(1)).over(w).alias("n_24h"),
-        F.sum("v").over(w).alias("v_24h"),
-    ]
-
-
-def _rows(df):
-    rows = [
-        (r["user_id"], r["event_id"], r["n_24h"], r["v_24h"])
-        for r in df.select("user_id", "event_id", "n_24h", "v_24h").collect()
-    ]
-    # None-safe total order (NULL keys/sums are part of the contract)
-    return sorted(rows, key=lambda t: tuple((x is None, x) for x in t))
-
-
-def _data(include_nulls=False):
-    rng = random.Random(19)
-    rows, eid = [], 0
-    for k in range(1, 5):
-        n = 200 if k == 1 else 25
-        for _ in range(n):
-            eid += 1
-            rows.append(
-                (
-                    k,
-                    eid,
-                    T0
-                    + timedelta(
-                        seconds=rng.randint(0, 5 * 86400),
-                        microseconds=rng.randint(0, 999999),
-                    ),
-                    rng.randint(-100, 100),
-                )
-            )
-    # rows EXACTLY on bucket boundaries (us multiple of DAY_US) and
-    # exactly one window-length apart (the >= vs > edge)
-    for d in (0, 1, 2):
-        eid += 1
-        rows.append((1, eid, T0 + timedelta(days=d), 7))
-    if include_nulls:
-        eid += 1
-        rows.append((1, eid, None, 5))
-        eid += 1
-        rows.append((1, eid, None, None))
-        eid += 1
-        rows.append((None, eid, T0 + timedelta(hours=3), 9))
-    return rows
-
-
-def test_skew_safe_equals_plain(spark):
-    df = _mk(spark, _data()).select("user_id", "event_id", "us", "v")
-    plain = rw._plain(
-        df, key="user_id", order_us="us", window_us=DAY_US, agg_builder=_agg
-    )
-    safe = rw.trailing_range_window_skew_safe(
-        df, key="user_id", order_us="us", window_us=DAY_US, agg_builder=_agg
-    )
-    assert _rows(safe) == _rows(plain)
 
 
 def _locf_rows(df):

@@ -1,5 +1,5 @@
 """Prefix-bucket trailing window (operators/rangewindow.py, the
-EXTREME skew tier) — must be bit-identical to the plain per-key RANGE
+hot-key tier) — must be bit-identical to the plain per-key RANGE
 window for count + exact-integer sums, including on frame-boundary
 ties (an event exactly W before another), NULL sum values (NULL-iff-
 empty semantics), bucket widths that do not divide the frame, and
@@ -8,6 +8,7 @@ single-bucket degenerate spans."""
 from __future__ import annotations
 
 import random
+from datetime import datetime, timedelta
 
 import pytest
 from pyspark.sql import functions as F
@@ -16,6 +17,7 @@ import alpaca_pyspark_spark.operators.rangewindow as rw
 from alpaca_pyspark_spark.operators import dispatch
 
 W = 1_000_000  # 1 s frame, in µs
+DAY_US = 24 * 3600 * 1_000_000
 
 
 def _mk(spark, rows):
@@ -24,13 +26,14 @@ def _mk(spark, rows):
     )
 
 
-def _plain_ref(df):
+def _plain_ref(df, window_us=W):
     return rw._plain(
         df,
         key="user_id",
         order_us="us",
-        window_us=W,
-        agg_builder=rw._cs_agg_builder("n_w", {"sum_w": F.col("value")}),
+        window_us=window_us,
+        sums={"sum_w": F.col("value")},
+        count_alias="n_w",
     )
 
 
@@ -177,28 +180,59 @@ def test_prefix_bucket_rejects_non_integer_sum(spark):
         )
 
 
-def test_adaptive_three_tiers_engage_and_agree(spark, monkeypatch):
-    """Force all three tiers live in one call — cold keys, a moderate
-    hot key (enough span/W buckets), an extreme key (dense ties, one
-    W-bucket) — plus NULL keys and NULL-ordered rows, and pin parity
-    with the plain window over the whole input."""
+def _boundary_rows():
+    """Four keys over 5 days (key 1 hot), plus key-1 rows EXACTLY on
+    day boundaries and exactly one 24h window apart (the >= vs > edge),
+    two NULL-ordered key-1 rows (one with a NULL value) and a NULL key."""
+    rng = random.Random(19)
+    t0 = datetime(2024, 1, 1)
+    epoch = datetime(1970, 1, 1)
+    rows, rid = [], 0
+
+    def us(ts):
+        return (ts - epoch) // timedelta(microseconds=1)
+
+    for k in range(1, 5):
+        for _ in range(200 if k == 1 else 25):
+            rid += 1
+            ts = t0 + timedelta(
+                seconds=rng.randint(0, 5 * 86400),
+                microseconds=rng.randint(0, 999999),
+            )
+            rows.append((rid, k, us(ts), rng.randint(-100, 100)))
+    for d in (0, 1, 2):
+        rid += 1
+        rows.append((rid, 1, us(t0 + timedelta(days=d)), 7))
+    rows += [
+        (rid + 1, 1, None, 5),
+        (rid + 2, 1, None, None),
+        (rid + 3, None, us(t0 + timedelta(hours=3)), 9),
+    ]
+    return rows
+
+
+def test_adaptive_two_tiers_engage_and_agree(spark, monkeypatch):
+    """Force both tiers live in one call — cold keys, a dense hot key
+    (many rows per frame) and a sparse hot key (rows spread over ~40
+    frames) — plus NULL keys and NULL-ordered rows, and pin parity with
+    the plain window over the whole input; then the same on a 24h
+    corpus with rows exactly on day boundaries and one window apart."""
     # pin the probe's relative floor (2·total/partitions) so key 2's
     # 200 rows stay hot on any core count
     monkeypatch.setattr(dispatch, "_shuffle_partitions", lambda spark: 32)
     monkeypatch.setattr(rw, "RANGE_HOT_MIN_ROWS", 50)
-    monkeypatch.setattr(rw, "PREFIX_MIN_BUCKET_ROWS", 60)
     monkeypatch.setattr(rw, "PREFIX_MIN_BUCKETS", 4)
     monkeypatch.setattr(rw, "PREFIX_TARGET_BUCKET_ROWS", 25)
     rng = random.Random(2)
     base = 1_700_000_000_000_000
     rows, rid = [], 0
-    # extreme: 300 rows crammed inside ~2 frames -> >60 rows per W-bucket
+    # dense hot: 300 rows crammed inside ~2 frames
     t = base
     for _ in range(300):
         t += rng.randint(0, W // 150)
         rows.append((rid, 1, t, rng.randint(-9, 9) if rid % 5 else None))
         rid += 1
-    # moderate hot: 200 rows spread over ~40 frames -> ~5 rows/bucket
+    # sparse hot: 200 rows spread over ~40 frames
     t = base
     for _ in range(200):
         t += rng.randint(0, W // 5)
@@ -212,23 +246,20 @@ def test_adaptive_three_tiers_engage_and_agree(spark, monkeypatch):
             rows.append((rid, k, t, rng.randint(-9, 9)))
             rid += 1
     rows += [(rid, None, base + 5, 3), (rid + 1, 2, None, 4), (rid + 2, 1, None, None)]
-    df = spark.createDataFrame(
-        rows, "rid long, user_id long, us long, value long"
-    )
-    got = rw.trailing_count_sums_adaptive(
-        df,
+    kw = dict(
         key="user_id",
         order_us="us",
-        window_us=W,
         row_id="rid",
         sums={"sum_w": F.col("value")},
         count_alias="n_w",
     )
-    assert _rows(got) == _rows(_plain_ref(df))
-    # the dispatch actually split: stats must flag keys 1 and 2, and
-    # only key 1 extreme (key 2's span spreads it under the floor)
-    stats = {
-        k: (n, s)
-        for k, n, s in dispatch.hot_keys(df, "user_id", 50, order_us="us")
-    }
-    assert set(stats) == {1, 2}
+    for corpus, window_us, hot in (
+        (rows, W, {1, 2}),
+        (_boundary_rows(), DAY_US, {1}),
+    ):
+        df = _mk(spark, corpus)
+        got = rw.trailing_count_sums_adaptive(df, window_us=window_us, **kw)
+        assert _rows(got) == _rows(_plain_ref(df, window_us))
+        # the dispatch actually split: the probe flags exactly these keys
+        probed = dispatch.hot_keys(df, "user_id", 50, order_us="us")
+        assert {k for k, _, _ in probed} == hot

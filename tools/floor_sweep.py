@@ -2,20 +2,18 @@
 dispatched operator on synthetic data at several sizes, and check that
 they return the same rows.
 
-    python tools/floor_sweep.py quantile 2 6 20   # MILLIONS of lineitem rows
-    python tools/floor_sweep.py range 30 100 300  # THOUSANDS of rows, one key
-    python tools/floor_sweep.py span 20 60 200    # THOUSANDS of documents
-    python tools/floor_sweep.py dsir 20 60 200    # THOUSANDS of documents
+    python tools/floor_sweep.py quantile 2 6 20      # MILLIONS of lineitem rows
+    python tools/floor_sweep.py range 10 30 100 300  # THOUSANDS of rows, one key
+    python tools/floor_sweep.py span 20 60 200       # THOUSANDS of documents
+    python tools/floor_sweep.py dsir 20 60 200       # THOUSANDS of documents
 
 Tiers and the floors they set:
 
 * ``quantile`` — q102/q106 window vs sqrt-range decomposition,
   ``queries.mining.QUANTILE_DECOMPOSE_MIN_TABLE_ROWS``;
 * ``range`` — q41's count+cents window on one key over a 30-day span
-  with a 24h frame: plain vs bucket-doubled (``hot``,
-  ``operators.rangewindow.RANGE_HOT_MIN_ROWS``) and bucket-doubled vs
-  prefix-bucket (``prefix``, ``PREFIX_MIN_BUCKET_ROWS`` at size/30 rows
-  per frame-width bucket);
+  with a 24h frame: plain vs prefix-bucket at the dispatcher's own
+  bucket width (``hot``, ``operators.rangewindow.RANGE_HOT_MIN_ROWS``);
 * ``span`` — q186/q114 one-pass vs hot-hash prefiltered,
   ``operators.text.SPAN_PREFILTER_MIN_DOC_ROWS``;
 * ``dsir`` — the DSIR pair table recomputed vs persisted,
@@ -103,35 +101,28 @@ def _write_one_key(spark, n: int, path: str) -> None:
 def _range_cases(n: int) -> dict:
     from alpaca_pyspark_spark.operators import rangewindow as rw
 
-    sums = {"cents_24h": F.col("cents")}
-    kw = dict(key="user_id", order_us="us", window_us=DAY_US)
-    build = rw._cs_agg_builder("n_24h", sums)
-    # the dispatcher's own bucket-width choice for an n-row key
-    buckets = min(
-        rw.PREFIX_MAX_BUCKETS,
-        max(rw.PREFIX_MIN_BUCKETS, n // rw.PREFIX_TARGET_BUCKET_ROWS),
+    kw = dict(
+        key="user_id",
+        order_us="us",
+        window_us=DAY_US,
+        sums={"cents_24h": F.col("cents")},
+        count_alias="n_24h",
     )
 
     def plain(df):
-        return rw._plain(df, agg_builder=build, **kw)
-
-    def wbucket(df):
-        return rw.trailing_range_window_skew_safe(df, agg_builder=build, **kw)
+        return rw._plain(df, **kw)
 
     def prefix(df):
+        # the width the dispatcher derives from the probe: n rows, and
+        # the key's span, which the pseudo-uniform timestamps fill
         return rw.trailing_count_sums_prefix_bucket(
             df,
             row_id="event_id",
-            sums=sums,
-            count_alias="n_24h",
-            bucket_widths=max(1, SPAN_US // buckets),
+            bucket_widths=rw.prefix_bucket_width(n, SPAN_US),
             **kw,
-        ).select(*df.columns, "n_24h", "cents_24h")
+        )
 
-    return {
-        "hot": {"plain": plain, "wbucket": wbucket},
-        "prefix": {"wbucket": wbucket, "prefix": prefix},
-    }
+    return {"hot": {"plain": plain, "prefix": prefix}}
 
 
 # ---------------------------------------------------------------- span
