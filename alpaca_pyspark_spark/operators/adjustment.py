@@ -6,11 +6,12 @@ dividend|all`` (``/root/reference/alpaca_pyspark/stocks/bars.py:19,47,
 corporate actions *after* the observation — multiplicatively by split
 ratios, additively (subtraction) by dividend cash amounts.
 
-Spark-first re-expression: union the price stream with the action feed,
-order each key's timeline DESCENDING, and take a running aggregate —
-``exp(Σ log ratio)`` for splits (cumulative product), ``Σ amount`` for
-dividends.  One shuffle on the key, one linear window pass; no
+Spark-first re-expression: dividends union the price stream with the
+action feed, order each key's timeline DESCENDING, and take a running
+``Σ amount`` — one shuffle on the key, one linear window pass; no
 self-join, so cost is O(prices + actions), not O(prices × actions).
+Splits fold each key's broadcast, ts-sorted split list in order, so the
+price stream is never shuffled.
 """
 
 from __future__ import annotations
@@ -78,38 +79,6 @@ def _future_action_aggregate(
     )
 
 
-def adjust_backward_split(
-    prices: DataFrame,
-    splits: DataFrame,
-    *,
-    on: Sequence[str],
-    price_ts: str,
-    split_ts: str,
-    price_col: str,
-    ratio_col: str,
-    out_col: str = "adj_value",
-    scale: int | None = 4,
-) -> DataFrame:
-    """Multiplicative back-adjustment: ``price × Π ratio`` over all
-    strictly-later splits (``adjustment=split``).  The product is a
-    running ``exp(Σ log ratio)`` — floating-point, so callers that need
-    cross-engine exactness should prefer the additive variant or accept
-    a rounding scale."""
-    out = _future_action_aggregate(
-        prices,
-        splits,
-        on=on,
-        price_ts=price_ts,
-        action_ts=split_ts,
-        action_expr=F.log(F.col(ratio_col)),
-        agg_alias="__logsum",
-    )
-    adj = F.col(price_col) * F.exp(F.coalesce(F.col("__logsum"), F.lit(0.0)))
-    if scale is not None:
-        adj = F.round(adj, scale)
-    return out.withColumn(out_col, adj).drop("__logsum")
-
-
 def adjust_backward_split_ordered(
     prices: DataFrame,
     splits: DataFrame,
@@ -132,10 +101,7 @@ def adjust_backward_split_ordered(
     Scale shape: the price stream is NEVER shuffled — corporate actions
     are dimension-sized (a few per symbol), so the packed per-key split
     lists broadcast to every executor and the whole operator is a single
-    map stage over prices.  Prefer this over the window variant
-    (``adjust_backward_split``) whenever the split feed fits a
-    broadcast; the window variant remains for action feeds too large to
-    broadcast."""
+    map stage over prices."""
     on = list(on)
     packed = splits.groupBy(*on).agg(
         F.sort_array(

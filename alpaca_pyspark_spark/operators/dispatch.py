@@ -50,7 +50,9 @@ def hot_keys(
 
     One partial-aggregated probe (|keys| exchange rows): the count
     table is persisted, so its two reads (the total, then the
-    over-floor keys) scan ``df`` once.  ``min_rows`` is the operator's
+    over-floor keys) scan ``df`` once; when the largest key is at or
+    below the floor, no key can pass it and the second read is
+    skipped.  ``min_rows`` is the operator's
     absolute break-even, since per-row single-task cost differs by
     operator.  A NULL key cannot be routed through the ``isin`` split
     (SQL NULL never equals anything), so it stays on the cold side."""
@@ -63,11 +65,15 @@ def hot_keys(
     total, top = counts.agg(F.sum("__n"), F.max("__n")).first()
     n = _shuffle_partitions(df.sparkSession)
     floor = max(min_rows, HOT_TASK_FACTOR * (total or 0) / n)
-    rows = [
-        r
-        for r in counts.filter(F.col("__n") > floor).collect()
-        if r[key] is not None
-    ]
+    rows = (
+        []
+        if (top or 0) <= floor
+        else [
+            r
+            for r in counts.filter(F.col("__n") > floor).collect()
+            if r[key] is not None
+        ]
+    )
     logger.info(
         "dispatch hot_keys(%s): largest key %s of %s rows, floor %d -> %d hot",
         key, top, total, floor, len(rows),

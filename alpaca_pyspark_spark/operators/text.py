@@ -108,14 +108,6 @@ def with_fingerprint(df: DataFrame, text_col: str = "text") -> DataFrame:
     return df.withColumn("fingerprint", normalized_fingerprint(text_col))
 
 
-#: Dispatch floor for the span-overlap hot-hash prefilter (q186/q114):
-#: documents-table rows at or above which the one-pass string-keyed
-#: exchange gives way to the prefiltered tier (read from the footer by
-#: ``dispatch.table_at_least`` — no probe job).  Placeholder, sweep
-#: pending (``tools/floor_sweep.py span``).
-SPAN_PREFILTER_MIN_DOC_ROWS = 10_000_000
-
-
 def hot_hash_candidates(
     df: DataFrame, col: str, min_count: int
 ) -> DataFrame:
@@ -138,16 +130,12 @@ def hot_hash_candidates(
     the floor), never drop one — a string with ``>= min_count``
     occurrences gives its own hash at least that count.  Callers must
     therefore re-apply their exact predicate on the true string
-    downstream (q186 re-ranks occurrences per span string; q114
-    re-counts docs per passage string), which every consumer of this
-    operator does by construction: the prefilter only shrinks the
-    string-keyed exchange, it never decides membership.
+    downstream (q210 re-ranks occurrences per span string): the
+    prefilter only shrinks the string-keyed exchange, it never decides
+    membership.
 
-    At 100 TB this is the difference between shuffling every span
-    occurrence's string payload and shuffling 8-byte hashes plus the
-    (small, repeated-content-bounded) candidate fraction's strings;
-    at fixture scale the extra pass costs more than it saves, which is
-    why callers dispatch on a size floor."""
+    The extra count pass lost to one pass at every swept corpus size
+    (AB_floor_span.json), so only q210 runs it, under the oracle."""
     hot = (
         df.select(F.xxhash64(F.col(col)).alias("__h"))
         .groupBy("__h")

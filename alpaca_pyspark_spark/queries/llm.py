@@ -31,7 +31,6 @@ from ..operators.dedup import (
     portable_hash60,
     simhash_near_duplicates,
 )
-from ..operators.dispatch import table_at_least
 from ..operators.ids import assign_stable_ids
 from ..operators.multimodal import audio_energy_windows, decode_media, synthesize_media
 from ..operators.similarity import brute_force_topk_arrow, lsh_topk
@@ -4695,37 +4694,19 @@ FROM per
 
 
 # ---------------------------------------------------------------- q187
-#: Dispatch floor for persisting the DSIR pair table (documents-table
-#: rows, read from the footer by ``dispatch.table_at_least`` — no probe
-#: job).  The r12 A/B fixed the choice at "recompute" because persist
-#: LOST at sf0.1 (4.04s vs 3.40s, tools/ab_r12_dsir.py) — but the
-#: crossover is size-dependent like the quantile floor: the recompute
-#: arm pays a second full aggregation pass over the corpus-sized
-#: transition table, the persist arm a one-time materialization of the
-#: vocab-bounded pair table, so past some corpus size persist must
-#: win.  Placeholder, sweep pending (``tools/floor_sweep.py dsir``).
-DSIR_PERSIST_MIN_DOC_ROWS = 10_000_000
-
-
-def _dsir_raw_lm(trans: DataFrame, *, persist_pairs: bool = False) -> DataFrame:
+def _dsir_raw_lm(trans: DataFrame) -> DataFrame:
     """Survivor ("raw") bigram LM — (w1, w2, pair_r, first_r,
     n_bigram_types) — shared by q187 and the q189/q191/q197 pipeline.
 
-    r12 OPT (guide §2.5): ``n_bigram_types`` used to be stamped via
-    ``Window.partitionBy()`` — an Exchange SinglePartition that
-    gathers the ENTIRE bigram-type table onto one task before the
-    count (a straggler/OOM shape; at 100 TB the bigram vocabulary is
-    GBs).  The count is one scalar, attached with a 1-row constant-key
-    BroadcastHashJoin; ``persist_pairs`` decides whether the scalar's
-    pair aggregation is RECOMPUTED (a second map-side-combined
-    exchange over the scope-persisted ``trans`` — cheaper at fixture
-    scale, r12 A/B) or read from a scoped persist of the vocab-bounded
-    pair table (cheaper once the corpus dwarfs the vocabulary —
-    callers dispatch on ``DSIR_PERSIST_MIN_DOC_ROWS``).  Both arms
-    compute identical rows; only materialization differs."""
-    pair_tbl = trans.groupBy("w1", "w2").agg(F.count(F.lit(1)).alias("pair_r"))
-    if persist_pairs:
-        pair_tbl = scoped_persist(pair_tbl)
+    The vocab-bounded pair table is scope-persisted: the LM's window
+    and the ``n_bigram_types`` scalar both read it, so the corpus-sized
+    ``trans`` is aggregated once.  The scalar is attached with a 1-row
+    constant-key BroadcastHashJoin, never a ``Window.partitionBy()``
+    that would gather the whole bigram-type table onto one task."""
+    # persist beat recompute at every swept size (AB_floor_dsir.json)
+    pair_tbl = scoped_persist(
+        trans.groupBy("w1", "w2").agg(F.count(F.lit(1)).alias("pair_r"))
+    )
     # pmod(non-null, 1) == 0 keeps the 1-row attach a real
     # BroadcastHashJoin (lit(1) keys constant-fold out of the join
     # condition and degrade to BroadcastNestedLoopJoin)
@@ -4742,13 +4723,16 @@ def _dsir_raw_lm(trans: DataFrame, *, persist_pairs: bool = False) -> DataFrame:
     )
 
 
-def _q187_scored(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """q187's SCORING stage (everything up to the per-doc weight table,
-    ~1 row/doc) — exposed separately so plan tests can assert the
-    broadcast-LM shape on the stage itself: the distributed rank that
-    follows starts with a ``localCheckpoint``, which truncates the
-    visible plan of the full query."""
-    docs = load(spark, sf_dir, "documents")
+def _dsir_scoring(docs: DataFrame):
+    """The DSIR scoring stage shared by q187 and q189 stage 3
+    (SimpleNamespace: raw_lm, tgt_lm, ratios).  ``docs`` (doc_id, lang,
+    text) explodes into a scope-persisted bigram transition table; the
+    survivor LM and the English target LM are both vocab-bounded and
+    broadcast back to it; ``ratios`` is one (doc_id, lang, ratio_micro)
+    row per transition, the exact-integer importance ratio that the
+    callers average per document."""
+    from types import SimpleNamespace
+
     t = tokens(F.col("text"))
     n = F.size(t)
     trans = (
@@ -4765,15 +4749,14 @@ def _q187_scored(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("doc_id", "lang", F.col("bg.w1").alias("w1"), F.col("bg.w2").alias("w2"))
         .transform(scoped_persist)
     )
-    persist = table_at_least(sf_dir, "documents", DSIR_PERSIST_MIN_DOC_ROWS)
-    raw_lm = _dsir_raw_lm(trans, persist_pairs=persist)
+    raw_lm = _dsir_raw_lm(trans)
     tgt_lm = (
         trans.filter(F.col("lang") == "en")
         .groupBy("w1", "w2")
         .agg(F.count(F.lit(1)).alias("pair_t"))
         .withColumn("first_t", F.sum("pair_t").over(Window.partitionBy("w1")))
     )
-    return (
+    ratios = (
         trans.join(F.broadcast(raw_lm), ["w1", "w2"])
         .join(F.broadcast(tgt_lm), ["w1", "w2"], "left")
         .select(
@@ -4784,7 +4767,20 @@ def _q187_scored(spark: SparkSession, sf_dir: str) -> DataFrame:
                 " DIV ((coalesce(first_t, 0) + n_bigram_types) * pair_r)"
             ).alias("ratio_micro"),
         )
-        .groupBy("doc_id", "lang")
+    )
+    return SimpleNamespace(raw_lm=raw_lm, tgt_lm=tgt_lm, ratios=ratios)
+
+
+def _q187_scored(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """q187's SCORING stage (everything up to the per-doc weight table,
+    ~1 row/doc) — exposed separately so plan tests can assert the
+    broadcast-LM shape on the stage itself: the distributed rank that
+    follows starts with a ``localCheckpoint``, which truncates the
+    visible plan of the full query."""
+    docs = load(spark, sf_dir, "documents")
+    return (
+        _dsir_scoring(docs)
+        .ratios.groupBy("doc_id", "lang")
         .agg(
             F.count(F.lit(1)).alias("n_trans"),
             F.sum("ratio_micro").alias("sum_ratio"),
@@ -5458,46 +5454,9 @@ def _q189_pipeline(spark: SparkSession, sf_dir: str):
         .drop("canon_id")
     )
     # -- stage 3: DSIR select over the post-dedup corpus (q187) -------
-    t2 = tokens(F.col("text"))
-    n2_ = F.size(t2)
-    trans = (
-        surv2.filter(n2_ >= 2)
-        .select(
-            "doc_id",
-            "lang",
-            F.explode(
-                F.arrays_zip(
-                    F.slice(t2, 1, n2_ - 1).alias("w1"),
-                    F.slice(t2, 2, n2_ - 1).alias("w2"),
-                )
-            ).alias("bg"),
-        )
-        .select(
-            "doc_id", "lang", F.col("bg.w1").alias("w1"), F.col("bg.w2").alias("w2")
-        )
-        .transform(scoped_persist)
-    )
-    # r12 OPT: no single-partition window; r13: persist-vs-recompute
-    # of the scalar's pair agg is size-dispatched (floor above)
-    persist = table_at_least(sf_dir, "documents", DSIR_PERSIST_MIN_DOC_ROWS)
-    raw_lm = _dsir_raw_lm(trans, persist_pairs=persist)
-    tgt_lm = (
-        trans.filter(F.col("lang") == "en")
-        .groupBy("w1", "w2")
-        .agg(F.count(F.lit(1)).alias("pair_t"))
-        .withColumn("first_t", F.sum("pair_t").over(Window.partitionBy("w1")))
-    )
+    dsir = _dsir_scoring(surv2)
     weights = (
-        trans.join(F.broadcast(raw_lm), ["w1", "w2"])
-        .join(F.broadcast(tgt_lm), ["w1", "w2"], "left")
-        .select(
-            "doc_id",
-            F.expr(
-                "(1000000 * (coalesce(pair_t, 0) + 1) * first_r)"
-                " DIV ((coalesce(first_t, 0) + n_bigram_types) * pair_r)"
-            ).alias("ratio_micro"),
-        )
-        .groupBy("doc_id")
+        dsir.ratios.groupBy("doc_id")
         .agg(
             F.count(F.lit(1)).alias("n_trans"),
             F.sum("ratio_micro").alias("sum_ratio"),
@@ -5509,8 +5468,8 @@ def _q189_pipeline(spark: SparkSession, sf_dir: str):
         stop=stop,
         surv1=surv1,
         dedup=dedup,
-        raw_lm=raw_lm,
-        tgt_lm=tgt_lm,
+        raw_lm=dsir.raw_lm,
+        tgt_lm=dsir.tgt_lm,
         weights=weights,
     )
 
@@ -5757,7 +5716,7 @@ FROM bins b JOIN manifest m USING (lang, shard)
 # ---------------------------------------------------------------- q186
 def _q186_toks_occ(docs: DataFrame) -> tuple[DataFrame, DataFrame]:
     """(per-doc token counts + span arrays, exploded span occurrences)
-    — the shared front of both q186 tiers."""
+    — the shared front of q186 and its prefiltered form q210."""
     t = tokens(F.lower(F.col("text")))
     toks = docs.select(
         "doc_id",
@@ -5769,7 +5728,7 @@ def _q186_toks_occ(docs: DataFrame) -> tuple[DataFrame, DataFrame]:
 
 
 def _q186_ledger(toks: DataFrame, cand_occ: DataFrame) -> DataFrame:
-    """Shared tail of both q186 tiers: global first-occurrence window
+    """Shared tail of q186 and q210: global first-occurrence window
     over the (possibly prefiltered) occurrence set, duplicate
     occurrences explode ×8 into dropped token indices, per-doc ledger.
 
@@ -5810,14 +5769,14 @@ def _q186_ledger(toks: DataFrame, cand_occ: DataFrame) -> DataFrame:
 
 
 def _q186_onepass(docs: DataFrame) -> DataFrame:
-    """Below-floor tier: the window runs over every occurrence (one
-    string-keyed exchange, one shingle-generation pass)."""
+    """The window runs over every occurrence (one string-keyed
+    exchange, one shingle-generation pass)."""
     toks, occ = _q186_toks_occ(docs)
     return _q186_ledger(toks, occ)
 
 
 def _q186_prefiltered(docs: DataFrame) -> DataFrame:
-    """Above-floor tier: only occurrences of HOT span hashes (>= 2
+    """q210's form: only occurrences of HOT span hashes (>= 2
     occurrences — the only spans that can produce duplicates) reach
     the string-keyed window.  The count pass shuffles 8-byte hashes
     map-side combined; collisions only ADD candidates and the window
@@ -5841,41 +5800,26 @@ def q186_span_dedup_rewrite(spark: SparkSession, sf_dir: str) -> DataFrame:
     on (the reconstructed text itself is a trivial per-doc filter once
     the drop set exists).
 
-    Scale shape (round 13): TWO size-dispatched tiers.  Below the
-    placeholder floor (``operators.text.SPAN_PREFILTER_MIN_DOC_ROWS``)
-    the one-pass form runs — one exchange keyed by span for the global
+    Scale shape: one exchange keyed by span for the global
     first-occurrence window, then only the DUPLICATE occurrences
-    explode ×8 into token indices; at fixture scale shingle GENERATION
-    dominates and a second pass loses (AB_r12_outliers /
-    tools/ab_r12_span.py: prefilter 1.7x slower at sf0.1).  At and
-    past the floor the span STRING shuffle is the cost that grows
-    (the r12 docstring documented this swap; round 13 ships it as a
-    dispatched tier): a map-side-combined count over
-    ``xxhash64(span)`` finds hot hashes, they broadcast back as a
-    semi-filter, and the exact window runs on the candidate fraction
-    only — collisions only ADD candidates, the window re-checks on the
-    true string, so the tiers are result-identical
-    (tests/test_spanhot.py pins parity; q210 forces this tier under
-    the DuckDB oracle).  Every other stage is keyed by doc_id."""
-    from ..operators.text import SPAN_PREFILTER_MIN_DOC_ROWS
-
-    docs = load(spark, sf_dir, "documents")
-    if table_at_least(sf_dir, "documents", SPAN_PREFILTER_MIN_DOC_ROWS):
-        return _q186_prefiltered(docs)
-    return _q186_onepass(docs)
+    explode ×8 into token indices; every other stage is keyed by
+    doc_id."""
+    # one pass beat the prefilter at every swept size (AB_floor_span.json)
+    return _q186_onepass(load(spark, sf_dir, "documents"))
 
 
 def q210_span_dedup_prefiltered(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """q186's hot-hash prefilter tier FORCED (the q208/q209 pattern):
-    the gate fixtures sit far below the dispatch floor, so without
-    this twin the driver's independent DuckDB build would never
-    exercise the prefiltered plan shape.  Runs on the ``doc_id % 2 =
-    0`` half-corpus — still 233 hot span types at sf0.01 and 2,922 at
-    sf0.1 (measured), so the hot-set branch does real work at every
-    gate scale, while the twin's bench cost stays half a full forced
-    run.  The oracle is q186's SQL verbatim over the same half-corpus
-    (one source of truth: the CTE prefix swaps the document
-    population, nothing else)."""
+    """q186 through the hot-hash prefilter (``hot_hash_candidates``),
+    checked against the DuckDB oracle: a map-side-combined count over
+    ``xxhash64(span)`` keeps only occurrences of hot hashes, and the
+    exact window re-ranks on the true string, so the rows equal
+    q186's.  q186 itself runs one pass, which won at every swept size
+    (AB_floor_span.json); this query keeps the prefilter's soundness
+    under the oracle.  Runs on the ``doc_id % 2 = 0`` half-corpus —
+    still 233 hot span types at sf0.01 and 2,922 at sf0.1 (measured),
+    so the hot-set branch does real work at every gate scale.  The
+    oracle is q186's SQL verbatim over the same half-corpus (the CTE
+    prefix swaps the document population, nothing else)."""
     docs = load(spark, sf_dir, "documents").filter(F.col("doc_id") % 2 == 0)
     return _q186_prefiltered(docs)
 

@@ -659,53 +659,16 @@ def q114_repeated_passages(spark: SparkSession, sf_dir: str) -> DataFrame:
     passages that per-document dedup misses (doc pairs below any
     similarity threshold can still share one verbatim paragraph).
 
-    Scale shape (round 13): size-dispatched like q186.  Below the
-    placeholder floor (``operators.text.SPAN_PREFILTER_MIN_DOC_ROWS``)
-    the per-doc-distinct shingles feed ONE partial-aggregated exchange
-    keyed by the passage string; past it, a map-side-combined count
-    over ``xxhash64(passage)`` broadcasts the >= 3 hot hashes back as
-    a semi-filter so only the candidate fraction's STRINGS cross the
-    exchange — collisions only ADD candidates and the exact aggregate
-    re-applies ``n_docs >= 3`` on the true string, so the tiers are
-    result-identical (tests/test_spanhot.py pins parity; the
-    prefiltered plan pattern is oracle-forced by q210 on the shared
-    operator).
+    Scale shape: the per-doc-distinct shingles feed ONE
+    partial-aggregated exchange keyed by the passage string.
 
     ``doc_ids`` is a comma-joined STRING (not ArrayType) so the
     output is hashable by pandas-based result canonicalizers."""
-    from ..operators.dispatch import table_at_least
-    from ..operators.text import SPAN_PREFILTER_MIN_DOC_ROWS
-
     docs = load(spark, sf_dir, "documents").select("doc_id", "text")
-    if table_at_least(sf_dir, "documents", SPAN_PREFILTER_MIN_DOC_ROWS):
-        return _q114_aggregate(_q114_prefiltered_shingles(docs))
-    return _q114_aggregate(_q114_shingles(docs))
-
-
-def _q114_shingles(docs: DataFrame) -> DataFrame:
-    return docs.select(
-        "doc_id",
-        F.explode(
-            F.array_distinct(word_shingles(tokens(F.lower(F.col("text"))), 8))
-        ).alias("passage"),
-    )
-
-
-def _q114_prefiltered_shingles(docs: DataFrame) -> DataFrame:
-    """Hot-hash prefilter tier: passages whose hash shows < 3 per-doc-
-    distinct occurrences cannot reach the >= 3 floor, so only hot-hash
-    rows carry their strings into the aggregate."""
-    from ..operators.text import hot_hash_candidates
-
-    return hot_hash_candidates(_q114_shingles(docs), "passage", 3)
-
-
-def _q114_aggregate(sh: DataFrame) -> DataFrame:
-    """Exact tail shared by both tiers: the >= 3 floor is re-applied
-    on the true passage string, which is what makes hash collisions in
-    the prefiltered tier additive-only and the tiers result-identical."""
+    # one pass beat the prefilter at every swept size (AB_floor_span.json)
     return (
-        sh.groupBy("passage")
+        _q114_shingles(docs)
+        .groupBy("passage")
         .agg(
             F.count(F.lit(1)).alias("n_docs"),
             F.array_join(
@@ -718,6 +681,15 @@ def _q114_aggregate(sh: DataFrame) -> DataFrame:
         )
         .filter(F.col("n_docs") >= 3)
         .orderBy(F.col("n_docs").desc(), "passage")
+    )
+
+
+def _q114_shingles(docs: DataFrame) -> DataFrame:
+    return docs.select(
+        "doc_id",
+        F.explode(
+            F.array_distinct(word_shingles(tokens(F.lower(F.col("text"))), 8))
+        ).alias("passage"),
     )
 
 

@@ -10,7 +10,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from alpaca_pyspark_spark.functions import char_ngrams, cosine_similarity, jaccard, tokens
-from alpaca_pyspark_spark.operators.adjustment import adjust_backward_split
+from alpaca_pyspark_spark.operators.adjustment import adjust_backward_split_ordered
 from alpaca_pyspark_spark.operators.asof import asof_join
 from alpaca_pyspark_spark.operators.bars import tumbling_bars
 from alpaca_pyspark_spark.operators.dedup import (
@@ -96,9 +96,9 @@ def test_split_adjustment_matches_python(spark):
     )
     out = {
         r["t"]: r["adj_value"]
-        for r in adjust_backward_split(
+        for r in adjust_backward_split_ordered(
             prices, splits, on=["key"], price_ts="t", split_ts="t",
-            price_col="price", ratio_col="ratio", scale=6,
+            price_col="price", ratio_col="ratio",
         ).collect()
     }
     assert out[1] == pytest.approx(100.0 * 2.0 * 1.5 * 3.0)

@@ -507,7 +507,7 @@ def test_q186_span_rewrite_three_exchanges(spark):
     assert has_whole_stage_codegen(df), plan
 
 
-def test_q187_dsir_lms_broadcast(spark):
+def test_q187_dsir_lms_broadcast(spark, assert_no_cache_residue):
     from alpaca_pyspark_spark.queries.llm import _q187_scored
 
     # scoring stage: both vocab-bounded LMs attach to the corpus-sized

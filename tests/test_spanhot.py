@@ -1,9 +1,8 @@
-"""Hot-hash prefilter tier for the span-overlap family (round 13):
-the prefiltered forms of q186/q114 must be result-identical to their
-one-pass forms on tie-heavy, NULL-bearing, and boundary data, and the
-size dispatch must route gate fixtures to the one-pass tier.  The
-DSIR pair-table persist arm, the other documents-floor tier, is
-pinned here too."""
+"""Hot-hash prefilter (``hot_hash_candidates``), the form of q186 that
+q210 runs under the oracle: it must keep every row of every string at
+its floor — q114's passages at 3 documents included — and the
+prefiltered q186 must be result-identical to the one-pass q186 on
+tie-heavy, NULL-bearing, and boundary data."""
 
 from __future__ import annotations
 
@@ -14,11 +13,7 @@ from pyspark.sql import functions as F
 
 from alpaca_pyspark_spark.operators.text import hot_hash_candidates
 from alpaca_pyspark_spark.queries.llm import _q186_onepass, _q186_prefiltered
-from alpaca_pyspark_spark.queries.search import (
-    _q114_aggregate,
-    _q114_prefiltered_shingles,
-    _q114_shingles,
-)
+from alpaca_pyspark_spark.queries.search import _q114_shingles
 from alpaca_pyspark_spark.session import release_scoped_caches
 
 
@@ -75,48 +70,39 @@ def test_q186_tier_parity_no_duplicates(spark):
     _cmp(one, pre)
 
 
-def test_q114_tier_parity_tie_heavy(spark):
-    docs = _docs(spark, _tie_heavy_corpus(13, 120))
-    _cmp(
-        _q114_aggregate(_q114_shingles(docs)),
-        _q114_aggregate(_q114_prefiltered_shingles(docs)),
-    )
+def test_hot_hash_candidates_keeps_every_hot_row(spark):
+    # exact per-string counts: every string with >= min_count
+    # occurrences must survive with ALL its rows (collisions may only
+    # ADD, never drop), and the 1:1 hash join never duplicates a row
+    from collections import Counter
 
-
-def test_q114_tier_parity_threshold_edge(spark):
-    # passages at exactly 2 vs exactly 3 docs straddle the >=3 floor:
-    # the prefilter's hash count must keep the 3-doc passage complete
+    rng = random.Random(3)
+    rows = [(i, f"s{rng.randrange(0, 40)}") for i in range(500)]
     base = "p1 p2 p3 p4 p5 p6 p7 p8"
-    rows = [
+    edge = [
         (1, base + " x1"),
         (2, base + " x2"),
-        (3, base + " x3"),              # base passage in exactly 3 docs
+        (3, base + " x3"),                  # base passage in exactly 3 docs
         (4, "q1 q2 q3 q4 q5 q6 q7 q8 y1"),
         (5, "q1 q2 q3 q4 q5 q6 q7 q8 y2"),  # q-passage in exactly 2 docs
     ]
-    docs = _docs(spark, rows)
-    exact = _q114_aggregate(_q114_shingles(docs))
-    pre = _q114_aggregate(_q114_prefiltered_shingles(docs))
-    got = {r["passage"]: r["doc_ids"] for r in pre.collect()}
-    assert got == {base: "1,2,3"}
-    _cmp(exact, pre)
-
-
-def test_hot_hash_candidates_keeps_every_hot_row(spark):
-    rng = random.Random(3)
-    rows = [(i, f"s{rng.randrange(0, 40)}") for i in range(500)]
-    df = spark.createDataFrame(rows, "rid long, s string")
-    out = hot_hash_candidates(df, "s", 2)
-    # exact per-string counts: every string with >=2 occurrences must
-    # survive with ALL its rows (collisions may only ADD, never drop)
-    from collections import Counter
-
-    cnt = Counter(s for _, s in rows)
-    hot_rows = {(i, s) for i, s in rows if cnt[s] >= 2}
-    got = {(r["rid"], r["s"]) for r in out.collect()}
-    assert hot_rows <= got
-    # and no row is ever duplicated by the 1:1 hash join
-    assert out.count() == len(got)
+    cases = [
+        (spark.createDataFrame(rows, "rid long, s string"), "s", 2),
+        # q114's per-doc-distinct passages at its >= 3 documents floor
+        (_q114_shingles(_docs(spark, _tie_heavy_corpus(13, 120))), "passage", 3),
+        (_q114_shingles(_docs(spark, edge)), "passage", 3),
+    ]
+    for df, col, min_count in cases:
+        src = [tuple(r) for r in df.collect()]
+        k = df.columns.index(col)
+        cnt = Counter(r[k] for r in src)
+        hot_rows = {r for r in src if cnt[r[k]] >= min_count}
+        out = hot_hash_candidates(df, col, min_count)
+        got = {tuple(r) for r in out.collect()}
+        assert hot_rows <= got
+        assert out.count() == len(got)
+    # the edge corpus, checked last: only the exactly-3 passage is hot
+    assert hot_rows == {(1, base), (2, base), (3, base)}
 
 
 def test_hot_hash_candidates_passes_caller_h_column(spark):
@@ -139,49 +125,9 @@ def test_hot_hash_candidates_passes_caller_h_column(spark):
     _cmp(one_pass, got)
 
 
-def test_dsir_persist_arm_equals_recompute(spark, assert_no_cache_residue):
-    # the persist arm only runs past DSIR_PERSIST_MIN_DOC_ROWS, which no
-    # fixture reaches; pin it row-identical to the recompute arm
-    from alpaca_pyspark_spark.queries.llm import _dsir_raw_lm
-
-    rng = random.Random(11)
-    vocab = [f"w{i}" for i in range(15)]
-    rows = [
-        (d, rng.choice(vocab), rng.choice(vocab))
-        for d in range(60)
-        for _ in range(10)
-    ]
-    trans = spark.createDataFrame(rows, "doc_id long, w1 string, w2 string")
-    _cmp(
-        _dsir_raw_lm(trans, persist_pairs=False),
-        _dsir_raw_lm(trans, persist_pairs=True),
-    )
-
-
-def test_span_prefilter_dispatch_floor():
-    from alpaca_pyspark_spark.operators import dispatch
-    from alpaca_pyspark_spark.operators.dispatch import table_at_least
-    from alpaca_pyspark_spark.operators.text import (
-        SPAN_PREFILTER_MIN_DOC_ROWS as FLOOR,
-    )
-
-    from .conftest import SF_DIR
-
-    # gate/bench fixtures sit below the floor -> one-pass tier
-    assert not table_at_least(SF_DIR, "documents", FLOOR)
-    dispatch._ROWS_CACHE[("/fake/sf", "documents")] = FLOOR
-    try:
-        assert table_at_least("/fake/sf", "documents", FLOOR)
-    finally:
-        del dispatch._ROWS_CACHE[("/fake/sf", "documents")]
-    # unknown path: metadata unavailable -> the always-cheap tier
-    assert not table_at_least("/no/such/dir", "documents", FLOOR)
-
-
 def test_q210_forced_tier_equals_q186_half_corpus(spark):
-    # the registered forced-prefilter twin must land on rows identical
-    # to q186's dispatched (one-pass, at this scale) plan over the
-    # same half-corpus population
+    # the registered prefiltered form must land on rows identical to
+    # q186's one-pass plan over the same half-corpus population
     import os
 
     from alpaca_pyspark_spark.queries.llm import (

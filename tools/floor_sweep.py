@@ -4,20 +4,14 @@ they return the same rows.
 
     python tools/floor_sweep.py quantile 2 6 20      # MILLIONS of lineitem rows
     python tools/floor_sweep.py range 10 30 100 300  # THOUSANDS of rows, one key
-    python tools/floor_sweep.py span 20 60 200       # THOUSANDS of documents
-    python tools/floor_sweep.py dsir 20 60 200       # THOUSANDS of documents
 
-Tiers and the floors they set:
+The two tiers and the floors they set:
 
 * ``quantile`` — q102/q106 window vs sqrt-range decomposition,
   ``queries.mining.QUANTILE_DECOMPOSE_MIN_TABLE_ROWS``;
 * ``range`` — q41's count+cents window on one key over a 30-day span
   with a 24h frame: plain vs prefix-bucket at the dispatcher's own
-  bucket width (``hot``, ``operators.rangewindow.RANGE_HOT_MIN_ROWS``);
-* ``span`` — q186/q114 one-pass vs hot-hash prefiltered,
-  ``operators.text.SPAN_PREFILTER_MIN_DOC_ROWS``;
-* ``dsir`` — the DSIR pair table recomputed vs persisted,
-  ``queries.llm.DSIR_PERSIST_MIN_DOC_ROWS``.
+  bucket width (``hot``, ``operators.rangewindow.RANGE_HOT_MIN_ROWS``).
 
 Protocol, the same for every tier: the synthetic data is deterministic
 (xxhash64, no rand()) and written to parquet once per size, so both
@@ -45,11 +39,7 @@ sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
 from pyspark.sql import functions as F  # noqa: E402
 
 from alpaca_pyspark_spark.plans import force_evaluate  # noqa: E402
-from alpaca_pyspark_spark.session import (  # noqa: E402
-    get_spark,
-    release_scoped_caches,
-    scoped_persist,
-)
+from alpaca_pyspark_spark.session import get_spark, release_scoped_caches  # noqa: E402
 
 REPS = 3
 DAY_US = 24 * 3600 * 1_000_000
@@ -125,107 +115,10 @@ def _range_cases(n: int) -> dict:
     return {"hot": {"plain": plain, "prefix": prefix}}
 
 
-# ---------------------------------------------------------------- span
-BLOCKS, BLOCK_LEN, POOL = 10, 47, 1000
-
-
-def _write_span_corpus(spark, n: int, path: str) -> None:
-    """BLOCKS blocks of BLOCK_LEN tokens per doc; block j of doc d is
-    shared boilerplate block pmod(xxhash64(d, j, 1), POOL) with
-    probability 1/10, else tokens unique to (d, i) — a hot-occurrence
-    fraction near sf0.1's measured 9%."""
-
-    def tok(i):
-        j = F.floor(i / BLOCK_LEN)
-        boiler = F.pmod(F.xxhash64(F.col("doc_id"), j), F.lit(10)) == 0
-        bid = F.pmod(F.xxhash64(F.col("doc_id"), j, F.lit(1)), F.lit(POOL))
-        return F.when(
-            boiler,
-            F.concat(
-                F.lit("b"),
-                bid.cast("string"),
-                F.lit("p"),
-                F.pmod(i, F.lit(BLOCK_LEN)).cast("string"),
-            ),
-        ).otherwise(F.concat(F.lit("u"), F.hex(F.xxhash64(F.col("doc_id"), i))))
-
-    spark.range(n).select(F.col("id").alias("doc_id")).select(
-        "doc_id",
-        F.array_join(
-            F.transform(F.sequence(F.lit(0), F.lit(BLOCKS * BLOCK_LEN - 1)), tok),
-            " ",
-        ).alias("text"),
-    ).write.mode("overwrite").parquet(path)
-
-
-def _span_cases(n: int) -> dict:
-    from alpaca_pyspark_spark.queries import llm, search
-
-    return {
-        "q186": {"onepass": llm._q186_onepass, "prefiltered": llm._q186_prefiltered},
-        "q114": {
-            "onepass": lambda d: search._q114_aggregate(search._q114_shingles(d)),
-            "prefiltered": lambda d: search._q114_aggregate(
-                search._q114_prefiltered_shingles(d)
-            ),
-        },
-    }
-
-
-# ---------------------------------------------------------------- dsir
-VOCAB, TOKS_PER_DOC = 1000, 470
-
-
-def _write_closed_vocab_corpus(spark, n: int, path: str) -> None:
-    """TOKS_PER_DOC tokens per doc drawn from a closed VOCAB-word
-    vocabulary, so bigram types saturate (~VOCAB²) while transitions
-    grow with the corpus — the regime the persist floor targets."""
-    spark.range(n).select(
-        F.col("id").alias("doc_id"),
-        F.array_join(
-            F.transform(
-                F.sequence(F.lit(0), F.lit(TOKS_PER_DOC - 1)),
-                lambda i: F.concat(
-                    F.lit("w"),
-                    F.pmod(F.xxhash64(F.col("id"), i), F.lit(VOCAB)).cast("string"),
-                ),
-            ),
-            " ",
-        ).alias("text"),
-    ).write.mode("overwrite").parquet(path)
-
-
-def _dsir_cases(n: int) -> dict:
-    from alpaca_pyspark_spark.functions import tokens
-    from alpaca_pyspark_spark.queries.llm import _dsir_raw_lm
-
-    def raw_lm(persist: bool):
-        def arm(docs):
-            t = tokens(F.col("text"))
-            k = F.size(t)
-            bg = F.explode(
-                F.arrays_zip(
-                    F.slice(t, 1, k - 1).alias("w1"), F.slice(t, 2, k - 1).alias("w2")
-                )
-            ).alias("bg")
-            trans = scoped_persist(
-                docs.filter(k >= 2)
-                .select("doc_id", bg)
-                .select("doc_id", "bg.w1", "bg.w2")
-            )
-            return _dsir_raw_lm(trans, persist_pairs=persist)
-
-        return arm
-
-    return {"q187": {"recompute": raw_lm(False), "persist": raw_lm(True)}}
-
-
 #: tier -> (size unit in rows, parquet writer, per-size case arms)
 TIERS = {
     "quantile": (1_000_000, _write_lineitem, _quantile_cases),
     "range": (1_000, _write_one_key, _range_cases),
-    "span": (1_000, _write_span_corpus, _span_cases),
-    "dsir": (1_000, _write_closed_vocab_corpus, _dsir_cases),
 }
 
 
