@@ -666,9 +666,24 @@ def q114_repeated_passages(spark: SparkSession, sf_dir: str) -> DataFrame:
     output is hashable by pandas-based result canonicalizers."""
     docs = load(spark, sf_dir, "documents").select("doc_id", "text")
     # one pass beat the prefilter at every swept size (AB_floor_span.json)
+    return _q114_aggregate(_q114_shingles(docs))
+
+
+def _q114_shingles(docs: DataFrame) -> DataFrame:
+    return docs.select(
+        "doc_id",
+        F.explode(
+            F.array_distinct(word_shingles(tokens(F.lower(F.col("text"))), 8))
+        ).alias("passage"),
+    )
+
+
+def _q114_aggregate(sh: DataFrame) -> DataFrame:
+    """The >= 3 floor is applied on the true passage string, so a
+    hot-hash prefiltered input (collisions only ADD rows) lands on the
+    same result as the full shingle set."""
     return (
-        _q114_shingles(docs)
-        .groupBy("passage")
+        sh.groupBy("passage")
         .agg(
             F.count(F.lit(1)).alias("n_docs"),
             F.array_join(
@@ -681,15 +696,6 @@ def q114_repeated_passages(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .filter(F.col("n_docs") >= 3)
         .orderBy(F.col("n_docs").desc(), "passage")
-    )
-
-
-def _q114_shingles(docs: DataFrame) -> DataFrame:
-    return docs.select(
-        "doc_id",
-        F.explode(
-            F.array_distinct(word_shingles(tokens(F.lower(F.col("text"))), 8))
-        ).alias("passage"),
     )
 
 

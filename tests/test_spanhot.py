@@ -1,8 +1,8 @@
 """Hot-hash prefilter (``hot_hash_candidates``), the form of q186 that
 q210 runs under the oracle: it must keep every row of every string at
-its floor — q114's passages at 3 documents included — and the
-prefiltered q186 must be result-identical to the one-pass q186 on
-tie-heavy, NULL-bearing, and boundary data."""
+its floor, and the prefiltered q186 and q114 must be result-identical
+to their one-pass forms on tie-heavy, NULL-bearing, and boundary
+data."""
 
 from __future__ import annotations
 
@@ -13,7 +13,7 @@ from pyspark.sql import functions as F
 
 from alpaca_pyspark_spark.operators.text import hot_hash_candidates
 from alpaca_pyspark_spark.queries.llm import _q186_onepass, _q186_prefiltered
-from alpaca_pyspark_spark.queries.search import _q114_shingles
+from alpaca_pyspark_spark.queries.search import _q114_aggregate, _q114_shingles
 from alpaca_pyspark_spark.session import release_scoped_caches
 
 
@@ -70,39 +70,49 @@ def test_q186_tier_parity_no_duplicates(spark):
     _cmp(one, pre)
 
 
-def test_hot_hash_candidates_keeps_every_hot_row(spark):
-    # exact per-string counts: every string with >= min_count
-    # occurrences must survive with ALL its rows (collisions may only
-    # ADD, never drop), and the 1:1 hash join never duplicates a row
-    from collections import Counter
+def _q114_prefiltered(docs):
+    return _q114_aggregate(hot_hash_candidates(_q114_shingles(docs), "passage", 3))
 
-    rng = random.Random(3)
-    rows = [(i, f"s{rng.randrange(0, 40)}") for i in range(500)]
+
+def test_q114_tier_parity_tie_heavy(spark):
+    docs = _docs(spark, _tie_heavy_corpus(13, 120))
+    _cmp(_q114_aggregate(_q114_shingles(docs)), _q114_prefiltered(docs))
+
+
+def test_q114_tier_parity_threshold_edge(spark):
+    # passages at exactly 2 vs exactly 3 docs straddle the >=3 floor:
+    # the prefilter's hash count must keep the 3-doc passage complete
     base = "p1 p2 p3 p4 p5 p6 p7 p8"
-    edge = [
+    rows = [
         (1, base + " x1"),
         (2, base + " x2"),
-        (3, base + " x3"),                  # base passage in exactly 3 docs
+        (3, base + " x3"),              # base passage in exactly 3 docs
         (4, "q1 q2 q3 q4 q5 q6 q7 q8 y1"),
         (5, "q1 q2 q3 q4 q5 q6 q7 q8 y2"),  # q-passage in exactly 2 docs
     ]
-    cases = [
-        (spark.createDataFrame(rows, "rid long, s string"), "s", 2),
-        # q114's per-doc-distinct passages at its >= 3 documents floor
-        (_q114_shingles(_docs(spark, _tie_heavy_corpus(13, 120))), "passage", 3),
-        (_q114_shingles(_docs(spark, edge)), "passage", 3),
-    ]
-    for df, col, min_count in cases:
-        src = [tuple(r) for r in df.collect()]
-        k = df.columns.index(col)
-        cnt = Counter(r[k] for r in src)
-        hot_rows = {r for r in src if cnt[r[k]] >= min_count}
-        out = hot_hash_candidates(df, col, min_count)
-        got = {tuple(r) for r in out.collect()}
-        assert hot_rows <= got
-        assert out.count() == len(got)
-    # the edge corpus, checked last: only the exactly-3 passage is hot
-    assert hot_rows == {(1, base), (2, base), (3, base)}
+    docs = _docs(spark, rows)
+    exact = _q114_aggregate(_q114_shingles(docs))
+    pre = _q114_prefiltered(docs)
+    got = {r["passage"]: r["doc_ids"] for r in pre.collect()}
+    assert got == {base: "1,2,3"}
+    _cmp(exact, pre)
+
+
+def test_hot_hash_candidates_keeps_every_hot_row(spark):
+    rng = random.Random(3)
+    rows = [(i, f"s{rng.randrange(0, 40)}") for i in range(500)]
+    df = spark.createDataFrame(rows, "rid long, s string")
+    out = hot_hash_candidates(df, "s", 2)
+    # exact per-string counts: every string with >=2 occurrences must
+    # survive with ALL its rows (collisions may only ADD, never drop)
+    from collections import Counter
+
+    cnt = Counter(s for _, s in rows)
+    hot_rows = {(i, s) for i, s in rows if cnt[s] >= 2}
+    got = {(r["rid"], r["s"]) for r in out.collect()}
+    assert hot_rows <= got
+    # and no row is ever duplicated by the 1:1 hash join
+    assert out.count() == len(got)
 
 
 def test_hot_hash_candidates_passes_caller_h_column(spark):
