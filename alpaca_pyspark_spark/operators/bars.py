@@ -8,10 +8,10 @@ aggregate ticks into bars with the 9-column schema of
 
 Spark-first re-expression: a tumbling-window hash aggregation over the
 tick stream.  open/close are the *time-ordered* first/last values — we
-use ``min_by``/``max_by`` keyed on a ``(ts, rowid)`` struct, which stays
-a single-pass hash aggregate (one shuffle on the group keys, with
-map-side partial aggregation) and is deterministic under ties, unlike
-``first()``/``last()``.
+use ``min_by``/``max_by`` keyed on the tick time, which stays a
+single-pass hash aggregate (one shuffle on the group keys, with
+map-side partial aggregation) and, unlike ``first()``/``last()``, does
+not depend on row order.
 
 Scale notes: the whole operator is one shuffle keyed by
 ``(key, window)``; skewed symbols are handled by AQE skew-split since
@@ -21,60 +21,39 @@ per (key, window).
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..functions import cents
 
 
 def tumbling_bars(
-    ticks: DataFrame,
-    *,
-    key: str,
-    ts: str,
-    price: str,
-    size: Column | str | None = None,
-    tiebreak: Column | str | None = None,
-    interval: str = "1 day",
+    ticks: DataFrame, *, key: str, ts: str, price: str, interval: str
 ) -> DataFrame:
-    """Aggregate a tick stream into OHLCV bars.
+    """Aggregate a tick stream into OHLCV bars, one row per ``key`` and
+    ``interval``-wide window (the reference's D5 ``timeframe``).
 
-    Parameters mirror the reference bar semantics (SURVEY.md §2D D5):
-    ``interval`` is the bar width (timeframe), ``key`` the symbol-like
-    grouping column, ``price`` the tick price, ``size`` the tick size
-    (``None`` → every tick has size 1, so volume = tick count and vwap
-    = plain mean).  ``tiebreak`` deterministically orders ticks with
-    identical timestamps (e.g. a unique id column).
+    Every tick has size 1, so ``volume == trade_count`` and vwap is the
+    mean price.  vwap divides the exact BIGINT sum of integer cents
+    once, so it is bit-identical to a SQL twin's; everything else picks
+    exact input values.  Ticks without a price are dropped first (Spark
+    ``min_by`` keeps NULL-valued rows, SQL ``arg_min`` skips them).
+    open/close order by ``ts`` alone, so ``(key, ts)`` must be unique.
     """
-    order = F.struct(F.col(ts), F.col(tiebreak) if isinstance(tiebreak, str) else (tiebreak if tiebreak is not None else F.col(ts)))
-    size_col = F.col(size) if isinstance(size, str) else (size if size is not None else F.lit(1).cast("long"))
     p = F.col(price)
-
-    bar = F.window(F.col(ts), interval)
-    out = (
-        ticks.groupBy(F.col(key), bar.alias("bar"))
+    return (
+        ticks.filter(p.isNotNull())
+        .groupBy(key, F.window(ts, interval).start.alias("bar_start"))
         .agg(
-            F.min_by(p, order).alias("open"),
+            F.min_by(p, F.col(ts)).alias("open"),
             F.max(p).alias("high"),
             F.min(p).alias("low"),
-            F.max_by(p, order).alias("close"),
-            F.sum(size_col).alias("volume"),
+            F.max_by(p, F.col(ts)).alias("close"),
+            F.count(F.lit(1)).alias("volume"),
             F.count(F.lit(1)).alias("trade_count"),
-            (F.sum(p * size_col) / F.sum(size_col)).alias("vwap"),
-        )
-        .select(
-            F.col(key),
-            F.col("bar.start").alias("bar_start"),
-            "open",
-            "high",
-            "low",
-            "close",
-            "volume",
-            "trade_count",
-            "vwap",
+            (F.sum(cents(p)) / (F.lit(100.0) * F.count(F.lit(1)))).alias("vwap"),
         )
     )
-    return out
 
 
 def tumbling_bars_cents(

@@ -1,24 +1,15 @@
-"""Data profiling + in-flight observability.
-
-- :func:`profile_table` — the single-pass data-quality audit a corpus
-  runs before training: per-column null counts, numeric min/max,
-  distinct counts — ONE aggregate over one scan (partial-agg
-  map-side), never a per-column pass.  At 100 TB, one pass vs
-  #columns passes is the whole game.
-- :func:`with_observed_metrics` — piggyback data-quality counters on
-  an EXISTING query via ``df.observe``: the metrics ride the same scan
-  the query already does (zero extra jobs) and are read from the
-  :class:`pyspark.sql.Observation` after any action.  This is the
-  analytic-layer analog of the connector's warn-and-skip counters
-  (reference C5 semantics, common.py:484-486): quantify bad rows
-  without a second scan.
+"""Data profiling: :func:`profile_table` is the single-pass
+data-quality audit a corpus runs before training: per-column null
+counts, numeric min/max, distinct counts — ONE aggregate over one scan
+(partial-agg map-side), never a per-column pass.  At 100 TB, one pass
+vs #columns passes is the whole game.
 """
 
 from __future__ import annotations
 
 from collections.abc import Sequence
 
-from pyspark.sql import Column, DataFrame, Observation
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 
@@ -43,19 +34,3 @@ def profile_table(
     for c in distinct_cols:
         aggs.append(F.countDistinct(c).alias(f"distinct_{c}"))
     return df.agg(*aggs)
-
-
-def with_observed_metrics(
-    df: DataFrame,
-    name: str = "metrics",
-    **metrics: Column,
-) -> tuple[DataFrame, Observation]:
-    """Attach named aggregate metrics to ``df`` that are computed as a
-    side effect of whatever action runs next (no extra scan, no extra
-    job).  Returns ``(observed_df, observation)``; read
-    ``observation.get`` after an action completes."""
-    obs = Observation(name)
-    if not metrics:
-        metrics = {"n_rows": F.count(F.lit(1))}
-    observed = df.observe(obs, *[c.alias(n) for n, c in metrics.items()])
-    return observed, obs

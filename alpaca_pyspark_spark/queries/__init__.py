@@ -30,10 +30,7 @@ def _boundary(fn: QueryFn) -> QueryFn:
     long-lived session never holds more than one query's worth of
     operator caches.  Harnesses that want zero residue between actions
     (tests, bench) additionally call ``release_scoped_caches()`` right
-    after consuming.  The bare release respects an active
-    ``scoped_caches()`` floor, so calling a registered query inside a
-    user's scoped block never unpersists the enclosing scope's
-    still-live persists.
+    after consuming.
 
     Session confs: it then applies the engine's confs with
     ``session.tune`` before the query builds its plan.  This runs at

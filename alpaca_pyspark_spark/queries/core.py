@@ -26,6 +26,7 @@ from ..operators.adjustment import (
     adjust_backward_split_ordered,
 )
 from ..operators.asof import asof_join
+from ..operators.bars import tumbling_bars
 from ..operators.sessionize import session_summary
 from ..operators.topk import top_k_per_group
 from ..tables import load
@@ -59,29 +60,7 @@ def q02_bars_tumbling(spark: SparkSession, sf_dir: str) -> DataFrame:
     value↔price; each tick has implicit size 1 so volume==trade_count
     and vwap is the mean price."""
     e = load(spark, sf_dir, "events")
-    # vwap is computed over exact integer cents (`value` is
-    # cent-quantized): the BIGINT sum is order-independent, so the one
-    # final double division is bit-identical to the oracle's — no
-    # float-accumulation drift.  Everything else picks exact input
-    # values (min/max/arg extremes), so no rounding is needed there.
-    p = F.col("value")
-    p_cents = cents(p)
-    # unpriced ticks don't form bars (engine-portable NULL contract —
-    # Spark min_by keeps NULL-valued rows, SQL arg_min skips them;
-    # the oracle carries the same WHERE)
-    e = e.filter(p.isNotNull())
-    return (
-        e.groupBy("user_id", F.window("ts", "1 day").start.alias("bar_start"))
-        .agg(
-            F.min_by(p, F.col("ts")).alias("open"),
-            F.max(p).alias("high"),
-            F.min(p).alias("low"),
-            F.max_by(p, F.col("ts")).alias("close"),
-            F.count(F.lit(1)).alias("volume"),
-            F.count(F.lit(1)).alias("trade_count"),
-            (F.sum(p_cents) / (F.lit(100.0) * F.count(F.lit(1)))).alias("vwap"),
-        )
-    )
+    return tumbling_bars(e, key="user_id", ts="ts", price="value", interval="1 day")
 
 
 _Q02_SQL = """
@@ -141,8 +120,8 @@ def q03_interval_join_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
         "signup_id",
         "n_follow",
         # the identical IEEE expression as before: exact integer cents
-        # summed, ONE final division (see q02) — order-independent,
-        # oracle-exact on both dispatch branches
+        # summed, ONE final division (see ``tumbling_bars``) —
+        # order-independent, oracle-exact on both dispatch branches
         (
             F.col("sum_cents").cast("double")
             / (F.lit(100.0) * F.col("n_follow"))
@@ -269,7 +248,7 @@ def q05_groupby_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     joined = c.join(F.broadcast(n), c.c_nationkey == n.n_nationkey).join(
         F.broadcast(r), n.n_regionkey == r.r_regionkey
     )
-    # exact-cents sum (see q02): BIGINT accumulation is
+    # exact-cents sum (see ``tumbling_bars``): BIGINT accumulation is
     # order-independent; one final division matches the oracle exactly
     bal_cents = cents(F.col("c_acctbal"))
     return joined.rollup("r_name", "n_name").agg(
@@ -831,9 +810,10 @@ GROUP BY 1, 2
 # --------------------------------------------------------------- q181
 def q181_streaming_bars_executed(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The reference's FLAGSHIP semantic (D5 bar construction) run as
-    a live stream under the hash gate: ticks flow through the SAME
-    ``tumbling_bars_cents`` operator as batch q02 — one Catalyst plan,
-    two execution modes — with a watermark finalizing each daily bar
+    a live stream under the hash gate: ticks flow through
+    ``tumbling_bars_cents``, the re-aggregable form of batch q02's
+    ``tumbling_bars`` (same NULL filter and OHLC picks, vwap from
+    integer-cent state), with a watermark finalizing each daily bar
     exactly once in APPEND mode (state = one row per open (user, day),
     evicted on finalization; the continuous-aggregate discipline that
     keeps a 100 TB hypertable fresh without re-reading ticks).
@@ -1226,8 +1206,8 @@ def q203_connector_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _q203_landed_bars(spark, landed_pdf, *, manifest_rows: int) -> DataFrame:
-    """q203's read-back leg: D5 bar construction (q02's exact shape)
-    over what actually LANDED, plus the conservation column."""
+    """q203's read-back leg: D5 bar construction (``tumbling_bars``,
+    as q02) over what actually LANDED, plus the conservation column."""
     # Arrow-path createDataFrame (pandas in, not 100k Python tuples)
     landed = spark.createDataFrame(
         landed_pdf, "symbol string, time string, price double, id bigint"
@@ -1238,18 +1218,8 @@ def _q203_landed_bars(spark, landed_pdf, *, manifest_rows: int) -> DataFrame:
         F.col("time").cast("timestamp").cast("timestamp_ntz").alias("ts"),
         F.col("price").alias("p"),
     )
-    p_cents = cents(F.col("p"))
     return (
-        t.groupBy("symbol", F.window("ts", "1 day").start.alias("bar_start"))
-        .agg(
-            F.min_by("p", F.col("ts")).alias("open"),
-            F.max("p").alias("high"),
-            F.min("p").alias("low"),
-            F.max_by("p", F.col("ts")).alias("close"),
-            F.count(F.lit(1)).alias("volume"),
-            F.count(F.lit(1)).alias("trade_count"),
-            (F.sum(p_cents) / (F.lit(100.0) * F.count(F.lit(1)))).alias("vwap"),
-        )
+        tumbling_bars(t, key="symbol", ts="ts", price="p", interval="1 day")
         .withColumn("manifest_rows", F.lit(int(manifest_rows)).cast("bigint"))
     )
 

@@ -2427,11 +2427,7 @@ def q193_streaming_ingest_neardup(spark: SparkSession, sf_dir: str) -> DataFrame
     portable md5 hash family means the DuckDB oracle replays the
     ENTIRE pipeline (signatures, bands, corpus-side guard, pair set,
     verify) bit-exactly — the streaming execution is hash-gated, not
-    rows-only.  (Complement, not twin, of
-    ``streaming/neardup.py::streaming_lsh_candidates``: that operator
-    finds collisions WITHIN the stream using watermarked state; this
-    one gates the stream against the historical corpus with no state
-    at all.)"""
+    rows-only."""
     from ..session import release_scoped_caches
     from ..streaming.gate import run_streaming_gate
 

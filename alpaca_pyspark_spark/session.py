@@ -17,7 +17,6 @@ local[32] and on a real cluster).
 
 from __future__ import annotations
 
-import contextlib
 import logging
 import os
 
@@ -87,36 +86,24 @@ def tune(spark: SparkSession) -> SparkSession:
 #
 # Operators whose pipeline needs a cached intermediate (LSH signature
 # reuse across band projections, PageRank's edge table across rounds,
-# …) face a structural problem: they RETURN a lazy DataFrame, so the
-# consuming action — the only correct unpersist point — happens in the
-# caller, after the operator's frame is gone.  Leaving the persist
-# unscoped lets entries pile up in Catalyst's CacheManager until LRU
-# eviction, not the operators, decides what stays hot (round-4 VERDICT
-# weak item).  Converting to localCheckpoint(eager=False) fixes the
-# residue but was measured 18% slower over the 195-query one-JVM bench
-# (truncated lineage turns cheap drop-and-recompute eviction into disk
-# spills, and row-format checkpoint blocks are larger than compressed
-# columnar cache) — see PLANS.md round-5 notes.
+# …) RETURN a lazy DataFrame, so the consuming action — the only
+# correct unpersist point — happens in the caller, after the
+# operator's frame is gone.  Unscoped persists would pile up in
+# Catalyst's CacheManager until LRU eviction decided what stays hot.
+# localCheckpoint(eager=False) avoids the residue but was measured 18%
+# slower over the one-JVM bench (truncated lineage turns cheap
+# drop-and-recompute eviction into disk spills) — see PLANS.md
+# round-5 notes.
 #
-# So: persists stay persists, but every operator-internal persist goes
-# through scoped_persist(), which records it in a session ledger, and
-# every query boundary calls release_scoped_caches() after its
-# consuming action (bench.py, tools/driver_mimic.py, and the test
-# harness all do; tests/conftest.py asserts the CacheManager is EMPTY
-# after every oracle query, so a persist that bypasses the ledger
-# fails CI).  Library users get the same discipline as a context
-# manager: ``with scoped_caches(): df = minhash_lsh_dedup(...).collect()``.
+# So every operator-internal persist goes through scoped_persist(),
+# which records it in a session ledger, and every query boundary
+# (``queries._boundary``) calls release_scoped_caches(); harnesses
+# also call it after their consuming action (tests/conftest.py
+# asserts the CacheManager is EMPTY after every oracle query, so a
+# persist that bypasses the ledger fails CI).
 # --------------------------------------------------------------------
 
 _SCOPED: list[DataFrame] = []
-#: Number of ``scoped_caches()`` blocks currently open.  While any is
-#: active, a bare ``release_scoped_caches()`` (the query-boundary
-#: call) is a NO-OP: the ledger is a stack, so the top entries belong
-#: to the active scopes and a bare pop-down would unpersist the
-#: enclosing block's still-live persists (the round-5 advice bug).
-#: Scope exits drain their own entries; pre-scope leftovers drain at
-#: the first boundary hit OUTSIDE all scopes.
-_SCOPE_DEPTH: int = 0
 _LEDGER_LOCK = __import__("threading").Lock()
 
 
@@ -129,26 +116,15 @@ def scoped_persist(df: DataFrame) -> DataFrame:
     return out
 
 
-def release_scoped_caches(mark: int | None = None) -> int:
-    """Unpersist ledger entries past ``mark`` (blocking=False); returns
-    how many actually unpersisted.  Call with no argument after the
-    action that consumes a query: it drains the whole ledger — unless
-    a ``scoped_caches()`` block is active, in which case it is a no-op
-    (the block owns the top of the stack and releases its own entries
-    on exit; draining would violate the nesting guarantee).  A scope
-    exit passes its entry mark so it drains exactly its OWN persists.
-
-    The ledger is guarded by a lock so concurrent ``scoped_persist``
-    calls don't corrupt the list, but scope depth is process-global:
-    the harnesses that drive query boundaries (bench, driver mimic,
-    tests) are single-threaded by design."""
+def release_scoped_caches() -> int:
+    """Unpersist every ledger entry (blocking=False); returns how many
+    actually unpersisted.  Call after the action that consumes a query.
+    The lock keeps concurrent ``scoped_persist`` calls from corrupting
+    the ledger."""
     n = 0
     while True:
         with _LEDGER_LOCK:
-            if mark is None and _SCOPE_DEPTH > 0:
-                return n
-            floor = 0 if mark is None else mark
-            if len(_SCOPED) <= floor:
+            if not _SCOPED:
                 return n
             df = _SCOPED.pop()
         try:
@@ -157,24 +133,6 @@ def release_scoped_caches(mark: int | None = None) -> int:
         except Exception as e:  # session may be stopped — entry still
             # leaves the ledger, but is not counted as released
             logger.warning("release_scoped_caches: unpersist failed (%s)", e)
-
-
-@contextlib.contextmanager
-def scoped_caches():
-    """Context manager form: on exit, release the operator persists
-    made INSIDE the block (nesting-safe — an inner block never drains
-    an enclosing block's still-live persists, and query boundaries
-    hit inside the block are no-ops rather than ledger drains)."""
-    global _SCOPE_DEPTH
-    with _LEDGER_LOCK:
-        mark = len(_SCOPED)
-        _SCOPE_DEPTH += 1
-    try:
-        yield
-    finally:
-        with _LEDGER_LOCK:
-            _SCOPE_DEPTH -= 1
-        release_scoped_caches(mark)
 
 
 def get_spark(app_name: str = "alpaca_pyspark_spark") -> SparkSession:

@@ -1,5 +1,5 @@
-"""Raw-file ingest: schema-explicit CSV / JSONL readers with
-corrupt-record quarantine, and small-file compaction.
+"""Raw-file ingest: a schema-explicit CSV reader with corrupt-record
+quarantine, and small-file compaction.
 
 A 100 TB training-data pipeline ingests raw dumps (JSONL crawls, CSV
 exports) long before anything is columnar; these wrappers pin the two
@@ -8,11 +8,10 @@ properties that matter at that scale:
 - **Explicit schema, never inference.**  Schema inference is an extra
   full scan of the input (Spark reads everything once just to guess
   types) and it is load-order-dependent — a 100 TB re-crawl can
-  silently change a column's type.  Every reader here REQUIRES a
-  schema.
+  silently change a column's type.  The reader REQUIRES a schema.
 - **PERMISSIVE + quarantine, never fail-or-drop.**  At billions of
   rows there WILL be malformed records.  `DROPMALFORMED` destroys
-  evidence and `FAILFAST` destroys the job; the readers run PERMISSIVE
+  evidence and `FAILFAST` destroys the job; the reader runs PERMISSIVE
   with ``columnNameOfCorruptRecord`` so bad lines survive as data, and
   :func:`split_corrupt` forks the stream into (clean, quarantined)
   in one pass — mirroring the connector's malformed-record
@@ -46,19 +45,6 @@ def _with_corrupt_field(schema: StructType) -> StructType:
     return StructType(list(schema.fields) + [StructField(CORRUPT_COL, StringType())])
 
 
-def read_jsonl(
-    spark: SparkSession, path: str, schema: StructType
-) -> DataFrame:
-    """Line-delimited JSON with explicit schema; malformed lines are
-    kept in ``_corrupt_record`` instead of dropped or fatal."""
-    return (
-        spark.read.schema(_with_corrupt_field(schema))
-        .option("mode", "PERMISSIVE")
-        .option("columnNameOfCorruptRecord", CORRUPT_COL)
-        .json(path)
-    )
-
-
 def read_csv(
     spark: SparkSession,
     path: str,
@@ -67,8 +53,8 @@ def read_csv(
     header: bool = True,
     delimiter: str = ",",
 ) -> DataFrame:
-    """CSV with explicit schema + corrupt capture (same contract as
-    :func:`read_jsonl`)."""
+    """CSV with explicit schema; malformed lines are kept in
+    ``_corrupt_record`` instead of dropped or fatal."""
     return (
         spark.read.schema(_with_corrupt_field(schema))
         .option("mode", "PERMISSIVE")

@@ -166,8 +166,8 @@ class RestBatchSink(DataSource):
     def __init__(self, options: dict[str, Any]):
         super().__init__(options)
         # Spark lower-cases DataSource option names before they reach
-        # Python (same normalization as spec.endpoint_config_from_options
-        # on the read side) — look credentials up by lowercase key or
+        # Python (same normalization as spec.validate_options on the
+        # read side) — look credentials up by lowercase key or
         # they are silently never sent
         options = {str(k).lower(): v for k, v in options.items()}
         endpoint = options.get("endpoint")

@@ -28,7 +28,7 @@ import ast
 import re
 import warnings
 from dataclasses import dataclass, field
-from datetime import datetime
+from datetime import datetime, timezone
 from typing import Any, Callable
 
 DEFAULT_ENDPOINT = "https://data.alpaca.markets/v2"
@@ -119,10 +119,14 @@ def parse_symbols(raw: Any) -> list[str]:
 
 
 def parse_iso_datetime(value: str, option: str) -> datetime:
+    """ISO-8601 → datetime.  A naive value is taken as UTC (the rule of
+    ``wire.parse_utc_timestamp``), so naive and aware bounds compare;
+    an aware value is returned as given."""
     try:
-        return datetime.fromisoformat(value)
+        dt = datetime.fromisoformat(value)
     except ValueError as exc:
         raise ValueError(f"Option {option!r} is not ISO-8601: {value!r}") from exc
+    return dt if dt.tzinfo else dt.replace(tzinfo=timezone.utc)
 
 
 def validate_options(
@@ -208,6 +212,6 @@ def base_history_specs() -> list[ParamSpec]:
         ParamSpec("symbols", required=True),
         ParamSpec("start", required=True),
         ParamSpec("end", required=True),
-        ParamSpec("limit", pattern=r"^\d+$"),
+        ParamSpec("limit", pattern=r"^0*[1-9]\d*$"),
         ParamSpec("sort", enum=SORT_ENUM),
     ]

@@ -3,17 +3,13 @@ streams.
 
 Ingestion retries (the connector's HTTP retry layer, E2) and source
 replays make duplicate events a fact of life in any stream; the fix
-belongs in the engine.  Two built-in shapes:
-
-- ``dedup_stream`` — ``dropDuplicatesWithinWatermark(keys)``: keeps
-  the first arrival per key and drops re-deliveries that arrive within
-  the watermark delay.  State per key is evicted once the watermark
-  passes it — bounded memory at any stream rate, the property that
-  matters at 100 TB/day.  (Plain ``dropDuplicates`` on a stream never
-  evicts: unbounded state, do not use.)
-- ``dedup_stream_fingerprint`` — content-level dedup: same operator
-  keyed by the normalized text fingerprint (the streaming twin of the
-  batch ``drop_exact_duplicates``).
+belongs in the engine.  ``dedup_stream`` is
+``dropDuplicatesWithinWatermark(keys)``: it keeps the first arrival
+per key and drops re-deliveries that arrive within the watermark
+delay.  State per key is evicted once the watermark passes it —
+bounded memory at any stream rate, the property that matters at
+100 TB/day.  (Plain ``dropDuplicates`` on a stream never evicts:
+unbounded state, do not use.)
 
 Event-time column must be among the watermarked columns' lineage; the
 operator casts NTZ event time exactly like the other streaming ops.
@@ -25,8 +21,6 @@ from collections.abc import Sequence
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-
-from ..operators.text import normalized_fingerprint
 
 
 def _with_watermark(df: DataFrame, ts: str, delay: str) -> DataFrame:
@@ -46,18 +40,3 @@ def dedup_stream(
     return _with_watermark(events, ts, watermark_delay).dropDuplicatesWithinWatermark(
         list(keys)
     )
-
-
-def dedup_stream_fingerprint(
-    docs: DataFrame,
-    *,
-    text_col: str = "text",
-    ts: str,
-    watermark_delay: str = "1 hour",
-) -> DataFrame:
-    """Content dedup on a document stream: normalized-fingerprint key,
-    watermark-bounded state, fingerprint column retained for audit."""
-    with_fp = _with_watermark(docs, ts, watermark_delay).withColumn(
-        "fingerprint", normalized_fingerprint(text_col)
-    )
-    return with_fp.dropDuplicatesWithinWatermark(["fingerprint"])

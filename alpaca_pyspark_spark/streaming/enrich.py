@@ -1,27 +1,12 @@
-"""Stream-static enrichment and foreachBatch merge sinks.
-
-Two remaining streaming shapes a production pipeline needs:
-
-- **stream-static join**: enrich an unbounded fact stream with a
-  batch dimension table.  The static side is re-planned per
-  micro-batch (so dimension updates between batches are picked up)
-  and — being dimension-sized — broadcast: the stream side never
-  shuffles and no join state accumulates (unlike stream-stream joins,
-  the static side is always fully available, so no watermark is
-  needed for correctness).
-- **foreachBatch merge sink**: the escape hatch for sinks Spark has
-  no native writer for (upserts, multi-table writes).  Each
-  micro-batch arrives as a BATCH DataFrame keyed by ``batch_id``;
-  exactly-once comes from idempotent writes keyed on that id (the
-  classic pattern: overwrite a batch-id-derived partition, or MERGE on
-  a transactional table).  Here the merge target is partitioned
-  parquet with dynamic partition overwrite — re-running a batch
-  replaces, never duplicates.
+"""Stream-static enrichment: join an unbounded fact stream with a
+batch dimension table.  The static side is re-planned per micro-batch
+(so dimension updates between batches are picked up) and — being
+dimension-sized — broadcast: the stream side never shuffles and no
+join state accumulates (unlike stream-stream joins, the static side is
+always fully available, so no watermark is needed for correctness).
 """
 
 from __future__ import annotations
-
-from collections.abc import Callable
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -38,27 +23,3 @@ def enrich_stream(
     stream row.  The stream side stays shuffle-free; the dim side is
     re-read each micro-batch."""
     return stream.join(F.broadcast(dim), on, how)
-
-
-def partitioned_merge_sink(
-    path: str,
-    *,
-    partition_col: str,
-) -> Callable[[DataFrame, int], None]:
-    """A foreachBatch function writing each micro-batch into
-    ``path`` partitioned by ``partition_col`` with DYNAMIC partition
-    overwrite: only the partitions present in the batch are replaced,
-    so a replayed batch (failure/restart) overwrites its own earlier
-    output instead of appending duplicates — idempotent, hence
-    exactly-once end to end with checkpointing."""
-
-    def write_batch(batch_df: DataFrame, batch_id: int) -> None:
-        (
-            batch_df.withColumn("__batch_id", F.lit(batch_id))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy(partition_col)
-            .parquet(path)
-        )
-
-    return write_batch

@@ -1,6 +1,7 @@
 """Reusable harness for running a streaming query TO COMPLETION under
-the exact-hash correctness gate (the executed-streaming queries q145 /
-q146 / q153 / q181 all share it).
+the exact-hash correctness gate (every registered executed-streaming
+query shares it: q130, q131, q145, q146, q149, q153, q181, q190,
+q191, q193, q196, q199 and both q202 forms).
 
 The protocol it encapsulates (learned the hard way, round 3–4):
 

@@ -1,10 +1,9 @@
-"""Raw-file ingest tests: schema-explicit CSV/JSONL with corrupt-record
+"""Raw-file ingest tests: schema-explicit CSV with corrupt-record
 quarantine, and small-file compaction (layout-only rewrite)."""
 
 from __future__ import annotations
 
 import glob
-import json
 
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
@@ -18,7 +17,6 @@ from alpaca_pyspark_spark.sources.files import (
     CORRUPT_COL,
     compact_to_target_files,
     read_csv,
-    read_jsonl,
     split_corrupt,
 )
 
@@ -31,24 +29,6 @@ DOC_SCHEMA = StructType(
         StructField("lang", StringType()),
     ]
 )
-
-
-def test_jsonl_roundtrip_with_quarantine(spark, tmp_path):
-    p = tmp_path / "docs.jsonl"
-    rows = [
-        {"doc_id": 1, "text": "alpha beta", "lang": "en"},
-        {"doc_id": 2, "text": "gamma", "lang": "de"},
-    ]
-    lines = [json.dumps(r) for r in rows]
-    lines.insert(1, '{"doc_id": "NOT_A_NUMBER_{", broken')  # malformed
-    p.write_text("\n".join(lines) + "\n")
-
-    df = read_jsonl(spark, str(p), DOC_SCHEMA)
-    clean, quarantine = split_corrupt(df)
-    got = {r["doc_id"]: (r["text"], r["lang"]) for r in clean.collect()}
-    assert got == {1: ("alpha beta", "en"), 2: ("gamma", "de")}
-    bad = [r["raw_line"] for r in quarantine.collect()]
-    assert bad == ['{"doc_id": "NOT_A_NUMBER_{", broken']
 
 
 def test_csv_roundtrip_with_quarantine(spark, tmp_path):
@@ -69,9 +49,9 @@ def test_csv_roundtrip_with_quarantine(spark, tmp_path):
 def test_corrupt_column_survives_schema_without_it(spark, tmp_path):
     """Caller passes a plain schema; the reader injects the capture
     column rather than silently dropping bad rows."""
-    p = tmp_path / "x.jsonl"
-    p.write_text('{"doc_id": 7, "text": "t", "lang": "en"}\nnot json\n')
-    df = read_jsonl(spark, str(p), DOC_SCHEMA)
+    p = tmp_path / "x.csv"
+    p.write_text("doc_id,text,lang\n7,t,en\nnot_a_long,t,en\n")
+    df = read_csv(spark, str(p), DOC_SCHEMA)
     assert CORRUPT_COL in df.columns
     assert df.count() == 2  # nothing dropped
 

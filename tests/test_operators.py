@@ -110,24 +110,23 @@ def test_split_adjustment_matches_python(spark):
 def test_tumbling_bars_semantics(spark):
     ticks = spark.createDataFrame(
         [
-            ("A", "2024-01-01 00:01:00", 10.0, 5, 1),
-            ("A", "2024-01-01 10:00:00", 30.0, 1, 2),
-            ("A", "2024-01-01 23:00:00", 20.0, 4, 3),
-            ("A", "2024-01-02 01:00:00", 7.0, 2, 4),
+            ("A", "2024-01-01 00:01:00", 10.0),
+            ("A", "2024-01-01 10:00:00", 30.0),
+            ("A", "2024-01-01 23:00:00", 20.0),
+            ("A", "2024-01-02 01:00:00", 7.0),
         ],
-        "sym string, ts string, price double, size long, id long",
+        "sym string, ts string, price double",
     ).withColumn("ts", F.col("ts").cast("timestamp_ntz"))
     bars = {
         str(r["bar_start"]): r
         for r in tumbling_bars(
-            ticks, key="sym", ts="ts", price="price", size="size",
-            tiebreak="id", interval="1 day",
+            ticks, key="sym", ts="ts", price="price", interval="1 day"
         ).collect()
     }
     d1 = bars["2024-01-01 00:00:00"]
     assert (d1["open"], d1["high"], d1["low"], d1["close"]) == (10.0, 30.0, 10.0, 20.0)
-    assert d1["volume"] == 10 and d1["trade_count"] == 3
-    assert d1["vwap"] == pytest.approx((10 * 5 + 30 * 1 + 20 * 4) / 10)
+    assert d1["volume"] == d1["trade_count"] == 3
+    assert d1["vwap"] == pytest.approx((10.0 + 30.0 + 20.0) / 3)
     assert bars["2024-01-02 00:00:00"]["open"] == 7.0
 
 
@@ -600,35 +599,6 @@ def test_bucketed_range_join_equals_naive(spark):
             ).collect()
         }
         assert got == naive, f"bucket={bucket}"
-
-
-# -------------------------------------------------------- observability
-def test_observed_metrics_ride_the_query(spark):
-    """df.observe computes quality counters as a side effect of the
-    action that runs anyway — verify the numbers equal a direct
-    aggregation, with no separate job issued for them."""
-    from alpaca_pyspark_spark.operators.profile import with_observed_metrics
-    from alpaca_pyspark_spark.tables import load
-
-    e = load(spark, SF_DIR, "events")
-    observed, obs = with_observed_metrics(
-        e,
-        n_rows=F.count(F.lit(1)),
-        n_high=F.sum(F.when(F.col("value") > 100, 1).otherwise(0)),
-        max_value=F.max("value"),
-    )
-    # the "existing query": a filter+count action over the observed df
-    n_clicks = observed.filter(F.col("event_type") == "click").count()
-    got = obs.get
-    direct = e.agg(
-        F.count(F.lit(1)).alias("n"),
-        F.sum(F.when(F.col("value") > 100, 1).otherwise(0)).alias("h"),
-        F.max("value").alias("m"),
-    ).collect()[0]
-    assert got["n_rows"] == direct["n"]
-    assert got["n_high"] == direct["h"]
-    assert got["max_value"] == direct["m"]
-    assert n_clicks == e.filter(F.col("event_type") == "click").count()
 
 
 # ------------------------------------------------------------ sketches

@@ -7,7 +7,6 @@ from pyspark.sql import functions as F
 
 from alpaca_pyspark_spark.session import (
     release_scoped_caches,
-    scoped_caches,
     scoped_persist,
 )
 
@@ -28,33 +27,6 @@ def test_scoped_persist_registers_and_release_empties(spark):
     assert not _cache_manager(spark).isEmpty()
     released = release_scoped_caches()
     assert released >= 1
-    assert _cache_manager(spark).isEmpty()
-
-
-def test_scoped_caches_context_manager(spark):
-    release_scoped_caches()
-    spark.catalog.clearCache()
-    with scoped_caches():
-        df = scoped_persist(spark.read.parquet(f"{SF_DIR}/region.parquet"))
-        assert df.count() == 5
-        assert not _cache_manager(spark).isEmpty()
-    assert _cache_manager(spark).isEmpty()
-
-
-def test_scoped_caches_nested_scopes_release_independently(spark):
-    """An inner scoped_caches block must drain only its OWN persists —
-    the enclosing scope's still-live persist survives to its action."""
-    release_scoped_caches()
-    spark.catalog.clearCache()
-    with scoped_caches():
-        outer = scoped_persist(spark.read.parquet(f"{SF_DIR}/nation.parquet"))
-        assert outer.count() == 25
-        with scoped_caches():
-            inner = scoped_persist(spark.read.parquet(f"{SF_DIR}/region.parquet"))
-            assert inner.count() == 5
-        # inner released, outer still cached
-        assert outer.storageLevel.useMemory, "outer persist was drained early"
-        assert not _cache_manager(spark).isEmpty()
     assert _cache_manager(spark).isEmpty()
 
 
@@ -79,26 +51,6 @@ def test_query_boundary_drains_previous_query(spark):
     QUERIES["q31_token_count"](spark, SF_DIR).count()
     assert _cache_manager(spark).isEmpty()
     release_scoped_caches()
-
-
-def test_registered_query_inside_scoped_block_respects_floor(spark):
-    """A registered query's boundary release must NOT drain an
-    enclosing scoped_caches() block's still-live persists (round-5
-    advice: the bare release used to drain the ENTIRE ledger)."""
-    from alpaca_pyspark_spark.queries import QUERIES
-
-    release_scoped_caches()
-    spark.catalog.clearCache()
-    with scoped_caches():
-        outer = scoped_persist(spark.read.parquet(f"{SF_DIR}/nation.parquet"))
-        assert outer.count() == 25
-        # entering a registered query calls release_scoped_caches()
-        # with no mark — it must stop at the scope floor
-        QUERIES["q31_token_count"](spark, SF_DIR).count()
-        assert outer.storageLevel.useMemory, (
-            "query boundary drained the enclosing scope's persist"
-        )
-    assert _cache_manager(spark).isEmpty()
 
 
 def test_streaming_gate_error_path_restores_conf_and_cleans_staging(spark, tmp_path):

@@ -150,48 +150,3 @@ def test_file_format_round_trips(spark, tmp_path):
         got = {(x["event_id"], x["user_id"], x["event_type"], x["value"])
                for x in back.collect()}
         assert got == want, f"{fmt} round trip lost data"
-
-
-def test_zorder_write_narrows_both_dimensions(spark, tmp_path):
-    """Z-order layout: each output file must be narrow in BOTH filter
-    columns, unlike a single-column sort which leaves the second
-    column striped across every file.  Measured directly from the
-    written files' per-file min/max — the stats scan pruning uses."""
-    import glob
-
-    import pyarrow.parquet as pq
-
-    from alpaca_pyspark_spark.operators.zorder import write_zordered
-    from alpaca_pyspark_spark.tables import load
-
-    li = load(spark, SF_DIR, "lineitem").select("l_partkey", "l_suppkey")
-
-    def total_span(path, col):
-        spans = []
-        for f in glob.glob(f"{path}/*.parquet"):
-            t = pq.read_table(f, columns=[col])[col].to_numpy()
-            if len(t):
-                spans.append(int(t.max()) - int(t.min()))
-        return sum(spans)
-
-    zpath = str(tmp_path / "zord")
-    write_zordered(li, zpath, col_a="l_partkey", col_b="l_suppkey", num_files=4)
-    spath = str(tmp_path / "singlesort")
-    (
-        li.repartitionByRange(4, "l_partkey")
-        .sortWithinPartitions("l_partkey")
-        .write.mode("overwrite")
-        .parquet(spath)
-    )
-
-    # the single-column sort is optimal for partkey; z-order trades a
-    # little partkey width for a big win on suppkey
-    z_supp, s_supp = total_span(zpath, "l_suppkey"), total_span(spath, "l_suppkey")
-    assert z_supp < s_supp * 0.7, (z_supp, s_supp)
-    # and both dimensions are genuinely narrowed vs the full domain x4
-    rows = li.agg(
-        F.max("l_partkey").alias("pmax"), F.min("l_partkey").alias("pmin"),
-        F.max("l_suppkey").alias("smax"), F.min("l_suppkey").alias("smin"),
-    ).collect()[0]
-    assert z_supp < (rows["smax"] - rows["smin"]) * 4
-    assert total_span(zpath, "l_partkey") < (rows["pmax"] - rows["pmin"]) * 4

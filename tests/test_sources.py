@@ -139,6 +139,9 @@ def test_validate_options_enum_case_insensitive():
     assert params["adjustment"] == "SPLIT"
     with pytest.raises(ValueError, match="adjustment"):
         validate_options({**opts, "adjustment": "bogus"}, stock_bars_specs())
+    # limit=0 would divide by zero when bar partitions are planned
+    with pytest.raises(ValueError, match="limit"):
+        validate_options({**opts, "limit": "0"}, stock_bars_specs())
 
 
 def test_timeout_retries_options_functional():
@@ -193,6 +196,11 @@ def test_validate_options_start_after_end():
             "start": "2021-02-01T00:00:00", "end": "2021-01-01T00:00:00"}
     with pytest.raises(ValueError, match="after end"):
         validate_options(opts, stock_bars_specs())
+    # a naive bound is UTC, so it compares with an aware one
+    mixed = {**opts, "start": "2021-01-01", "end": "2021-01-02T00:00:00Z"}
+    validate_options(mixed, stock_bars_specs())
+    with pytest.raises(ValueError, match="after end"):
+        validate_options({**mixed, "start": "2021-01-03"}, stock_bars_specs())
 
 
 def test_parse_timeframe_units_and_aliases():
@@ -523,6 +531,11 @@ def test_push_filters_narrows_symbols_and_window():
     r2 = _bars_reader()
     r2.pushFilters([EqualTo(("symbol",), "TSLA")])
     assert r2.partitions() == []
+
+    # a naive start option is UTC and narrows like an aware one
+    r3 = _bars_reader(start="2021-01-01T00:00:00")
+    r3.pushFilters([GreaterThanOrEqual(("time",), "2021-01-01T06:00:00+00:00")])
+    assert min(p.start for p in r3.partitions()).isoformat() == "2021-01-01T06:00:00+00:00"
 
 
 def test_push_filters_never_widens():

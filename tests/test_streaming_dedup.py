@@ -5,7 +5,7 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-from alpaca_pyspark_spark.streaming.dedup import dedup_stream, dedup_stream_fingerprint
+from alpaca_pyspark_spark.streaming.dedup import dedup_stream
 from alpaca_pyspark_spark.tables import load
 
 from .conftest import SF_DIR
@@ -42,44 +42,3 @@ def test_stream_dedup_matches_batch(spark, tmp_path):
     got = spark.sql("SELECT event_id, count(*) AS n FROM stream_dedup GROUP BY 1")
     assert got.filter(F.col("n") > 1).isEmpty()
     assert got.count() == events.count()
-
-
-def test_stream_fingerprint_dedup(spark, tmp_path):
-    """Content-level dedup: documents re-shipped with different ids but
-    identical normalized text collapse to one survivor per
-    fingerprint."""
-    docs = (
-        load(spark, SF_DIR, "documents")
-        .select("doc_id", "text")
-        .withColumn("ts", F.to_timestamp(F.lit("2021-01-01 00:00:00")))
-        .limit(200)
-    )
-    re_shipped = docs.withColumn("doc_id", F.col("doc_id") + 1_000_000)
-    src = str(tmp_path / "doc_stream")
-    docs.write.parquet(src)
-    re_shipped.write.mode("append").parquet(src)
-
-    stream = spark.readStream.schema(docs.schema).parquet(src)
-    deduped = dedup_stream_fingerprint(stream, ts="ts", watermark_delay="1 hour")
-    q = (
-        deduped.writeStream.format("memory")
-        .queryName("stream_fp_dedup")
-        .outputMode("append")
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-    n_fp = (
-        docs.select(
-            F.md5(
-                F.regexp_replace(F.lower(F.trim("text")), r"\s+", " ").cast("binary")
-            )
-        )
-        .distinct()
-        .count()
-    )
-    got = spark.sql("SELECT fingerprint FROM stream_fp_dedup")
-    assert got.count() == n_fp
-    assert got.distinct().count() == n_fp

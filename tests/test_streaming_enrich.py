@@ -1,14 +1,11 @@
-"""Stream-static enrichment + foreachBatch merge sink: the stream side
-must match the batch twin, and a replayed batch must not duplicate."""
+"""Stream-static enrichment: the stream side must match the batch
+twin."""
 
 from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-from alpaca_pyspark_spark.streaming.enrich import (
-    enrich_stream,
-    partitioned_merge_sink,
-)
+from alpaca_pyspark_spark.streaming.enrich import enrich_stream
 from alpaca_pyspark_spark.tables import load
 
 from .conftest import SF_DIR
@@ -45,24 +42,3 @@ def test_stream_static_join_matches_batch(spark, tmp_path):
         for r in enrich_stream(events, dim, on="user_id").collect()
     }
     assert got == want and len(got) > 0
-
-
-def test_foreach_batch_merge_sink_idempotent(spark, tmp_path):
-    df = spark.createDataFrame(
-        [(1, "a", 10.0), (2, "b", 20.0), (3, "a", 30.0)],
-        "id long, part string, v double",
-    )
-    sink = str(tmp_path / "sink")
-    write_batch = partitioned_merge_sink(sink, partition_col="part")
-    write_batch(df, 7)
-    # replay the same batch (restart semantics): same partitions are
-    # REPLACED, not appended
-    write_batch(df, 7)
-    out = spark.read.parquet(sink)
-    assert out.count() == 3
-    assert {r["__batch_id"] for r in out.collect()} == {7}
-    # a later batch touching only partition 'a' leaves 'b' intact
-    df2 = spark.createDataFrame([(9, "a", 90.0)], "id long, part string, v double")
-    write_batch(df2, 8)
-    rows = {(r["id"], r["part"]) for r in spark.read.parquet(sink).collect()}
-    assert rows == {(9, "a"), (2, "b")}
