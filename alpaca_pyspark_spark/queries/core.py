@@ -27,7 +27,6 @@ from ..operators.adjustment import (
 )
 from ..operators.asof import asof_join
 from ..operators.bars import tumbling_bars
-from ..operators.sessionize import session_summary
 from ..operators.topk import top_k_per_group
 from ..tables import load
 
@@ -702,7 +701,7 @@ def q145_streaming_outer_join_executed(spark: SparkSession, sf_dir: str) -> Data
     finalizes the whole outer side.  State stays bounded by
     rate × window either way — the property that matters unbounded.
 
-    Sentinel staging / two-drain watermark finalization / memory sink
+    Sentinel staging / one-drain watermark finalization / memory sink
     all live in ``streaming.gate.run_streaming_gate`` (shared with
     q146/q153/q181 — see that module for why the sentinel filter must
     stay OUT of the streaming plan); only the join is query-specific."""
@@ -711,7 +710,7 @@ def q145_streaming_outer_join_executed(spark: SparkSession, sf_dir: str) -> Data
 
     e = load(spark, sf_dir, "events").select("event_id", "ts", "user_id", "event_type")
     sentinel = sentinel_row(
-        spark, sf_dir, lambda ts: (-1, ts, -1),
+        spark, lambda ts: (-1, ts, -1),
         "event_id long, ts timestamp_ntz, user_id long",
     )
     clicks = e.filter(F.col("event_type") == "click").drop("event_type")
@@ -769,19 +768,19 @@ def q146_streaming_hourly_windows_executed(spark: SparkSession, sf_dir: str) -> 
     stream length).  The gate helper's far-future sentinel advances
     the watermark past every real hour; its own (still-open) window
     never emits and the post-sink filter is belt-and-suspenders."""
+    from ..streaming import watermarked
     from ..streaming.gate import run_streaming_gate, sentinel_row
 
     e = load(spark, sf_dir, "events").select("ts", "event_type")
     sentinel = sentinel_row(
-        spark, sf_dir, lambda ts: (ts, "__sentinel"),
+        spark, lambda ts: (ts, "__sentinel"),
         "ts timestamp_ntz, event_type string",
     )
     sunk = run_streaming_gate(
         spark,
         [(e, sentinel)],
         lambda stream: (
-            stream.withColumn("ts", F.col("ts").cast("timestamp"))
-            .withWatermark("ts", "1 hour")
+            watermarked(stream, "ts", "1 hour")
             .groupBy(F.window("ts", "1 hour").alias("w"), "event_type")
             .agg(F.count(F.lit(1)).alias("n"))
         ),
@@ -828,7 +827,7 @@ def q181_streaming_bars_executed(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     e = load(spark, sf_dir, "events").select("user_id", "ts", "value")
     sentinel = sentinel_row(
-        spark, sf_dir, lambda ts: (-1, ts, 0.0),
+        spark, lambda ts: (-1, ts, 0.0),
         "user_id bigint, ts timestamp_ntz, value double",
     )
     sunk = run_streaming_gate(
@@ -891,7 +890,7 @@ def q153_stateful_sessions_executed(spark: SparkSession, sf_dir: str) -> DataFra
 
     e = load(spark, sf_dir, "events").select("user_id", "ts", "event_type")
     sentinel = sentinel_row(
-        spark, sf_dir, lambda ts: (-1, ts, "view"),
+        spark, lambda ts: (-1, ts, "view"),
         "user_id long, ts timestamp_ntz, event_type string",
     )
     sunk = run_streaming_gate(

@@ -27,9 +27,9 @@ from __future__ import annotations
 import ast
 import re
 import warnings
-from dataclasses import dataclass, field
+from dataclasses import dataclass
 from datetime import datetime, timezone
-from typing import Any, Callable
+from typing import Any
 
 DEFAULT_ENDPOINT = "https://data.alpaca.markets/v2"
 CRYPTO_ENDPOINT = "https://data.alpaca.markets/v1beta3"
@@ -58,7 +58,6 @@ class ParamSpec:
     enum: tuple[str, ...] | None = None
     enum_multi: bool = False  # comma-separated list of enum values
     pattern: str | None = None
-    validator: Callable[[str], None] | None = None
 
     def validate(self, value: str) -> None:
         if self.enum is not None:
@@ -74,8 +73,6 @@ class ParamSpec:
                 f"Invalid value {value!r} for option {self.name!r}; "
                 f"must match {self.pattern}"
             )
-        if self.validator is not None:
-            self.validator(value)
 
 
 @dataclass(frozen=True)

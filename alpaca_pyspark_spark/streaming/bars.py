@@ -18,9 +18,9 @@ rolls them up to coarser resolutions with
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 
 from ..operators.bars import finalize_bars, tumbling_bars_cents
+from . import watermarked
 
 
 def streaming_bars(
@@ -40,12 +40,8 @@ def streaming_bars(
     state.  Use append output mode downstream to get exactly-once
     finalized bars into the sink.
     """
-    # Watermarks only accept TIMESTAMP (LTZ); NTZ event time is cast —
-    # wall-clock-preserving under the engine's UTC session timezone.
-    if dict(ticks.dtypes).get(ts) == "timestamp_ntz":
-        ticks = ticks.withColumn(ts, F.col(ts).cast("timestamp"))
     bars = tumbling_bars_cents(
-        ticks.withWatermark(ts, watermark_delay),
+        watermarked(ticks, ts, watermark_delay),
         key=key,
         ts=ts,
         price=price,

@@ -10,9 +10,6 @@ delay.  State per key is evicted once the watermark passes it —
 bounded memory at any stream rate, the property that matters at
 100 TB/day.  (Plain ``dropDuplicates`` on a stream never evicts:
 unbounded state, do not use.)
-
-Event-time column must be among the watermarked columns' lineage; the
-operator casts NTZ event time exactly like the other streaming ops.
 """
 
 from __future__ import annotations
@@ -20,13 +17,8 @@ from __future__ import annotations
 from collections.abc import Sequence
 
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 
-
-def _with_watermark(df: DataFrame, ts: str, delay: str) -> DataFrame:
-    if dict(df.dtypes).get(ts) == "timestamp_ntz":
-        df = df.withColumn(ts, F.col(ts).cast("timestamp"))
-    return df.withWatermark(ts, delay)
+from . import watermarked
 
 
 def dedup_stream(
@@ -37,6 +29,6 @@ def dedup_stream(
     watermark_delay: str = "1 hour",
 ) -> DataFrame:
     """First-arrival-wins key dedup with watermark-bounded state."""
-    return _with_watermark(events, ts, watermark_delay).dropDuplicatesWithinWatermark(
+    return watermarked(events, ts, watermark_delay).dropDuplicatesWithinWatermark(
         list(keys)
     )

@@ -17,12 +17,12 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from . import watermarked
+
 
 def _prep(df: DataFrame, ts: str, delay: str, prefix: str) -> DataFrame:
-    if dict(df.dtypes).get(ts) == "timestamp_ntz":
-        df = df.withColumn(ts, F.col(ts).cast("timestamp"))
     renamed = df.select([F.col(c).alias(f"{prefix}{c}") for c in df.columns])
-    return renamed.withWatermark(f"{prefix}{ts}", delay)
+    return watermarked(renamed, f"{prefix}{ts}", delay)
 
 
 def interval_join_stream(

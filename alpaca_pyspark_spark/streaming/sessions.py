@@ -17,6 +17,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from . import watermarked
+
 
 def streaming_session_summary(
     events: DataFrame,
@@ -27,12 +29,8 @@ def streaming_session_summary(
     watermark_delay: str = "1 hour",
 ) -> DataFrame:
     """Per-(key, session) rollup over a streaming DataFrame."""
-    # Watermarks only accept TIMESTAMP (LTZ); NTZ event time is cast —
-    # wall-clock-preserving under the engine's UTC session timezone.
-    if dict(events.dtypes).get(ts) == "timestamp_ntz":
-        events = events.withColumn(ts, F.col(ts).cast("timestamp"))
     return (
-        events.withWatermark(ts, watermark_delay)
+        watermarked(events, ts, watermark_delay)
         .groupBy(F.col(key), F.session_window(F.col(ts), gap).alias("sw"))
         .agg(F.count(F.lit(1)).alias("n_events"))
         .select(

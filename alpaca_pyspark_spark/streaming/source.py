@@ -8,9 +8,10 @@ cursor timestamps, so ``readBetweenOffsets`` replays any slice exactly
 (deterministic re-fetch → at-least-once from the API, exactly-once
 into the sink with checkpointing).
 
-Options: the stock-trades options plus ``poll_interval`` seconds of
-event time per micro-batch (default 60).  A bounded stream (``end`` in
-the past) simply stops producing rows once the cursor reaches it.
+Options: the stock-trades options plus ``poll_interval``, a positive
+number of seconds of event time per micro-batch (default 60).  A
+bounded stream (``end`` in the past) simply stops producing rows once
+the cursor reaches it.
 """
 
 from __future__ import annotations
@@ -117,8 +118,9 @@ class StockTradesStreamDataSource(DataSource):
 
     def __init__(self, options: dict[str, Any]):
         super().__init__(options)
+        # positive: a zero interval would never move the cursor
         specs = stock_trades_specs() + [
-            ParamSpec("poll_interval", pattern=r"^\d+(\.\d+)?$")
+            ParamSpec("poll_interval", pattern=r"^(?=.*[1-9])\d+(\.\d+)?$")
         ]
         self._config, self._params = validate_options(dict(options), specs)
 

@@ -31,6 +31,8 @@ from pyspark.sql.types import (
     TimestampType,
 )
 
+from . import watermarked
+
 _OUTPUT = StructType(
     [
         StructField("key", LongType()),
@@ -71,9 +73,10 @@ def event_terminated_sessions(
     """
     marked = events.select(
         F.col(key).alias("key"),
-        F.col(ts).cast("timestamp").alias("ts"),
+        F.col(ts).alias("ts"),
         end_marker.cast("boolean").alias("is_end"),
-    ).withWatermark("ts", watermark_delay)
+    )
+    marked = watermarked(marked, "ts", watermark_delay)
 
     def fn(
         k: Any, pdfs: Iterator[pd.DataFrame], state: GroupState

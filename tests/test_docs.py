@@ -150,3 +150,40 @@ def test_engine_defs_have_a_caller():
         if name not in named and name not in reference_impls
     )
     assert not unreached, unreached
+
+
+def test_no_unused_imports():
+    """Every name the engine or the tests import is used in its file.
+    Names inside string annotations (``Iterator["pd.DataFrame"]``)
+    count as used; ``from __future__`` imports and imports marked
+    ``# noqa: F401`` (kept for their side effect) are exempt."""
+    import ast
+
+    def names(tree):
+        return {n.id for n in ast.walk(tree) if isinstance(n, ast.Name)}
+
+    unused = []
+    for p in [
+        *(REPO / "alpaca_pyspark_spark").rglob("*.py"),
+        *(REPO / "tests").rglob("*.py"),
+    ]:
+        text = p.read_text()
+        lines = text.splitlines()
+        tree = ast.parse(text)
+        used = names(tree)
+        for node in ast.walk(tree):
+            for attr in ("annotation", "returns"):
+                ann = getattr(node, attr, None)
+                for c in ast.walk(ann) if ann else ():
+                    if isinstance(c, ast.Constant) and isinstance(c.value, str):
+                        used |= names(ast.parse(c.value, mode="eval"))
+        unused += [
+            (str(p.relative_to(REPO)), n.lineno, name)
+            for n in ast.walk(tree)
+            if isinstance(n, (ast.Import, ast.ImportFrom))
+            and getattr(n, "module", None) != "__future__"
+            and "noqa: F401" not in lines[n.lineno - 1]
+            for name in (a.asname or a.name.split(".")[0] for a in n.names)
+            if name not in used
+        ]
+    assert not unused, sorted(unused)

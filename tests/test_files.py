@@ -5,7 +5,6 @@ from __future__ import annotations
 
 import glob
 
-from pyspark.sql import functions as F
 from pyspark.sql.types import (
     LongType,
     StringType,

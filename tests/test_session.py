@@ -3,8 +3,6 @@ boundary that drains it — the round-5 persist-discipline machinery."""
 
 from __future__ import annotations
 
-from pyspark.sql import functions as F
-
 from alpaca_pyspark_spark.session import (
     release_scoped_caches,
     scoped_persist,
@@ -78,61 +76,6 @@ def test_streaming_gate_error_path_restores_conf_and_cleans_staging(spark, tmp_p
 
     leaked = glob.glob(f"{tempfile.gettempdir()}/{marker}_*")
     assert leaked == [], f"staged dirs leaked on error path: {leaked}"
-
-
-def test_events_fingerprint_uses_nanosecond_mtime(tmp_path):
-    """A same-second rewrite with identical names/sizes must change
-    the fingerprint (round-5 advice: whole-second getmtime could
-    return a stale cached max — the watermark-withheld-tail hazard)."""
-    import os
-
-    from alpaca_pyspark_spark.streaming.gate import _events_fingerprint
-
-    p = tmp_path / "events.parquet"
-    p.write_bytes(b"x" * 64)
-    os.utime(p, ns=(1_700_000_000_000_000_000, 1_700_000_000_000_000_000))
-    fp1 = _events_fingerprint(str(tmp_path))
-    # rewrite within the same wall-clock second: +1 microsecond
-    os.utime(p, ns=(1_700_000_000_000_000_000, 1_700_000_000_000_001_000))
-    fp2 = _events_fingerprint(str(tmp_path))
-    assert fp1 != fp2, "same-second rewrite produced an identical fingerprint"
-
-
-def test_streaming_gate_max_ts_memoized(spark):
-    """events_max_ts: one scan per (session, sf_dir) — N streaming
-    queries must not pay N full event scans for their sentinels."""
-    from alpaca_pyspark_spark.streaming import gate
-
-    key = (SF_DIR, gate._events_fingerprint(SF_DIR))
-    gate._MAX_TS_CACHE.pop(key, None)
-    t1 = gate.events_max_ts(spark, SF_DIR)
-    assert key in gate._MAX_TS_CACHE
-    # poison the cached entry; a second call must NOT rescan
-    sentinel = object()
-    gate._MAX_TS_CACHE[key] = sentinel
-    assert gate.events_max_ts(spark, SF_DIR) is sentinel
-    gate._MAX_TS_CACHE[key] = t1
-    # the key carries an on-disk fingerprint: a REWRITTEN events table
-    # (different file listing) must miss the cache and rescan — a stale
-    # max would stall the watermark on the new tail
-    stale_only = {k: v for k, v in gate._MAX_TS_CACHE.items() if k[0] == SF_DIR}
-    assert all(k == key for k in stale_only), "one live key per sf_dir expected"
-
-
-def test_streaming_gate_sentinel_shift(spark):
-    """The second-drain sentinel moves every timestamp column exactly
-    +100 days so the watermark strictly advances past the first."""
-    import datetime
-
-    from alpaca_pyspark_spark.streaming.gate import _shift_ts_100d
-
-    base = datetime.datetime(2024, 1, 1, 12, 0, 0)
-    df = spark.createDataFrame(
-        [(-1, base, 0.0)], "user_id long, ts timestamp_ntz, value double"
-    )
-    row = _shift_ts_100d(df).collect()[0]
-    assert row["ts"] == base + datetime.timedelta(days=100)
-    assert row["user_id"] == -1 and row["value"] == 0.0
 
 
 def test_query_boundary_applies_engine_confs(spark):

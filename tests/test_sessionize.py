@@ -11,7 +11,6 @@ import random
 from datetime import datetime, timedelta
 
 import pytest
-from pyspark.sql import functions as F
 
 from alpaca_pyspark_spark.operators import dispatch
 from alpaca_pyspark_spark.operators import sessionize as sz

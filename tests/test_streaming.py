@@ -5,7 +5,6 @@ mock REST endpoint end-to-end through readStream."""
 from __future__ import annotations
 
 import pytest
-from pyspark.sql import functions as F
 
 from alpaca_pyspark_spark.operators.sessionize import session_summary
 from alpaca_pyspark_spark.streaming.sessions import streaming_session_summary
@@ -86,6 +85,24 @@ def test_trades_stream_source(spark, mock_api):  # noqa: F811
     assert {r["symbol"] for r in rows} == {"AAPL"}
     assert rows[0]["price"] == 131.0
     assert {r["conditions"] for r in rows} == {"", "@,I"}
+
+
+def test_stream_rejects_zero_poll_interval():
+    """A zero poll_interval would return the same cursor from every
+    read, so a bounded stream never reaches its end: it must fail
+    validation instead.  Float-formatted positive values stay valid."""
+    from alpaca_pyspark_spark.streaming.source import StockTradesStreamDataSource
+
+    opts = {
+        **CREDS,
+        "symbols": "AAPL",
+        "start": "2021-01-01T00:00:00+00:00",
+        "end": "2021-01-02T00:00:00+00:00",
+    }
+    StockTradesStreamDataSource({**opts, "poll_interval": "43200.0"})
+    for poll in ("0", "0.0"):
+        with pytest.raises(ValueError, match="poll_interval"):
+            StockTradesStreamDataSource({**opts, "poll_interval": poll})
 
 
 def test_stream_slices_are_half_open(monkeypatch):
