@@ -1,10 +1,14 @@
-"""The driver's pandas canonicalization, replicated verbatim in ONE
-place so the local gates (tests/conftest.py's per-query guard and
-tools/driver_mimic.py's full-registry sweep) can never diverge from
-each other or from the driver.
+"""The driver's oracle gate, in ONE place: the DuckDB oracle
+connection (``oracle_connection``), the driver's pandas
+canonicalization (``driver_canon_hash``) and the compare built on them
+(``oracle_check``).  Tier-1 (``tests/test_queries_oracle.py``) and the
+full-registry and spot-check sweeps (``tools/driver_mimic.py``) all
+call ``oracle_check``, so no local gate can diverge from another or
+from the driver.
 
-The driver hashes every query result as: pandas DataFrame →
-``sort_values`` over all columns (sorted by name) →
+The driver checks each oracle-paired query by row count, column names
+and a hash, with no tolerance.  It hashes every result as: pandas
+DataFrame → ``sort_values`` over all columns (sorted by name) →
 ``hash_pandas_object`` — with NO exception handling.  Outputs whose
 cells pandas cannot factorize/hash (``bytearray`` from BinaryType,
 ``list`` from ArrayType, ``Row``/tuple from StructType, dicts from
@@ -15,6 +19,7 @@ q89/q114 (arrays) and round-5 q148 (BinaryType) failure class.
 
 from __future__ import annotations
 
+import os
 from typing import Iterable, Sequence
 
 #: cell types the driver's sort/hash path cannot handle; rejected
@@ -111,3 +116,44 @@ def driver_canon_hash(rows: Iterable[Sequence], cols: Sequence[str]) -> int:
     pdf = pd.DataFrame(list(rows), columns=cols)
     pdf = pdf.sort_values(cols, ignore_index=True)
     return int(pd.util.hash_pandas_object(pdf, index=False).sum())
+
+
+def oracle_connection(sf_dir: str):
+    """One DuckDB connection with a view per table of ``sf_dir``.  A
+    table is a single parquet file (driver fixtures) or a directory of
+    part files (Spark-written replica and stress datasets)."""
+    import duckdb
+
+    from .tables import TABLE_NAMES
+
+    con = duckdb.connect()
+    for t in TABLE_NAMES:
+        path = f"{sf_dir}/{t}.parquet"
+        src = f"{path}/*.parquet" if os.path.isdir(path) else path
+        con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{src}'")
+    return con
+
+
+def oracle_check(df, con, sql: str) -> dict:
+    """The driver's compare of a Spark DataFrame against ``sql`` run on
+    ``con``: output types, sorted column names, row count and
+    ``driver_canon_hash`` on both sides — no rounding, no tolerance.
+    A type or cell the driver cannot hash raises AssertionError; the
+    record's ``hash_match`` is the driver's verdict."""
+    reject_hash_unstable_schema(df.schema)
+    exp = con.sql(sql)
+    exp_cols = [d[0] for d in exp.description]
+    cols = sorted(df.columns)
+    if sorted(exp_cols) != cols:
+        return {"rows_match": None, "schema_match": False,
+                "hash_match": False, "spark_rows": None,
+                "oracle_rows": None, "err": "schema_mismatch"}
+    got = [tuple(r[c] for c in cols) for r in df.collect()]
+    reject_unhashable_cells(got, cols)
+    idx = [exp_cols.index(c) for c in cols]
+    want = [tuple(r[i] for i in idx) for r in exp.fetchall()]
+    rows_match = len(got) == len(want)
+    return {"rows_match": rows_match, "schema_match": True,
+            "hash_match": rows_match
+            and driver_canon_hash(got, cols) == driver_canon_hash(want, cols),
+            "spark_rows": len(got), "oracle_rows": len(want), "err": None}

@@ -196,14 +196,11 @@ class PaginatedRestReader(DataSourceReader):
         params: dict[str, str],
         table: RecordTable,
         path: str,
-        *,
-        adaptive_timeframe: bool = False,
     ):
         self.config = config
         self.params = params
         self.table = table
         self.path = path
-        self.adaptive_timeframe = adaptive_timeframe
 
     def pushFilters(self, filters):
         """Catalyst filter pushdown (Spark 4.1 Python DataSource API):
@@ -242,7 +239,7 @@ class PaginatedRestReader(DataSourceReader):
 
         for f in filters:
             col = f.attribute[0] if len(getattr(f, "attribute", ())) == 1 else None
-            if col == self.table.symbol_field:
+            if col == "symbol":
                 keep = None
                 if isinstance(f, EqualTo) and isinstance(f.value, str):
                     keep = {f.value}
@@ -277,8 +274,12 @@ class PaginatedRestReader(DataSourceReader):
         end = parse_iso_datetime(self.params["end"], "end")
         if start >= end:
             return []  # pushdown narrowed the window to nothing
+        # bar sources require ``timeframe``; their slice count is
+        # volume-adaptive, every other source slices by day
         timeframe = (
-            parse_timeframe(self.params["timeframe"]) if self.adaptive_timeframe else None
+            parse_timeframe(self.params["timeframe"])
+            if "timeframe" in self.params
+            else None
         )
         return plan_partitions(
             symbols,
@@ -322,7 +323,6 @@ class _BaseAlpacaDataSource(DataSource):
     SPECS: staticmethod
     TABLE: RecordTable
     PATH: str
-    ADAPTIVE = False
     REQUIRE_AUTH = True
     DEFAULT_ENDPOINT = DEFAULT_ENDPOINT
     #: path template params pulled OUT of the query string, with
@@ -354,7 +354,6 @@ class _BaseAlpacaDataSource(DataSource):
             self._params,
             type(self).TABLE,
             self._path,
-            adaptive_timeframe=type(self).ADAPTIVE,
         )
 
 
@@ -362,7 +361,6 @@ class StockBarsDataSource(_BaseAlpacaDataSource):
     SPECS = staticmethod(stock_bars_specs)
     TABLE = BARS_TABLE
     PATH = "stocks/bars"
-    ADAPTIVE = True
 
     @classmethod
     def name(cls) -> str:
@@ -383,7 +381,6 @@ class OptionBarsDataSource(_BaseAlpacaDataSource):
     SPECS = staticmethod(option_bars_specs)
     TABLE = BARS_TABLE
     PATH = "options/bars"
-    ADAPTIVE = True
 
     @classmethod
     def name(cls) -> str:
@@ -410,7 +407,6 @@ class CryptoBarsDataSource(_BaseAlpacaDataSource):
     TABLE = CRYPTO_BARS_TABLE
     PATH = "crypto/{loc}/bars"
     PATH_PARAMS = {"loc": "us"}
-    ADAPTIVE = True
     REQUIRE_AUTH = False
     DEFAULT_ENDPOINT = CRYPTO_ENDPOINT
 

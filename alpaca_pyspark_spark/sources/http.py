@@ -104,7 +104,6 @@ def paginate(
     params: dict[str, str],
     *,
     rate_limit_delay: float = 0.0,
-    token_key: str = "next_page_token",
 ) -> Iterator[dict[str, Any]]:
     """Lazily yield pages, following ``next_page_token`` until absent;
     always fetches at least one page."""
@@ -115,7 +114,7 @@ def paginate(
             page_params["page_token"] = token
         page = fetcher(page_params)
         yield page
-        token = page.get(token_key)
+        token = page.get("next_page_token")
         if not token:
             return
         if rate_limit_delay > 0:

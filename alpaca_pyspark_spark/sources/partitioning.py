@@ -77,12 +77,11 @@ def adaptive_slice_count(
     timeframe: timedelta,
     *,
     limit: int = DEFAULT_LIMIT,
-    pages_per_partition: int = PAGES_PER_PARTITION,
 ) -> int:
     """The reference's volume model (bars.py:189-197): expected rows =
     range/timeframe; one slice per limit×pages expected rows."""
     expected_rows = total_range / timeframe
-    return max(1, math.ceil(expected_rows / (limit * pages_per_partition)))
+    return max(1, math.ceil(expected_rows / (limit * PAGES_PER_PARTITION)))
 
 
 def plan_partitions(

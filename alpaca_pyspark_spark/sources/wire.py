@@ -72,12 +72,11 @@ TS_UTC_US = pa.timestamp("us", tz="UTC")
 class RecordTable:
     """A source's wire schema: symbol column + field specs."""
 
-    def __init__(self, data_key: str, fields: list[FieldSpec], *, symbol_field: str = "symbol"):
+    def __init__(self, data_key: str, fields: list[FieldSpec]):
         self.data_key = data_key
         self.fields = fields
-        self.symbol_field = symbol_field
         self.arrow_schema = pa.schema(
-            [pa.field(symbol_field, pa.string())]
+            [pa.field("symbol", pa.string())]
             + [pa.field(f.name, f.arrow_type, nullable=True) for f in fields]
         )
 
@@ -91,7 +90,7 @@ class RecordTable:
             pa.int64(): "BIGINT",
             TS_UTC_US: "TIMESTAMP",
         }
-        cols = [f"{self.symbol_field} STRING"] + [
+        cols = ["symbol STRING"] + [
             f"{f.name} {mapping[f.arrow_type]}" for f in self.fields
         ]
         return ", ".join(cols)

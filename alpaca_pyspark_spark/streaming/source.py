@@ -17,7 +17,7 @@ the cursor reaches it.
 from __future__ import annotations
 
 from datetime import timedelta
-from typing import Any
+from typing import Any, Iterator
 
 from pyspark.sql.datasource import (
     DataSource,
@@ -105,7 +105,7 @@ class TradesStreamReader(SimpleDataSourceStreamReader):
         hi = min(lo + self.poll, self.end_ts)
         return iter(self._fetch_rows(lo, hi)), {"cursor": hi.isoformat()}
 
-    def readBetweenOffsets(self, start: dict, end: dict) -> list[tuple]:
+    def readBetweenOffsets(self, start: dict, end: dict) -> Iterator[tuple]:
         lo = parse_iso_datetime(start["cursor"], "cursor")
         hi = parse_iso_datetime(end["cursor"], "cursor")
         if lo >= hi:

@@ -19,6 +19,7 @@ disclosed in ``BENCH_DETAIL.json``.
 
 from __future__ import annotations
 
+import gc
 import json
 import os
 import sys
@@ -40,34 +41,33 @@ from alpaca_pyspark_spark.session import release_scoped_caches  # noqa: E402
 from alpaca_pyspark_spark.session import get_spark  # noqa: E402
 
 
-def main() -> None:
-    sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    sf = sf_dir.rstrip("/").rsplit("sf", 1)[-1]
-    spark = get_spark("alpaca-pyspark-spark-bench")
-    spark.sparkContext.setLogLevel("ERROR")
-
-    # Warm up the JVM/scan paths once (session init, parquet footer
-    # reads, codegen of trivial plans) so per-query timings measure the
-    # queries, not first-touch costs.
+def warm_tables(spark, sf_dir: str) -> None:
+    """Warm up the JVM/scan paths once (session init, parquet footer
+    reads, codegen of trivial plans) so per-query timings measure the
+    queries, not first-touch costs."""
     from alpaca_pyspark_spark.tables import TABLE_NAMES, load
 
     for name in TABLE_NAMES:
         load(spark, sf_dir, name).limit(1).count()
 
-    timings: dict[str, float] = {}
-    retimed: list[str] = []
-    total = 0.0
-    for qid, fn in sorted(QUERIES.items()):
-        # Steady-state timing: execute once untimed to warm codegen/JIT
-        # (generated-class cache, C2 compilation, OS page cache) — a
-        # fixed per-JVM cost that amortizes to zero on a long-lived
-        # cluster — then clear all caches so the timed run re-executes
-        # the ENTIRE plan (scan, shuffle, agg; persisted intermediates
-        # are keyed by logical plan and were dropped, so they rebuild).
-        spark.catalog.clearCache()
-        tw0 = time.perf_counter()
-        force_evaluate(fn(spark, sf_dir))
-        warm = time.perf_counter() - tw0
+
+def time_query(spark, qid: str, sf_dir: str):
+    """One query under the timing protocol of the module docstring.
+    Returns ``(warm_s, seconds, rows, retime)``; ``retime`` is None or
+    the ``{"qid", "first", "retime"}`` record BENCH_DETAIL lists."""
+    fn = QUERIES[qid]
+    # Steady-state timing: execute once untimed to warm codegen/JIT
+    # (generated-class cache, C2 compilation, OS page cache) — a
+    # fixed per-JVM cost that amortizes to zero on a long-lived
+    # cluster — then clear all caches so the timed run re-executes
+    # the ENTIRE plan (scan, shuffle, agg; persisted intermediates
+    # are keyed by logical plan and were dropped, so they rebuild).
+    spark.catalog.clearCache()
+    tw0 = time.perf_counter()
+    force_evaluate(fn(spark, sf_dir))
+    warm = time.perf_counter() - tw0
+
+    def timed():
         # drain the operator cache ledger (scoped_persist) then clear
         # whatever else is cached so the timed run re-executes the
         # ENTIRE plan from the scans
@@ -77,37 +77,46 @@ def main() -> None:
         # reclaim the previous queries' broadcasts/accumulators — 138
         # queries in one JVM otherwise accumulate heap pressure that
         # shows up as multi-x noise on individual timings
-        import gc
-
         gc.collect()
         t0 = time.perf_counter()
-        df = fn(spark, sf_dir)
-        n = force_evaluate(df)
+        n = force_evaluate(fn(spark, sf_dir))
         dt = time.perf_counter() - t0
         release_scoped_caches()  # query boundary: operator persists released
-        del df
-        # Transient-noise guard: the warm run pays JIT/codegen on top of
-        # the same plan, so timed >> warm is a contradiction that only
-        # long-JVM noise (a GC pause, a background compile) explains —
-        # measured repeatedly across rounds (q99 r7, q21/q169 r8-r9,
-        # each A/B-disproved at steady state).  Retime ONCE and report
-        # the RETIME (a fixed second measurement, not min-of-two — a
-        # one-sided min under a self-chosen trigger would bias the
-        # reported timings downward; ADVICE r9); both measurements are
-        # disclosed per retimed qid in BENCH_DETAIL so the spread is
-        # auditable.
-        if dt > max(1.5 * warm, warm + 0.75):
-            release_scoped_caches()
-            spark.catalog.clearCache()
-            gc.collect()
-            t0 = time.perf_counter()
-            df = fn(spark, sf_dir)
-            n = force_evaluate(df)
-            dt2 = time.perf_counter() - t0
-            release_scoped_caches()
-            del df
-            retimed.append({"qid": qid, "first": round(dt, 3), "retime": round(dt2, 3)})
-            dt = dt2
+        return dt, n
+
+    dt, n = timed()
+    # Transient-noise guard: the warm run pays JIT/codegen on top of
+    # the same plan, so timed >> warm is a contradiction that only
+    # long-JVM noise (a GC pause, a background compile) explains —
+    # measured repeatedly across rounds (q99 r7, q21/q169 r8-r9,
+    # each A/B-disproved at steady state).  Retime ONCE and report
+    # the RETIME (a fixed second measurement, not min-of-two — a
+    # one-sided min under a self-chosen trigger would bias the
+    # reported timings downward; ADVICE r9); both measurements are
+    # disclosed per retimed qid in BENCH_DETAIL so the spread is
+    # auditable.
+    retime = None
+    if dt > max(1.5 * warm, warm + 0.75):
+        dt2, n = timed()
+        retime = {"qid": qid, "first": round(dt, 3), "retime": round(dt2, 3)}
+        dt = dt2
+    return warm, dt, n, retime
+
+
+def main() -> None:
+    sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+    sf = sf_dir.rstrip("/").rsplit("sf", 1)[-1]
+    spark = get_spark("alpaca-pyspark-spark-bench")
+    spark.sparkContext.setLogLevel("ERROR")
+    warm_tables(spark, sf_dir)
+
+    timings: dict[str, float] = {}
+    retimed: list[dict] = []
+    total = 0.0
+    for qid in sorted(QUERIES):
+        _, dt, n, retime = time_query(spark, qid, sf_dir)
+        if retime is not None:
+            retimed.append(retime)
         timings[qid] = round(dt, 3)
         total += dt
         print(f"# {qid}: {n} rows in {dt:.3f}s", file=sys.stderr)
@@ -121,10 +130,6 @@ def main() -> None:
         "unit": "sec",
         "n_queries": len(timings),
         "queries": timings,
-        # timing protocol: warm run, then one timed run; a timed run
-        # that contradicts its own warm run (>max(1.5x, +0.75s)) is
-        # retimed once and the RETIME reported — both measurements are
-        # listed per qid so the noise guard is auditable, not silent
         "retimed": retimed,
         "sf": float(sf) if sf.replace(".", "").isdigit() else sf,
     }

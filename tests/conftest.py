@@ -1,21 +1,17 @@
-"""Shared fixtures: one SparkSession per test session, DuckDB oracle
-harness mirroring the driver's compare (row count + schema + order-
-insensitive value comparison)."""
+"""Shared fixtures: one SparkSession per test session and the DuckDB
+oracle connection of ``canon.oracle_connection`` (the compare itself
+is ``canon.oracle_check``, shared with ``tools/driver_mimic.py``)."""
 
 from __future__ import annotations
 
-import math
 import os
 
-import duckdb
 import pytest
 
+from alpaca_pyspark_spark.canon import oracle_connection
 from alpaca_pyspark_spark.session import get_spark
 
 SF_DIR = os.environ.get("SPARK_GRAFT_TEST_SF_DIR", "/root/testdata/sf0.001")
-TABLES = (
-    "region nation customer supplier part orders lineitem events documents embeddings"
-).split()
 
 
 @pytest.fixture(scope="session")
@@ -49,39 +45,19 @@ def assert_no_cache_residue(spark):
 
 @pytest.fixture(scope="session")
 def oracle():
-    con = duckdb.connect()
-    for t in TABLES:
-        con.execute(
-            f"CREATE VIEW {t} AS SELECT * FROM '{SF_DIR}/{t}.parquet'"
-        )
+    con = oracle_connection(SF_DIR)
     yield con
     con.close()
 
 
-def _norm_cell(v):
-    if v is None:
-        return None
-    if isinstance(v, float):
-        if math.isnan(v):
-            return "NaN"
-        # collapse ulp-level drift that survives explicit round()s
-        return round(v, 9)
-    return v
-
-
 def assert_driver_canonicalizable(rows, cols):
-    """Mirror the driver's pandas canonicalization (sort_values +
-    hash_pandas_object) over already-collected rows.  Any top-level
-    array/struct output cell makes the driver raise ``TypeError:
-    unhashable type`` — the failure class that made q89/q114
-    driver-red in round 3 (arrays) and q148 in round 5 (BinaryType →
-    bytearray).  The round-5 version of this guard swallowed the
-    sort's TypeError, which is exactly the exception the real driver
-    does NOT catch — so it passed q148.  Shared implementation in
-    ``alpaca_pyspark_spark.canon`` (driver_mimic uses the same code),
-    which rejects container cells with the offending column named and
-    then runs the driver's exact sort+hash with no exception
-    handling."""
+    """Run the driver's pandas canonicalization (``canon``: container
+    cells rejected with the column named, then the exact sort+hash
+    with no exception handling) over already-collected rows — for
+    outputs with no oracle, which ``canon.oracle_check`` never sees.
+    Any top-level array/struct/binary cell makes the driver raise
+    ``TypeError: unhashable type`` (q89/q114 in round 3, q148 in
+    round 5)."""
     from alpaca_pyspark_spark.canon import (
         driver_canon_hash,
         reject_unhashable_cells,
@@ -91,28 +67,3 @@ def assert_driver_canonicalizable(rows, cols):
     reject_unhashable_cells(rows, cols)
     driver_canon_hash(rows, cols)
 
-
-def assert_df_matches_oracle(df, con, sql, *, check_values=True):
-    """Order-insensitive comparison of a Spark DataFrame against a
-    DuckDB result, the way the driver does it (sort columns by name,
-    then compare multisets of rows)."""
-    from alpaca_pyspark_spark.canon import reject_hash_unstable_schema
-
-    reject_hash_unstable_schema(df.schema)
-    expected = con.sql(sql)
-    exp_cols = [d[0] for d in expected.description]
-    got_cols = df.columns
-    assert sorted(got_cols) == sorted(exp_cols), (
-        f"column mismatch: spark={sorted(got_cols)} oracle={sorted(exp_cols)}"
-    )
-    cols = sorted(got_cols)
-    got_rows = [tuple(_norm_cell(r[c]) for c in cols) for r in df.collect()]
-    assert_driver_canonicalizable(got_rows, cols)
-    exp_raw = expected.fetchall()
-    idx = [exp_cols.index(c) for c in cols]
-    exp_rows = [tuple(_norm_cell(r[i]) for i in idx) for r in exp_raw]
-    assert len(got_rows) == len(exp_rows), (
-        f"row count mismatch: spark={len(got_rows)} oracle={len(exp_rows)}"
-    )
-    if check_values:
-        assert sorted(got_rows, key=repr) == sorted(exp_rows, key=repr)

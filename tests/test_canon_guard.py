@@ -79,10 +79,28 @@ def test_canon_hash_detects_value_difference():
 
 
 def test_driver_mimic_uses_shared_canon():
-    """driver_mimic must import the shared implementation, not carry
-    its own copy that can drift from the driver again."""
+    """driver_mimic must import the shared compare, not carry its own
+    copy that can drift from the driver again."""
     from pathlib import Path
 
     src = (Path(__file__).resolve().parents[1] / "tools" / "driver_mimic.py").read_text()
-    assert "from alpaca_pyspark_spark.canon import driver_canon_hash" in src
+    assert "from alpaca_pyspark_spark.canon import oracle_check" in src
     assert "except TypeError" not in src
+
+
+def test_oracle_check_is_exact_on_doubles(spark):
+    """A double 1e-12 off its DuckDB twin is driver-red, so the shared
+    gate must report it: ``oracle_check`` hashes both sides with no
+    rounding (a compare that rounds to 9 decimals passes this pair)."""
+    import duckdb
+
+    from alpaca_pyspark_spark.canon import oracle_check
+
+    con = duckdb.connect()
+    sql = "SELECT * FROM (VALUES (1, 0.5::DOUBLE), (2, 2.25::DOUBLE)) t(id, v)"
+    ddl = "id bigint, v double"
+    same = spark.createDataFrame([(1, 0.5), (2, 2.25)], ddl)
+    drift = spark.createDataFrame([(1, 0.5 + 1e-12), (2, 2.25)], ddl)
+    assert oracle_check(same, con, sql)["hash_match"]
+    r = oracle_check(drift, con, sql)
+    assert r["rows_match"] and r["schema_match"] and not r["hash_match"], r

@@ -48,11 +48,12 @@ def test_violations_detected(spark, tmp_path):
 def test_output_type_guard_rejects_decimal(spark):
     """Registry-wide output-type contract (VERDICT r9 item 1): every
     emitted column must use a hash-stable type at the cross-engine
-    oracle boundary.  Enforcement is wired into BOTH registry sweeps
-    (tests/test_queries_oracle.py per-query + tools/driver_mimic.py
-    via tests/conftest.assert_df_matches_oracle); this test pins the
-    guard itself — decimal (round 9's q200 failure type) and other
-    exotic output types must raise, the full scalar set must pass."""
+    oracle boundary.  Enforcement is wired into the shared gate
+    ``canon.oracle_check``, which both registry sweeps call
+    (tests/test_queries_oracle.py per query, tools/driver_mimic.py
+    over the registry); this test pins the guard itself — decimal
+    (round 9's q200 failure type) and other exotic output types must
+    raise, the full scalar set must pass."""
     import pytest as _pytest
     from pyspark.sql import functions as F
 
@@ -84,12 +85,21 @@ def test_registry_emits_only_hash_stable_types():
     """The q200 class can only recur through a NEW query added without
     oracle pairing; rows-only queries get the same guard in their
     sweep test, so every registry entry is covered — assert the wiring
-    exists (both sweeps import the guard) rather than re-running 217
-    queries here."""
+    exists (the shared gate runs the guard, both oracle sweeps call the
+    gate, the rows-only sweep calls the guard) rather than re-running
+    217 queries here."""
+    import inspect
     import pathlib
 
-    root = pathlib.Path(__file__).resolve().parent
-    for fname in ("conftest.py", "test_queries_oracle.py"):
-        assert "reject_hash_unstable_schema" in (root / fname).read_text(), (
+    from alpaca_pyspark_spark import canon
+
+    assert "reject_hash_unstable_schema(" in inspect.getsource(canon.oracle_check)
+    root = pathlib.Path(__file__).resolve().parents[1]
+    for fname, wiring in (
+        ("tests/test_queries_oracle.py", "oracle_check("),
+        ("tests/test_queries_oracle.py", "reject_hash_unstable_schema("),
+        ("tools/driver_mimic.py", "oracle_check("),
+    ):
+        assert wiring in (root / fname).read_text(), (
             f"{fname} lost the output-type guard wiring"
         )

@@ -5,13 +5,10 @@ from __future__ import annotations
 
 import pytest
 
+from alpaca_pyspark_spark.canon import oracle_check
 from alpaca_pyspark_spark.queries import ORACLE, QUERIES
 
-from .conftest import (
-    SF_DIR,
-    assert_df_matches_oracle,
-    assert_driver_canonicalizable,
-)
+from .conftest import SF_DIR, assert_driver_canonicalizable
 
 ORACLE_PAIRED = sorted(ORACLE)
 ROWS_ONLY = sorted(set(QUERIES) - set(ORACLE))
@@ -19,8 +16,8 @@ ROWS_ONLY = sorted(set(QUERIES) - set(ORACLE))
 
 @pytest.mark.parametrize("qid", ORACLE_PAIRED)
 def test_query_matches_oracle(spark, oracle, assert_no_cache_residue, qid):
-    df = QUERIES[qid](spark, SF_DIR)
-    assert_df_matches_oracle(df, oracle, ORACLE[qid])
+    r = oracle_check(QUERIES[qid](spark, SF_DIR), oracle, ORACLE[qid])
+    assert r["hash_match"], r
 
 
 @pytest.mark.parametrize("qid", ROWS_ONLY)

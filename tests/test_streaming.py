@@ -225,6 +225,93 @@ def test_stream_chunked_fetch_union_equals_tape(monkeypatch):
     assert got == want
 
 
+def test_stream_replay_between_offsets():
+    """``readBetweenOffsets`` is how Structured Streaming replays a
+    batch after a failure: for the offsets ``read()`` returned it must
+    re-fetch exactly the rows ``read()`` yielded, and an empty or
+    inverted offset range yields nothing."""
+    from datetime import datetime, timezone
+
+    from alpaca_pyspark_spark.sources.replay import ReplayTradesServer
+    from alpaca_pyspark_spark.streaming.source import StockTradesStreamDataSource
+
+    base = datetime(2021, 1, 1, tzinfo=timezone.utc)
+    tape = [(f"S{i % 3}", base.replace(hour=i % 24), 1.0 + i, 1, i) for i in range(60)]
+    with ReplayTradesServer(tape) as api:
+        reader = StockTradesStreamDataSource(
+            {**CREDS, "endpoint": api.endpoint, "symbols": "S0,S1,S2",
+             "start": base.isoformat(), "end": base.replace(day=2).isoformat(),
+             "poll_interval": str(6 * 3600), "limit": "7"}  # 7: several pages
+        ).simpleStreamReader(None)
+        lo, seen = reader.initialOffset(), []
+        while True:
+            it, hi = reader.read(lo)
+            if hi == lo:
+                break
+            rows = list(it)
+            assert list(reader.readBetweenOffsets(lo, hi)) == rows
+            assert list(reader.readBetweenOffsets(hi, hi)) == []
+            assert list(reader.readBetweenOffsets(hi, lo)) == []
+            seen += rows
+            lo = hi
+    assert sorted(r[6] for r in seen) == [t[4] for t in tape]
+
+
+def test_gate_drains_through_the_no_data_batch(spark):
+    """The gate's drain must wait for the no-data batch: a watermark a
+    batch advances applies only in the next batch, so the append-mode
+    windows the sentinel finalizes are emitted by a batch with no
+    input.  A drain that returns after the data batch loses them."""
+    import datetime as dt
+    import threading
+
+    from pyspark.sql import functions as F
+    from pyspark.sql.streaming import StreamingQueryListener
+
+    from alpaca_pyspark_spark.streaming.gate import run_streaming_gate, sentinel_row
+
+    class Recorder(StreamingQueryListener):
+        def __init__(self):
+            self.progress, self.done = [], threading.Event()
+
+        def onQueryStarted(self, event):
+            pass
+
+        def onQueryProgress(self, event):
+            if event.progress.name.startswith("draintest_"):
+                self.progress.append(event.progress)
+
+        def onQueryTerminated(self, event):
+            self.done.set()
+
+    schema = "k bigint, ts timestamp"
+    t0 = dt.datetime(2024, 1, 1)
+    rows = [(1, t0 + dt.timedelta(minutes=m)) for m in (0, 3, 6, 12)]
+    events = spark.createDataFrame(rows, schema)
+    last_window_end = t0 + dt.timedelta(minutes=15)
+    rec = Recorder()
+    spark.streams.addListener(rec)
+    try:
+        out = run_streaming_gate(
+            spark,
+            [(events, sentinel_row(spark, lambda ts: (-1, ts), schema))],
+            lambda s: s.withWatermark("ts", "10 minutes")
+            .groupBy(F.window("ts", "5 minutes"))
+            .count(),
+            prefix="draintest",
+        )
+        assert rec.done.wait(60), "no terminated event"
+    finally:
+        spark.streams.removeListener(rec)
+    batches = [p.numInputRows for p in rec.progress]
+    assert len(batches) >= 2 and batches[-1] == 0 and batches[-2] > 0, batches
+    watermark = rec.progress[-1].eventTime["watermark"]
+    assert dt.datetime.strptime(watermark, "%Y-%m-%dT%H:%M:%S.%fZ") >= last_window_end
+    got = {r["window"]["end"]: r["count"] for r in out.collect()}
+    want = {t0 + dt.timedelta(minutes=m): n for m, n in ((5, 2), (10, 1), (15, 1))}
+    assert got == want
+
+
 def test_streaming_sessions_rocksdb_state_store(spark, tmp_path):
     """Same watermarked session query under the RocksDB state-store
     provider — the backend a 100 TB cluster actually runs (state no

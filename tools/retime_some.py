@@ -1,27 +1,21 @@
 """Retime a subset of queries in a fresh JVM with bench.py's exact
-protocol (warm run, timed run, noop-sink force, scoped-cache release).
+protocol (``bench.warm_tables`` once, then ``bench.time_query`` per
+qid: warm run, timed run, noop-sink force, scoped-cache release, one
+retime when the timed run contradicts the warm run).
 
     python tools/retime_some.py SF_DIR qid [qid ...]
 """
 
 from __future__ import annotations
 
-import gc
 import json
 import sys
-import time
 from pathlib import Path
 
 sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
 
-import os
-
-os.environ.setdefault("SPARK_DRIVER_MEM", "24g")
-
-from alpaca_pyspark_spark.plans import force_evaluate  # noqa: E402
-from alpaca_pyspark_spark.queries import QUERIES  # noqa: E402
+from bench import time_query, warm_tables  # noqa: E402
 from alpaca_pyspark_spark.session import get_spark  # noqa: E402
-from alpaca_pyspark_spark.session import release_scoped_caches  # noqa: E402
 
 
 def main() -> None:
@@ -29,22 +23,14 @@ def main() -> None:
     qids = sys.argv[2:]
     spark = get_spark("retime-some")
     spark.sparkContext.setLogLevel("ERROR")
+    warm_tables(spark, sf_dir)
     out = {}
     for qid in qids:
-        fn = QUERIES[qid]
-        spark.catalog.clearCache()
-        t0 = time.perf_counter()
-        force_evaluate(fn(spark, sf_dir))
-        warm = time.perf_counter() - t0
-        release_scoped_caches()
-        spark.catalog.clearCache()
-        gc.collect()
-        t0 = time.perf_counter()
-        n = force_evaluate(fn(spark, sf_dir))
-        dt = time.perf_counter() - t0
-        release_scoped_caches()
-        out[qid] = {"warm": round(warm, 3), "timed": round(dt, 3), "rows": n}
-        print(f"# {qid}: {n} rows warm={warm:.3f}s timed={dt:.3f}s", flush=True)
+        warm, dt, n, retime = time_query(spark, qid, sf_dir)
+        out[qid] = {"warm": round(warm, 3), "timed": round(dt, 3), "rows": n,
+                    "retime": retime}
+        print(f"# {qid}: {n} rows warm={warm:.3f}s timed={dt:.3f}s"
+              f" retime={retime}", flush=True)
     print(json.dumps(out))
 
 
