@@ -1,10 +1,11 @@
 """The driver's oracle gate, in ONE place: the DuckDB oracle
 connection (``oracle_connection``), the driver's pandas
-canonicalization (``driver_canon_hash``) and the compare built on them
-(``oracle_check``).  Tier-1 (``tests/test_queries_oracle.py``) and the
+canonicalization (``driver_canon_hash``) and the checks built on them:
+``oracle_check`` for oracle-paired queries, ``rows_only_check`` for
+the rest.  Tier-1 (``tests/test_queries_oracle.py``) and the
 full-registry and spot-check sweeps (``tools/driver_mimic.py``) all
-call ``oracle_check``, so no local gate can diverge from another or
-from the driver.
+call these two, so no local gate can diverge from another or from the
+driver.
 
 The driver checks each oracle-paired query by row count, column names
 and a hash, with no tolerance.  It hashes every result as: pandas
@@ -157,3 +158,19 @@ def oracle_check(df, con, sql: str) -> dict:
             "hash_match": rows_match
             and driver_canon_hash(got, cols) == driver_canon_hash(want, cols),
             "spark_rows": len(got), "oracle_rows": len(want), "err": None}
+
+
+def rows_only_check(df) -> dict:
+    """The gate for a query with no oracle: the schema guard, a FULL
+    collect (a crash on any input row surfaces, as in the driver's
+    run), then the cell guard and the driver's sort+hash — so a
+    rows-only output survives canonicalization if it ever rotates into
+    the graded set.  Returns the ``oracle_check``-shaped record with
+    ``err: "no_oracle"``."""
+    reject_hash_unstable_schema(df.schema)
+    cols = sorted(df.columns)
+    got = [tuple(r[c] for c in cols) for r in df.collect()]
+    reject_unhashable_cells(got, cols)
+    driver_canon_hash(got, cols)
+    return {"rows_match": None, "schema_match": None, "hash_match": None,
+            "spark_rows": len(got), "oracle_rows": None, "err": "no_oracle"}

@@ -11,13 +11,16 @@ Three paths, mirroring how a 100 TB pipeline would run ANN:
   bucket (17 buckets).  Candidate set shrinks ~2^16-fold on uniform
   data; recall is traded for a ~constant-factor scan reduction and is
   unit-tested against the brute-force baseline.
-- **IVF (inverted file)** — spherical k-means coarse quantizer trained
-  on a deterministic fixed-size sample (driver-side numpy: the sample
-  stays ~4k vectors whether the corpus is 60k or 60B rows); every
-  corpus vector is assigned to its nearest centroid cell by an
-  Arrow-batched matmul, queries probe their ``nprobe`` nearest cells,
-  and the survivors get the exact cosine re-rank.  Data-adaptive where
-  LSH is oblivious: cells follow the corpus distribution, so skewed
+- **IVF (inverted file)** — one probe path (``ivf_topk``) over either
+  quantizer: spherical k-means centroids trained on a deterministic
+  fixed-size sample (``train_ivf_centroids``; driver-side numpy, the
+  sample stays ~4k vectors whether the corpus is 60k or 60B rows), or
+  the oracle-replicable seed of the smallest ids (``seed_centroids``).
+  Every corpus vector is assigned to its nearest cell by the
+  sequential-order cosine kernel (``cell_assigner``, cell-index
+  tie-break), queries probe their ``nprobe`` nearest cells, and the
+  survivors get the exact cosine re-rank.  Data-adaptive where LSH is
+  oblivious: cells follow the corpus distribution, so skewed
   real-world embeddings keep balanced candidate lists.
 
 Hyperplanes are deterministic pseudo-random constants derived from
@@ -36,6 +39,8 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from ..functions import cosine_similarity
+from . import spread
+from .topk import top_k_per_group
 
 
 def _hyperplane(plane: int, dim: int) -> list[float]:
@@ -131,6 +136,13 @@ def _seq_norms(M: "np.ndarray") -> "np.ndarray":
     return np.sqrt(acc)
 
 
+def _seq_cosine(A: "np.ndarray", B: "np.ndarray") -> "np.ndarray":
+    """Cosine of every row of ``A`` against every row of ``B``:
+    ``_seq_dot_block`` divided by both ``_seq_norms`` — the doubles of
+    the engine's scalar fold, bit for bit."""
+    return _seq_dot_block(A, B) / (_seq_norms(A)[:, None] * _seq_norms(B)[None, :])
+
+
 def pq_adc_scorer(cb_py, k: int):
     """Arrow ADC scorer for streamed PQ serving (q202): per query row,
     build the M×K asymmetric-distance lookup table from the row's
@@ -179,6 +191,19 @@ def pq_adc_scorer(cb_py, k: int):
     return score
 
 
+def _rank_neighbors(scored: DataFrame, k: int) -> DataFrame:
+    """Per-query top-``k`` of ``(query_id, vec_id, cos_sim)`` by (cos_sim
+    desc, vec_id asc), numbered in ``rank`` — the one ranking the
+    Arrow, LSH and IVF search paths share."""
+    return top_k_per_group(
+        scored,
+        group_by=["query_id"],
+        order_by=[F.col("cos_sim").desc(), F.col("vec_id").asc()],
+        k=k,
+        rank_col="rank",
+    )
+
+
 def brute_force_topk_arrow(
     corpus: DataFrame,
     queries: DataFrame,
@@ -187,7 +212,6 @@ def brute_force_topk_arrow(
     vec_col: str = "embedding",
     query_id: str = "query_id",
     k: int = 10,
-    include_self: bool = False,
 ) -> DataFrame:
     """Exact top-k cosine neighbors, Arrow fast path: the (small)
     query set rides in the UDF closure as one numpy block; each
@@ -202,16 +226,12 @@ def brute_force_topk_arrow(
     ).collect()
     qids = np.array([r["qid"] for r in q_rows], dtype=np.int64)
     Q = np.array([r["qv"] for r in q_rows], dtype=np.float64)
-    nq = _seq_norms(Q)
 
     def score(batches):
-        import pandas as pd
-
         for pdf in batches:
             if not len(pdf):
                 continue
-            M = np.stack(pdf["__cv"].to_numpy())
-            cos = _seq_dot_block(M, Q) / (_seq_norms(M)[:, None] * nq[None, :])
+            cos = _seq_cosine(np.stack(pdf["__cv"].to_numpy()), Q)
             m, q = cos.shape
             yield pd.DataFrame(
                 {
@@ -221,8 +241,6 @@ def brute_force_topk_arrow(
                 }
             )
 
-    from . import spread
-
     c = spread(
         corpus.select(
             F.col(id_col).alias("vec_id"),
@@ -230,13 +248,7 @@ def brute_force_topk_arrow(
         )
     )
     scored = c.mapInPandas(score, "query_id long, vec_id long, cos_sim double")
-    if not include_self:
-        scored = scored.filter(F.col("vec_id") != F.col("query_id"))
-    w = Window.partitionBy("query_id").orderBy(F.col("cos_sim").desc(), F.col("vec_id").asc())
-    return (
-        scored.withColumn("rank", F.row_number().over(w).cast("long"))
-        .filter(F.col("rank") <= k)
-    )
+    return _rank_neighbors(scored.filter(F.col("vec_id") != F.col("query_id")), k)
 
 
 def all_pairs_above_arrow(
@@ -280,8 +292,6 @@ def all_pairs_above_arrow(
                     "cos_sim": cos[r, c],
                 }
             )
-
-    from . import spread
 
     v = spread(
         vectors.select(
@@ -350,9 +360,7 @@ def all_pairs_above_blocked(
         ids = pdf["__id"].to_numpy()
         M = np.stack(pdf["__v"].to_numpy())
         if bi == bj:
-            cos = _seq_dot_block(M, M)
-            n = _seq_norms(M)
-            cos = cos / (n[:, None] * n[None, :])
+            cos = _seq_cosine(M, M)
             keep = (cos >= threshold) & (ids[:, None] < ids[None, :])
             r, c = np.nonzero(keep)
             if not len(r):
@@ -365,9 +373,7 @@ def all_pairs_above_blocked(
             return empty
         A, Aids = M[left], ids[left]
         Bm, Bids = M[right], ids[right]
-        cos = _seq_dot_block(A, Bm) / (
-            _seq_norms(A)[:, None] * _seq_norms(Bm)[None, :]
-        )
+        cos = _seq_cosine(A, Bm)
         keep = cos >= threshold
         r, c = np.nonzero(keep)
         if not len(r):
@@ -453,9 +459,7 @@ def knn_graph_exact(
         if bi == bj:
             if len(pdf) < 2:
                 return empty
-            cos = _seq_dot_block(M, M)
-            n = _seq_norms(M)
-            cos = cos / (n[:, None] * n[None, :])
+            cos = _seq_cosine(M, M)
             np.fill_diagonal(cos, -np.inf)  # exclude self-edges
             s, d, c = local_topk(cos, ids, ids)
             srcs += s; dsts += d; coss += c
@@ -465,9 +469,7 @@ def knn_graph_exact(
                 return empty
             A, Aids = M[left], ids[left]
             Bm, Bids = M[right], ids[right]
-            cos = _seq_dot_block(A, Bm) / (
-                _seq_norms(A)[:, None] * _seq_norms(Bm)[None, :]
-            )
+            cos = _seq_cosine(A, Bm)
             s, d, c = local_topk(cos, Aids, Bids)
             srcs += s; dsts += d; coss += c
             s, d, c = local_topk(cos.T, Bids, Aids)
@@ -485,11 +487,12 @@ def knn_graph_exact(
     ).filter(
         (F.col("cos_sim") != F.lit(float("-inf"))) & ~F.isnan("cos_sim")
     )
-    w = Window.partitionBy("src").orderBy(
-        F.col("cos_sim").desc(), F.col("dst").asc()
-    )
-    return edges.withColumn("rank", F.row_number().over(w).cast("long")).filter(
-        F.col("rank") <= k
+    return top_k_per_group(
+        edges,
+        group_by=["src"],
+        order_by=[F.col("cos_sim").desc(), F.col("dst").asc()],
+        k=k,
+        rank_col="rank",
     )
 
 
@@ -508,8 +511,8 @@ def semdedup(
 
     Deterministic variant so the whole operator sits under the exact
     oracle gate: centroids are the embeddings of the ``num_cells``
-    smallest ids (same quantizer as ``ivf_topk_det``), assignment is
-    the bit-exact sequential-order kernel, and the keep rule is
+    smallest ids (``seed_centroids``), assignment is the bit-exact
+    sequential-order kernel (``assign_cells``), and the keep rule is
     "drop v iff a lower-id cell-mate u has cos(u, v) ≥ threshold"
     (lowest-id representative per duplicate chain — deterministic, no
     transitive closure needed).
@@ -519,25 +522,11 @@ def semdedup(
     the only exchanges are the equi-join on cell (bounded by the
     largest cell, the knob ``num_cells`` controls) and the final
     left-anti attach."""
-    from . import spread
-
-    centroids = _det_seed_centroids(vectors, id_col, vec_col, num_cells)
-    v = (
-        spread(
-            vectors.select(
-                F.col(id_col).alias("vec_id"),
-                F.col(vec_col).cast("array<double>").alias("__v"),
-            )
-        )
-        .withColumn(
-            "cell", _det_cell_assigner(centroids, 1)(F.col("__v")).getItem(0)
-        )
-        # assignment feeds both self-join sides and the final output:
-        # checkpoint runs the Arrow kernel once and truncates lineage
-        .localCheckpoint(eager=False)
-    )
-    from ..functions import cosine_similarity as _cos
-
+    _, centroids = seed_centroids(vectors, num_cells, id_col=id_col, vec_col=vec_col)
+    # assignment feeds both self-join sides and the final output:
+    # checkpoint runs the Arrow kernel once and truncates lineage
+    v = assign_cells(vectors, centroids, id_col=id_col, vec_col=vec_col)
+    v = v.localCheckpoint(eager=False)
     a = v.select(
         "cell", F.col("vec_id").alias("id_a"), F.col("__v").alias("va")
     )
@@ -547,16 +536,14 @@ def semdedup(
     dropped = (
         a.join(b, "cell")
         .filter(F.col("id_a") < F.col("id_b"))
-        .select("id_b", _cos(F.col("va"), F.col("vb")).alias("__cos"))
+        .select("id_b", cosine_similarity(F.col("va"), F.col("vb")).alias("__cos"))
         .filter(F.col("__cos") >= threshold)
         .select(F.col("id_b").alias("vec_id"))
         .distinct()
         .withColumn("__drop", F.lit(True))
     )
     return v.join(dropped, "vec_id", "left").select(
-        "vec_id",
-        F.col("cell").cast("bigint").alias("cell"),
-        F.col("__drop").isNull().alias("kept"),
+        "vec_id", "cell", F.col("__drop").isNull().alias("kept")
     )
 
 
@@ -606,7 +593,6 @@ def lsh_topk(
     k: int = 10,
     num_planes: int = 16,
     max_probe_hamming: int = 1,
-    include_self: bool = False,
 ) -> DataFrame:
     """Approximate top-k: candidates restricted to corpus vectors whose
     sign-bucket is within Hamming ≤ ``max_probe_hamming`` of the
@@ -637,17 +623,17 @@ def lsh_topk(
         raise ValueError("max_probe_hamming > 2 not supported (probe blow-up)")
     probes = F.array(*[F.col("__qb").bitwiseXOR(F.lit(m)) for m in masks])
     q_probed = q.select("query_id", "__qv", F.explode(probes).alias("__bucket"))
-    cand = c.join(F.broadcast(q_probed), "__bucket")
-    if not include_self:
-        cand = cand.filter(F.col("vec_id") != F.col("query_id"))
-    scored = cand.select(
-        "query_id", "vec_id", cosine_similarity(F.col("__qv"), F.col("__cv")).alias("cos_sim")
-    ).dropDuplicates(["query_id", "vec_id"])
-    w = Window.partitionBy("query_id").orderBy(F.col("cos_sim").desc(), F.col("vec_id").asc())
-    return (
-        scored.withColumn("rank", F.row_number().over(w).cast("long"))
-        .filter(F.col("rank") <= k)
+    scored = (
+        c.join(F.broadcast(q_probed), "__bucket")
+        .filter(F.col("vec_id") != F.col("query_id"))
+        .select(
+            "query_id",
+            "vec_id",
+            cosine_similarity(F.col("__qv"), F.col("__cv")).alias("cos_sim"),
+        )
+        .dropDuplicates(["query_id", "vec_id"])
     )
+    return _rank_neighbors(scored, k)
 
 
 # --------------------------------------------------------------- IVF
@@ -689,86 +675,17 @@ def train_ivf_centroids(
     return C
 
 
-def _cell_assigner(centroids, topn: int):
-    """Pandas UDF: vector -> its ``topn`` nearest cells (by cosine),
-    one Arrow-batched matmul per batch.  ``centroids`` rides along in
-    the UDF closure (tiny: cells × dim doubles)."""
-    C = centroids  # unit rows
-
-    @F.pandas_udf("array<int>")
-    def cells(v: pd.Series) -> pd.Series:
-        M = np.stack(v.to_numpy())
-        M = M / np.maximum(np.linalg.norm(M, axis=1, keepdims=True), 1e-12)
-        sims = M @ C.T
-        order = np.argsort(-sims, axis=1)[:, :topn]
-        return pd.Series([row.tolist() for row in order])
-
-    return cells
-
-
-def ivf_topk(
-    corpus: DataFrame,
-    queries: DataFrame,
-    *,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    query_id: str = "query_id",
-    k: int = 10,
-    num_cells: int = 16,
-    nprobe: int = 4,
-    sample_size: int = 4096,
-    include_self: bool = False,
-) -> DataFrame:
-    """Approximate top-k via an IVF coarse quantizer: corpus vectors
-    live in their single nearest cell, each query probes its
-    ``nprobe`` nearest cells, survivors get the exact cosine re-rank.
-
-    The candidate join is a shuffle-partitioned equi-join on the cell
-    id (queries broadcast) — per-query work drops to ~nprobe/num_cells
-    of the corpus, and cells adapt to the data distribution."""
-    centroids = train_ivf_centroids(
-        corpus,
-        id_col=id_col,
-        vec_col=vec_col,
-        num_cells=num_cells,
-        sample_size=sample_size,
-    )
-    from . import spread
-
-    # cell assignment is an Arrow-batched matmul per partition — one
-    # Python worker per input split, so spread a narrow scan first
-    c = spread(
-        corpus.select(
-            F.col(id_col).alias("vec_id"),
-            F.col(vec_col).cast("array<double>").alias("__cv"),
-        )
-    ).withColumn("__cell", _cell_assigner(centroids, 1)(F.col("__cv")).getItem(0))
-    q = queries.select(
-        F.col(query_id).alias("query_id"),
-        F.col(vec_col).cast("array<double>").alias("__qv"),
-    ).withColumn("__cells", _cell_assigner(centroids, nprobe)(F.col("__qv")))
-    q_probed = q.select("query_id", "__qv", F.explode("__cells").alias("__cell"))
-    cand = c.join(F.broadcast(q_probed), "__cell")
-    if not include_self:
-        cand = cand.filter(F.col("vec_id") != F.col("query_id"))
-    scored = cand.select(
-        "query_id", "vec_id", cosine_similarity(F.col("__qv"), F.col("__cv")).alias("cos_sim")
-    )
-    w = Window.partitionBy("query_id").orderBy(F.col("cos_sim").desc(), F.col("vec_id").asc())
-    return (
-        scored.withColumn("rank", F.row_number().over(w).cast("long"))
-        .filter(F.col("rank") <= k)
-    )
-
-
-def _det_seed_centroids(
-    df: DataFrame, id_col: str, vec_col: str, n: int
-) -> list[list[float]]:
-    """The deterministic quantizer seed shared by ``ivf_topk_det`` and
-    ``semdedup``: the embeddings of the ``n`` smallest ids (a fixed
-    random-sample init, zero k-means iterations).  One helper so the
-    two oracle-gated 'bit-exact' quantizers can never silently
-    diverge.  Driver work is O(n·dim) regardless of corpus size."""
+def seed_centroids(
+    df: DataFrame, n: int, *, id_col: str = "vec_id", vec_col: str = "embedding"
+) -> tuple[list, list[list[float]]]:
+    """The deterministic IVF quantizer seed: the embeddings of the
+    ``n`` smallest ids (a fixed random-sample init, zero k-means
+    iterations — a legitimate quantizer, just not data-adaptive).
+    Unlike trained centroids it is exactly replicable in SQL, so the
+    whole approximation built on it — assignment, probing, re-rank —
+    sits under the oracle hash gate.  ONE collect returns ``(ids,
+    vectors)``, cell ``i`` being the ``i``-th smallest id; driver work
+    is O(n·dim) regardless of corpus size."""
     rows = (
         df.select(
             F.col(id_col).alias("__sid"),
@@ -778,10 +695,10 @@ def _det_seed_centroids(
         .limit(n)
         .collect()
     )
-    return [list(r["__sv"]) for r in rows]
+    return [r["__sid"] for r in rows], [list(r["__sv"]) for r in rows]
 
 
-def _det_cell_assigner(centroids: list[list[float]], topn: int):
+def cell_assigner(centroids, topn: int):
     """Pandas UDF: vector → its ``topn`` nearest cells by cosine,
     tie-broken by cell index, computed with the sequential-order
     kernel — every double is bit-identical to the engine's scalar
@@ -790,92 +707,97 @@ def _det_cell_assigner(centroids: list[list[float]], topn: int):
     family for every NON-SELF pair (self-pairs provably diverge by
     1 ulp, and random full-precision doubles diverge at ulp level —
     the q204 canary pins the live boundary), so the ORDER-BY-based
-    assignment is exactly replicable in the oracle.  An earlier
-    all-literal ``aggregate``-fold expression had the same doubles but
-    ran interpreted per row (higher-order functions don't codegen):
-    48 folds/row ≈ 6 s at sf0.1 vs ~0.3 s for this Arrow batch."""
+    assignment is exactly replicable in the oracle.  ``centroids`` is
+    either quantizer (``seed_centroids`` vectors or
+    ``train_ivf_centroids``) and rides in the UDF closure (cells × dim
+    doubles).  An earlier all-literal ``aggregate``-fold expression
+    had the same doubles but ran interpreted per row (higher-order
+    functions don't codegen): 48 folds/row ≈ 6 s at sf0.1 vs ~0.3 s
+    for this Arrow batch."""
     C = np.asarray(centroids, dtype=np.float64)
-    nc = _seq_norms(C)
 
     @F.pandas_udf("array<int>")
     def cells(v: pd.Series) -> pd.Series:
         M = np.stack(v.to_numpy()).astype(np.float64, copy=False)
-        sims = _seq_dot_block(M, C) / (_seq_norms(M)[:, None] * nc[None, :])
-        # stable argsort on -sims: equal keys keep cell-index order
-        order = np.argsort(-sims, axis=1, kind="stable")[:, :topn]
+        # stable argsort on -cos: equal keys keep cell-index order
+        order = np.argsort(-_seq_cosine(M, C), axis=1, kind="stable")[:, :topn]
         return pd.Series([row.tolist() for row in order])
 
     return cells
 
 
+def assign_cells(
+    df: DataFrame, centroids, *, id_col: str = "vec_id", vec_col: str = "embedding"
+) -> DataFrame:
+    """The cell-assigned corpus ``(vec_id, __v, cell bigint)``: every
+    vector (cast to ``array<double>``) with its nearest cell under
+    ``cell_assigner``.  The assignment is a map-only Arrow batch — one
+    Python worker per input split — so a narrow scan is spread first."""
+    cell = cell_assigner(centroids, 1)(F.col("__v")).getItem(0).cast("long")
+    return spread(
+        df.select(
+            F.col(id_col).alias("vec_id"),
+            F.col(vec_col).cast("array<double>").alias("__v"),
+        )
+    ).withColumn("cell", cell)
+
+
 def cosine_block_scores(centroids: list[list[float]]):
     """Pandas UDF: vector → its RAW cosine to every centroid, as the
     sequential-fold doubles the oracle's ``list_cosine_similarity``
-    must reproduce bit-for-bit (the q204 canary's kernel — same fold
-    as ``_det_cell_assigner`` but emitting the scores instead of the
-    argsort, so a cross-engine divergence is visible per-double
-    rather than only at near-tie assignment flips)."""
+    must reproduce bit-for-bit (the q204 canary's kernel — the same
+    ``_seq_cosine`` as ``cell_assigner`` but emitting the scores
+    instead of the argsort, so a cross-engine divergence is visible
+    per-double rather than only at near-tie assignment flips)."""
     C = np.asarray(centroids, dtype=np.float64)
-    nc = _seq_norms(C)
 
     @F.pandas_udf("array<double>")
     def cos_all(v: pd.Series) -> pd.Series:
         if len(v) == 0:
             return pd.Series([], dtype=object)
         M = np.stack(v.to_numpy()).astype(np.float64, copy=False)
-        sims = _seq_dot_block(M, C) / (_seq_norms(M)[:, None] * nc[None, :])
-        return pd.Series([row.tolist() for row in sims])
+        return pd.Series([row.tolist() for row in _seq_cosine(M, C)])
 
     return cos_all
 
 
-def ivf_topk_det(
+def ivf_topk(
     corpus: DataFrame,
     queries: DataFrame,
     *,
+    centroids,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     query_id: str = "query_id",
     k: int = 10,
-    num_cells: int = 16,
     nprobe: int = 4,
-    include_self: bool = False,
 ) -> DataFrame:
-    """IVF top-k with a DETERMINISTIC coarse quantizer: the centroids
-    are the embeddings of the ``num_cells`` smallest ids (a fixed
-    random-sample init with zero k-means iterations — a legitimate IVF
-    quantizer, just not data-adaptive).  Unlike ``ivf_topk`` this
-    variant is exactly replicable in SQL, so the ENTIRE approximation
-    — cell assignment, nprobe probing, exact re-rank — sits under the
-    oracle hash gate.
+    """Approximate top-k via an IVF coarse quantizer: corpus vectors
+    live in their single nearest cell of ``centroids``
+    (``train_ivf_centroids`` or ``seed_centroids``), each query probes
+    its ``nprobe`` nearest cells, survivors get the exact cosine
+    re-rank.  ``nprobe`` is the one recall/work knob over a fixed
+    index.
 
-    Plan shape is identical to the k-means path and survives scale the
-    same way: centroid collect is O(num_cells) regardless of corpus
-    size, assignment is a map-only Arrow batch (no shuffle), and the
-    candidate join touches ~nprobe/num_cells of the corpus.
-    """
-    centroids = _det_seed_centroids(corpus, id_col, vec_col, num_cells)
-    from . import spread
-
-    c = spread(
-        corpus.select(
-            F.col(id_col).alias("vec_id"),
-            F.col(vec_col).cast("array<double>").alias("__cv"),
-        )
-    ).withColumn("__cell", _det_cell_assigner(centroids, 1)(F.col("__cv")).getItem(0))
+    Scale shape: the centroid collect is O(cells) regardless of
+    corpus size, assignment is a map-only Arrow batch (no shuffle),
+    and the candidate join is an equi-join on the cell id with the
+    queries broadcast — per-query work drops to ~nprobe/cells of the
+    corpus."""
+    c = assign_cells(corpus, centroids, id_col=id_col, vec_col=vec_col)
     q = queries.select(
         F.col(query_id).alias("query_id"),
         F.col(vec_col).cast("array<double>").alias("__qv"),
-    ).withColumn("__cells", _det_cell_assigner(centroids, nprobe)(F.col("__qv")))
-    q_probed = q.select("query_id", "__qv", F.explode("__cells").alias("__cell"))
-    cand = c.join(F.broadcast(q_probed), "__cell")
-    if not include_self:
-        cand = cand.filter(F.col("vec_id") != F.col("query_id"))
-    scored = cand.select(
-        "query_id", "vec_id", cosine_similarity(F.col("__qv"), F.col("__cv")).alias("cos_sim")
+    ).withColumn("__cells", cell_assigner(centroids, nprobe)(F.col("__qv")))
+    probes = F.explode(F.col("__cells").cast("array<bigint>")).alias("cell")
+    q_probed = q.select("query_id", "__qv", probes)
+    scored = (
+        c.join(F.broadcast(q_probed), "cell")
+        .filter(F.col("vec_id") != F.col("query_id"))
+        .select(
+            "query_id",
+            "vec_id",
+            cosine_similarity(F.col("__qv"), F.col("__v")).alias("cos_sim"),
+        )
     )
-    w = Window.partitionBy("query_id").orderBy(F.col("cos_sim").desc(), F.col("vec_id").asc())
-    return (
-        scored.withColumn("rank", F.row_number().over(w).cast("long"))
-        .filter(F.col("rank") <= k)
-    )
+    return _rank_neighbors(scored, k)

@@ -16,6 +16,7 @@ from pyspark.sql import functions as F
 
 from ..functions import cents
 from ..operators.text import chunk_documents, scrub_pii
+from ..operators.topk import top_k_per_group
 from ..operators.timeseries import (
     drawdown,
     locf_gapfill,
@@ -343,15 +344,13 @@ def q57_stratified_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     not a fixed rate (q37 is the rate-based sibling).  One shuffle on
     the strata, rank window, no RNG state."""
     docs = load(spark, sf_dir, "documents")
-    from pyspark.sql import Window
-
     h = ((F.col("doc_id") % 2147483647) * 48271 % 2147483647) * 16807 % 2147483647
-    w = Window.partitionBy("lang", "source").orderBy(h.asc(), F.col("doc_id").asc())
-    return (
-        docs.select("doc_id", "lang", "source", h.alias("__h"))
-        .withColumn("rk", F.row_number().over(w).cast("bigint"))
-        .filter(F.col("rk") <= 20)
-        .select("doc_id", "lang", "source", "rk")
+    return top_k_per_group(
+        docs.select("doc_id", "lang", "source"),
+        group_by=["lang", "source"],
+        order_by=[h.asc(), F.col("doc_id").asc()],
+        k=20,
+        rank_col="rk",
     )
 
 

@@ -33,8 +33,21 @@ from ..operators.dedup import (
 )
 from ..operators.ids import assign_stable_ids
 from ..operators.multimodal import audio_energy_windows, decode_media, synthesize_media
-from ..operators.similarity import brute_force_topk_arrow, lsh_topk
+from ..operators.similarity import (
+    assign_cells,
+    brute_force_topk_arrow,
+    cell_assigner,
+    cosine_block_scores,
+    ivf_topk,
+    knn_graph_exact,
+    lsh_topk,
+    pq_adc_scorer,
+    seed_centroids,
+    semdedup,
+    train_ivf_centroids,
+)
 from ..operators.text import with_fingerprint, with_lang_id, with_text_stats
+from ..operators.topk import top_k_per_group
 from ..functions import (
     char_ngrams,
     cosine_similarity,
@@ -390,6 +403,13 @@ SELECT id AS vec_id, min(r) AS component FROM reach GROUP BY id
 
 
 # ---------------------------------------------------------------- q13
+def _q13_queries(emb: DataFrame) -> DataFrame:
+    """The q13 family's query set: the vectors with ``vec_id < 8``."""
+    return emb.filter(F.col("vec_id") < 8).select(
+        F.col("vec_id").alias("query_id"), "embedding"
+    )
+
+
 def q13_embedding_sim(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact top-10 cosine neighbors for query vectors (vec_id < 8)
     over the full embedding corpus.  Only the 8-row QUERY set rides
@@ -397,12 +417,7 @@ def q13_embedding_sim(spark: SparkSession, sf_dir: str) -> DataFrame:
     (scored partition-locally by ``brute_force_topk_arrow``, then one
     per-query top-k window over |corpus|×8 scalar rows)."""
     emb = load_vectors(spark, sf_dir)
-    queries = emb.filter(F.col("vec_id") < 8).select(
-        F.col("vec_id").alias("query_id"), "embedding"
-    )
-    return brute_force_topk_arrow(
-        emb, queries, id_col="vec_id", vec_col="embedding", query_id="query_id", k=10
-    )
+    return brute_force_topk_arrow(emb, _q13_queries(emb), k=10)
 
 
 _Q13_SQL = """
@@ -437,16 +452,10 @@ def q13_embedding_sim_ann(spark: SparkSession, sf_dir: str) -> DataFrame:
     row counts.  The scale path: bucket pruning replaces the full
     corpus scan."""
     emb = load_vectors(spark, sf_dir)
-    queries = emb.filter(F.col("vec_id") < 8).select(
-        F.col("vec_id").alias("query_id"), "embedding"
-    )
     # 8 planes (256 buckets): on uniform random 64-dim data the
     # Hamming-1 probe set covers ~3.5% of the corpus — enough recall to
     # fill k while still pruning ~96% of the scan.
-    return lsh_topk(
-        emb, queries, id_col="vec_id", vec_col="embedding", query_id="query_id",
-        dim=64, k=10, num_planes=8,
-    )
+    return lsh_topk(emb, _q13_queries(emb), dim=64, k=10, num_planes=8)
 
 
 _Q13_ANN_SQL = f"""
@@ -483,16 +492,9 @@ def q13_embedding_sim_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     recall vs brute force is unit-tested).  The data-adaptive scale
     path: spherical-k-means cells trained on a fixed-size sample,
     queries probe their 4 nearest of 16 cells."""
-    from ..operators.similarity import ivf_topk
-
     emb = load_vectors(spark, sf_dir)
-    queries = emb.filter(F.col("vec_id") < 8).select(
-        F.col("vec_id").alias("query_id"), "embedding"
-    )
-    return ivf_topk(
-        emb, queries, id_col="vec_id", vec_col="embedding", query_id="query_id",
-        k=10, num_cells=16, nprobe=4,
-    )
+    centroids = train_ivf_centroids(emb, num_cells=16)
+    return ivf_topk(emb, _q13_queries(emb), centroids=centroids, k=10, nprobe=4)
 
 
 def q13_embedding_sim_ivf_det(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -502,17 +504,11 @@ def q13_embedding_sim_ivf_det(spark: SparkSession, sf_dir: str) -> DataFrame:
     the cosine re-rank all SQL-replicable, so DuckDB verifies the
     approximation itself, not just row counts.  Complements
     ``q13_embedding_sim_ivf`` (data-adaptive k-means, rows-only +
-    recall unit tests) — same plan shape, same scale story."""
-    from ..operators.similarity import ivf_topk_det
-
+    recall unit tests) — the same ``ivf_topk`` probe over the other
+    seed."""
     emb = load_vectors(spark, sf_dir)
-    queries = emb.filter(F.col("vec_id") < 8).select(
-        F.col("vec_id").alias("query_id"), "embedding"
-    )
-    return ivf_topk_det(
-        emb, queries, id_col="vec_id", vec_col="embedding", query_id="query_id",
-        k=10, num_cells=16, nprobe=4,
-    )
+    _, centroids = seed_centroids(emb, 16)
+    return ivf_topk(emb, _q13_queries(emb), centroids=centroids, k=10, nprobe=4)
 
 
 _Q13_IVF_DET_SQL = """
@@ -571,8 +567,6 @@ def q176_knn_graph_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     scored exactly once, no driver collect, each task bounded by two
     hash blocks.  The compute is the exact graph's inherent O(n²);
     the ANN variants (q13 LSH / IVF) are the sub-quadratic trade."""
-    from ..operators.similarity import knn_graph_exact
-
     emb = load_vectors(spark, sf_dir)
     return knn_graph_exact(emb, id_col="vec_id", vec_col="embedding", k=5)
 
@@ -610,8 +604,6 @@ def q177_semdedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     generation, and the keep rule all replicate in SQL.  Threshold
     0.25 ≈ the semantic-dup tail of this uniform synthetic corpus
     (production runs at ~0.95+ on real embedding spaces)."""
-    from ..operators.similarity import semdedup
-
     emb = load_vectors(spark, sf_dir)
     return semdedup(
         emb, id_col="vec_id", vec_col="embedding", threshold=0.25, num_cells=16
@@ -1199,10 +1191,6 @@ def q134_hard_negative_mining(spark: SparkSession, sf_dir: str) -> DataFrame:
     Exactness: the cosine fold is the engine's sequential-order kernel
     (bit-identical to DuckDB's ``list_cosine_similarity`` — same
     IEEE accumulation, verified by q13), tiebreak on vec_id."""
-    from pyspark.sql import Window
-
-    from ..functions import cosine_similarity
-
     emb = load_vectors(spark, sf_dir)
     v = F.col("embedding").cast("array<double>")
     q = emb.filter(F.col("vec_id") < 8).select(
@@ -1220,12 +1208,12 @@ def q134_hard_negative_mining(spark: SparkSession, sf_dir: str) -> DataFrame:
             cosine_similarity(F.col("qv"), F.col("cv")).alias("cos_sim"),
         )
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cos_sim").desc(), F.col("vec_id")
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w).cast("bigint"))
-        .filter(F.col("rank") <= 5)
+    return top_k_per_group(
+        scored,
+        group_by=["query_id"],
+        order_by=[F.col("cos_sim").desc(), F.col("vec_id")],
+        k=5,
+        rank_col="rank",
     )
 
 
@@ -2838,24 +2826,16 @@ def _q196_artifacts(spark: SparkSession, sf_dir: str):
       expectation; the num_cells dial keeps it executor-sized at any
       corpus scale — the same bound every IVF posting list lives
       under).  Eagerly checkpointed."""
-    from ..operators.similarity import _det_cell_assigner, _det_seed_centroids
-
     emb = load_vectors(spark, sf_dir)
     corpus = emb.filter(F.col("vec_id") % 25 != 0)
-    centroids = _det_seed_centroids(corpus, "vec_id", "embedding", _Q196_CELLS)
-    from ..operators import spread
-
-    assigned = spread(
-        corpus.select(
-            "vec_id", F.col("embedding").cast("array<double>").alias("v")
-        )
-    ).withColumn("cell", _det_cell_assigner(centroids, 1)(F.col("v")).getItem(0))
+    _, centroids = seed_centroids(corpus, _Q196_CELLS)
     cells = (
-        assigned.groupBy("cell")
+        assign_cells(corpus, centroids)
+        .groupBy("cell")
         .agg(
-            F.sort_array(F.collect_list(F.struct("vec_id", "v"))).alias(
-                "members"
-            )
+            F.sort_array(
+                F.collect_list(F.struct("vec_id", F.col("__v").alias("v")))
+            ).alias("members")
         )
         .localCheckpoint(eager=True)
     )
@@ -2873,14 +2853,13 @@ def _q196_transform(centroids, cells: DataFrame):
     fold the batch kernels use — bit-identical to DuckDB's
     ``list_cosine_similarity``, so the oracle hashes the full
     approximation."""
-    from ..operators.similarity import _det_cell_assigner
 
     def transform(stream: DataFrame) -> DataFrame:
         q = stream.select(
             F.col("vec_id").alias("query_id"),
             F.col("embedding").cast("array<double>").alias("qv"),
         ).withColumn(
-            "__cells", _det_cell_assigner(centroids, _Q196_NPROBE)(F.col("qv"))
+            "__cells", cell_assigner(centroids, _Q196_NPROBE)(F.col("qv"))
         )
         out = q
         member_cols = []
@@ -2890,7 +2869,7 @@ def _q196_transform(centroids, cells: DataFrame):
                 F.col("members").alias(f"__m{i}"),
             )
             out = out.withColumn(
-                f"__c{i}", F.col("__cells").getItem(i)
+                f"__c{i}", F.col("__cells").getItem(i).cast("long")
             ).join(cell_i, f"__c{i}", "left")
             member_cols.append(
                 F.coalesce(
@@ -2960,7 +2939,7 @@ def q196_streaming_vector_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     retrieval/RAG stack (the index is maintained in batch; queries
     never touch the raw corpus).
 
-    Stateless decomposition of ``ivf_topk_det``:
+    Stateless decomposition of ``ivf_topk`` over ``seed_centroids``:
 
     * the deterministic quantizer (q13_ivf_det's seed) rides in the
       stream's Arrow assigner closure — O(num_cells·dim), a MODEL
@@ -3077,18 +3056,19 @@ def _pq_subspaces(col):
     )
 
 
-def _grid_centroids(emb: DataFrame, n: int) -> DataFrame:
-    """(cell, cq): integer-grid vectors of the ``n`` smallest vec_ids
-    — the deterministic coarse quantizer's centroid table, numbered
-    identically to ``_det_seed_centroids``' cell indices (both order
-    by vec_id).  The row_number window sees ``n`` rows, never the
-    corpus."""
-    cw = Window.orderBy("vec_id")
+def _grid_centroids(spark: SparkSession, centroids: list) -> DataFrame:
+    """(cell, cq): the integer-grid image of the ``seed_centroids``
+    vectors, numbered by seed order — the cell indices
+    ``cell_assigner`` returns.  Built from the seed's one collect as a
+    one-task literal scan, so no reference to it re-plans the corpus."""
+    vecs = F.lit(centroids).cast("array<array<double>>")
     return (
-        emb.select("vec_id", _int_grid(F.col("embedding")).alias("cq"))
-        .orderBy("vec_id")
-        .limit(n)
-        .select((F.row_number().over(cw) - 1).cast("long").alias("cell"), "cq")
+        spark.range(1, numPartitions=1)
+        .select(F.posexplode(vecs).alias("cell", "__v"))
+        .select(
+            F.col("cell").cast("long").alias("cell"),
+            _int_grid(F.col("__v")).alias("cq"),
+        )
     )
 
 
@@ -3219,14 +3199,13 @@ def q198_pq_adc_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("query_id", "vec_id")
         .agg(F.sum("dpart").alias("adc_dist"))
     )
-    rw = Window.partitionBy("query_id").orderBy(
-        F.col("adc_dist").asc(), F.col("vec_id").asc()
-    )
-    return (
-        adc.withColumn("rank", F.row_number().over(rw).cast("long"))
-        .filter(F.col("rank") <= _Q198_TOPK)
-        .select("query_id", "vec_id", "rank", "adc_dist")
-    )
+    return top_k_per_group(
+        adc,
+        group_by=["query_id"],
+        order_by=[F.col("adc_dist").asc(), F.col("vec_id").asc()],
+        k=_Q198_TOPK,
+        rank_col="rank",
+    ).select("query_id", "vec_id", "rank", "adc_dist")
 
 
 def _pq_sql_core(src: str) -> str:
@@ -3371,23 +3350,16 @@ def q200_ivf_index_maintenance(spark: SparkSession, sf_dir: str) -> DataFrame:
     map-only Arrow batches (no shuffle); radius stats meet the
     16-row centroid table through a broadcast and partial-aggregate
     to |cells| rows; the delta pass touches ONLY the delta."""
-    from ..operators import spread
-    from ..operators.similarity import _det_cell_assigner, _det_seed_centroids
-
     emb = load_vectors(spark, sf_dir)
     corpus = emb.filter(F.col("vec_id") % 25 != 0)
     delta = emb.filter(F.col("vec_id") % 25 == 0)
-    centroids = _det_seed_centroids(corpus, "vec_id", "embedding", _Q200_CELLS)
-    assigner = _det_cell_assigner(centroids, 1)
-    centq = _grid_centroids(corpus, _Q200_CELLS)
+    _, centroids = seed_centroids(corpus, _Q200_CELLS)
+    centq = _grid_centroids(spark, centroids)
 
     def cell_stats(side: DataFrame, n_name: str, sq_name: str) -> DataFrame:
-        a = spread(
-            side.select(
-                F.col("embedding").cast("array<double>").alias("__v"),
-                _int_grid(F.col("embedding")).alias("qv"),
-            )
-        ).withColumn("cell", assigner(F.col("__v")).getItem(0).cast("long"))
+        a = assign_cells(side, centroids).select(
+            "cell", _int_grid(F.col("__v")).alias("qv")
+        )
         # the radius MASS accumulates as DECIMAL(38,0): a per-member
         # distance is <= lanes*(2*grid_max)^2 ~ 7e11, so a BIGINT cell
         # sum would wrap past ~1.3e7 worst-case members — real at the
@@ -3552,20 +3524,11 @@ def q201_ivfpq_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     cells never join, so serving touches ~nprobe/cells of the code
     table."""
     from ..operators import spread
-    from ..operators.similarity import _det_cell_assigner, _det_seed_centroids
 
     emb = load_vectors(spark, sf_dir)
-    centroids = _det_seed_centroids(emb, "vec_id", "embedding", _Q200_CELLS)
-    centq = _grid_centroids(emb, _Q200_CELLS)
-    base = spread(
-        emb.select(
-            "vec_id",
-            F.col("embedding").cast("array<double>").alias("__v"),
-            _int_grid(F.col("embedding")).alias("qv"),
-        )
-    ).withColumn(
-        "cell", _det_cell_assigner(centroids, 1)(F.col("__v")).getItem(0).cast("long")
-    )
+    _, centroids = seed_centroids(emb, _Q200_CELLS)
+    centq = _grid_centroids(spark, centroids)
+    base = assign_cells(emb, centroids).withColumn("qv", _int_grid(F.col("__v")))
     res = scoped_persist(
         base.join(F.broadcast(centq), "cell").select(
             "vec_id",
@@ -3587,7 +3550,7 @@ def q201_ivfpq_search(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
         )
         .withColumn(
-            "__cells", _det_cell_assigner(centroids, _Q201_NPROBE)(F.col("__v"))
+            "__cells", cell_assigner(centroids, _Q201_NPROBE)(F.col("__v"))
         )
         .select("query_id", "qv", F.explode("__cells").alias("cell"))
         .withColumn("cell", F.col("cell").cast("long"))
@@ -3616,14 +3579,13 @@ def q201_ivfpq_search(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("query_id", "vec_id")
         .agg(F.sum("dpart").alias("adc_dist"))
     )
-    rw = Window.partitionBy("query_id").orderBy(
-        F.col("adc_dist").asc(), F.col("vec_id").asc()
-    )
-    return (
-        adc.withColumn("rank", F.row_number().over(rw).cast("long"))
-        .filter(F.col("rank") <= _Q201_TOPK)
-        .select("query_id", "vec_id", "rank", "adc_dist")
-    )
+    return top_k_per_group(
+        adc,
+        group_by=["query_id"],
+        order_by=[F.col("adc_dist").asc(), F.col("vec_id").asc()],
+        k=_Q201_TOPK,
+        rank_col="rank",
+    ).select("query_id", "vec_id", "rank", "adc_dist")
 
 
 _Q201_SQL = f"""
@@ -3718,28 +3680,17 @@ def _q202_artifacts(spark: SparkSession, sf_dir: str, cells: int = _Q200_CELLS):
     |cells|-row grid-centroid table (joins stream-static for
     row-local residuals), and the codebook COLLECTED into a
     (M, K, lanes) Python array for the Arrow scorer closure —
-    K·M·lanes ints, a MODEL artifact.  Payload + centroid frames are
-    eagerly checkpointed.  ``cells`` is the IVF dial: the registered
-    query pins it to the oracle's 16; a deployment scales
-    it with the corpus (cells ≈ |corpus|/target_payload) so per-query
+    K·M·lanes ints, a MODEL artifact.  The payload frame is eagerly
+    checkpointed; the centroid table is a literal scan.  ``cells``
+    is the IVF dial: the registered query pins it to the oracle's 16;
+    a deployment scales it with the corpus (cells ≈ |corpus|/target_payload) so per-query
     scan work stays bounded — tools/stress sweeps measure both
     settings (SCALE.md)."""
-    from ..operators import spread
-    from ..operators.similarity import _det_cell_assigner, _det_seed_centroids
-
     emb = load_vectors(spark, sf_dir)
     corpus = emb.filter(F.col("vec_id") % 25 != 0)
-    centroids = _det_seed_centroids(corpus, "vec_id", "embedding", cells)
-    centq = _grid_centroids(corpus, cells)
-    base = spread(
-        corpus.select(
-            "vec_id",
-            F.col("embedding").cast("array<double>").alias("__v"),
-            _int_grid(F.col("embedding")).alias("qv"),
-        )
-    ).withColumn(
-        "cell", _det_cell_assigner(centroids, 1)(F.col("__v")).getItem(0).cast("long")
-    )
+    _, centroids = seed_centroids(corpus, cells)
+    centq = _grid_centroids(spark, centroids)
+    base = assign_cells(corpus, centroids).withColumn("qv", _int_grid(F.col("__v")))
     res = scoped_persist(
         base.join(F.broadcast(centq), "cell").select(
             "vec_id",
@@ -3767,8 +3718,7 @@ def _q202_artifacts(spark: SparkSession, sf_dir: str, cells: int = _Q200_CELLS):
         [list(r["cq"]) for r in cb_rows if r["s"] == s]
         for s in range(_Q198_M)
     ]
-    centq_ck = centq.localCheckpoint(eager=True)
-    return centroids, centq_ck, cellpay, cb_py
+    return centroids, centq, cellpay, cb_py
 
 
 def _q202_transform(centroids, centq: DataFrame, cellpay: DataFrame, cb_py):
@@ -3778,8 +3728,6 @@ def _q202_transform(centroids, centq: DataFrame, cellpay: DataFrame, cb_py):
     table (for the row-local residual), the Arrow ADC scorer per
     probe, then a row-local integer sort → slice top-k.  Zero
     stateful operators."""
-    from ..operators.similarity import _det_cell_assigner, pq_adc_scorer
-
     scorer = pq_adc_scorer(cb_py, _Q201_TOPK)
 
     def transform(stream: DataFrame) -> DataFrame:
@@ -3788,7 +3736,7 @@ def _q202_transform(centroids, centq: DataFrame, cellpay: DataFrame, cb_py):
             F.col("embedding").cast("array<double>").alias("__qv"),
             _int_grid(F.col("embedding")).alias("__qg"),
         ).withColumn(
-            "__cells", _det_cell_assigner(centroids, _Q201_NPROBE)(F.col("__qv"))
+            "__cells", cell_assigner(centroids, _Q201_NPROBE)(F.col("__qv"))
         )
         out = q
         scored_cols = []
@@ -5869,7 +5817,7 @@ def q204_cosine_parity_canary(spark: SparkSession, sf_dir: str) -> DataFrame:
     The whole deterministic-ANN family (q13_ivf_det, q196, q200,
     q201, q202*, semdedup) rests on one cross-engine invariant: the
     sequential-IEEE cosine fold (``operators/similarity.py``
-    ``_seq_dot_block``/``_seq_norms``, one accumulate per dimension)
+    ``_seq_cosine``, one accumulate per dimension)
     is BIT-identical to DuckDB's ``list_cosine_similarity``.  A
     driver-side engine change that breaks that invariant would turn
     ~30 queries red at once with no localization (round 9's q200 red
@@ -5895,23 +5843,15 @@ def q204_cosine_parity_canary(spark: SparkSession, sf_dir: str) -> DataFrame:
     the tripwire that tells us if that insulation is ever the only
     thing left standing.
 
-    Scale shape: centroid collect is O(cells·dim); the fold is one
-    map-only Arrow batch over the probes; output is |probes|·cells
-    rows — a canary, not a search."""
+    Scale shape: ONE centroid collect, O(cells·dim), yields both the
+    seed vectors and the excluded seed ids; the fold is one map-only
+    Arrow batch over the probes; output is |probes|·cells rows — a
+    canary, not a search."""
     from ..operators import spread
-    from ..operators.similarity import (
-        _det_seed_centroids,
-        cosine_block_scores,
-    )
 
     emb = load_vectors(spark, sf_dir)
-    cos_all = cosine_block_scores(
-        _det_seed_centroids(emb, "vec_id", "embedding", _Q204_CELLS)
-    )
-    cent_ids = [
-        r["vec_id"]
-        for r in emb.select("vec_id").orderBy("vec_id").limit(_Q204_CELLS).collect()
-    ]
+    cent_ids, centroids = seed_centroids(emb, _Q204_CELLS)
+    cos_all = cosine_block_scores(centroids)
     probes = spread(
         emb.filter(
             (F.col("vec_id") % _Q204_MOD == 0)

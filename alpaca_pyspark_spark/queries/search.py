@@ -22,6 +22,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..functions import tokens, word_shingles
+from ..operators.similarity import brute_force_topk_arrow
+from ..operators.topk import top_k_per_group
 from ..session import scoped_persist
 from ..tables import load, load_vectors
 
@@ -1122,14 +1124,12 @@ def q120_domain_distinctive_tokens(spark: SparkSession, sf_dir: str) -> DataFram
             ).alias("lift_micro"),
         )
     )
-    from pyspark.sql import Window
-
-    w = Window.partitionBy("source").orderBy(
-        F.col("lift_micro").desc(), F.col("token")
-    )
-    return (
-        lifted.withColumn("rnk", F.row_number().over(w).cast("bigint"))
-        .filter(F.col("rnk") <= 5)
+    return top_k_per_group(
+        lifted,
+        group_by=["source"],
+        order_by=[F.col("lift_micro").desc(), F.col("token")],
+        k=5,
+        rank_col="rnk",
     )
 
 
@@ -1293,10 +1293,6 @@ def q192_hybrid_retrieval(spark: SparkSession, sf_dir: str) -> DataFrame:
     tiny shuffled full-outer join over two |Q|x50-row candidate lists
     (Spark cannot broadcast full_outer) — trivially flat at any
     corpus size."""
-    from pyspark.sql import Window
-
-    from ..operators.similarity import brute_force_topk_arrow
-
     docs = load(spark, sf_dir, "documents").select("doc_id", "text")
     tk = docs.select(
         "doc_id",
@@ -1324,14 +1320,13 @@ def q192_hybrid_retrieval(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.expr("(1000000 * inter) DIV (sz - inter)").alias("score_micro"),
         )
     )
-    wl = Window.partitionBy("query_id").orderBy(
-        F.col("score_micro").desc(), F.col("item_id").asc()
-    )
-    lex = (
-        lex_scored.withColumn("lex_rank", F.row_number().over(wl).cast("long"))
-        .filter(F.col("lex_rank") <= _HY_CAND)
-        .select("query_id", "item_id", "lex_rank")
-    )
+    lex = top_k_per_group(
+        lex_scored,
+        group_by=["query_id"],
+        order_by=[F.col("score_micro").desc(), F.col("item_id").asc()],
+        k=_HY_CAND,
+        rank_col="lex_rank",
+    ).select("query_id", "item_id", "lex_rank")
     emb = load_vectors(spark, sf_dir)
     dense = brute_force_topk_arrow(
         emb,
@@ -1351,12 +1346,14 @@ def q192_hybrid_retrieval(spark: SparkSession, sf_dir: str) -> DataFrame:
             + F.coalesce(F.expr(f"1000000 DIV ({_RRF_K} + dense_rank)"), F.lit(0))
         ).cast("bigint").alias("rrf_micro"),
     )
-    wf = Window.partitionBy("query_id").orderBy(
-        F.col("rrf_micro").desc(), F.col("item_id").asc()
-    )
     return (
-        fused.withColumn("fused_rank", F.row_number().over(wf).cast("long"))
-        .filter(F.col("fused_rank") <= _HY_OUT)
+        top_k_per_group(
+            fused,
+            group_by=["query_id"],
+            order_by=[F.col("rrf_micro").desc(), F.col("item_id").asc()],
+            k=_HY_OUT,
+            rank_col="fused_rank",
+        )
         .select("query_id", "item_id", "fused_rank", "rrf_micro")
         .orderBy("query_id", "fused_rank")
     )

@@ -104,3 +104,13 @@ def test_oracle_check_is_exact_on_doubles(spark):
     assert oracle_check(same, con, sql)["hash_match"]
     r = oracle_check(drift, con, sql)
     assert r["rows_match"] and r["schema_match"] and not r["hash_match"], r
+
+
+def test_rows_only_check_rejects_array_column(spark):
+    """A top-level array column is rejected by the rows-only gate, with
+    the column named — before any row is collected."""
+    from alpaca_pyspark_spark.canon import rows_only_check
+
+    df = spark.createDataFrame([(1, [1, 2])], "id bigint, payload array<bigint>")
+    with pytest.raises(AssertionError, match="'payload'"):
+        rows_only_check(df)

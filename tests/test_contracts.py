@@ -83,22 +83,24 @@ def test_output_type_guard_rejects_decimal(spark):
 
 def test_registry_emits_only_hash_stable_types():
     """The q200 class can only recur through a NEW query added without
-    oracle pairing; rows-only queries get the same guard in their
-    sweep test, so every registry entry is covered — assert the wiring
-    exists (the shared gate runs the guard, both oracle sweeps call the
-    gate, the rows-only sweep calls the guard) rather than re-running
-    217 queries here."""
+    oracle pairing; rows-only queries get the same guard through
+    ``canon.rows_only_check``, so every registry entry is covered —
+    assert the wiring exists (both shared gates run the guard, and
+    both sweeps call both gates) rather than re-running 217 queries
+    here."""
     import inspect
     import pathlib
 
     from alpaca_pyspark_spark import canon
 
-    assert "reject_hash_unstable_schema(" in inspect.getsource(canon.oracle_check)
+    for gate in (canon.oracle_check, canon.rows_only_check):
+        assert "reject_hash_unstable_schema(" in inspect.getsource(gate)
     root = pathlib.Path(__file__).resolve().parents[1]
     for fname, wiring in (
         ("tests/test_queries_oracle.py", "oracle_check("),
-        ("tests/test_queries_oracle.py", "reject_hash_unstable_schema("),
+        ("tests/test_queries_oracle.py", "rows_only_check("),
         ("tools/driver_mimic.py", "oracle_check("),
+        ("tools/driver_mimic.py", "rows_only_check("),
     ):
         assert wiring in (root / fname).read_text(), (
             f"{fname} lost the output-type guard wiring"

@@ -295,7 +295,7 @@ def test_ivf_topk_recall_and_determinism(spark):
         F.col("vec_id").alias("query_id"), "embedding"
     )
     exact = brute_force_topk(emb, queries, k=5)
-    approx = ivf_topk(emb, queries, k=5, num_cells=16, nprobe=4)
+    approx = ivf_topk(emb, queries, centroids=train_ivf_centroids(emb, num_cells=16), k=5, nprobe=4)
     e = {(r["query_id"], r["vec_id"]) for r in exact.collect()}
     a = {(r["query_id"], r["vec_id"]) for r in approx.collect()}
     # probing 4/16 data-adaptive cells must recover a solid fraction of
@@ -315,14 +315,14 @@ def test_ivf_topk_recall_and_determinism(spark):
 
 
 def test_ivf_topk_det_recall_and_jvm_only_assignment(spark):
-    from alpaca_pyspark_spark.operators.similarity import ivf_topk_det
+    from alpaca_pyspark_spark.operators.similarity import ivf_topk, seed_centroids
 
     emb = spark.read.parquet(f"{SF_DIR}/embeddings.parquet")
     queries = emb.filter(F.col("vec_id") < 5).select(
         F.col("vec_id").alias("query_id"), "embedding"
     )
     exact = brute_force_topk(emb, queries, k=5)
-    approx = ivf_topk_det(emb, queries, k=5, num_cells=16, nprobe=4)
+    approx = ivf_topk(emb, queries, centroids=seed_centroids(emb, 16)[1], k=5, nprobe=4)
     e = {(r["query_id"], r["vec_id"]) for r in exact.collect()}
     a = {(r["query_id"], r["vec_id"]) for r in approx.collect()}
     recall = len(e & a) / len(e)
@@ -338,6 +338,54 @@ def test_ivf_topk_det_recall_and_jvm_only_assignment(spark):
     # the corpus side never shuffles before candidate pruning
     plan = approx._jdf.queryExecution().executedPlan().toString()
     assert "BroadcastNestedLoopJoin" not in plan, plan
+
+
+def test_cell_assigner_breaks_exact_ties_by_lower_cell(spark):
+    """The oracles assign by ``ORDER BY cos DESC, c.cell``, so on an
+    exact tie the assigner must list the LOWER cell index first.  16
+    centroids cycle through the 3 axes (every axis repeats, so each
+    vector ties across 5-6 identical centroids); at 16 cells an
+    unstable argsort already reorders ties."""
+    from alpaca_pyspark_spark.operators.similarity import cell_assigner
+
+    centroids = [[float(i % 3 == a) for a in range(3)] for i in range(16)]
+    vecs = spark.createDataFrame(
+        [(0, [3.0, 2.0, 1.0]), (1, [2.0, 3.0, 1.0]), (2, [1.0, 2.0, 3.0])],
+        "axis long, v array<double>",
+    )
+    for topn in (1, 4):
+        got = {
+            r["axis"]: r["cells"]
+            for r in vecs.select(
+                "axis", cell_assigner(centroids, topn)(F.col("v")).alias("cells")
+            ).collect()
+        }
+        assert got == {a: [a, a + 3, a + 6, a + 9][:topn] for a in range(3)}, topn
+
+
+def test_cell_assigner_is_stable_argsort_of_seq_cosine(spark):
+    """On trained centroids the assigner's cells are exactly a numpy
+    stable argsort of ``-_seq_cosine`` — the kernel and tie order the
+    oracle-gated queries replay in SQL."""
+    import numpy as np
+
+    from alpaca_pyspark_spark.operators.similarity import (
+        _seq_cosine,
+        cell_assigner,
+        train_ivf_centroids,
+    )
+    from alpaca_pyspark_spark.tables import load_vectors
+
+    emb = load_vectors(spark, SF_DIR)
+    C = train_ivf_centroids(emb, num_cells=16)
+    v = F.col("embedding").cast("array<double>")
+    for topn in (1, 4):
+        rows = emb.select(
+            "vec_id", v.alias("v"), cell_assigner(C, topn)(v).alias("cells")
+        ).collect()
+        M = np.array([r["v"] for r in rows])
+        want = np.argsort(-_seq_cosine(M, C), axis=1, kind="stable")[:, :topn]
+        assert [r["cells"] for r in rows] == want.tolist(), topn
 
 
 def test_embedding_dedup_lsh_subset_of_exact(spark):

@@ -120,17 +120,10 @@ def test_stream_slices_are_half_open(monkeypatch):
     monkeypatch.setattr(src_mod, "paginate", fake_paginate)
     monkeypatch.setattr(src_mod, "make_fetcher", lambda *a, **k: None)
 
-    reader = src_mod.TradesStreamReader.__new__(src_mod.TradesStreamReader)
-    from alpaca_pyspark_spark.sources.spec import EndpointConfig
-
-    reader.config = EndpointConfig(
-        endpoint="http://x", key_id="k", secret_key="s", rate_limit_delay=0.0
-    )
-    reader.params = {
-        "symbols": "AAPL",
-        "start": "2021-01-01T00:00:00+00:00",
-        "end": "2021-01-02T00:00:00+00:00",
-    }
+    reader = src_mod.StockTradesStreamDataSource(
+        {**CREDS, "endpoint": "http://x", "symbols": "AAPL",
+         "start": "2021-01-01T00:00:00+00:00", "end": "2021-01-02T00:00:00+00:00"}
+    ).simpleStreamReader(None)
     from datetime import datetime, timezone
 
     lo = datetime(2021, 1, 1, tzinfo=timezone.utc)
@@ -157,18 +150,11 @@ def test_stream_fetch_chunks_symbols_per_request(monkeypatch):
     monkeypatch.setattr(src_mod, "paginate", fake_paginate)
     monkeypatch.setattr(src_mod, "make_fetcher", lambda *a, **k: None)
 
-    reader = src_mod.TradesStreamReader.__new__(src_mod.TradesStreamReader)
-    from alpaca_pyspark_spark.sources.spec import EndpointConfig
-
-    reader.config = EndpointConfig(
-        endpoint="http://x", key_id="k", secret_key="s", rate_limit_delay=0.0
-    )
     universe = [f"S{i:05d}" for i in range(2500)]
-    reader.params = {
-        "symbols": ",".join(universe),
-        "start": "2021-01-01T00:00:00+00:00",
-        "end": "2021-01-02T00:00:00+00:00",
-    }
+    reader = src_mod.StockTradesStreamDataSource(
+        {**CREDS, "endpoint": "http://x", "symbols": ",".join(universe),
+         "start": "2021-01-01T00:00:00+00:00", "end": "2021-01-02T00:00:00+00:00"}
+    ).simpleStreamReader(None)
     from datetime import datetime, timezone
 
     lo = datetime(2021, 1, 1, tzinfo=timezone.utc)
@@ -202,21 +188,12 @@ def test_stream_chunked_fetch_union_equals_tape(monkeypatch):
     ]
     monkeypatch.setattr(src_mod.TradesStreamReader, "SYMBOLS_PER_REQUEST", 3)
     with ReplayTradesServer(tape) as api:
-        reader = src_mod.TradesStreamReader.__new__(src_mod.TradesStreamReader)
-        from alpaca_pyspark_spark.sources.spec import EndpointConfig
-
-        reader.config = EndpointConfig(
-            endpoint=api.endpoint,
-            key_id="k",
-            secret_key="s",
-            rate_limit_delay=0.0,
-        )
-        reader.params = {
-            "symbols": ",".join(sorted({t[0] for t in tape})),
-            "start": base.isoformat(),
-            "end": base.replace(hour=23).isoformat(),
-            "limit": "5",  # force pagination inside every chunk
-        }
+        reader = src_mod.StockTradesStreamDataSource(
+            {**CREDS, "endpoint": api.endpoint,
+             "symbols": ",".join(sorted({t[0] for t in tape})),
+             "start": base.isoformat(), "end": base.replace(hour=23).isoformat(),
+             "limit": "5"}  # force pagination inside every chunk
+        ).simpleStreamReader(None)
         rows = reader._fetch_rows(base, base.replace(hour=23))
         # 7 symbols / 3 per request -> 3 chunked sequences
         assert len({q["symbols"][0] for _, q in api.requests}) == 3

@@ -6,7 +6,7 @@ Usage: python tools/_ab_probe.py REPO_DIR QUERY_ID SF_DIR [REPS]
 
 Prints one JSON line: {"qid": ..., "times": [...], "rows": N}.
 Invoked by ``bench_compare.py --ab`` alternately against the current
-repo and a scratch worktree of an older ref, so per-query timings are
+repo and a scratch checkout of an older ref, so per-query timings are
 PAIRED within one host session — the single-JVM / host drift that
 makes cross-day BENCH_DETAIL ratios wobble 2-4x cancels out.
 """

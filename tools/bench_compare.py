@@ -10,9 +10,9 @@ Usage: python tools/bench_compare.py OLD.json NEW.json [ratio_floor]
 Single-JVM per-query timings wobble 2-3x run to run and the HOST
 drifts across a day (same-code whole-bench totals spread 169-210 s in
 round 5), so a cross-day BENCH_DETAIL ratio for one query proves
-nothing by itself.  ``--ab`` removes the ambiguity: it checks out
-``REF`` (default: the previous round's artifact commit) into a scratch
-worktree under .scratch/, then ALTERNATES old/new probe processes
+nothing by itself.  ``--ab`` removes the ambiguity: it extracts the
+tree of ``REF`` (default: ``HEAD``, i.e. the parent of uncommitted
+work) into .scratch/ab_<sha>, then ALTERNATES old/new probe processes
 within one host session (``tools/_ab_probe.py``, bench.py's
 steady-state protocol, K timed reps each) and reports per-query paired
 ratios — host drift hits both sides of each pair equally and cancels.
@@ -20,33 +20,44 @@ ratios — host drift hits both sides of each pair equally and cancels.
 
 from __future__ import annotations
 
+import io
 import json
+import os
 import statistics
 import subprocess
 import sys
+import tarfile
 from pathlib import Path
 
 REPO = Path(__file__).resolve().parents[1]
-DEFAULT_OLD_REF = "6247416"  # round-4 artifact commit (BENCH_r04 code state)
 
 
 def _probe(repo_dir: str, qid: str, sf_dir: str, reps: int) -> list[float]:
+    # PYTHONPATH: Spark's Python workers import the UDFs' modules from
+    # the probed checkout, not from this one
     out = subprocess.run(
         [sys.executable, str(REPO / "tools" / "_ab_probe.py"),
          repo_dir, qid, sf_dir, str(reps)],
         capture_output=True, text=True, check=True,
+        env={**os.environ, "PYTHONPATH": repo_dir},
     )
     return json.loads(out.stdout.strip().splitlines()[-1])["times"]
 
 
+def _git(*args: str) -> bytes:
+    return subprocess.run(
+        ["git", *args], cwd=REPO, capture_output=True, check=True
+    ).stdout
+
+
 def run_ab(qids: list[str], old_ref: str, rounds: int, reps: int,
            sf_dir: str, json_out: str | None) -> None:
+    # key the checkout by sha: a symbolic ref (HEAD) would reuse a
+    # stale tree after the next commit
+    old_ref = _git("rev-parse", "--verify", f"{old_ref}^{{commit}}").decode().strip()
     scratch = REPO / ".scratch" / f"ab_{old_ref}"
     if not scratch.exists():
-        subprocess.run(
-            ["git", "worktree", "add", "--detach", str(scratch), old_ref],
-            cwd=REPO, check=True,
-        )
+        tarfile.open(fileobj=io.BytesIO(_git("archive", old_ref))).extractall(scratch)
     results = {}
     for qid in qids:
         pairs = []
@@ -105,7 +116,7 @@ def main() -> None:
                 return v
             return default
 
-        old_ref = _opt("--old", DEFAULT_OLD_REF)
+        old_ref = _opt("--old", "HEAD")
         rounds = _opt("--rounds", 3, int)
         reps = _opt("--reps", 3, int)
         sf_dir = _opt("--sf-dir", "/root/testdata/sf0.1")

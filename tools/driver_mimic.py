@@ -1,6 +1,8 @@
 """Mimic the driver's verify loop: entry() + queries()[k] vs
 oracle_sql()[k] through ``canon.oracle_check``, the compare Tier-1
-uses — zero tolerance.
+uses — zero tolerance.  A query with no oracle goes through
+``canon.rows_only_check`` (schema and cell guards, full collect, the
+driver's hash).
 
 With no qid it sweeps the FULL registry (the driver's own
 CORRECTNESS_r{N}.json samples a fixed-size prefix) and ``--out``
@@ -19,7 +21,7 @@ from pathlib import Path
 REPO = Path(__file__).resolve().parents[1]
 sys.path.insert(0, str(REPO))
 
-from alpaca_pyspark_spark.canon import oracle_check, oracle_connection  # noqa: E402
+from alpaca_pyspark_spark.canon import oracle_check, oracle_connection, rows_only_check  # noqa: E402
 from alpaca_pyspark_spark.session import get_spark, release_scoped_caches  # noqa: E402
 
 
@@ -43,11 +45,8 @@ def main() -> None:
         try:
             df = qs[k](spark, args.sf_dir)
             if k not in osql:
-                n = df.count()
-                print(k, "rows-only:", n)
-                results[k] = {"rows_match": None, "schema_match": None,
-                              "hash_match": None, "spark_rows": n,
-                              "oracle_rows": None, "err": "no_oracle"}
+                r = results[k] = rows_only_check(df)
+                print(k, "rows-only:", r["spark_rows"], "rows")
                 continue
             r = results[k] = oracle_check(df, con, osql[k])
             print(k, "MATCH" if r["hash_match"] else f"MISMATCH {r}",
