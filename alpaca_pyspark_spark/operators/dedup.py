@@ -102,8 +102,8 @@ def band_key_structs(
     banding layout can never skew between the two).  Raw signature
     slots (not a hashed bucket) so an external SQL oracle can replay
     the keys bit-exactly; ``incremental_minhash_dedup``'s internal
-    ``band_cols`` keeps its own single-bucket-column shape (struct or
-    xxhash64) for the generic grouped pipeline."""
+    ``band_cols`` keeps its own single-bucket-column shape (one struct
+    column) for the generic grouped pipeline."""
     return F.array(
         *[
             F.struct(
@@ -461,31 +461,22 @@ def embedding_near_duplicates(
     # single dot product.  cos = dot/(na*nb) is the identical IEEE
     # expression to computing norms per pair, so oracle parity holds.
     v = v.withColumn("__n", F.sqrt(dot(F.col("__v"), F.col("__v"))))
-    if num_planes:
-        if dim is None:
-            raise ValueError("dim is required when bucketing (num_planes set)")
-        v = v.withColumn("__b", sign_bucket(F.col("__v"), dim=dim, num_planes=num_planes))
-    else:
-        v = v.withColumn("__b", F.lit(0))
-    v = v.transform(scoped_persist)
-    shuffle_n = int(vectors.sparkSession.conf.get("spark.sql.shuffle.partitions", "32"))
+    if dim is None:
+        raise ValueError("dim is required when bucketing (num_planes set)")
+    v = v.withColumn(
+        "__b", sign_bucket(F.col("__v"), dim=dim, num_planes=num_planes)
+    ).transform(scoped_persist)
     a = v.select(
         "__b", F.col("__id").alias("id_a"), F.col("__v").alias("va"), F.col("__n").alias("na")
     )
     b = v.select(
         "__b", F.col("__id").alias("id_b"), F.col("__v").alias("vb"), F.col("__n").alias("nb")
     )
-    if num_planes:
-        # real buckets: shuffle-partitioned equi-join parallelizes by
-        # bucket and scales past broadcast limits
-        joined = a.join(b, ["__b"])
-    else:
-        # exact all-pairs baseline: the bucket key is constant, so a
-        # hash join would serialize into ONE partition — spread the
-        # probe side and broadcast the build side instead
-        joined = a.repartition(shuffle_n).join(F.broadcast(b), ["__b"])
+    # shuffle-partitioned equi-join: parallelizes by bucket and scales
+    # past broadcast limits
     return (
-        joined.filter(F.col("id_a") < F.col("id_b"))
+        a.join(b, ["__b"])
+        .filter(F.col("id_a") < F.col("id_b"))
         .select(
             "id_a",
             "id_b",
@@ -876,7 +867,6 @@ def incremental_minhash_dedup(
     num_hashes: int = 64,
     num_bands: int = 16,
     threshold: float = 0.5,
-    portable: bool = False,
     max_bucket_size: int = 1000,
 ) -> DataFrame:
     """Dedup a NEW batch against an EXISTING corpus without comparing
@@ -897,8 +887,9 @@ def incremental_minhash_dedup(
     matching corpus buckets — work proportional to the delta, not the
     corpus.
 
-    ``portable=True`` uses the md5 hash family + raw-tuple buckets so
-    an external SQL oracle can replay the ENTIRE pipeline bit-exactly.
+    Signatures use the md5 hash family and buckets are the raw band
+    tuples, so an external SQL oracle can replay the ENTIRE pipeline
+    bit-exactly.
 
     Returns (new_id, old_id, jaccard_sim) with jaccard ≥ threshold.
     """
@@ -909,9 +900,7 @@ def incremental_minhash_dedup(
             cols = [
                 F.col("sig").getItem(b * rpb + r) for r in range(rpb)
             ]
-            if portable:
-                return F.struct(*[c.alias(f"k{r}") for r, c in enumerate(cols)])
-            return F.xxhash64(*cols)
+            return F.struct(*[c.alias(f"k{r}") for r, c in enumerate(cols)])
 
         bands = F.array(
             *[
@@ -925,11 +914,11 @@ def incremental_minhash_dedup(
 
     sig_new = minhash_signatures(
         delta, id_col=id_col, text_col=text_col, shingle_k=shingle_k,
-        num_hashes=num_hashes, portable=portable,
+        num_hashes=num_hashes, portable=True,
     )
     sig_old = minhash_signatures(
         corpus, id_col=id_col, text_col=text_col, shingle_k=shingle_k,
-        num_hashes=num_hashes, portable=portable,
+        num_hashes=num_hashes, portable=True,
     )
     tagged = band_cols(sig_new).withColumn("is_new", F.lit(1)).unionByName(
         band_cols(sig_old).withColumn("is_new", F.lit(0))

@@ -302,6 +302,33 @@ def all_pairs_above_arrow(
     return v.mapInPandas(gen, "id_a long, id_b long, cos_sim double")
 
 
+def _block_pair_replicas(
+    vectors: DataFrame, id_col: str, vec_col: str, num_blocks: int
+) -> DataFrame:
+    """The triangle-join replication shared by the blocked operators:
+    every vector hashes into one of ``B = num_blocks`` blocks
+    (``__blk``) and is joined to each unordered block pair ``(bi, bj)``,
+    ``bi <= bj``, that names its block, keyed by ``pid``.  The B·(B+1)/2
+    pair rows are a one-task literal scan, not a parallelized list."""
+    B = int(num_blocks)
+    pair_rows = [[i * B + j, i, j] for i in range(B) for j in range(i, B)]
+    pairs = (
+        vectors.sparkSession.range(1, numPartitions=1)
+        .select(F.explode(F.lit(pair_rows).cast("array<array<int>>")).alias("__p"))
+        .select(*(F.col("__p")[k].alias(c) for k, c in enumerate(("pid", "bi", "bj"))))
+    )
+    v = vectors.select(
+        F.col(id_col).alias("__id"),
+        F.col(vec_col).cast("array<double>").alias("__v"),
+    ).withColumn(
+        "__blk", F.pmod(F.xxhash64(F.col("__id")), F.lit(B)).cast("int")
+    )
+    return v.join(
+        F.broadcast(pairs),
+        (F.col("__blk") == F.col("bi")) | (F.col("__blk") == F.col("bj")),
+    )
+
+
 def all_pairs_above_blocked(
     vectors: DataFrame,
     *,
@@ -334,22 +361,7 @@ def all_pairs_above_blocked(
     twin measured only 1.06x (under the 10% conversion bar) — the wall
     here is the O(n²/B²) BLAS block products, not the pandas
     conversion (tools/arrow_probe.py, ARROW_PROBE_r6.json)."""
-    B = int(num_blocks)
-    pair_rows = [
-        (i * B + j, i, j) for i in range(B) for j in range(i, B)
-    ]
-    ss = vectors.sparkSession
-    pairs = ss.createDataFrame(pair_rows, "pid int, bi int, bj int")
-    v = vectors.select(
-        F.col(id_col).alias("__id"),
-        F.col(vec_col).cast("array<double>").alias("__v"),
-    ).withColumn(
-        "__blk", F.pmod(F.xxhash64(F.col("__id")), F.lit(B)).cast("int")
-    )
-    rep = v.join(
-        F.broadcast(pairs),
-        (F.col("__blk") == F.col("bi")) | (F.col("__blk") == F.col("bj")),
-    )
+    rep = _block_pair_replicas(vectors, id_col, vec_col, num_blocks)
 
     def score(pdf: "pd.DataFrame") -> "pd.DataFrame":
         empty = pd.DataFrame({"id_a": [], "id_b": [], "cos_sim": []})
@@ -411,20 +423,7 @@ def knn_graph_exact(
     scale alternatives (NN-Descent, IVF/LSH candidate graphs) trade
     recall for sub-quadratic work, and this operator is their exact
     baseline."""
-    B = int(num_blocks)
-    pair_rows = [(i * B + j, i, j) for i in range(B) for j in range(i, B)]
-    ss = vectors.sparkSession
-    pairs = ss.createDataFrame(pair_rows, "pid int, bi int, bj int")
-    v = vectors.select(
-        F.col(id_col).alias("__id"),
-        F.col(vec_col).cast("array<double>").alias("__v"),
-    ).withColumn(
-        "__blk", F.pmod(F.xxhash64(F.col("__id")), F.lit(B)).cast("int")
-    )
-    rep = v.join(
-        F.broadcast(pairs),
-        (F.col("__blk") == F.col("bi")) | (F.col("__blk") == F.col("bj")),
-    )
+    rep = _block_pair_replicas(vectors, id_col, vec_col, num_blocks)
 
     def local_topk(cos, src_ids, dst_ids):
         """Per-row (cos desc, dst asc) top-k — selection only."""

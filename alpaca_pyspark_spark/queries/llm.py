@@ -2121,7 +2121,7 @@ def q169_incremental_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
         docs.filter(F.col("doc_id") % 5 != 0),
         docs.filter(F.col("doc_id") % 5 == 0),
         id_col="doc_id", text_col="text", shingle_k=3,
-        threshold=0.2, portable=True,
+        threshold=0.2,
     )
 
 

@@ -30,6 +30,8 @@ import uuid
 from typing import Callable, Sequence
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 #: Event time of every sentinel row.  It must be later than any event
 #: plus the largest watermark delay and window a gate query uses
@@ -147,5 +149,13 @@ def sentinel_row(
 
     ``row_for_ts`` maps the sentinel timestamp to the full row tuple
     (the caller decides which out-of-domain key marks it, e.g. user_id
-    −1), ``schema`` is the DDL string matching the staged source."""
-    return spark.createDataFrame([row_for_ts(SENTINEL_TS)], schema)
+    −1), ``schema`` is the DDL string matching the staged source.  The
+    row is a one-task literal scan; a timestamp goes in as its text, so
+    the cast reads the wall-clock value whatever the session zone."""
+    fields = StructType.fromDDL(schema).fields
+    row = row_for_ts(SENTINEL_TS)
+    return spark.range(1, numPartitions=1).select(*(
+        F.lit(str(v) if isinstance(v, datetime.datetime) else v)
+        .cast(f.dataType).alias(f.name)
+        for v, f in zip(row, fields)
+    ))

@@ -44,18 +44,20 @@ from alpaca_pyspark_spark.session import get_spark  # noqa: E402
 def warm_tables(spark, sf_dir: str) -> None:
     """Warm up the JVM/scan paths once (session init, parquet footer
     reads, codegen of trivial plans) so per-query timings measure the
-    queries, not first-touch costs."""
+    queries, not first-touch costs.  A table the corpus does not hold
+    (a partial timing replica) is skipped."""
     from alpaca_pyspark_spark.tables import TABLE_NAMES, load
 
     for name in TABLE_NAMES:
-        load(spark, sf_dir, name).limit(1).count()
+        if os.path.exists(f"{sf_dir}/{name}.parquet"):
+            load(spark, sf_dir, name).limit(1).count()
 
 
-def time_query(spark, qid: str, sf_dir: str):
-    """One query under the timing protocol of the module docstring.
-    Returns ``(warm_s, seconds, rows, retime)``; ``retime`` is None or
-    the ``{"qid", "first", "retime"}`` record BENCH_DETAIL lists."""
-    fn = QUERIES[qid]
+def time_query(spark, fn, sf_dir: str):
+    """One query ``fn(spark, sf_dir)`` under the timing protocol of the
+    module docstring.  Returns ``(warm_s, seconds, rows, retime)``;
+    ``retime`` is None or the ``{"first", "retime"}`` pair of timed
+    runs."""
     # Steady-state timing: execute once untimed to warm codegen/JIT
     # (generated-class cache, C2 compilation, OS page cache) — a
     # fixed per-JVM cost that amortizes to zero on a long-lived
@@ -98,7 +100,7 @@ def time_query(spark, qid: str, sf_dir: str):
     retime = None
     if dt > max(1.5 * warm, warm + 0.75):
         dt2, n = timed()
-        retime = {"qid": qid, "first": round(dt, 3), "retime": round(dt2, 3)}
+        retime = {"first": round(dt, 3), "retime": round(dt2, 3)}
         dt = dt2
     return warm, dt, n, retime
 
@@ -114,9 +116,9 @@ def main() -> None:
     retimed: list[dict] = []
     total = 0.0
     for qid in sorted(QUERIES):
-        _, dt, n, retime = time_query(spark, qid, sf_dir)
+        _, dt, n, retime = time_query(spark, QUERIES[qid], sf_dir)
         if retime is not None:
-            retimed.append(retime)
+            retimed.append({"qid": qid, **retime})
         timings[qid] = round(dt, 3)
         total += dt
         print(f"# {qid}: {n} rows in {dt:.3f}s", file=sys.stderr)

@@ -99,10 +99,13 @@ def test_rotation_ledger_consistency():
 
 def test_cited_artifacts_exist():
     """Every A/B artifact (``AB_*.json``) or tool (``tools/*.py``) the
-    engine's comments cite as evidence must be committed."""
+    engine's comments or the user docs cite must be committed."""
+    docs = ("README.md", "USAGE.md", "SCALE.md", "COVERAGE.md",
+            ".claude/skills/verify/SKILL.md")
     cited = {
         (path.relative_to(REPO), m)
-        for path in (REPO / "alpaca_pyspark_spark").rglob("*.py")
+        for path in [*(REPO / "alpaca_pyspark_spark").rglob("*.py"),
+                     *(REPO / d for d in docs)]
         for m in re.findall(r"\b(AB_\w+\.json|tools/\w+\.py)", path.read_text())
     }
     missing = sorted((str(p), m) for p, m in cited if not (REPO / m).exists())

@@ -16,6 +16,9 @@ work) into .scratch/ab_<sha>, then ALTERNATES old/new probe processes
 within one host session (``tools/_ab_probe.py``, bench.py's
 steady-state protocol, K timed reps each) and reports per-query paired
 ratios — host drift hits both sides of each pair equally and cancels.
+Each median paired ratio is printed with the min-max of the paired
+ratios and the old side's IQR/median; a ratio inside that spread, or
+with pairs on both sides of 1, is marked ``unresolved``.
 """
 
 from __future__ import annotations
@@ -73,14 +76,23 @@ def run_ab(qids: list[str], old_ref: str, rounds: int, reps: int,
             pairs.append(sample)
             print(f"  {qid} round {i+1}/{rounds}: "
                   f"old={sample['old']} new={sample['new']}", file=sys.stderr)
-        med_old = statistics.median(t for p in pairs for t in p["old"])
+        old_all = [t for p in pairs for t in p["old"]]
+        med_old = statistics.median(old_all)
         med_new = statistics.median(t for p in pairs for t in p["new"])
-        min_old = min(t for p in pairs for t in p["old"])
+        min_old = min(old_all)
         min_new = min(t for p in pairs for t in p["new"])
         paired_ratios = [
             statistics.median(p["new"]) / statistics.median(p["old"])
             for p in pairs
         ]
+        med_ratio = statistics.median(paired_ratios)
+        lo, hi = min(paired_ratios), max(paired_ratios)
+        # the old side's own spread: a ratio whose distance from 1 is
+        # inside it, or whose pairs fall on both sides of 1, is noise
+        q1, _, q3 = (statistics.quantiles(old_all, n=4, method="inclusive")
+                     if len(old_all) > 1 else [med_old] * 3)
+        old_spread = (q3 - q1) / med_old
+        resolved = (lo > 1 or hi < 1) and abs(med_ratio - 1) > old_spread
         results[qid] = {
             "old_ref": old_ref,
             "rounds": rounds,
@@ -91,11 +103,15 @@ def run_ab(qids: list[str], old_ref: str, rounds: int, reps: int,
             "min_old_sec": round(min_old, 4),
             "min_new_sec": round(min_new, 4),
             "paired_ratios": [round(r, 3) for r in paired_ratios],
-            "median_paired_ratio": round(statistics.median(paired_ratios), 3),
+            "median_paired_ratio": round(med_ratio, 3),
+            "old_iqr_over_median": round(old_spread, 3),
+            "resolved": resolved,
         }
         print(f"{qid}: median {med_old:.3f}s -> {med_new:.3f}s  "
               f"(min {min_old:.3f} -> {min_new:.3f})  "
-              f"median paired ratio {results[qid]['median_paired_ratio']}x")
+              f"median paired ratio {med_ratio:.3f}x "
+              f"[pairs {lo:.3f}-{hi:.3f}, old IQR/median {old_spread:.3f}]"
+              f"{'' if resolved else '  unresolved'}")
     if json_out:
         with open(json_out, "w") as f:
             json.dump(results, f, indent=1)

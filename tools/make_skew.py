@@ -5,7 +5,7 @@ but ~30% of events collapse onto ONE user_id (deterministic remap
 Real event logs are Zipfian — one bot/whale key holding a double-digit
 share of a partition column is normal, and it is exactly what breaks
 naive hash-partitioned joins/windows (one straggler task gets 30% of
-the data).  This dataset exists to MEASURE that: `tools/stress_skew.py`
+the data).  This dataset exists to MEASURE that: `tools/retime_some.py`
 times the key-partitioned query families on uniform sf0.1 vs this
 replica (identical volume, identical schema — the wall-time ratio
 isolates pure skew sensitivity, with AQE's skew-join mitigation on as
