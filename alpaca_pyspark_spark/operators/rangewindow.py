@@ -174,11 +174,13 @@ def locf_first_adaptive(
     bucket_us: int,
     last_alias: str = "__last",
     first_alias: str = "__first",
+    max_rows: int | None = None,
 ) -> DataFrame:
     """PER-KEY adaptive dispatch for the LOCF/first pair: hot keys run
     the bucket-carry pre-split, everything else keeps the plain
     two-window form (one exchange, strictly cheaper when no key can
-    straggle).  Output-identical per key; oracle SQL unchanged."""
+    straggle).  Output-identical per key; oracle SQL unchanged.
+    ``max_rows`` bounds ``df``'s rows (see ``dispatch.hot_keys``)."""
     from .sessionize import HOT_MIN_ROWS
 
     kw = dict(
@@ -213,6 +215,7 @@ def locf_first_adaptive(
             *[F.col(c) for c in df.columns], last_alias, first_alias
         ),
         HOT_MIN_ROWS,
+        max_rows,
     )
 
 
@@ -510,12 +513,15 @@ def trailing_count_sums_adaptive(
     row_id: str,
     sums: dict[str, Column],
     count_alias: str,
+    max_rows: int | None = None,
 ) -> DataFrame:
     """TWO-tier per-key dispatch for combinable (count + exact-integer-
     sum) trailing range windows:
 
     * keys past ``RANGE_HOT_MIN_ROWS`` (probed by ``dispatch.hot_keys``,
-      which also bounds them to ``partitions / HOT_TASK_FACTOR``): the
+      which also bounds them to ``partitions / HOT_TASK_FACTOR``, and
+      which runs no probe when ``max_rows``, an upper bound on
+      ``df``'s rows, is at or below the floor): the
       prefix-bucket decomposition, its bucket width chosen per key from
       the probed rows and span, at most ``PREFIX_MAX_BUCKETS`` buckets
       each — so the broadcast prefix spine stays bounded;
@@ -534,7 +540,9 @@ def trailing_count_sums_adaptive(
         key=key, order_us=order_us, window_us=window_us, sums=sums,
         count_alias=count_alias,
     )
-    stats = hot_keys(df, key, RANGE_HOT_MIN_ROWS, order_us=order_us)
+    stats = hot_keys(
+        df, key, RANGE_HOT_MIN_ROWS, order_us=order_us, max_rows=max_rows
+    )
     if not stats:
         return _plain(df, **kw)
     widths = {k: prefix_bucket_width(rows, span) for k, rows, span in stats}

@@ -337,6 +337,7 @@ def session_summary_adaptive(
     ts: str,
     gap: str = "30 minutes",
     bucket: str = "2 hours",
+    max_rows: int | None = None,
 ) -> DataFrame:
     """``session_summary`` with PER-KEY skew-adaptive planning: keys
     that would straggle run the two-level time-bucket pre-split, every
@@ -347,7 +348,8 @@ def session_summary_adaptive(
     of switching the whole input means a skewed dataset doesn't pay
     the pre-split's island bookkeeping for its millions of COLD keys
     — the measured difference between a 2.0x and ~1.2x hot/uniform
-    wall ratio at sf10."""
+    wall ratio at sf10.  ``max_rows`` bounds ``events``' rows (see
+    ``dispatch.hot_keys``)."""
     return per_key(
         events,
         key,
@@ -356,6 +358,7 @@ def session_summary_adaptive(
             d, key=key, ts=ts, gap=gap, bucket=bucket
         ),
         HOT_MIN_ROWS,
+        max_rows,
     )
 
 
@@ -405,10 +408,11 @@ def session_openings_adaptive(
     order_extra: tuple[str, ...] = (),
     head_cols: tuple[str, ...] = (),
     head_k: int = 3,
+    max_rows: int | None = None,
 ) -> DataFrame:
     """``session_openings_skew_safe`` with the same PER-KEY
     skew-adaptive split as ``session_summary_adaptive`` (identical
-    output either way)."""
+    output either way, and the same ``max_rows`` bound)."""
     kw = dict(
         key=key,
         ts=ts,
@@ -423,6 +427,7 @@ def session_openings_adaptive(
         lambda d: _openings_single_pass(d, **kw),
         lambda d: session_openings_skew_safe(d, bucket=bucket, **kw),
         HOT_MIN_ROWS,
+        max_rows,
     )
 
 

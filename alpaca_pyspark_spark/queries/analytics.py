@@ -22,6 +22,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..functions import cents
+from ..operators.dispatch import table_rows
 from ..session import scoped_persist
 from ..tables import load
 
@@ -646,12 +647,13 @@ def q107_session_paths(spark: SparkSession, sf_dir: str) -> DataFrame:
     click-stream sequence analysis behind funnel design.
 
     Runs on the SKEW-ADAPTIVE sessionizer (``operators/
-    sessionize.py``): a max-key-count probe picks the original
-    single-exchange shape when no key can straggle, or the two-level
-    time-bucket pre-split when one can — there the opening slice is
-    merged island-wise with per-island state capped at 3 structs, so
-    a 3M-event hot session costs 3 structs per bucket instead of one
-    task collecting all 3M rows (the 3.82x sf10 straggler
+    sessionize.py``): the events footer row count, then (only when
+    that count could hold a hot key) a max-key-count probe, picks the
+    original single-exchange shape when no key can straggle, or the
+    two-level time-bucket pre-split when one can — there the opening
+    slice is merged island-wise with per-island state capped at 3
+    structs, so a 3M-event hot session costs 3 structs per bucket
+    instead of one task collecting all 3M rows (the 3.82x sf10 straggler
     SKEW_STRESS.json measured on the single-exchange shape; 0.93x
     with the pre-split).  The path histogram exchange carries
     |distinct paths| rows and top-20 is TakeOrdered."""
@@ -666,6 +668,7 @@ def q107_session_paths(spark: SparkSession, sf_dir: str) -> DataFrame:
         order_extra=("event_id",),
         head_cols=("event_id", "event_type"),
         head_k=3,
+        max_rows=table_rows(sf_dir, "events"),
     )
     paths = sessions.select(
         F.array_join(
@@ -853,7 +856,10 @@ def q115_ignore_nulls_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
     hot-over-uniform at sf10 under honest forcing); with the carry
     explicit (one last-value row per (key, 24h-bucket) chained
     through a |buckets|-row window) the hot key's sort spreads over
-    buckets.  Bit-identical per row; oracle unchanged."""
+    buckets.  Bit-identical per row; oracle unchanged.  The events
+    footer row count comes first: a table no larger than the hot floor
+    takes the plain form with no probe job, and only a larger one runs
+    the max-key-count probe."""
     from ..operators.rangewindow import locf_first_adaptive
 
     e = load(spark, sf_dir, "events")
@@ -870,6 +876,7 @@ def q115_ignore_nulls_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
         bucket_us=24 * 3600 * 1_000_000,
         last_alias="__lpv",
         first_alias="__fpv",
+        max_rows=table_rows(sf_dir, "events"),
     )
     return out.select(
         "user_id",

@@ -27,6 +27,7 @@ from ..operators.adjustment import (
 )
 from ..operators.asof import asof_join
 from ..operators.bars import tumbling_bars
+from ..operators.dispatch import table_rows
 from ..operators.topk import top_k_per_group
 from ..tables import load
 
@@ -597,8 +598,9 @@ def q14_stream_session(spark: SparkSession, sf_dir: str) -> DataFrame:
     gaps-and-islands; streaming twin in streaming/sessions.py).
 
     Runs on the SKEW-ADAPTIVE operator (``operators/sessionize.py``):
-    a cheap max-key-count probe picks the single per-key window when
-    no key can straggle, or the two-level time-bucket pre-split +
+    the events footer row count, then (only when that count could hold
+    a hot key) a max-key-count probe, picks the single per-key window
+    when no key can straggle, or the two-level time-bucket pre-split +
     boundary-island stitch when one can — the two plans are
     output-identical (same oracle SQL).  SKEW_STRESS.json measured
     why both exist: on a 30%-hot key at sf10 the single-pass plan
@@ -609,7 +611,11 @@ def q14_stream_session(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     e = load(spark, sf_dir, "events")
     return session_summary_adaptive(
-        e.select("user_id", "ts"), key="user_id", ts="ts", gap="30 minutes"
+        e.select("user_id", "ts"),
+        key="user_id",
+        ts="ts",
+        gap="30 minutes",
+        max_rows=table_rows(sf_dir, "events"),
     )
 
 

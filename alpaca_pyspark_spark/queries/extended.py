@@ -15,6 +15,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..functions import cents
+from ..operators.dispatch import table_rows
 from ..tables import load
 
 
@@ -512,7 +513,9 @@ def q41_trailing_range_window(spark: SparkSession, sf_dir: str) -> DataFrame:
     hot floor take the prefix-bucket decomposition, every other key the
     plain per-key window; both tiers are bit-identical, and the single
     end division by 100 happens after the integer window sums, exactly
-    like the oracle."""
+    like the oracle.  The events footer row count bounds every key, so
+    a table no larger than the floor takes the plain window with no
+    probe job; only a larger one runs the per-key count probe."""
     from ..operators.rangewindow import trailing_count_sums_adaptive
 
     e = load(spark, sf_dir, "events").withColumn(
@@ -527,6 +530,7 @@ def q41_trailing_range_window(spark: SparkSession, sf_dir: str) -> DataFrame:
         row_id="event_id",
         sums={"__cents_24h": cents(F.col("value"))},
         count_alias="n_24h",
+        max_rows=table_rows(sf_dir, "events"),
     )
     return out.select(
         "event_id",

@@ -97,19 +97,64 @@ def test_rotation_ledger_consistency():
     assert not unknown, sorted(unknown)
 
 
+USER_DOCS = ("README.md", "USAGE.md", "SCALE.md", "COVERAGE.md",
+             ".claude/skills/verify/SKILL.md")
+
+
 def test_cited_artifacts_exist():
     """Every A/B artifact (``AB_*.json``) or tool (``tools/*.py``) the
     engine's comments or the user docs cite must be committed."""
-    docs = ("README.md", "USAGE.md", "SCALE.md", "COVERAGE.md",
-            ".claude/skills/verify/SKILL.md")
     cited = {
         (path.relative_to(REPO), m)
         for path in [*(REPO / "alpaca_pyspark_spark").rglob("*.py"),
-                     *(REPO / d for d in docs)]
+                     *(REPO / d for d in USER_DOCS)]
         for m in re.findall(r"\b(AB_\w+\.json|tools/\w+\.py)", path.read_text())
     }
     missing = sorted((str(p), m) for p, m in cited if not (REPO / m).exists())
     assert not missing, missing
+
+
+def test_cited_engine_names_resolve():
+    """A backticked dotted name in the user docs whose first part is
+    the basename of an engine module (``dispatch.table_rows``,
+    ``operators.sessionize``) must resolve: each later part is an
+    attribute of what precedes it, or a submodule of that package.
+    File names (``tables.py``) are not dotted names."""
+    import importlib
+    import pkgutil
+
+    import alpaca_pyspark_spark as pkg
+
+    modules = {pkg.__name__: [pkg.__name__]}
+    for m in pkgutil.walk_packages(pkg.__path__, pkg.__name__ + "."):
+        modules.setdefault(m.name.rsplit(".", 1)[-1], []).append(m.name)
+
+    def resolves(module, parts):
+        obj = importlib.import_module(module)
+        for part in parts:
+            if not hasattr(obj, part) and hasattr(obj, "__path__"):
+                try:
+                    importlib.import_module(f"{obj.__name__}.{part}")
+                except ModuleNotFoundError:
+                    return False
+            if not hasattr(obj, part):
+                return False
+            obj = getattr(obj, part)
+        return True
+
+    unresolved = []
+    for d in USER_DOCS:
+        for n, line in enumerate((REPO / d).read_text().splitlines(), 1):
+            for span in re.findall(r"`([^`]+)`", line):
+                head, *parts = span.split(".")
+                if (
+                    re.fullmatch(r"[A-Za-z_]\w*(\.[A-Za-z_]\w*)+", span)
+                    and head in modules
+                    and parts[-1] not in ("py", "json", "md", "parquet")
+                    and not any(resolves(m, parts) for m in modules[head])
+                ):
+                    unresolved.append(f"{d}:{n}: {span}")
+    assert not unresolved, unresolved
 
 
 def test_engine_defs_have_a_caller():

@@ -28,15 +28,14 @@ kept.
 
 from __future__ import annotations
 
-import glob
 import json
-import os
 import sys
 from pathlib import Path
 
 sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
 
 from bench import time_query, warm_tables  # noqa: E402
+from alpaca_pyspark_spark.operators.dispatch import table_rows  # noqa: E402
 from alpaca_pyspark_spark.queries import QUERIES  # noqa: E402
 from alpaca_pyspark_spark.session import get_spark  # noqa: E402
 from alpaca_pyspark_spark.tables import TABLE_NAMES  # noqa: E402
@@ -64,15 +63,7 @@ TIMED = {**QUERIES, "q163_setsim_bounded": q163_setsim_bounded}
 
 def input_rows(sf_dir: str) -> dict[str, int]:
     """Rows per table the corpus holds, from parquet footers (no job)."""
-    import pyarrow.parquet as pq
-
-    rows = {}
-    for t in TABLE_NAMES:
-        path = f"{sf_dir}/{t}.parquet"
-        if os.path.exists(path):
-            files = glob.glob(f"{path}/*.parquet") if os.path.isdir(path) else [path]
-            rows[t] = sum(pq.ParquetFile(f).metadata.num_rows for f in files)
-    return rows
+    return {t: n for t in TABLE_NAMES if (n := table_rows(sf_dir, t)) is not None}
 
 
 def row_ratio(a_dir: str, b_dir: str) -> float:
