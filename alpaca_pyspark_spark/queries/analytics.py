@@ -23,6 +23,7 @@ from pyspark.sql import functions as F
 
 from ..functions import cents
 from ..operators.dispatch import table_rows
+from ..operators.topk import top_k_per_group
 from ..session import scoped_persist
 from ..tables import load
 
@@ -1090,10 +1091,13 @@ def q119_grouped_mode(spark: SparkSession, sf_dir: str) -> DataFrame:
     aggregate with a total order.  Oracle states the same order."""
     e = load(spark, sf_dir, "events")
     counts = e.groupBy("user_id", "event_type").agg(F.count(F.lit(1)).alias("n"))
-    w = Window.partitionBy("user_id").orderBy(F.col("n").desc(), "event_type")
     return (
-        counts.withColumn("__rk", F.row_number().over(w))
-        .filter(F.col("__rk") == 1)
+        top_k_per_group(
+            counts,
+            group_by=["user_id"],
+            order_by=[F.col("n").desc(), F.col("event_type")],
+            k=1,
+        )
         .select("user_id", F.col("event_type").alias("modal_type"), "n")
         .orderBy("user_id")
     )

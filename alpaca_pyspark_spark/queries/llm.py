@@ -56,7 +56,7 @@ from ..functions import (
     word_shingles,
 )
 from ..session import scoped_persist
-from ..tables import load, load_texts, load_vectors
+from ..tables import DOCUMENTS_CTE, EMBEDDINGS_CTE, load, load_texts, load_vectors
 
 
 # ---------------------------------------------------------------- q12
@@ -249,12 +249,8 @@ def q12_embedding_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_Q12_EMB_SQL = """
-WITH embeddings AS (
-  -- vector-ops contract: NULL embeddings are excluded (see
-  -- tables.load_vectors; main. = the base view, not this CTE)
-  SELECT * FROM main.embeddings WHERE embedding IS NOT NULL
-), E AS (SELECT vec_id, embedding::DOUBLE[] v FROM embeddings)
+_Q12_EMB_SQL = f"""
+WITH {EMBEDDINGS_CTE}, E AS (SELECT vec_id, embedding::DOUBLE[] v FROM embeddings)
 SELECT a.vec_id AS id_a, b.vec_id AS id_b,
        list_cosine_similarity(a.v, b.v) AS cos_sim
 FROM E a JOIN E b ON a.vec_id < b.vec_id
@@ -302,11 +298,7 @@ def q12_embedding_dedup_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 _Q12_EMB_LSH_SQL = f"""
-WITH embeddings AS (
-  -- vector-ops contract: NULL embeddings are excluded (see
-  -- tables.load_vectors; main. = the base view, not this CTE)
-  SELECT * FROM main.embeddings WHERE embedding IS NOT NULL
-), E AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
+WITH {EMBEDDINGS_CTE}, E AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
 B AS (SELECT vec_id, v, {_bucket_sql('v')} AS bucket FROM E)
 SELECT a.vec_id AS id_a, b.vec_id AS id_b,
        list_cosine_similarity(a.v, b.v) AS cos_sim
@@ -332,12 +324,8 @@ def q33_near_dup_components(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).select(F.col("id").alias("vec_id"), "component")
 
 
-_Q33_SQL = """
-WITH RECURSIVE embeddings AS (
-  -- vector-ops contract: NULL embeddings are excluded (see
-  -- tables.load_vectors; main. = the base view, not this CTE)
-  SELECT * FROM main.embeddings WHERE embedding IS NOT NULL
-),
+_Q33_SQL = f"""
+WITH RECURSIVE {EMBEDDINGS_CTE},
 E AS (SELECT vec_id, embedding::DOUBLE[] v FROM embeddings),
 pairs AS (
   SELECT a.vec_id AS id_a, b.vec_id AS id_b
@@ -376,11 +364,7 @@ def q33_near_dup_components_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 _Q33_LSH_SQL = f"""
-WITH RECURSIVE embeddings AS (
-  -- vector-ops contract: NULL embeddings are excluded (see
-  -- tables.load_vectors; main. = the base view, not this CTE)
-  SELECT * FROM main.embeddings WHERE embedding IS NOT NULL
-),
+WITH RECURSIVE {EMBEDDINGS_CTE},
 E AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
 B AS (SELECT vec_id, v, {_bucket_sql('v')} AS bucket FROM E),
 pairs AS (
@@ -420,12 +404,8 @@ def q13_embedding_sim(spark: SparkSession, sf_dir: str) -> DataFrame:
     return brute_force_topk_arrow(emb, _q13_queries(emb), k=10)
 
 
-_Q13_SQL = """
-WITH embeddings AS (
-  -- vector-ops contract: NULL embeddings are excluded (see
-  -- tables.load_vectors; main. = the base view, not this CTE)
-  SELECT * FROM main.embeddings WHERE embedding IS NOT NULL
-), E AS (SELECT vec_id, embedding::DOUBLE[] v FROM embeddings),
+_Q13_SQL = f"""
+WITH {EMBEDDINGS_CTE}, E AS (SELECT vec_id, embedding::DOUBLE[] v FROM embeddings),
 P AS (
   SELECT q.vec_id AS query_id, c.vec_id AS vec_id,
          list_cosine_similarity(q.v, c.v) AS cos_sim
@@ -459,11 +439,7 @@ def q13_embedding_sim_ann(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 _Q13_ANN_SQL = f"""
-WITH embeddings AS (
-  -- vector-ops contract: NULL embeddings are excluded (see
-  -- tables.load_vectors; main. = the base view, not this CTE)
-  SELECT * FROM main.embeddings WHERE embedding IS NOT NULL
-), E AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
+WITH {EMBEDDINGS_CTE}, E AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
 B AS (SELECT vec_id, v, {_bucket_sql('v')} AS bucket FROM E),
 Q AS (SELECT vec_id AS query_id, v AS qv, bucket AS qb FROM B WHERE vec_id < 8),
 P AS (
@@ -497,6 +473,14 @@ def q13_embedding_sim_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     return ivf_topk(emb, _q13_queries(emb), centroids=centroids, k=10, nprobe=4)
 
 
+#: The deterministic IVF geometry every oracle-gated IVF query shares
+#: (q13_ivf_det, q177, q196, q200, q201, q202): 16 seed cells, 4 probed
+#: per query, top-10.
+_IVF_CELLS = 16
+_IVF_NPROBE = 4
+_IVF_K = 10
+
+
 def q13_embedding_sim_ivf_det(spark: SparkSession, sf_dir: str) -> DataFrame:
     """IVF probe structure under the EXACT oracle gate: deterministic
     centroids (embeddings of the 16 smallest ids — random-sample init,
@@ -507,45 +491,61 @@ def q13_embedding_sim_ivf_det(spark: SparkSession, sf_dir: str) -> DataFrame:
     recall unit tests) — the same ``ivf_topk`` probe over the other
     seed."""
     emb = load_vectors(spark, sf_dir)
-    _, centroids = seed_centroids(emb, 16)
-    return ivf_topk(emb, _q13_queries(emb), centroids=centroids, k=10, nprobe=4)
+    _, centroids = seed_centroids(emb, _IVF_CELLS)
+    return ivf_topk(
+        emb, _q13_queries(emb), centroids=centroids, k=_IVF_K, nprobe=_IVF_NPROBE
+    )
 
 
-_Q13_IVF_DET_SQL = """
-WITH embeddings AS (
-  -- vector-ops contract: NULL embeddings are excluded (see
-  -- tables.load_vectors; main. = the base view, not this CTE)
-  SELECT * FROM main.embeddings WHERE embedding IS NOT NULL
-), E AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
-C AS (
-  SELECT CAST(row_number() OVER (ORDER BY vec_id) - 1 AS INT) AS cell, v AS cv
-  FROM (SELECT vec_id, v FROM E ORDER BY vec_id LIMIT 16)
-),
-A AS (
-  SELECT vec_id, v, cell FROM (
-    SELECT e.vec_id, e.v, c.cell,
+def _ivf_ctes(src: str, ncells, *probes: tuple[str, str, str, int]) -> str:
+    """The deterministic IVF index in SQL, one CTE chain for every IVF
+    oracle.  ``C (cell, <src columns>)`` holds the ``seed_centroids``
+    seed: the ``ncells`` smallest-id rows of CTE ``src`` (``vec_id``,
+    ``v`` and any other columns), numbered from 0 in id order;
+    ``ncells`` is an integer or a scalar SQL subquery.  Each probe
+    ``(name, rows, where, topn)`` emits CTE ``name (<rows columns>,
+    cell)``: every row of CTE ``rows`` that passes ``where``, once per
+    each of its ``topn`` nearest cells by cosine, cell index breaking
+    ties — ``cell_assigner``'s order.  ``topn`` 1 is the corpus
+    assignment, ``topn`` nprobe the query probe."""
+    ctes = [
+        f"""C AS (
+  SELECT CAST(row_number() OVER (ORDER BY vec_id) - 1 AS BIGINT) AS cell, *
+  FROM (SELECT * FROM {src} ORDER BY vec_id LIMIT {ncells})
+)"""
+    ]
+    for name, rows, where, topn in probes:
+        ctes.append(
+            f"""{name} AS (
+  SELECT * EXCLUDE (rn) FROM (
+    SELECT e.*, c.cell,
            row_number() OVER (
              PARTITION BY e.vec_id
-             ORDER BY list_cosine_similarity(e.v, c.cv) DESC, c.cell
+             ORDER BY list_cosine_similarity(e.v, c.v) DESC, c.cell
            ) AS rn
-    FROM E e CROSS JOIN C c
-  ) WHERE rn = 1
-),
-Q AS (
-  SELECT query_id, qv, cell FROM (
-    SELECT e.vec_id AS query_id, e.v AS qv, c.cell,
-           row_number() OVER (
-             PARTITION BY e.vec_id
-             ORDER BY list_cosine_similarity(e.v, c.cv) DESC, c.cell
-           ) AS rn
-    FROM E e CROSS JOIN C c WHERE e.vec_id < 8
-  ) WHERE rn <= 4
-),
+    FROM (SELECT * FROM {rows} WHERE {where}) e CROSS JOIN C c
+  ) WHERE rn <= {topn}
+)"""
+        )
+    return ",\n".join(ctes)
+
+
+def _ivf_cosine_sql(corpus: str, queries: str, *, exclude_self: bool) -> str:
+    """The cosine-IVF oracle (q13_ivf_det, q196): the index over the
+    embeddings passing ``corpus``, probed by those passing ``queries``,
+    exact cosine re-rank to the top ``_IVF_K`` by (cos_sim desc,
+    vec_id).  ``exclude_self`` drops each query's own row."""
+    self_pair = "WHERE a.vec_id <> q.vec_id" if exclude_self else ""
+    return f"""
+WITH {EMBEDDINGS_CTE}, E AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
+CORP AS (SELECT * FROM E WHERE {corpus}),
+{_ivf_ctes("CORP", _IVF_CELLS, ("A", "CORP", "TRUE", 1),
+           ("Q", "E", queries, _IVF_NPROBE))},
 S AS (
-  SELECT q.query_id, a.vec_id,
-         list_cosine_similarity(q.qv, a.v) AS cos_sim
+  SELECT q.vec_id AS query_id, a.vec_id,
+         list_cosine_similarity(q.v, a.v) AS cos_sim
   FROM Q q JOIN A a USING (cell)
-  WHERE a.vec_id <> q.query_id
+  {self_pair}
 ),
 R AS (
   SELECT query_id, vec_id, cos_sim,
@@ -554,8 +554,11 @@ R AS (
          ) AS BIGINT) AS rank
   FROM S
 )
-SELECT query_id, vec_id, rank, cos_sim FROM R WHERE rank <= 10
+SELECT query_id, vec_id, rank, cos_sim FROM R WHERE rank <= {_IVF_K}
 """
+
+
+_Q13_IVF_DET_SQL = _ivf_cosine_sql("TRUE", "vec_id < 8", exclude_self=True)
 
 
 # --------------------------------------------------------------- q176
@@ -571,12 +574,8 @@ def q176_knn_graph_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     return knn_graph_exact(emb, id_col="vec_id", vec_col="embedding", k=5)
 
 
-_Q176_SQL = """
-WITH embeddings AS (
-  -- vector-ops contract: NULL embeddings are excluded (see
-  -- tables.load_vectors; main. = the base view, not this CTE)
-  SELECT * FROM main.embeddings WHERE embedding IS NOT NULL
-), E AS (SELECT vec_id, embedding::DOUBLE[] v FROM embeddings),
+_Q176_SQL = f"""
+WITH {EMBEDDINGS_CTE}, E AS (SELECT vec_id, embedding::DOUBLE[] v FROM embeddings),
 P AS (
   SELECT a.vec_id AS src, b.vec_id AS dst,
          list_cosine_similarity(a.v, b.v) AS cos_sim
@@ -606,37 +605,19 @@ def q177_semdedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     (production runs at ~0.95+ on real embedding spaces)."""
     emb = load_vectors(spark, sf_dir)
     return semdedup(
-        emb, id_col="vec_id", vec_col="embedding", threshold=0.25, num_cells=16
+        emb, id_col="vec_id", vec_col="embedding", threshold=0.25, num_cells=_IVF_CELLS
     )
 
 
-_Q177_SQL = """
-WITH embeddings AS (
-  -- vector-ops contract: NULL embeddings are excluded (see
-  -- tables.load_vectors; main. = the base view, not this CTE)
-  SELECT * FROM main.embeddings WHERE embedding IS NOT NULL
-), E AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
-C AS (
-  SELECT CAST(row_number() OVER (ORDER BY vec_id) - 1 AS INT) AS cell, v AS cv
-  FROM (SELECT vec_id, v FROM E ORDER BY vec_id LIMIT 16)
-),
-A AS (
-  SELECT vec_id, v, cell FROM (
-    SELECT e.vec_id, e.v, c.cell,
-           row_number() OVER (
-             PARTITION BY e.vec_id
-             ORDER BY list_cosine_similarity(e.v, c.cv) DESC, c.cell
-           ) AS rn
-    FROM E e CROSS JOIN C c
-  ) WHERE rn = 1
-),
+_Q177_SQL = f"""
+WITH {EMBEDDINGS_CTE}, E AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
+{_ivf_ctes("E", _IVF_CELLS, ("A", "E", "TRUE", 1))},
 D AS (
   SELECT DISTINCT b.vec_id
   FROM A a JOIN A b ON a.cell = b.cell AND a.vec_id < b.vec_id
   WHERE list_cosine_similarity(a.v, b.v) >= 0.25
 )
-SELECT a.vec_id, CAST(a.cell AS BIGINT) AS cell,
-       (d.vec_id IS NULL) AS kept
+SELECT a.vec_id, a.cell, (d.vec_id IS NULL) AS kept
 FROM A a LEFT JOIN D d ON a.vec_id = d.vec_id
 """
 
@@ -747,12 +728,8 @@ def q16_lang_id(spark: SparkSession, sf_dir: str) -> DataFrame:
     return with_lang_id(docs.select("doc_id", "text"), "text").drop("text")
 
 
-_Q16_SQL = """
-WITH documents AS (
-  -- text-analysis contract: NULL text excluded (see
-  -- tables.load_texts; main. = the base view, not this CTE)
-  SELECT * FROM main.documents WHERE text IS NOT NULL
-), T AS (
+_Q16_SQL = f"""
+WITH {DOCUMENTS_CTE}, T AS (
   SELECT doc_id, list_distinct(regexp_extract_all(text, '\\S+')) AS toks
   FROM documents
 ), S AS (
@@ -801,12 +778,8 @@ def q18_multimodal_meta(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_Q18_SQL = """
-WITH documents AS (
-  -- text-analysis contract: NULL text excluded (see
-  -- tables.load_texts; main. = the base view, not this CTE)
-  SELECT * FROM main.documents WHERE text IS NOT NULL
-)
+_Q18_SQL = f"""
+WITH {DOCUMENTS_CTE}
 SELECT doc_id,
        CASE CAST(doc_id % 3 AS INTEGER)
          WHEN 0 THEN 'image' WHEN 1 THEN 'audio' ELSE 'video' END AS media_type,
@@ -838,12 +811,8 @@ def q122_audio_energy(spark: SparkSession, sf_dir: str) -> DataFrame:
     return audio_energy_windows(synthesize_media(docs), window_bytes=32)
 
 
-_Q122_SQL = """
-WITH documents AS (
-  -- text-analysis contract: NULL text excluded (see
-  -- tables.load_texts; main. = the base view, not this CTE)
-  SELECT * FROM main.documents WHERE text IS NOT NULL
-), audio AS (
+_Q122_SQL = f"""
+WITH {DOCUMENTS_CTE}, audio AS (
   SELECT doc_id, text, CAST(length(text) AS BIGINT) AS L
   FROM documents WHERE doc_id % 3 = 1
 ), w AS (
@@ -916,12 +885,8 @@ def q19_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_Q19_SQL = """
-WITH documents AS (
-  -- text-analysis contract: NULL text excluded (see
-  -- tables.load_texts; main. = the base view, not this CTE)
-  SELECT * FROM main.documents WHERE text IS NOT NULL
-), G AS (
+_Q19_SQL = f"""
+WITH {DOCUMENTS_CTE}, G AS (
   SELECT doc_id,
          list_distinct(list_transform(
            range(1, length(text) - 1),
@@ -1030,16 +995,12 @@ def q39_decontaminate(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_Q39_SQL = r"""
-WITH documents AS (
-  -- text-analysis contract: NULL text excluded (see
-  -- tables.load_texts; main. = the base view, not this CTE)
-  SELECT * FROM main.documents WHERE text IS NOT NULL
-), fp AS (
+_Q39_SQL = rf"""
+WITH {DOCUMENTS_CTE}, fp AS (
   SELECT doc_id, source,
          md5(lower(trim(regexp_replace(text, '\s+', ' ', 'g')))) AS fingerprint,
          CAST(len(regexp_extract_all(
-           text, '''s|''t|''re|''ve|''m|''ll|''d| ?\p{L}+| ?\p{N}+| ?[^\s\p{L}\p{N}]+'
+           text, '''s|''t|''re|''ve|''m|''ll|''d| ?\p{{L}}+| ?\p{{N}}+| ?[^\s\p{{L}}\p{{N}}]+'
          )) AS BIGINT) AS n_bpe
   FROM documents
 )
@@ -1095,12 +1056,8 @@ def q42_embedding_ops(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_Q42_SQL = """
-WITH embeddings AS (
-  -- vector-ops contract: NULL embeddings are excluded (see
-  -- tables.load_vectors; main. = the base view, not this CTE)
-  SELECT * FROM main.embeddings WHERE embedding IS NOT NULL
-), E AS (
+_Q42_SQL = f"""
+WITH {EMBEDDINGS_CTE}, E AS (
   SELECT vec_id, embedding::DOUBLE[] AS v,
          sqrt(list_aggregate(list_transform(embedding::DOUBLE[], x -> x * x),
                              'sum')) AS l2_norm
@@ -1217,12 +1174,8 @@ def q134_hard_negative_mining(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_Q134_SQL = """
-WITH embeddings AS (
-  -- vector-ops contract: NULL embeddings are excluded (see
-  -- tables.load_vectors; main. = the base view, not this CTE)
-  SELECT * FROM main.embeddings WHERE embedding IS NOT NULL
-), E AS (SELECT vec_id, label, embedding::DOUBLE[] v FROM embeddings),
+_Q134_SQL = f"""
+WITH {EMBEDDINGS_CTE}, E AS (SELECT vec_id, label, embedding::DOUBLE[] v FROM embeddings),
 P AS (
   SELECT q.vec_id AS query_id, c.vec_id AS vec_id,
          list_cosine_similarity(q.v, c.v) AS cos_sim
@@ -1388,12 +1341,8 @@ def q135_embedding_quantization(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_Q135_SQL = """
-WITH embeddings AS (
-  -- vector-ops contract: NULL embeddings are excluded (see
-  -- tables.load_vectors; main. = the base view, not this CTE)
-  SELECT * FROM main.embeddings WHERE embedding IS NOT NULL
-), E AS (
+_Q135_SQL = f"""
+WITH {EMBEDDINGS_CTE}, E AS (
   SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings
 ), S AS (
   SELECT vec_id, v, list_max(list_transform(v, x -> abs(x))) AS scale FROM E
@@ -1462,12 +1411,8 @@ def q136_split_leakage_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_Q136_SQL = r"""
-WITH documents AS (
-  -- text-analysis contract: NULL text excluded (see
-  -- tables.load_texts; main. = the base view, not this CTE)
-  SELECT * FROM main.documents WHERE text IS NOT NULL
-), D AS (
+_Q136_SQL = rf"""
+WITH {DOCUMENTS_CTE}, D AS (
   SELECT doc_id, text,
          ('0x' || substr(md5(CAST(doc_id AS VARCHAR)), 1, 15))::BIGINT % 10 >= 8
            AS is_val
@@ -1523,11 +1468,11 @@ def q140_knn_label_vote(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("query_id", "label")
         .agg(F.count(F.lit(1)).alias("votes"))
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("votes").desc(), F.col("label").asc()
-    )
-    pred = votes.withColumn("__rn", F.row_number().over(w)).filter(
-        F.col("__rn") == 1
+    pred = top_k_per_group(
+        votes,
+        group_by=["query_id"],
+        order_by=[F.col("votes").desc(), F.col("label").asc()],
+        k=1,
     )
     truth = emb.filter(F.col("vec_id") < 20).select(
         F.col("vec_id").alias("query_id"), F.col("label").alias("true_label")
@@ -1537,12 +1482,8 @@ def q140_knn_label_vote(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_Q140_SQL = """
-WITH embeddings AS (
-  -- vector-ops contract: NULL embeddings are excluded (see
-  -- tables.load_vectors; main. = the base view, not this CTE)
-  SELECT * FROM main.embeddings WHERE embedding IS NOT NULL
-), E AS (SELECT vec_id, embedding::DOUBLE[] AS v, label FROM embeddings),
+_Q140_SQL = f"""
+WITH {EMBEDDINGS_CTE}, E AS (SELECT vec_id, embedding::DOUBLE[] AS v, label FROM embeddings),
 P AS (
   SELECT q.vec_id AS query_id, c.vec_id AS vec_id, c.label,
          list_cosine_similarity(q.v, c.v) AS cos_sim
@@ -1716,12 +1657,8 @@ def q148_frame_sampling(spark: SparkSession, sf_dir: str) -> DataFrame:
 # The corpus is verified single-byte (octet_length(encode(text)) =
 # length(text) for every row), so char slicing yields the identical
 # frame payloads as the operator's byte slicing cast to STRING.
-_Q148_SQL = """
-WITH documents AS (
-  -- text-analysis contract: NULL text excluded (see
-  -- tables.load_texts; main. = the base view, not this CTE)
-  SELECT * FROM main.documents WHERE text IS NOT NULL
-)
+_Q148_SQL = f"""
+WITH {DOCUMENTS_CTE}
 SELECT d.doc_id,
        CAST(t.i AS BIGINT) AS frame_no,
        substr(d.text, CAST(t.i * 64 + 1 AS INT), 64) AS frame
@@ -1922,12 +1859,8 @@ def q175_lang_label_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_Q175_SQL = """
-WITH documents AS (
-  -- text-analysis contract: NULL text excluded (see
-  -- tables.load_texts; main. = the base view, not this CTE)
-  SELECT * FROM main.documents WHERE text IS NOT NULL
-), T AS (
+_Q175_SQL = f"""
+WITH {DOCUMENTS_CTE}, T AS (
   SELECT coalesce(lang, '') AS declared,
          list_distinct(regexp_extract_all(text, '\\S+')) AS toks
   FROM documents
@@ -2044,12 +1977,8 @@ def q171_matryoshka_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     return emb.select(*out)
 
 
-_Q171_SQL = """
-WITH embeddings AS (
-  -- vector-ops contract: NULL embeddings are excluded (see
-  -- tables.load_vectors; main. = the base view, not this CTE)
-  SELECT * FROM main.embeddings WHERE embedding IS NOT NULL
-), E AS (SELECT vec_id, embedding::DOUBLE[] v FROM embeddings)
+_Q171_SQL = f"""
+WITH {EMBEDDINGS_CTE}, E AS (SELECT vec_id, embedding::DOUBLE[] v FROM embeddings)
 SELECT vec_id,
        sqrt(list_inner_product(v[1:32], v[1:32]))
          / sqrt(list_inner_product(v, v)) AS retained_32,
@@ -2643,12 +2572,8 @@ def q195_coverage_quota_selection(spark: SparkSession, sf_dir: str) -> DataFrame
     )
 
 
-_Q195_SQL = r"""
-WITH documents AS (
-  -- text-analysis contract: NULL text excluded (see
-  -- tables.load_texts; main. = the base view, not this CTE)
-  SELECT * FROM main.documents WHERE text IS NOT NULL
-), t AS (
+_Q195_SQL = rf"""
+WITH {DOCUMENTS_CTE}, t AS (
   SELECT doc_id, source,
          CAST(len(regexp_extract_all(text, '\S+')) AS BIGINT) AS nt,
          CAST(len(list_distinct(regexp_extract_all(text, '\S+'))) AS BIGINT)
@@ -2686,12 +2611,8 @@ FROM f LEFT JOIN g ON g.doc_id = f.doc_id CROSS JOIN n
 """
 
 
-_Q194_SQL = r"""
-WITH documents AS (
-  -- text-analysis contract: NULL text excluded (see
-  -- tables.load_texts; main. = the base view, not this CTE)
-  SELECT * FROM main.documents WHERE text IS NOT NULL
-), t AS (
+_Q194_SQL = rf"""
+WITH {DOCUMENTS_CTE}, t AS (
   SELECT doc_id,
          CAST(len(regexp_extract_all(text, '\S+')) AS BIGINT) AS n_tokens,
          CAST(len(list_distinct(regexp_extract_all(text, '\S+'))) AS BIGINT)
@@ -2803,131 +2724,143 @@ FROM t
 
 
 # ---------------------------------------------------------------- q196
-#: q196 IVF serving parameters (deterministic quantizer — oracle-replicable).
-_Q196_CELLS = 16
-_Q196_NPROBE = 4
-_Q196_K = 10
+def _pack_cells(rows: DataFrame, *payload) -> DataFrame:
+    """``(cell, members)``: each IVF cell's ``(cell, vec_id, *payload)``
+    rows packed into ONE sorted payload array ``array<struct<vec_id,
+    *payload>>``, eagerly checkpointed.  The array form is what makes
+    the serving streams (q196, q202) stateless: per-query top-k over
+    the probed cells' union becomes a ROW-LOCAL fold after joining the
+    probe cells' rows — no per-query aggregation, no state.  Payload
+    size is bounded by the cell population (|corpus|/cells in
+    expectation; the cell-count dial keeps it executor-sized at any
+    corpus scale — the same bound every IVF posting list lives
+    under)."""
+    return (
+        rows.groupBy("cell")
+        .agg(
+            F.sort_array(F.collect_list(F.struct("vec_id", *payload))).alias(
+                "members"
+            )
+        )
+        .localCheckpoint(eager=True)
+    )
+
+
+def _ivf_stream_probe(centroids, *, vec, extra=(), probe, rungs, score, scored=None):
+    """The stream-static IVF probe behind q196 and q202.  Each query
+    row (``vec_id`` → ``query_id``, ``embedding`` as doubles in column
+    ``vec``, plus the ``extra`` columns) gets its ``_IVF_NPROBE``
+    nearest cells from the row-local Arrow assigner (quantizer in the
+    closure), then ONE stream-static left join per probed cell —
+    nprobe fixed joins instead of explode+regroup, since regrouping
+    probe rows per query would be a stateful aggregation.
+
+    ``probe(frame, i)`` joins probe ``i`` (its cell id is in column
+    ``__c{i}``) and returns the joined frame and the probe's array of
+    candidate structs, ``(score, vec_id)`` or still to be scored by
+    ``scored`` over the concatenation.  The candidates are then sorted
+    row-locally by ``rungs(a, b)`` — a ``F.when`` chain over the score
+    that the ascending ``vec_id`` tie-break completes — sliced to the
+    top ``_IVF_K`` and posexploded into ``(query_id, vec_id, rank,
+    score)``.  Zero stateful operators."""
+
+    def transform(stream: DataFrame) -> DataFrame:
+        out = stream.select(
+            F.col("vec_id").alias("query_id"),
+            F.col("embedding").cast("array<double>").alias(vec),
+            *extra,
+        ).withColumn("__cells", cell_assigner(centroids, _IVF_NPROBE)(F.col(vec)))
+        parts = []
+        for i in range(_IVF_NPROBE):
+            out, part = probe(
+                out.withColumn(f"__c{i}", F.col("__cells").getItem(i).cast("long")), i
+            )
+            parts.append(part)
+        cands = F.concat(*parts)
+        top = F.slice(
+            F.array_sort(
+                cands if scored is None else scored(cands),
+                lambda a, b: rungs(a, b).otherwise(
+                    F.when(a["vec_id"] < b["vec_id"], F.lit(-1))
+                    .when(a["vec_id"] > b["vec_id"], F.lit(1))
+                    .otherwise(F.lit(0))
+                ),
+            ),
+            1,
+            _IVF_K,
+        )
+        return (
+            out.select("query_id", top.alias("__top"))
+            .select("query_id", F.posexplode("__top").alias("__pos", "__t"))
+            .select(
+                "query_id",
+                F.col("__t.vec_id").alias("vec_id"),
+                (F.col("__pos") + 1).cast("long").alias("rank"),
+                F.col(f"__t.{score}").alias(score),
+            )
+        )
+
+    return transform
 
 
 def _q196_artifacts(spark: SparkSession, sf_dir: str):
     """Batch-build the ONLINE VECTOR SEARCH index from the corpus side
-    (``vec_id % 25 != 0``):
-
-    * ``centroids`` — the deterministic IVF quantizer (embeddings of
-      the 16 smallest corpus ids; the ``q13_ivf_det`` seed, so the
-      whole approximation stays SQL-replicable), a 16×dim Python list
-      that rides in the stream's assigner UDF closure.
-    * ``cells`` — one row per IVF cell holding its member PAYLOAD
-      ARRAY ``array<struct<vec_id, v>>``.  The array form is what
-      makes the stream stateless: per-query top-k over the probed
-      cells' union becomes a ROW-LOCAL fold after joining the probe
-      cells' rows — no per-query aggregation, no state.  Cell payload
-      size is bounded by the cell population (|corpus|/num_cells in
-      expectation; the num_cells dial keeps it executor-sized at any
-      corpus scale — the same bound every IVF posting list lives
-      under).  Eagerly checkpointed."""
+    (``vec_id % 25 != 0``): ``centroids``, the deterministic IVF
+    quantizer (embeddings of the 16 smallest corpus ids; the
+    ``q13_ivf_det`` seed, so the whole approximation stays
+    SQL-replicable), a 16×dim Python list that rides in the stream's
+    assigner closure; and ``cells``, each cell's ``(vec_id, v)``
+    members packed by ``_pack_cells``."""
     emb = load_vectors(spark, sf_dir)
     corpus = emb.filter(F.col("vec_id") % 25 != 0)
-    _, centroids = seed_centroids(corpus, _Q196_CELLS)
-    cells = (
-        assign_cells(corpus, centroids)
-        .groupBy("cell")
-        .agg(
-            F.sort_array(
-                F.collect_list(F.struct("vec_id", F.col("__v").alias("v")))
-            ).alias("members")
-        )
-        .localCheckpoint(eager=True)
-    )
+    _, centroids = seed_centroids(corpus, _IVF_CELLS)
+    cells = _pack_cells(assign_cells(corpus, centroids), F.col("__v").alias("v"))
     return centroids, cells
 
 
 def _q196_transform(centroids, cells: DataFrame):
-    """Stream-side plan builder for q196: row-local nprobe cell
-    assignment (Arrow UDF, quantizer in the closure), ONE stream-static
-    equi-join per probed cell (nprobe fixed joins instead of
-    explode+regroup — regrouping probe rows per query would be a
-    stateful aggregation), then a row-local score → sort → slice
-    top-k over the concatenated cell payloads, posexploded to ranked
-    rows.  The row-local cosine is the same sequential ``aggregate``
-    fold the batch kernels use — bit-identical to DuckDB's
+    """Stream-side plan builder for q196: ``_ivf_stream_probe`` with
+    the packed cell payloads as probe ``i``'s candidates, scored after
+    the concatenation by the same sequential ``aggregate`` cosine fold
+    the batch kernels use — bit-identical to DuckDB's
     ``list_cosine_similarity``, so the oracle hashes the full
     approximation."""
+    empty = F.array().cast(cells.schema["members"].dataType)
 
-    def transform(stream: DataFrame) -> DataFrame:
-        q = stream.select(
-            F.col("vec_id").alias("query_id"),
-            F.col("embedding").cast("array<double>").alias("qv"),
-        ).withColumn(
-            "__cells", cell_assigner(centroids, _Q196_NPROBE)(F.col("qv"))
+    def probe(out: DataFrame, i: int):
+        cell_i = cells.select(
+            F.col("cell").alias(f"__c{i}"), F.col("members").alias(f"__m{i}")
         )
-        out = q
-        member_cols = []
-        for i in range(_Q196_NPROBE):
-            cell_i = cells.select(
-                F.col("cell").alias(f"__c{i}"),
-                F.col("members").alias(f"__m{i}"),
-            )
-            out = out.withColumn(
-                f"__c{i}", F.col("__cells").getItem(i).cast("long")
-            ).join(cell_i, f"__c{i}", "left")
-            member_cols.append(
-                F.coalesce(
-                    F.col(f"__m{i}"),
-                    F.array().cast(cell_i.schema[f"__m{i}"].dataType),
-                )
-            )
-        scored = out.select(
-            "query_id",
-            F.transform(
-                F.concat(*member_cols),
-                lambda m: F.struct(
-                    cosine_similarity(m["v"], F.col("qv")).alias("cos_sim"),
-                    m["vec_id"].alias("vec_id"),
-                ),
-            ).alias("__scored"),
-        )
-        # row-local top-k: sort by (cos_sim desc, vec_id asc), keep k.
-        # NaN (a zero-norm embedding's cosine) sorts FIRST, matching
-        # DuckDB's ORDER BY cos_sim DESC where NaN > any number — the
-        # >/< branches are both false for NaN, so without the explicit
-        # isnan rungs a NaN row would silently fall through to the
-        # vec_id tie-break and diverge from the oracle.
-        ranked = scored.select(
-            "query_id",
-            F.slice(
-                F.array_sort(
-                    "__scored",
-                    lambda a, b: F.when(
-                        F.isnan(a["cos_sim"]) & ~F.isnan(b["cos_sim"]),
-                        F.lit(-1),
-                    )
-                    .when(
-                        F.isnan(b["cos_sim"]) & ~F.isnan(a["cos_sim"]),
-                        F.lit(1),
-                    )
-                    .when(a["cos_sim"] > b["cos_sim"], F.lit(-1))
-                    .when(a["cos_sim"] < b["cos_sim"], F.lit(1))
-                    .otherwise(
-                        F.when(a["vec_id"] < b["vec_id"], F.lit(-1))
-                        .when(a["vec_id"] > b["vec_id"], F.lit(1))
-                        .otherwise(F.lit(0))
-                    ),
-                ),
-                1,
-                _Q196_K,
-            ).alias("__top"),
-        )
-        return ranked.select(
-            "query_id", F.posexplode("__top").alias("__pos", "__t")
-        ).select(
-            "query_id",
-            F.col("__t.vec_id").alias("vec_id"),
-            (F.col("__pos") + 1).cast("long").alias("rank"),
-            F.col("__t.cos_sim").alias("cos_sim"),
+        return out.join(cell_i, f"__c{i}", "left"), F.coalesce(F.col(f"__m{i}"), empty)
+
+    # order by (cos_sim desc, vec_id asc).  NaN (a zero-norm
+    # embedding's cosine) sorts FIRST, matching DuckDB's ORDER BY
+    # cos_sim DESC where NaN > any number — the >/< rungs are both
+    # false for NaN, so without the explicit isnan rungs a NaN row
+    # would silently fall through to the vec_id tie-break and diverge
+    # from the oracle.
+    def rungs(a, b):
+        return (
+            F.when(F.isnan(a["cos_sim"]) & ~F.isnan(b["cos_sim"]), F.lit(-1))
+            .when(F.isnan(b["cos_sim"]) & ~F.isnan(a["cos_sim"]), F.lit(1))
+            .when(a["cos_sim"] > b["cos_sim"], F.lit(-1))
+            .when(a["cos_sim"] < b["cos_sim"], F.lit(1))
         )
 
-    return transform
+    return _ivf_stream_probe(
+        centroids,
+        vec="qv",
+        probe=probe,
+        rungs=rungs,
+        score="cos_sim",
+        scored=lambda cands: F.transform(
+            cands,
+            lambda m: F.struct(
+                cosine_similarity(m["v"], F.col("qv")).alias("cos_sim"),
+                m["vec_id"].alias("vec_id"),
+            ),
+        ),
+    )
 
 
 def q196_streaming_vector_search(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2945,12 +2878,14 @@ def q196_streaming_vector_search(spark: SparkSession, sf_dir: str) -> DataFrame:
       stream's Arrow assigner closure — O(num_cells·dim), a MODEL
       artifact, not corpus-scale;
     * the batch path's explode(probe cells) + per-query top-k WINDOW
-      becomes ``nprobe`` fixed stream-static joins against the packed
-      cell-payload table followed by a row-local score/sort/slice —
-      no regrouping, no window, no state;
+      becomes the shared ``_ivf_stream_probe``: ``nprobe`` fixed
+      stream-static joins against the ``_pack_cells`` payload table
+      followed by a row-local score/sort/slice — no regrouping, no
+      window, no state;
     * every double is the same sequential fold as the batch kernels,
-      so the DuckDB oracle hash-verifies the full approximation
-      (assignment, probing, re-rank) — not just row counts.
+      so the DuckDB oracle (``_ivf_cosine_sql``, shared with
+      q13_ivf_det) hash-verifies the full approximation (assignment,
+      probing, re-rank) — not just row counts.
 
     State: zero entries, append mode, no watermark/sentinel."""
     from ..session import release_scoped_caches
@@ -2964,51 +2899,7 @@ def q196_streaming_vector_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     return run_streaming_gate(spark, [(queries, None)], transform, prefix="q196")
 
 
-_Q196_SQL = f"""
-WITH embeddings AS (
-  -- vector-ops contract: NULL embeddings are excluded (see
-  -- tables.load_vectors; main. = the base view, not this CTE)
-  SELECT * FROM main.embeddings WHERE embedding IS NOT NULL
-), E AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
-CORP AS (SELECT * FROM E WHERE vec_id % 25 <> 0),
-C AS (
-  SELECT CAST(row_number() OVER (ORDER BY vec_id) - 1 AS INT) AS cell, v AS cv
-  FROM (SELECT vec_id, v FROM CORP ORDER BY vec_id LIMIT {_Q196_CELLS})
-),
-A AS (
-  SELECT vec_id, v, cell FROM (
-    SELECT e.vec_id, e.v, c.cell,
-           row_number() OVER (
-             PARTITION BY e.vec_id
-             ORDER BY list_cosine_similarity(e.v, c.cv) DESC, c.cell
-           ) AS rn
-    FROM CORP e CROSS JOIN C c
-  ) WHERE rn = 1
-),
-Q AS (
-  SELECT query_id, qv, cell FROM (
-    SELECT e.vec_id AS query_id, e.v AS qv, c.cell,
-           row_number() OVER (
-             PARTITION BY e.vec_id
-             ORDER BY list_cosine_similarity(e.v, c.cv) DESC, c.cell
-           ) AS rn
-    FROM E e CROSS JOIN C c WHERE e.vec_id % 25 = 0
-  ) WHERE rn <= {_Q196_NPROBE}
-),
-S AS (
-  SELECT q.query_id, a.vec_id,
-         list_cosine_similarity(q.qv, a.v) AS cos_sim
-  FROM Q q JOIN A a USING (cell)
-),
-R AS (
-  SELECT query_id, vec_id, cos_sim,
-         CAST(row_number() OVER (
-           PARTITION BY query_id ORDER BY cos_sim DESC, vec_id
-         ) AS BIGINT) AS rank
-  FROM S
-)
-SELECT query_id, vec_id, rank, cos_sim FROM R WHERE rank <= {_Q196_K}
-"""
+_Q196_SQL = _ivf_cosine_sql("vec_id % 25 <> 0", "vec_id % 25 = 0", exclude_self=False)
 
 
 # ---------------------------------------------------------------- q198
@@ -3272,11 +3163,7 @@ CODES AS (
 # the same integer grid, so the hash gate covers the approximation
 # itself, not just a wrapper.
 _Q198_SQL = f"""
-WITH embeddings AS (
-  -- vector-ops contract: NULL embeddings are excluded (see
-  -- tables.load_vectors; main. = the base view, not this CTE)
-  SELECT * FROM main.embeddings WHERE embedding IS NOT NULL
-), E AS (
+WITH {EMBEDDINGS_CTE}, E AS (
   SELECT vec_id,
          list_transform(embedding::DOUBLE[],
            x -> CAST(floor(x * {_Q198_SCALE} + 0.5) AS BIGINT)) AS q
@@ -3314,7 +3201,6 @@ SELECT query_id, vec_id, rank, adc_dist FROM R WHERE rank <= {_Q198_TOPK}
 
 
 # ---------------------------------------------------------------- q200
-_Q200_CELLS = 16
 _Q200_SCALE = _Q198_SCALE  # one grid for the whole integer-exact vector family
 
 
@@ -3353,7 +3239,7 @@ def q200_ivf_index_maintenance(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = load_vectors(spark, sf_dir)
     corpus = emb.filter(F.col("vec_id") % 25 != 0)
     delta = emb.filter(F.col("vec_id") % 25 == 0)
-    _, centroids = seed_centroids(corpus, _Q200_CELLS)
+    _, centroids = seed_centroids(corpus, _IVF_CELLS)
     centq = _grid_centroids(spark, centroids)
 
     def cell_stats(side: DataFrame, n_name: str, sq_name: str) -> DataFrame:
@@ -3421,52 +3307,26 @@ def q200_ivf_index_maintenance(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 _Q200_SQL = f"""
-WITH embeddings AS (
-  -- vector-ops contract: NULL embeddings are excluded (see
-  -- tables.load_vectors; main. = the base view, not this CTE)
-  SELECT * FROM main.embeddings WHERE embedding IS NOT NULL
-), E AS (
+WITH {EMBEDDINGS_CTE}, E AS (
   SELECT vec_id, embedding::DOUBLE[] AS v,
          list_transform(embedding::DOUBLE[],
            x -> CAST(floor(x * {_Q200_SCALE} + 0.5) AS BIGINT)) AS qv
   FROM embeddings
 ),
 CO AS (SELECT * FROM E WHERE vec_id % 25 <> 0),
-DE AS (SELECT * FROM E WHERE vec_id % 25 = 0),
-C AS (
-  SELECT CAST(row_number() OVER (ORDER BY vec_id) - 1 AS BIGINT) AS cell,
-         v AS cv, qv AS cq
-  FROM (SELECT vec_id, v, qv FROM CO ORDER BY vec_id LIMIT {_Q200_CELLS})
-),
-AO AS (
-  SELECT vec_id, qv, cell FROM (
-    SELECT e.vec_id, e.qv, c.cell,
-           row_number() OVER (
-             PARTITION BY e.vec_id
-             ORDER BY list_cosine_similarity(e.v, c.cv) DESC, c.cell
-           ) AS rn
-    FROM CO e CROSS JOIN C c) WHERE rn = 1
-),
-ADL AS (
-  SELECT vec_id, qv, cell FROM (
-    SELECT e.vec_id, e.qv, c.cell,
-           row_number() OVER (
-             PARTITION BY e.vec_id
-             ORDER BY list_cosine_similarity(e.v, c.cv) DESC, c.cell
-           ) AS rn
-    FROM DE e CROSS JOIN C c) WHERE rn = 1
-),
+{_ivf_ctes("CO", _IVF_CELLS, ("AO", "CO", "TRUE", 1),
+           ("ADL", "E", "vec_id % 25 = 0", 1))},
 SO AS (
   SELECT a.cell, count(*) AS n,
          CAST(sum(CAST(list_sum(list_transform(range(1, 65),
-           i -> (a.qv[i] - c.cq[i]) * (a.qv[i] - c.cq[i]))) AS BIGINT))
+           i -> (a.qv[i] - c.qv[i]) * (a.qv[i] - c.qv[i]))) AS BIGINT))
            AS DECIMAL(38,0)) AS sq
   FROM AO a JOIN C c USING (cell) GROUP BY 1
 ),
 SD AS (
   SELECT a.cell, count(*) AS n,
          CAST(sum(CAST(list_sum(list_transform(range(1, 65),
-           i -> (a.qv[i] - c.cq[i]) * (a.qv[i] - c.cq[i]))) AS BIGINT))
+           i -> (a.qv[i] - c.qv[i]) * (a.qv[i] - c.qv[i]))) AS BIGINT))
            AS DECIMAL(38,0)) AS sq
   FROM ADL a JOIN C c USING (cell) GROUP BY 1
 ),
@@ -3491,10 +3351,6 @@ FROM J
 
 
 # ---------------------------------------------------------------- q201
-_Q201_NPROBE = 4
-_Q201_TOPK = 10
-
-
 def q201_ivfpq_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     """IVF-PQ — the COMPOSED production ANN layout (FAISS's default
     billion-scale index; Jégou et al. 2011 §V): the coarse IVF
@@ -3526,7 +3382,7 @@ def q201_ivfpq_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators import spread
 
     emb = load_vectors(spark, sf_dir)
-    _, centroids = seed_centroids(emb, _Q200_CELLS)
+    _, centroids = seed_centroids(emb, _IVF_CELLS)
     centq = _grid_centroids(spark, centroids)
     base = assign_cells(emb, centroids).withColumn("qv", _int_grid(F.col("__v")))
     res = scoped_persist(
@@ -3550,7 +3406,7 @@ def q201_ivfpq_search(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
         )
         .withColumn(
-            "__cells", cell_assigner(centroids, _Q201_NPROBE)(F.col("__v"))
+            "__cells", cell_assigner(centroids, _IVF_NPROBE)(F.col("__v"))
         )
         .select("query_id", "qv", F.explode("__cells").alias("cell"))
         .withColumn("cell", F.col("cell").cast("long"))
@@ -3583,39 +3439,38 @@ def q201_ivfpq_search(spark: SparkSession, sf_dir: str) -> DataFrame:
         adc,
         group_by=["query_id"],
         order_by=[F.col("adc_dist").asc(), F.col("vec_id").asc()],
-        k=_Q201_TOPK,
+        k=_IVF_K,
         rank_col="rank",
     ).select("query_id", "vec_id", "rank", "adc_dist")
 
 
-_Q201_SQL = f"""
-WITH embeddings AS (
-  -- vector-ops contract: NULL embeddings are excluded (see
-  -- tables.load_vectors; main. = the base view, not this CTE)
-  SELECT * FROM main.embeddings WHERE embedding IS NOT NULL
-), E AS (
+def _ivfpq_sql(corpus: str, queries: str, *, exclude_self: bool, dial=None) -> str:
+    """The IVF-PQ oracle (q201, q202, q202_dialed): the coarse IVF
+    index (``_ivf_ctes``) over the embeddings passing ``corpus``,
+    residual codebooks trained and applied by the shared
+    ``_pq_sql_core`` chain, the nprobe probe of the rows passing
+    ``queries``, the per-(query, cell) residual LUT and the ADC scan,
+    top ``_IVF_K`` by (adc_dist, vec_id).  ``exclude_self`` drops each
+    query's own row.  ``dial`` is the cell count as a SQL expression
+    over the corpus size ``n`` (``_IVF_DIAL_SQL``); without it the
+    index has ``_IVF_CELLS`` cells."""
+    ncells = _IVF_CELLS
+    if dial is not None:
+        ncells = f"(SELECT {dial} FROM (SELECT count(*) AS n FROM CORP))"
+    self_pair = "WHERE ca.vec_id <> l.query_id" if exclude_self else ""
+    return f"""
+WITH {EMBEDDINGS_CTE}, E AS (
   SELECT vec_id, embedding::DOUBLE[] AS v,
          list_transform(embedding::DOUBLE[],
            x -> CAST(floor(x * {_Q198_SCALE} + 0.5) AS BIGINT)) AS qv
   FROM embeddings
 ),
-C AS (
-  SELECT CAST(row_number() OVER (ORDER BY vec_id) - 1 AS BIGINT) AS cell,
-         v AS cv, qv AS cq
-  FROM (SELECT vec_id, v, qv FROM E ORDER BY vec_id LIMIT {_Q200_CELLS})
-),
-AO AS (
-  SELECT vec_id, qv, cell FROM (
-    SELECT e.vec_id, e.qv, c.cell,
-           row_number() OVER (
-             PARTITION BY e.vec_id
-             ORDER BY list_cosine_similarity(e.v, c.cv) DESC, c.cell
-           ) AS rn
-    FROM E e CROSS JOIN C c) WHERE rn = 1
-),
+CORP AS (SELECT * FROM E WHERE {corpus}),
+{_ivf_ctes("CORP", ncells, ("AO", "CORP", "TRUE", 1),
+           ("QP", "E", queries, _IVF_NPROBE))},
 RES AS (
   SELECT a.vec_id, a.cell,
-         list_transform(range(1, 65), i -> a.qv[i] - c.cq[i]) AS rq
+         list_transform(range(1, 65), i -> a.qv[i] - c.qv[i]) AS rq
   FROM AO a JOIN C c USING (cell)
 ),
 SS AS (SELECT unnest(range({_Q198_M})) AS s),
@@ -3625,21 +3480,12 @@ RSUBS AS (
   FROM RES, SS
 ),
 {_pq_sql_core("RSUBS")},
-QP AS (
-  SELECT query_id, qv, cell FROM (
-    SELECT e.vec_id AS query_id, e.qv, c.cell,
-           row_number() OVER (
-             PARTITION BY e.vec_id
-             ORDER BY list_cosine_similarity(e.v, c.cv) DESC, c.cell
-           ) AS rn
-    FROM E e CROSS JOIN C c WHERE e.vec_id < 8) WHERE rn <= {_Q201_NPROBE}
-),
 QSUBS AS (
   SELECT query_id, cell, s,
          rq[(s*{_Q198_LANES}+1):(s*{_Q198_LANES}+{_Q198_LANES})] AS subq
   FROM (
-    SELECT q.query_id, q.cell,
-           list_transform(range(1, 65), i -> q.qv[i] - c.cq[i]) AS rq
+    SELECT q.vec_id AS query_id, q.cell,
+           list_transform(range(1, 65), i -> q.qv[i] - c.qv[i]) AS rq
     FROM QP q JOIN C c USING (cell)), SS
 ),
 LUT AS (
@@ -3657,7 +3503,7 @@ ADC AS (
   SELECT l.query_id, ca.vec_id, CAST(sum(l.dpart) AS BIGINT) AS adc_dist
   FROM CAND ca
   JOIN LUT l ON l.cell = ca.cell AND l.s = ca.s AND l.j = ca.code
-  WHERE ca.vec_id <> l.query_id
+  {self_pair}
   GROUP BY 1, 2
 ),
 R AS (
@@ -3667,25 +3513,27 @@ R AS (
          ) AS BIGINT) AS rank
   FROM ADC
 )
-SELECT query_id, vec_id, rank, adc_dist FROM R WHERE rank <= {_Q201_TOPK}
+SELECT query_id, vec_id, rank, adc_dist FROM R WHERE rank <= {_IVF_K}
 """
 
 
+_Q201_SQL = _ivfpq_sql("TRUE", "vec_id < 8", exclude_self=True)
+
+
 # ---------------------------------------------------------------- q202
-def _q202_artifacts(spark: SparkSession, sf_dir: str, cells: int = _Q200_CELLS):
+def _q202_artifacts(spark: SparkSession, sf_dir: str, cells: int = _IVF_CELLS):
     """Batch-build the COMPRESSED serving index from the corpus side
-    (``vec_id % 25 != 0``): coarse cells + residual-PQ codes packed as
-    one payload array per cell (``array<struct<vec_id, codes>>`` —
-    the q196 packing that makes the stream stateless), the
+    (``vec_id % 25 != 0``): coarse cells + residual-PQ codes packed by
+    ``_pack_cells`` (``array<struct<vec_id, codes>>`` per cell), the
     |cells|-row grid-centroid table (joins stream-static for
     row-local residuals), and the codebook COLLECTED into a
     (M, K, lanes) Python array for the Arrow scorer closure —
-    K·M·lanes ints, a MODEL artifact.  The payload frame is eagerly
-    checkpointed; the centroid table is a literal scan.  ``cells``
-    is the IVF dial: the registered query pins it to the oracle's 16;
-    a deployment scales it with the corpus (cells ≈ |corpus|/target_payload) so per-query
-    scan work stays bounded — tools/stress sweeps measure both
-    settings (SCALE.md)."""
+    K·M·lanes ints, a MODEL artifact.  The centroid table is a
+    literal scan.  ``cells`` is the IVF dial: the registered query
+    pins it to the oracle's 16; a deployment scales it with the
+    corpus (``_ivf_dial``, q202_dialed) so per-query scan work stays
+    bounded — ``tools/retime_some.py`` measures both settings
+    (SCALE.md)."""
     emb = load_vectors(spark, sf_dir)
     corpus = emb.filter(F.col("vec_id") % 25 != 0)
     _, centroids = seed_centroids(corpus, cells)
@@ -3706,12 +3554,8 @@ def _q202_artifacts(spark: SparkSession, sf_dir: str, cells: int = _Q200_CELLS):
             lambda x: x["code"],
         ).alias("codes")
     )
-    cellpay = (
-        res.select("vec_id", "cell")
-        .join(code_arrays, "vec_id")
-        .groupBy("cell")
-        .agg(F.sort_array(F.collect_list(F.struct("vec_id", "codes"))).alias("members"))
-        .localCheckpoint(eager=True)
+    cellpay = _pack_cells(
+        res.select("vec_id", "cell").join(code_arrays, "vec_id"), "codes"
     )
     cb_rows = codebook.orderBy("s", "j").collect()
     cb_py = [
@@ -3722,76 +3566,44 @@ def _q202_artifacts(spark: SparkSession, sf_dir: str, cells: int = _Q200_CELLS):
 
 
 def _q202_transform(centroids, centq: DataFrame, cellpay: DataFrame, cb_py):
-    """Stream-side plan: row-local nprobe coarse assignment (Arrow
-    closure), ONE stream-static join per probed cell against the
-    packed payload table plus one against the 16-row grid-centroid
-    table (for the row-local residual), the Arrow ADC scorer per
-    probe, then a row-local integer sort → slice top-k.  Zero
-    stateful operators."""
-    scorer = pq_adc_scorer(cb_py, _Q201_TOPK)
+    """Stream-side plan: ``_ivf_stream_probe`` where probe ``i`` joins
+    the packed payload table and the 16-row grid-centroid table (for
+    the row-local residual) and scores its members with the Arrow ADC
+    scorer; the top-k sorts by the exact integer ``adc_dist``
+    ascending.  Zero stateful operators."""
+    scorer = pq_adc_scorer(cb_py, _IVF_K)
+    empty = F.array().cast("array<struct<adc_dist: bigint, vec_id: bigint>>")
 
-    def transform(stream: DataFrame) -> DataFrame:
-        q = stream.select(
-            F.col("vec_id").alias("query_id"),
-            F.col("embedding").cast("array<double>").alias("__qv"),
-            _int_grid(F.col("embedding")).alias("__qg"),
-        ).withColumn(
-            "__cells", cell_assigner(centroids, _Q201_NPROBE)(F.col("__qv"))
+    def probe(out: DataFrame, i: int):
+        pay_i = cellpay.select(
+            F.col("cell").alias(f"__c{i}"), F.col("members").alias(f"__m{i}")
         )
-        out = q
-        scored_cols = []
-        empty = F.array().cast("array<struct<adc_dist: bigint, vec_id: bigint>>")
-        for i in range(_Q201_NPROBE):
-            pay_i = cellpay.select(
-                F.col("cell").alias(f"__c{i}"), F.col("members").alias(f"__m{i}")
-            )
-            cq_i = centq.select(
-                F.col("cell").alias(f"__c{i}"), F.col("cq").alias(f"__cq{i}")
-            )
-            out = (
-                out.withColumn(f"__c{i}", F.col("__cells").getItem(i).cast("long"))
-                .join(pay_i, f"__c{i}", "left")
-                .join(cq_i, f"__c{i}", "left")
-                .withColumn(
-                    f"__s{i}",
-                    scorer(
-                        F.zip_with(
-                            "__qg", F.col(f"__cq{i}"), lambda a, b: a - b
-                        ),
-                        F.col(f"__m{i}"),
-                    ),
-                )
-            )
-            scored_cols.append(F.coalesce(F.col(f"__s{i}"), empty))
-        ranked = out.select(
-            "query_id",
-            F.slice(
-                F.array_sort(
-                    F.concat(*scored_cols),
-                    lambda a, b: F.when(
-                        a["adc_dist"] < b["adc_dist"], F.lit(-1)
-                    )
-                    .when(a["adc_dist"] > b["adc_dist"], F.lit(1))
-                    .otherwise(
-                        F.when(a["vec_id"] < b["vec_id"], F.lit(-1))
-                        .when(a["vec_id"] > b["vec_id"], F.lit(1))
-                        .otherwise(F.lit(0))
-                    ),
+        cq_i = centq.select(
+            F.col("cell").alias(f"__c{i}"), F.col("cq").alias(f"__cq{i}")
+        )
+        out = (
+            out.join(pay_i, f"__c{i}", "left")
+            .join(cq_i, f"__c{i}", "left")
+            .withColumn(
+                f"__s{i}",
+                scorer(
+                    F.zip_with("__qg", F.col(f"__cq{i}"), lambda a, b: a - b),
+                    F.col(f"__m{i}"),
                 ),
-                1,
-                _Q201_TOPK,
-            ).alias("__top"),
+            )
         )
-        return ranked.select(
-            "query_id", F.posexplode("__top").alias("__pos", "__t")
-        ).select(
-            "query_id",
-            F.col("__t.vec_id").alias("vec_id"),
-            (F.col("__pos") + 1).cast("long").alias("rank"),
-            F.col("__t.adc_dist").alias("adc_dist"),
-        )
+        return out, F.coalesce(F.col(f"__s{i}"), empty)
 
-    return transform
+    return _ivf_stream_probe(
+        centroids,
+        vec="__qv",
+        extra=[_int_grid(F.col("embedding")).alias("__qg")],
+        probe=probe,
+        rungs=lambda a, b: F.when(a["adc_dist"] < b["adc_dist"], F.lit(-1)).when(
+            a["adc_dist"] > b["adc_dist"], F.lit(1)
+        ),
+        score="adc_dist",
+    )
 
 
 def q202_streaming_pq_search(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -3805,6 +3617,10 @@ def q202_streaming_pq_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     exact BIGINTs — the whole approximation (coarse assignment,
     residual codebooks, encoding, probing, ADC) replays in the DuckDB
     oracle under the hash gate.
+
+    The stream plan is the shared ``_ivf_stream_probe`` (q196's), with
+    the Arrow ADC scorer as each probe's score; the oracle is the
+    shared ``_ivfpq_sql`` (q201's), over the q196 split.
 
     This closes the vector-family matrix: exact (q13) / LSH (q13_ann)
     / IVF (q13_ivf, served live by q196) / PQ (q198) / IVF-PQ (q201)
@@ -3826,92 +3642,7 @@ def q202_streaming_pq_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     return run_streaming_gate(spark, [(queries, None)], transform, prefix="q202")
 
 
-# The oracle replays the ENTIRE serving path — corpus-side coarse
-# assignment, residual codebook training (the shared _pq_sql_core
-# chain), encoding, the queries' nprobe probe, per-(query, cell)
-# residual LUT and the ADC scan — in SQL; the hash gate covers the
-# full approximation as served by the live stream.
-_Q202_SQL = f"""
-WITH embeddings AS (
-  -- vector-ops contract: NULL embeddings are excluded (see
-  -- tables.load_vectors; main. = the base view, not this CTE)
-  SELECT * FROM main.embeddings WHERE embedding IS NOT NULL
-), E AS (
-  SELECT vec_id, embedding::DOUBLE[] AS v,
-         list_transform(embedding::DOUBLE[],
-           x -> CAST(floor(x * {_Q198_SCALE} + 0.5) AS BIGINT)) AS qv
-  FROM embeddings
-),
-CO AS (SELECT * FROM E WHERE vec_id % 25 <> 0),
-C AS (
-  SELECT CAST(row_number() OVER (ORDER BY vec_id) - 1 AS BIGINT) AS cell,
-         v AS cv, qv AS cq
-  FROM (SELECT vec_id, v, qv FROM CO ORDER BY vec_id LIMIT {_Q200_CELLS})
-),
-AO AS (
-  SELECT vec_id, qv, cell FROM (
-    SELECT e.vec_id, e.qv, c.cell,
-           row_number() OVER (
-             PARTITION BY e.vec_id
-             ORDER BY list_cosine_similarity(e.v, c.cv) DESC, c.cell
-           ) AS rn
-    FROM CO e CROSS JOIN C c) WHERE rn = 1
-),
-RES AS (
-  SELECT a.vec_id, a.cell,
-         list_transform(range(1, 65), i -> a.qv[i] - c.cq[i]) AS rq
-  FROM AO a JOIN C c USING (cell)
-),
-SS AS (SELECT unnest(range({_Q198_M})) AS s),
-RSUBS AS (
-  SELECT vec_id, s,
-         rq[(s*{_Q198_LANES}+1):(s*{_Q198_LANES}+{_Q198_LANES})] AS subq
-  FROM RES, SS
-),
-{_pq_sql_core("RSUBS")},
-QP AS (
-  SELECT query_id, qv, cell FROM (
-    SELECT e.vec_id AS query_id, e.qv, c.cell,
-           row_number() OVER (
-             PARTITION BY e.vec_id
-             ORDER BY list_cosine_similarity(e.v, c.cv) DESC, c.cell
-           ) AS rn
-    FROM E e CROSS JOIN C c WHERE e.vec_id % 25 = 0) WHERE rn <= {_Q201_NPROBE}
-),
-QSUBS AS (
-  SELECT query_id, cell, s,
-         rq[(s*{_Q198_LANES}+1):(s*{_Q198_LANES}+{_Q198_LANES})] AS subq
-  FROM (
-    SELECT q.query_id, q.cell,
-           list_transform(range(1, 65), i -> q.qv[i] - c.cq[i]) AS rq
-    FROM QP q JOIN C c USING (cell)), SS
-),
-LUT AS (
-  SELECT q.query_id, q.cell, c.s, c.j,
-         CAST(list_sum(list_transform(range(1, {_Q198_LANES} + 1),
-           i -> (q.subq[i] - c.cq[i]) * (q.subq[i] - c.cq[i]))) AS BIGINT)
-           AS dpart
-  FROM QSUBS q JOIN CB c ON q.s = c.s
-),
-CAND AS (
-  SELECT co.vec_id, a.cell, co.s, co.code
-  FROM CODES co JOIN AO a USING (vec_id)
-),
-ADC AS (
-  SELECT l.query_id, ca.vec_id, CAST(sum(l.dpart) AS BIGINT) AS adc_dist
-  FROM CAND ca
-  JOIN LUT l ON l.cell = ca.cell AND l.s = ca.s AND l.j = ca.code
-  GROUP BY 1, 2
-),
-R AS (
-  SELECT query_id, vec_id, adc_dist,
-         CAST(row_number() OVER (
-           PARTITION BY query_id ORDER BY adc_dist, vec_id
-         ) AS BIGINT) AS rank
-  FROM ADC
-)
-SELECT query_id, vec_id, rank, adc_dist FROM R WHERE rank <= {_Q201_TOPK}
-"""
+_Q202_SQL = _ivfpq_sql("vec_id % 25 <> 0", "vec_id % 25 = 0", exclude_self=False)
 
 
 # --------------------------------------------------------- q202_dialed
@@ -3919,7 +3650,7 @@ def _ivf_dial(n_corpus: int) -> int:
     """Production IVF cell-count dial: the largest power of two whose
     square fits the corpus (cells ≈ √n balances the per-probe payload
     scan, |corpus|/cells, against the probe fan-out), floored at the
-    oracle grid's 16 (``_Q200_CELLS``) and CAPPED at 65536 — the last
+    oracle grid's 16 (``_IVF_CELLS``) and CAPPED at 65536 — the last
     value in the oracle's candidate list, and the point past which a
     real deployment shards the index across serving groups rather
     than growing nlist (n ≥ 2^34 vectors in one index).  Pure integer
@@ -3928,9 +3659,9 @@ def _ivf_dial(n_corpus: int) -> int:
     dialed plan stays hash-gateable at every scale factor (the
     round-8 amber: the measured scale dial lived only in tools/,
     outside the gate)."""
-    cells = _Q200_CELLS
+    cells = _IVF_CELLS
     while cells < 65536 and (cells * 2) * (cells * 2) <= max(
-        n_corpus, _Q200_CELLS * _Q200_CELLS
+        n_corpus, _IVF_CELLS * _IVF_CELLS
     ):
         cells *= 2
     return cells
@@ -3947,7 +3678,8 @@ def q202_dialed_pq_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     of linear at sf10 (SCALE.md).  The dial rule itself replays in the
     oracle (integer max-power-of-two from ``count(*)``), keeping the
     scale-correct configuration under the same hash gate as the
-    registered fixed-dial twin.
+    registered fixed-dial twin: the oracle is q202's ``_ivfpq_sql``
+    with ``_IVF_DIAL_SQL`` as the cell count.
 
     State: zero entries, append mode.  The one extra driver action is
     a corpus ``count()`` (a scalar; the artifact build already
@@ -3964,29 +3696,16 @@ def q202_dialed_pq_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     return run_streaming_gate(spark, [(queries, None)], transform, prefix="q202d")
 
 
-# Same oracle as q202 except the C CTE derives the cell count from the
-# corpus via the integer dial rule (max power of two with p² ≤ n, min
-# 16) instead of a pinned LIMIT — the scale dial under the hash gate.
-_Q202_DIALED_SQL = _Q202_SQL.replace(
-    f"""C AS (
-  SELECT CAST(row_number() OVER (ORDER BY vec_id) - 1 AS BIGINT) AS cell,
-         v AS cv, qv AS cq
-  FROM (SELECT vec_id, v, qv FROM CO ORDER BY vec_id LIMIT {_Q200_CELLS})
-),""",
-    f"""NC AS (
-  SELECT max(p) AS ncells
+#: ``_ivf_dial`` in SQL, over the corpus size ``n``: the largest
+#: candidate power of two whose square fits ``n``, at least 16.
+_IVF_DIAL_SQL = f"""(SELECT max(p)
   FROM (SELECT unnest([16, 32, 64, 128, 256, 512, 1024, 2048, 4096,
-                       8192, 16384, 32768, 65536]::BIGINT[]) AS p),
-       (SELECT count(*) AS n FROM CO)
-  WHERE p * p <= greatest(n, {_Q200_CELLS * _Q200_CELLS})
-),
-C AS (
-  SELECT CAST(rn - 1 AS BIGINT) AS cell, v AS cv, qv AS cq
-  FROM (SELECT v, qv, row_number() OVER (ORDER BY vec_id) AS rn FROM CO), NC
-  WHERE rn <= ncells
-),""",
+                       8192, 16384, 32768, 65536]::BIGINT[]) AS p)
+  WHERE p * p <= greatest(n, {_IVF_CELLS * _IVF_CELLS}))"""
+
+_Q202_DIALED_SQL = _ivfpq_sql(
+    "vec_id % 25 <> 0", "vec_id % 25 = 0", exclude_self=False, dial=_IVF_DIAL_SQL
 )
-assert "NC AS" in _Q202_DIALED_SQL  # replace() must have matched
 
 
 # ---------------------------------------------------------------- q166
@@ -4431,12 +4150,8 @@ def q183_repetition_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
 # shared CTE block for the Gopher repetition rule — q183 (batch, full
 # report) and q190 (streaming twin's batch oracle) gate the SAME rule,
 # so they derive from ONE spec string and cannot drift apart.
-_GOPHER_REP_CTES = r"""
-WITH documents AS (
-  -- text-analysis contract: NULL text excluded (see
-  -- tables.load_texts; main. = the base view, not this CTE)
-  SELECT * FROM main.documents WHERE text IS NOT NULL
-), toks AS (
+_GOPHER_REP_CTES = rf"""
+WITH {DOCUMENTS_CTE}, toks AS (
   SELECT doc_id, regexp_extract_all(trim(text), '\S+') AS t FROM documents
 ),
 base AS (
@@ -4909,12 +4624,8 @@ def q188_classifier_quality_filter(spark: SparkSession, sf_dir: str) -> DataFram
     )
 
 
-_Q188_SQL = """
-WITH embeddings AS (
-  -- vector-ops contract: NULL embeddings are excluded (see
-  -- tables.load_vectors; main. = the base view, not this CTE)
-  SELECT * FROM main.embeddings WHERE embedding IS NOT NULL
-), comp AS (
+_Q188_SQL = f"""
+WITH {EMBEDDINGS_CTE}, comp AS (
   SELECT vec_id, label, i - 1 AS dim,
          CAST(floor(CAST(embedding[i] AS DOUBLE) * 1000000) AS BIGINT)
            AS comp_micro
@@ -5418,12 +5129,8 @@ def _q189_pipeline(spark: SparkSession, sf_dir: str):
     )
 
 
-_Q189_SQL = r"""
-WITH documents AS (
-  -- text-analysis contract: NULL text excluded (see
-  -- tables.load_texts; main. = the base view, not this CTE)
-  SELECT * FROM main.documents WHERE text IS NOT NULL
-), toks AS (
+_Q189_SQL = rf"""
+WITH {DOCUMENTS_CTE}, toks AS (
   SELECT doc_id, lang, text, regexp_extract_all(trim(text), '\S+') AS t
   FROM documents
 ),
@@ -5868,25 +5575,16 @@ def q204_cosine_parity_canary(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 _Q204_SQL = f"""
-WITH embeddings AS (
-  SELECT * FROM main.embeddings WHERE embedding IS NOT NULL
-), E AS (
+WITH {EMBEDDINGS_CTE}, E AS (
   SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings
-), C AS (
-  SELECT CAST(row_number() OVER (ORDER BY vec_id) - 1 AS BIGINT) AS cell,
-         v AS cv
-  FROM (SELECT vec_id, v FROM E ORDER BY vec_id LIMIT {_Q204_CELLS})
-), P AS (
+), {_ivf_ctes("E", _Q204_CELLS)}, P AS (
   -- self-pairs excluded: the engines' raw cosines provably differ on
   -- a vector scored against itself (see the query docstring)
   SELECT vec_id, v FROM E
-  WHERE vec_id % {_Q204_MOD} = 0
-    AND vec_id NOT IN (
-      SELECT vec_id FROM (SELECT vec_id FROM E ORDER BY vec_id
-                          LIMIT {_Q204_CELLS}))
+  WHERE vec_id % {_Q204_MOD} = 0 AND vec_id NOT IN (SELECT vec_id FROM C)
 )
 SELECT p.vec_id, c.cell,
-       list_cosine_similarity(p.v, c.cv) AS cosine
+       list_cosine_similarity(p.v, c.v) AS cosine
 FROM P p CROSS JOIN C c
 """
 

@@ -22,6 +22,7 @@ from pyspark.sql import functions as F
 
 from ..functions import cents
 from ..operators.dispatch import table_at_least
+from ..operators.topk import top_k_per_group
 from ..tables import load
 
 
@@ -922,12 +923,13 @@ def q121_cusum_changepoint(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("n_events") * F.col("v_centi") - F.col("total_centi")
         ).over(ordered.rowsBetween(Window.unboundedPreceding, 0)),
     )
-    pick = Window.partitionBy("event_type").orderBy(
-        F.abs(F.col("s_i")).desc(), F.col("ts"), F.col("event_id")
-    )
     return (
-        cum.withColumn("rn", F.row_number().over(pick))
-        .filter(F.col("rn") == 1)
+        top_k_per_group(
+            cum,
+            group_by=["event_type"],
+            order_by=[F.abs(F.col("s_i")).desc(), F.col("ts"), F.col("event_id")],
+            k=1,
+        )
         .select(
             "event_type",
             F.col("event_id").alias("cp_event_id"),

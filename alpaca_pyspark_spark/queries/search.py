@@ -25,7 +25,7 @@ from ..functions import tokens, word_shingles
 from ..operators.similarity import brute_force_topk_arrow
 from ..operators.topk import top_k_per_group
 from ..session import scoped_persist
-from ..tables import load, load_vectors
+from ..tables import EMBEDDINGS_CTE, load, load_vectors
 
 #: Fixed retrieval query for q90 (terms chosen to exist in the corpus).
 BM25_TERMS = ("hash", "join", "vector")
@@ -308,12 +308,8 @@ def q92_cluster_representatives(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_Q92_SQL = """
-WITH RECURSIVE embeddings AS (
-  -- vector-ops contract: NULL embeddings are excluded (see
-  -- tables.load_vectors; main. = the base view, not this CTE)
-  SELECT * FROM main.embeddings WHERE embedding IS NOT NULL
-),
+_Q92_SQL = f"""
+WITH RECURSIVE {EMBEDDINGS_CTE},
 E AS (SELECT vec_id, embedding::DOUBLE[] v FROM embeddings),
 pairs AS (
   SELECT a.vec_id AS id_a, b.vec_id AS id_b
@@ -333,7 +329,7 @@ reach(id, r) AS (
 comp AS (SELECT id, min(r) AS component FROM reach GROUP BY id)
 SELECT component,
        CAST(count(*) AS BIGINT) AS n_members,
-       -((max({'n_chars': n_chars, 'neg_id': -doc_id})).neg_id) AS rep_doc_id,
+       -((max({{'n_chars': n_chars, 'neg_id': -doc_id}})).neg_id) AS rep_doc_id,
        CAST(max(n_chars) AS BIGINT) AS rep_chars
 FROM comp JOIN documents ON comp.id = doc_id
 GROUP BY component
@@ -417,9 +413,7 @@ def _q92_lsh_bucket_sql(n_planes: int = _Q92_LSH_PLANES) -> str:
 
 
 _Q92_LSH_SQL = f"""
-WITH RECURSIVE embeddings AS (
-  SELECT * FROM main.embeddings WHERE embedding IS NOT NULL
-),
+WITH RECURSIVE {EMBEDDINGS_CTE},
 E AS (SELECT vec_id, embedding::DOUBLE[] v FROM embeddings),
 B AS (SELECT vec_id, v, {_q92_lsh_bucket_sql()} AS b FROM E),
 pairs AS (
@@ -498,9 +492,7 @@ def q206_cluster_reps_lsh_dialed(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 _Q206_SQL = f"""
-WITH RECURSIVE embeddings AS (
-  SELECT * FROM main.embeddings WHERE embedding IS NOT NULL
-),
+WITH RECURSIVE {EMBEDDINGS_CTE},
 E AS (SELECT vec_id, embedding::DOUBLE[] v FROM embeddings),
 P AS (
   SELECT LEAST(16, GREATEST(3, LENGTH(BIN(count(*) // 32)))) AS planes
@@ -596,9 +588,7 @@ def _q207_sql() -> str:
         )
     body = "\nUNION ALL\n".join(arms)
     return (
-        "WITH embeddings AS (\n"
-        "  SELECT * FROM main.embeddings WHERE embedding IS NOT NULL\n"
-        "),\n"
+        f"WITH {EMBEDDINGS_CTE},\n"
         "E AS (SELECT vec_id, embedding::DOUBLE[] v FROM embeddings)\n"
         + body
     )
@@ -1360,11 +1350,7 @@ def q192_hybrid_retrieval(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 _Q192_SQL = rf"""
-WITH embeddings AS (
-  -- vector-ops contract: NULL embeddings are excluded (see
-  -- tables.load_vectors; main. = the base view, not this CTE)
-  SELECT * FROM main.embeddings WHERE embedding IS NOT NULL
-), tk AS (
+WITH {EMBEDDINGS_CTE}, tk AS (
   SELECT doc_id, list_distinct(regexp_extract_all(lower(text), '\S+')) AS toks
   FROM documents
 ),

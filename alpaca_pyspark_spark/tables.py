@@ -79,6 +79,19 @@ def _load_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+#: The SQL twin of ``load_texts`` (text-analysis contract: NULL text is
+#: excluded), for the oracles to open with.  ``main.`` is the base view,
+#: not this CTE.
+DOCUMENTS_CTE = "documents AS (SELECT * FROM main.documents WHERE text IS NOT NULL)"
+
+#: The SQL twin of ``load_vectors`` (vector-ops contract: NULL embeddings
+#: are excluded), for the oracles to open with.  ``main.`` is the base
+#: view, not this CTE.
+EMBEDDINGS_CTE = (
+    "embeddings AS (SELECT * FROM main.embeddings WHERE embedding IS NOT NULL)"
+)
+
+
 def load_texts(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The documents table under the TEXT-ANALYSIS CONTRACT: rows with
     NULL text are excluded.  A NULL text is a failed extraction — it
@@ -87,9 +100,8 @@ def load_texts(spark: SparkSession, sf_dir: str) -> DataFrame:
     arithmetic — so exclusion is the portable, explicit semantics (the
     quarantine pattern of q159 handles such rows upstream).  Text
     queries under this contract load through this helper; their SQL
-    twins carry the matching shadow CTE
-    ``documents AS (SELECT * FROM main.documents WHERE text IS NOT
-    NULL)`` (null-stress gate, round 9)."""
+    twins open with the matching shadow CTE, ``DOCUMENTS_CTE``
+    (null-stress gate, round 9)."""
     from pyspark.sql import functions as F
 
     return load(spark, sf_dir, "documents").filter(F.col("text").isNotNull())
@@ -103,9 +115,8 @@ def load_vectors(spark: SparkSession, sf_dir: str) -> DataFrame:
     ``list_inner_product`` rejects NULL elements outright, numpy builds
     a ragged object array) — so exclusion is the portable, explicit
     semantics.  Every vector query loads through this helper and every
-    vector oracle carries the matching shadow CTE
-    ``embeddings AS (SELECT * FROM main.embeddings WHERE embedding IS
-    NOT NULL)`` (null-stress gate, round 9)."""
+    vector oracle opens with the matching shadow CTE, ``EMBEDDINGS_CTE``
+    (null-stress gate, round 9)."""
     from pyspark.sql import functions as F
 
     return load(spark, sf_dir, "embeddings").filter(

@@ -956,6 +956,36 @@ def test_q196_stream_plan_stateless(spark, tmp_path):
     assert "CartesianProduct" not in plan, plan
 
 
+def test_q196_stream_probe_is_the_batch_ivf_probe(spark):
+    """The q196 stream probe, applied to the batch query frame, returns
+    exactly the rows of the batch ``ivf_topk`` over the same corpus
+    split, seed, nprobe and k: the stateless stream-static rewrite and
+    the explode + window probe are one IVF search."""
+    from pyspark.sql import functions as F
+
+    from alpaca_pyspark_spark.canon import driver_canon_hash
+    from alpaca_pyspark_spark.operators.similarity import ivf_topk, seed_centroids
+    from alpaca_pyspark_spark.queries.llm import _q196_artifacts, _q196_transform
+    from alpaca_pyspark_spark.tables import load_vectors
+
+    centroids, cells = _q196_artifacts(spark, SF_DIR)
+    emb = load_vectors(spark, SF_DIR)
+    queries = emb.filter(F.col("vec_id") % 25 == 0).select("vec_id", "embedding")
+    corpus = emb.filter(F.col("vec_id") % 25 != 0)
+    batch = ivf_topk(
+        corpus,
+        queries.withColumnRenamed("vec_id", "query_id"),
+        centroids=seed_centroids(corpus, 16)[1],
+        nprobe=4,
+        k=10,
+    )
+    cols = ["query_id", "vec_id", "rank", "cos_sim"]
+    stream_rows = _q196_transform(centroids, cells)(queries).select(cols).collect()
+    batch_rows = batch.select(cols).collect()
+    assert len(stream_rows) == len(batch_rows) > 0
+    assert driver_canon_hash(stream_rows, cols) == driver_canon_hash(batch_rows, cols)
+
+
 def test_q197_readback_plan_broadcasts_manifest(spark):
     """q197's returned plan reads the LANDED shard files, not the
     curation lineage (the ledger/pack stages ran at sink time): the
@@ -1102,18 +1132,20 @@ def test_q203_landed_bar_plan_is_q02_shape(spark):
 
 
 def test_ivf_dial_matches_oracle_nc_cte_for_all_n(oracle):
-    """The Python dial rule and the dialed oracle's NC CTE must derive
-    the IDENTICAL cell count at EVERY corpus size — including the
-    power-of-4 boundaries where a float log/sqrt derivation would be
-    one ulp away from flipping, and the 65536 cap where the SQL
+    """The Python dial rule and the dial fragment the q202_dialed
+    oracle embeds (``_IVF_DIAL_SQL``, run here with ``n`` bound) must
+    derive the IDENTICAL cell count at EVERY corpus size — including
+    the power-of-4 boundaries where a float log/sqrt derivation would
+    be one ulp away from flipping, and the 65536 cap where the SQL
     candidate list ends."""
-    from alpaca_pyspark_spark.queries.llm import _ivf_dial
+    from alpaca_pyspark_spark.queries.llm import (
+        _IVF_DIAL_SQL,
+        _Q202_DIALED_SQL,
+        _ivf_dial,
+    )
 
-    sql = """
-    SELECT max(p) FROM (SELECT unnest([16, 32, 64, 128, 256, 512, 1024,
-        2048, 4096, 8192, 16384, 32768, 65536]::BIGINT[]) AS p)
-    WHERE p * p <= greatest(?, 256)
-    """
+    assert _IVF_DIAL_SQL in _Q202_DIALED_SQL
+    sql = f"SELECT {_IVF_DIAL_SQL} FROM (SELECT CAST(? AS BIGINT) AS n)"
     boundary = [0, 1, 255, 256, 257, 480, 1023, 1024, 1025, 1920]
     boundary += [4**k + d for k in range(4, 18) for d in (-1, 0, 1)]
     boundary += [2 * 4**k for k in range(4, 18)]  # non-power-of-4 mids
