@@ -54,6 +54,15 @@ def has_whole_stage_codegen(df: DataFrame) -> bool:
     return "WholeStageCodegen subtree" in out
 
 
+def codegen_compiles(spark) -> int:
+    """Generated classes Janino has compiled in this JVM so far
+    (``CodegenMetrics``' compilation-time histogram count).  A class
+    served from the codegen cache does not count, so the difference
+    over a run is the run's compiles, cache misses only."""
+    metrics = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics
+    return int(metrics.METRIC_COMPILATION_TIME().getCount())
+
+
 def force_evaluate(df: DataFrame) -> int:
     """Fully evaluate ``df`` for TIMING purposes and return its row
     count.

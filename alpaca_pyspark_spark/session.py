@@ -1,12 +1,25 @@
 """SparkSession construction and scale-oriented configuration.
 
+Two kinds of conf:
+
+- *Session-build confs* (:data:`BUILD_CONFS`) take effect only when
+  :func:`get_spark` builds the session.  Spark sizes its JVM-global
+  generated-class cache at the first codegen, and PySpark reads the
+  DataFrame-debugging flag once, at the first wrapped API call; setting
+  either later changes nothing.
+- *Runtime confs* (:data:`RUNTIME_CONFS`) can be set on a live session;
+  :func:`tune` applies them.
+
 Two situations:
-1. Our own tests / bench build the session via :func:`get_spark`.
+1. Our own tests / bench / perfbench build the session via
+   :func:`get_spark`, so they get both kinds.
 2. The driver hands us an existing session (``__spark_entry__``): the
    registry's query boundary (``queries._boundary``) applies the
-   *runtime-settable* confs via :func:`tune` on entry to every
-   registered query, so each query runs under the engine's confs even
-   if something changed them since the last one.
+   runtime confs via :func:`tune` on entry to every registered query,
+   so each query runs under the engine's confs even if something
+   changed them since the last one.  That session keeps Spark's
+   defaults for the session-build confs: a 100-entry codegen cache and
+   per-call DataFrame call-site capture.
 
 Scale stance (100 TB / 1000 executors): everything here is either a
 cluster-size-independent correctness conf (timezone, Arrow) or an
@@ -24,6 +37,26 @@ from pyspark.errors import PySparkException
 from pyspark.sql import DataFrame, SparkSession
 
 logger = logging.getLogger(__name__)
+
+#: Generated classes Spark keeps compiled (``CodeGenerator``'s cache;
+#: Spark's default is 100, in four LRU segments of 25).  One sweep of
+#: the registry generates 3,117 distinct classes at sf0.001 and 3,174
+#: at sf0.01, and the 7 ``market_analytics`` queries about 95, so at
+#: 100 a pass recompiles whatever overfills a segment.  Sized from
+#: SCALE.md "Codegen cache sizing".
+CODEGEN_CACHE_MAX_ENTRIES = 4096
+
+#: Confs that only take effect when :func:`get_spark` builds the session.
+BUILD_CONFS: dict[str, str] = {
+    "spark.ui.enabled": "false",
+    "spark.sql.execution.pyspark.udf.faulthandler.enabled": "true",
+    "spark.sql.codegen.cache.maxEntries": str(CODEGEN_CACHE_MAX_ENTRIES),
+    # No call-site capture on every wrapped DataFrame/Column call (a
+    # stack walk, a failed ``import IPython`` and two py4j calls each,
+    # most of a query build's Python calls).  Analysis errors keep
+    # their condition and plan; only the Python call site is lost.
+    "spark.python.sql.dataFrameDebugging.enabled": "false",
+}
 
 #: Confs that can be set on a live session (no restart needed).
 RUNTIME_CONFS: dict[str, str] = {
@@ -142,7 +175,6 @@ def get_spark(app_name: str = "alpaca_pyspark_spark") -> SparkSession:
         SparkSession.builder.appName(app_name)
         .master(f"local[{cpus}]")
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "8g"))
-        .config("spark.ui.enabled", "false")
-        .config("spark.sql.execution.pyspark.udf.faulthandler.enabled", "true")
+        .config(map=BUILD_CONFS)
     )
     return tune(builder.getOrCreate())

@@ -14,7 +14,12 @@ Timing protocol: one untimed warm run (JIT/codegen/page cache), one
 timed run; a timed run that exceeds its own warm run by
 max(1.5x, +0.75s) is long-JVM noise (the warm run pays strictly MORE
 work) and is retimed once with the retime reported — retimed qids are
-disclosed in ``BENCH_DETAIL.json``.
+disclosed in ``BENCH_DETAIL.json``.  ``BENCH_DETAIL.json`` also holds
+each qid's Janino compiles ``[warm, timed]``: the warm run's are the
+classes the query adds to the codegen cache, and the timed run's are
+classes whose code differs from the warm run's (a plan Catalyst or AQE
+shapes differently from run to run) or that the cache evicted between
+the two runs.
 """
 
 from __future__ import annotations
@@ -28,14 +33,17 @@ from pathlib import Path
 
 sys.path.insert(0, str(Path(__file__).resolve().parent))
 
-# 185 queries × 2 executions in ONE JVM accumulate generated classes,
-# broadcast remnants, and shuffle bookkeeping; at the default 8 g heap
-# the tail of the run pays multi-x GC inflation (measured 190 s → 171 s
-# total at sf0.1 by raising the heap).  The bench box has 128 GiB;
-# explicit SPARK_DRIVER_MEM still wins.
+# 225 queries × 2 executions in ONE JVM accumulate broadcast remnants
+# and shuffle bookkeeping on the heap; at the default 8 g heap the tail
+# of the run pays multi-x GC inflation (measured 190 s → 171 s total at
+# sf0.1 by raising the heap, when the registry held 185 queries).  The
+# generated classes are not on it: the codegen cache keeps every class
+# of a sweep (SCALE.md "Codegen cache sizing"), and their bytecode
+# lives in Metaspace, which this setting does not bound.  The bench
+# box has 128 GiB; explicit SPARK_DRIVER_MEM still wins.
 os.environ.setdefault("SPARK_DRIVER_MEM", "24g")
 
-from alpaca_pyspark_spark.plans import force_evaluate  # noqa: E402
+from alpaca_pyspark_spark.plans import codegen_compiles, force_evaluate  # noqa: E402
 from alpaca_pyspark_spark.queries import QUERIES  # noqa: E402
 from alpaca_pyspark_spark.session import release_scoped_caches  # noqa: E402
 from alpaca_pyspark_spark.session import get_spark  # noqa: E402
@@ -55,9 +63,10 @@ def warm_tables(spark, sf_dir: str) -> None:
 
 def time_query(spark, fn, sf_dir: str):
     """One query ``fn(spark, sf_dir)`` under the timing protocol of the
-    module docstring.  Returns ``(warm_s, seconds, rows, retime)``;
-    ``retime`` is None or the ``{"first", "retime"}`` pair of timed
-    runs."""
+    module docstring.  Returns ``(warm_s, seconds, rows, retime,
+    compiles)``; ``retime`` is None or the ``{"first", "retime"}`` pair
+    of timed runs, and ``compiles`` the ``[warm, timed]`` Janino
+    compiles of the warm run and of the reported timed run."""
     # Steady-state timing: execute once untimed to warm codegen/JIT
     # (generated-class cache, C2 compilation, OS page cache) — a
     # fixed per-JVM cost that amortizes to zero on a long-lived
@@ -65,9 +74,11 @@ def time_query(spark, fn, sf_dir: str):
     # the ENTIRE plan (scan, shuffle, agg; persisted intermediates
     # are keyed by logical plan and were dropped, so they rebuild).
     spark.catalog.clearCache()
+    c0 = codegen_compiles(spark)
     tw0 = time.perf_counter()
     force_evaluate(fn(spark, sf_dir))
     warm = time.perf_counter() - tw0
+    warm_compiles = codegen_compiles(spark) - c0
 
     def timed():
         # drain the operator cache ledger (scoped_persist) then clear
@@ -80,13 +91,14 @@ def time_query(spark, fn, sf_dir: str):
         # queries in one JVM otherwise accumulate heap pressure that
         # shows up as multi-x noise on individual timings
         gc.collect()
+        c = codegen_compiles(spark)
         t0 = time.perf_counter()
         n = force_evaluate(fn(spark, sf_dir))
         dt = time.perf_counter() - t0
         release_scoped_caches()  # query boundary: operator persists released
-        return dt, n
+        return dt, n, codegen_compiles(spark) - c
 
-    dt, n = timed()
+    dt, n, compiles = timed()
     # Transient-noise guard: the warm run pays JIT/codegen on top of
     # the same plan, so timed >> warm is a contradiction that only
     # long-JVM noise (a GC pause, a background compile) explains —
@@ -99,10 +111,10 @@ def time_query(spark, fn, sf_dir: str):
     # auditable.
     retime = None
     if dt > max(1.5 * warm, warm + 0.75):
-        dt2, n = timed()
+        dt2, n, compiles = timed()
         retime = {"first": round(dt, 3), "retime": round(dt2, 3)}
         dt = dt2
-    return warm, dt, n, retime
+    return warm, dt, n, retime, [warm_compiles, compiles]
 
 
 def main() -> None:
@@ -114,9 +126,10 @@ def main() -> None:
 
     timings: dict[str, float] = {}
     retimed: list[dict] = []
+    compiles: dict[str, list[int]] = {}
     total = 0.0
     for qid in sorted(QUERIES):
-        _, dt, n, retime = time_query(spark, QUERIES[qid], sf_dir)
+        _, dt, n, retime, compiles[qid] = time_query(spark, QUERIES[qid], sf_dir)
         if retime is not None:
             retimed.append({"qid": qid, **retime})
         timings[qid] = round(dt, 3)
@@ -133,6 +146,7 @@ def main() -> None:
         "n_queries": len(timings),
         "queries": timings,
         "retimed": retimed,
+        "compiles": compiles,
         "sf": float(sf) if sf.replace(".", "").isdigit() else sf,
     }
     print(json.dumps(detail), file=sys.stderr)

@@ -6,7 +6,8 @@ release, one retime when the timed run contradicts the warm run).
     python tools/retime_some.py SF_DIR qid [qid ...]
     python tools/retime_some.py A_DIR B_DIR OUT.json[:BLOCK] [qid ...]
 
-The first form prints warm/timed/rows per qid and one JSON line.
+The first form prints warm/timed/rows and the ``[warm, timed]`` Janino
+compiles per qid, and one JSON line.
 
 The second form measures the committed scale rows (STRESS_SF1.json,
 STRESS_SF10.json, STRESS_SF100.json, and SKEW_STRESS.json with one
@@ -93,8 +94,8 @@ def retime_pair(spark, a_dir: str, b_dir: str, out: str,
     warm_tables(spark, a_dir)
     warm_tables(spark, b_dir)
     for qid in qids:
-        _, ta, na, ra = time_query(spark, TIMED[qid], a_dir)
-        _, tb, nb, rb = time_query(spark, TIMED[qid], b_dir)
+        _, ta, na, ra, _ = time_query(spark, TIMED[qid], a_dir)
+        _, tb, nb, rb, _ = time_query(spark, TIMED[qid], b_dir)
         rows[qid] = {
             f"{a}_sec": round(ta, 2),
             f"{b}_sec": round(tb, 2),
@@ -120,11 +121,11 @@ def main(argv: list[str]) -> None:
     warm_tables(spark, sf_dir)
     out = {}
     for qid in qids:
-        warm, dt, n, retime = time_query(spark, TIMED[qid], sf_dir)
+        warm, dt, n, retime, compiles = time_query(spark, TIMED[qid], sf_dir)
         out[qid] = {"warm": round(warm, 3), "timed": round(dt, 3), "rows": n,
-                    "retime": retime}
+                    "retime": retime, "compiles": compiles}
         print(f"# {qid}: {n} rows warm={warm:.3f}s timed={dt:.3f}s"
-              f" retime={retime}", flush=True)
+              f" retime={retime} compiles={compiles}", flush=True)
     print(json.dumps(out))
 
 
